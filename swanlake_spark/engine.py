@@ -27,9 +27,24 @@ from pyspark.sql import types as T
 from swanlake_spark import constraints
 from swanlake_spark.config import EngineConfig
 from swanlake_spark.errors import EngineError, InvalidArgument
-from swanlake_spark.metrics import Metrics
-from swanlake_spark.plans import classify, split_statements, strip_select_locks
+from swanlake_spark.metrics import Metrics, jvm_counters
+from swanlake_spark.plans import (
+    classify,
+    quote_identifier,
+    split_statements,
+    strip_select_locks,
+)
 from swanlake_spark.sources import register_tables
+
+# EngineConfig.spark_confs() entries Spark reads only when the session is
+# built; setting them on a running session raises.
+_STATIC_CONFS = frozenset(
+    {
+        "spark.sql.warehouse.dir",
+        "spark.sql.codegen.cache.maxEntries",
+        "spark.driver.memory",
+    }
+)
 
 
 @dataclass
@@ -163,11 +178,11 @@ class Engine:
         from swanlake_spark.pyship import ship_package
 
         ship_package(self.spark)
-        self.metrics = Metrics()
+        self.metrics = Metrics(jvm_counters=lambda: jvm_counters(self.spark))
         # runtime confs (safe to apply on an externally provided session)
         for k, v in self.config.spark_confs().items():
-            if k == "spark.sql.warehouse.dir":
-                continue  # static conf; only honored at builder time
+            if k in _STATIC_CONFS:
+                continue  # only honored at builder time
             try:
                 self.spark.conf.set(k, v)
             except Exception:
@@ -321,7 +336,7 @@ class Engine:
             or len(set(cur)) != len(cur)
         ):
             return
-        quoted = ["`" + c.replace("`", "``") + "`" for c in desired]
+        quoted = [quote_identifier(c) for c in desired]
         res.df = res.df.select(*quoted)
         res.schema = res.df.schema
         prev = res._requery
@@ -414,9 +429,7 @@ class Engine:
                     "* REPLACE over duplicate source column names is "
                     "unsupported in DML"
                 )
-            cols = ", ".join(
-                "`" + c.replace("`", "``") + "`" for c in desired
-            )
+            cols = ", ".join(quote_identifier(c) for c in desired)
             out.append(
                 "%sSELECT %s FROM (%s) _swl_rpl_src%s"
                 % (prefix, cols, sel, rest)
@@ -653,7 +666,7 @@ class Engine:
                 )
                 copies = []
                 for c in matched:
-                    q = "`" + c.replace("`", "``") + "`"
+                    q = quote_identifier(c)
                     piece = pre + q + suf
                     if not has_alias:
                         piece = piece.rstrip() + " AS " + q
@@ -803,7 +816,7 @@ class Engine:
                 def items(cols):
                     out_items = []
                     for c in allc:
-                        q = "`" + c.replace("`", "``") + "`"
+                        q = quote_identifier(c)
                         if c not in cols:
                             out_items.append(f"NULL AS {q}")
                         elif c in force_str:

@@ -10,6 +10,9 @@ Re-expresses the reference's observability surface:
 - status JSON + HTML page (``swanlake-server/src/status.rs:25-101``) —
   served here as plain functions; callers can mount them on any HTTP
   framework (the engine itself stays transport-free).
+- JVM compile churn (:func:`jvm_counters`): Janino compiles of Spark's
+  generated code, HotSpot JIT time and classes loaded, read when a
+  snapshot is taken.
 """
 
 from __future__ import annotations
@@ -20,6 +23,33 @@ import threading
 import time
 from collections import deque
 from dataclasses import asdict, dataclass, field
+from typing import Callable
+
+
+def jvm_counters(spark) -> dict[str, float]:
+    """JVM-wide compile counters, cumulative since the JVM started:
+
+    - ``janino_compiles`` / ``janino_compile_ms``: classes Spark compiled
+      from generated code (``CodegenMetrics`` compilation-time histogram
+      count, ``CodeGenerator.compileTime`` in ns). A compile means the
+      generated-code cache missed.
+    - ``jit_ms``: HotSpot JIT compiler time (``CompilationMXBean``).
+    - ``classes_loaded``: total classes loaded (``ClassLoadingMXBean``);
+      every Janino compile loads new classes.
+
+    In local mode the executors share the driver JVM, so task-side
+    compiles count too. Five py4j calls: read per snapshot, never per
+    request, and compare deltas."""
+    jvm = spark.sparkContext._jvm
+    mf = jvm.java.lang.management.ManagementFactory
+    codegen = jvm.org.apache.spark.sql.catalyst.expressions.codegen
+    hist = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    return {
+        "janino_compiles": int(hist.getCount()),
+        "janino_compile_ms": codegen.CodeGenerator.compileTime() / 1e6,
+        "jit_ms": float(mf.getCompilationMXBean().getTotalCompilationTime()),
+        "classes_loaded": int(mf.getClassLoadingMXBean().getTotalLoadedClassCount()),
+    }
 
 
 def infer_reasons(
@@ -76,6 +106,9 @@ class Snapshot:
     slow_query_groups: list[dict]
     recent_errors: list[dict]
     history_size: int
+    # jvm_counters() at snapshot time: empty without a reader, {"error"}
+    # when the read failed
+    jvm: dict = field(default_factory=dict)
 
     # kept for backward compatibility with earlier callers
     @property
@@ -108,7 +141,12 @@ class Metrics:
     SLOW_LOG_SIZE = 32
     ERROR_LOG_SIZE = 32
 
-    def __init__(self, slow_threshold_s: float = 1.0) -> None:
+    def __init__(
+        self,
+        slow_threshold_s: float = 1.0,
+        jvm_counters: Callable[[], dict] | None = None,
+    ) -> None:
+        self._jvm_counters = jvm_counters
         self._lock = threading.Lock()
         self._latencies: deque[float] = deque(maxlen=self.RING_SIZE)
         self._slow: deque[dict] = deque(maxlen=self.SLOW_LOG_SIZE)
@@ -217,7 +255,17 @@ class Metrics:
             out.append(g)
         return sorted(out, key=lambda g: -g["total_ms"])
 
+    def _read_jvm(self) -> dict:
+        if self._jvm_counters is None:
+            return {}
+        try:
+            return self._jvm_counters()
+        except Exception as e:  # e.g. JVM stopped: report it, keep the rest
+            return {"error": f"{type(e).__name__}: {e}"[:200]}
+
     def snapshot(self) -> Snapshot:
+        # py4j round trips stay outside the lock that recording takes
+        jvm = self._read_jvm()
         with self._lock:
             lat = sorted(self._latencies)
             now = time.time()
@@ -239,6 +287,7 @@ class Metrics:
                 slow_query_groups=self._slow_groups(),
                 recent_errors=list(self._errors),
                 history_size=self.RING_SIZE,
+                jvm=jvm,
             )
 
     # -- status endpoints --------------------------------------------------
@@ -261,6 +310,14 @@ class Metrics:
             f"<li><code>{_html.escape(e['message'][:200])}</code></li>"
             for e in s.recent_errors[-10:]
         )
+        jvm = ""
+        if "janino_compiles" in s.jvm:
+            jvm = (
+                f"<h2>JVM</h2><p>{s.jvm['janino_compiles']} Janino compiles "
+                f"({s.jvm['janino_compile_ms']:.0f} ms), JIT "
+                f"{s.jvm['jit_ms']:.0f} ms, {s.jvm['classes_loaded']} classes "
+                "loaded</p>"
+            )
         return (
             "<!doctype html><title>engine status</title>"
             "<h1>Engine status</h1>"
@@ -273,4 +330,5 @@ class Metrics:
             f"<table border=1><tr><th>sql</th><th>n</th><th>avg ms</th>"
             f"<th>max ms</th></tr>{rows}</table>"
             f"<h2>Recent errors</h2><ul>{errors}</ul>"
+            f"{jvm}"
         )

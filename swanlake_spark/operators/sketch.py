@@ -40,6 +40,15 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from swanlake_spark.plans.quoting import quote_identifier
+
+
+def _col(name: str) -> Column:
+    """A column NAME as one identifier — the same reading the SQL-text
+    paths give it, so a name containing a backtick or a dot works on
+    both."""
+    return F.col(quote_identifier(name))
+
 
 def _bucket(item: Column, i: int, w: int) -> Column:
     """Row-hash i's bucket for the item: xxhash64 seeded by the row
@@ -59,15 +68,16 @@ def count_min(
     cell-wise addition (counters are linear) — partition-parallel
     builds need no special merge path because the groupBy already IS
     the merge."""
-    item = (F.col(col) if isinstance(col, str) else col).cast("string")
+    item = (_col(col) if isinstance(col, str) else col).cast("string")
     if isinstance(col, str):
         # one F.expr per plan build (r12) — the per-row-hash py4j
         # construction cost ~0.7 s of driver time per build; the SQL
         # text parses to the identical explode/struct/pmod expression
+        q = quote_identifier(col)
         pair = F.expr(
             "explode(array(" + ",".join(
                 f"named_struct('i', {i}, 'b', CAST(pmod(xxhash64("
-                f"CAST(`{col}` AS STRING), {i}), {w}) AS INT))"
+                f"CAST({q} AS STRING), {i}), {w}) AS INT))"
                 for i in range(d)
             ) + "))"
         ).alias("p")
@@ -124,15 +134,16 @@ def cm_estimate(
     String arguments take the one-round-trip F.expr path (r12); Column
     arguments keep the composable py4j form."""
     if isinstance(cms, str) and isinstance(item, str):
+        q_cms, q_item = quote_identifier(cms), quote_identifier(item)
         probes = ",".join(
-            f"coalesce(try_element_at(try_element_at(`{cms}`, {i}), "
-            f"CAST(pmod(xxhash64(CAST(`{item}` AS STRING), {i}), {w}) "
+            f"coalesce(try_element_at(try_element_at({q_cms}, {i}), "
+            f"CAST(pmod(xxhash64(CAST({q_item} AS STRING), {i}), {w}) "
             f"AS INT) + 1), 0)"
             for i in range(d)
         )
         return F.expr(f"least({probes})")
-    cms = F.col(cms) if isinstance(cms, str) else cms
-    item = (F.col(item) if isinstance(item, str) else item).cast("string")
+    cms = _col(cms) if isinstance(cms, str) else cms
+    item = (_col(item) if isinstance(item, str) else item).cast("string")
     return F.least(
         *[
             F.coalesce(
@@ -158,7 +169,7 @@ def heavy_hitters(
     via a count-min pre-filter (module docstring). Returns columns
     ``(value STRING, cnt BIGINT)``; deterministic under any
     partitioning (hash buckets are content-only)."""
-    item = (F.col(col) if isinstance(col, str) else col).cast("string")
+    item = (_col(col) if isinstance(col, str) else col).cast("string")
     cms = F.broadcast(count_min(df, col, d, w))
     survivors = (
         df.select(item.alias("value"))
@@ -457,7 +468,7 @@ def _hq_operand(v) -> str:
     """Render a hist_quantile operand as SQL text: a column name
     backticked, a number as a double literal."""
     if isinstance(v, str):
-        return f"`{v}`"
+        return quote_identifier(v)
     return repr(float(v)) + "D"
 
 
@@ -481,7 +492,7 @@ def hist_quantile(
     4× per row — because lambda bodies skip codegen subexpression
     elimination); Column operands keep the composable py4j form."""
     if isinstance(counts, str) and not isinstance(lo, Column) and not isinstance(hi, Column):
-        c, lo_s, hi_s = f"`{counts}`", _hq_operand(lo), _hq_operand(hi)
+        c, lo_s, hi_s = quote_identifier(counts), _hq_operand(lo), _hq_operand(hi)
         width = f"(({hi_s} - {lo_s}) / size({c}))"
         target = (
             f"greatest({repr(float(q))}D * CAST(aggregate({c}, "
@@ -517,7 +528,7 @@ def hist_quantile(
             + f"aggregate({c}, {init}, {step})"
             + f"), w -> {body}), 1)), 1)"
         )
-    counts = F.col(counts) if isinstance(counts, str) else counts
+    counts = _col(counts) if isinstance(counts, str) else counts
     lo = F.lit(lo) if not isinstance(lo, Column) else lo
     hi = F.lit(hi) if not isinstance(hi, Column) else hi
     nbins = F.size(counts)

@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from swanlake_spark.operators.text import tokens
+from swanlake_spark.plans.quoting import quote_identifier
 
 # a window repeated more than this many times (site-wide boilerplate)
 # is still fully processed for REMOVAL, but its occurrence list is
@@ -132,7 +133,7 @@ def _merged_spans(ss, min_tokens: int):
     own token count. ``ss`` is a column NAME (rendered as one SQL
     expression) or a Column (py4j form kept for composability)."""
     if isinstance(ss, str):
-        return F.expr(_merged_spans_sql(f"`{ss}`", min_tokens))
+        return F.expr(_merged_spans_sql(quote_identifier(ss), min_tokens))
     L = F.lit(min_tokens)
     init = F.array().cast("array<struct<s:long,e:long>>")
 

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from swanlake_spark.plans.quoting import quote_identifier
+
 # Stopword profiles for the language-ID heuristic (n-gram/stopword
 # frequency heuristics are the classic cheap lang-ID approach).
 STOPWORDS = {
@@ -47,11 +49,6 @@ def bpe_ish_token_count(text_col: str | Column = "text") -> Column:
     ).cast("int")
 
 
-def _bq(col: str) -> str:
-    """Backtick-quote a column name for SQL-text interpolation."""
-    return "`" + col.replace("`", "``") + "`"
-
-
 # SQL-text fragments for the quality battery (r12: the py4j-built
 # column trees cost ~0.21 s of driver time per quality_score plan
 # build — ~80 expression-node round trips, mostly the stopword-filter
@@ -82,7 +79,7 @@ def _feature_exprs(text_col: str) -> dict:
     """The five quality-feature expressions, in append order (dict
     insertion order IS the column order ``withColumns`` appends in,
     matching the former withColumn chain)."""
-    c = _bq(text_col)
+    c = quote_identifier(text_col)
     t = _tok_sql(c)
     return {
         "n_chars_q": F.expr("CAST(length(%s) AS INT)" % c),
@@ -116,7 +113,7 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     Computed from *unrounded* ratios — combining pre-rounded 4-decimal
     features through the 0.4/0.3 weights lands exactly on decimal half
     boundaries, where engines' rounding modes diverge."""
-    c = _bq(text_col)
+    c = quote_identifier(text_col)
     t = _tok_sql(c)
     alpha_raw = (
         "(length(regexp_replace(%s, '[^A-Za-z]', '')) / length(%s))" % (c, c)
@@ -150,7 +147,7 @@ def language_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     # pred_lang references them from a second (withColumns entries
     # cannot see each other), and the nested CASE keeps the same
     # first-language-in-dict-order tie-break the when() fold produced.
-    c = _bq(text_col)
+    c = quote_identifier(text_col)
     t = _tok_sql(c)
     rates = {}
     for lang, words in STOPWORDS.items():

@@ -41,6 +41,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from swanlake_spark.plans.quoting import quote_identifier
+
 END = "</w>"  # word-end marker, per the original BPE formulation
 
 _CHECKPOINT_EVERY = 8
@@ -61,22 +63,13 @@ def word_freqs(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def _bt(col_name: str) -> str:
-    """``col_name`` as a backtick-quoted SQL identifier. Embedded
-    backticks escape by doubling (the Spark identifier rule) — these
-    helpers splice caller-supplied column names into SQL text, and an
-    unescaped backtick would produce a malformed or injected
-    expression (ADVICE r12)."""
-    return "`" + col_name.replace("`", "``") + "`"
-
-
 def _char_symbols_sql(col_name: str) -> str:
     """word → [c1, c2, ..., cn, </w>] as SQL text (same expression the
     former Column-API form built — split/filter/concat — rendered as
     one string so plan construction is one py4j round trip, the r12
     pattern; END contains no SQL specials)."""
     return (
-        f"concat(filter(split({_bt(col_name)}, ''), c -> c != ''), "
+        f"concat(filter(split({quote_identifier(col_name)}, ''), c -> c != ''), "
         f"array('{END}'))"
     )
 
@@ -99,7 +92,7 @@ _ADJ_PAIRS_SQL = (
 
 def _adjacent_pairs(col_name: str) -> "F.Column":
     """[(s_i, s_i+1)] structs for counting."""
-    return F.expr(_ADJ_PAIRS_SQL.format(c=_bt(col_name)))
+    return F.expr(_ADJ_PAIRS_SQL.format(c=quote_identifier(col_name)))
 
 
 def _sql_str(s: str) -> str:
@@ -127,7 +120,7 @@ def _fold_sql(col_name: str, pairs: list[tuple[str, str]]) -> str:
         "ELSE acc.out END"
     )
     return (
-        f"aggregate({_bt(col_name)}, "
+        f"aggregate({quote_identifier(col_name)}, "
         "named_struct('out', CAST(array() AS array<string>), 'prev', ''), "
         f"(acc, x) -> CASE WHEN {tok} IS NOT NULL "
         f"THEN named_struct('out', concat(acc.out, array({tok})), "

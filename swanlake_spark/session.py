@@ -198,9 +198,15 @@ class Session:
         # client dialect (EngineConfig.client_dialect): "duckdb"
         # transpiles every statement this session runs — the
         # reference's ADBC/Flight clients speak DuckDB SQL
-        self.dialect: str | None = getattr(
-            getattr(engine, "config", None), "client_dialect", None
-        )
+        self.dialect: str | None = engine.config.client_dialect
+        # The engine bound to this session's fork, built once: it applies
+        # the server's EngineConfig to the fork's SQL conf and holds no
+        # per-call state, so every request and connection of the session
+        # shares it. Metrics stay the server's.
+        from swanlake_spark.engine import Engine
+
+        self.session_engine = Engine(spark=self.spark, config=engine.config)
+        self.session_engine.metrics = engine.metrics
 
     def touch(self) -> None:
         self.last_used = time.time()
@@ -223,10 +229,9 @@ class Session:
         not idempotent, so re-transpiling stored text would corrupt
         backslash-bearing literals."""
         self.touch()
-        from swanlake_spark.engine import Engine, apply_pivot_adjustments
+        from swanlake_spark.engine import apply_pivot_adjustments
 
-        eng = Engine(spark=self.spark)
-        eng.metrics = self.engine.metrics
+        eng = self.session_engine
         pivot_adj: tuple = ([], {})
         replace_probe: str | None = None
         if self.dialect == "duckdb" and pre_transpiled:
@@ -307,7 +312,6 @@ class Session:
     def create_prepared_statement(self, sql: str, ephemeral: bool = False) -> PreparedStatement:
         self.touch()
         if self.dialect == "duckdb":
-            from swanlake_spark.engine import Engine
             from swanlake_spark.functions import transpile_duckdb
             from swanlake_spark.functions.dialect import (
                 replace_position_probe,
@@ -318,7 +322,7 @@ class Session:
             # schema path all see conventional SQL. Schema-probe
             # rewrites (COLUMNS, BY NAME, DML * REPLACE — r12) apply
             # at prepare time against this session's fork.
-            eng = Engine(spark=self.spark)
+            eng = self.session_engine
             if re.search(r"\bCOLUMNS\s*\(", sql, re.IGNORECASE):
                 sql = eng._expand_columns_star(sql)
             if re.search(r"\bBY\s+NAME\b", sql, re.IGNORECASE):

@@ -1,7 +1,8 @@
 """HTTP status endpoint — the engine analogue of the reference's status
 server (``/root/reference/swanlake-server/src/status.rs:25-101``):
-``/healthz`` (``ok``), ``/status`` (metrics snapshot JSON), ``/`` (the
-HTML page). Stdlib-only, daemon-threaded; bind port 0 for an ephemeral
+``/healthz`` (``ok``), ``/status`` (metrics snapshot JSON; its ``jvm``
+object holds the JVM compile counters of ``metrics.jvm_counters``, read
+once per request to this endpoint), ``/`` (the HTML page). Stdlib-only, daemon-threaded; bind port 0 for an ephemeral
 port.
 """
 

@@ -638,6 +638,40 @@ class TestMetrics:
         page = engine.metrics.status_html()
         assert "Engine status" in page and "p95" in page
 
+    def test_jvm_compile_counters(self, engine):
+        """The snapshot carries the JVM's compile counters, read at
+        snapshot time. Spark inlines integer literals into generated
+        code, so a random one makes a query shape no cache holds."""
+        import random
+
+        before = engine.metrics.snapshot().jvm
+        assert set(before) == {
+            "janino_compiles", "janino_compile_ms", "jit_ms", "classes_loaded",
+        }
+        n = random.randrange(10**6, 10**9)
+        engine.query(
+            f"SELECT id % {n} AS k, sum(id * 7) AS s FROM range(100) GROUP BY 1"
+        ).collect()
+        after = engine.metrics.snapshot().jvm
+        assert after["janino_compiles"] > before["janino_compiles"]
+        assert after["janino_compile_ms"] > before["janino_compile_ms"]
+        assert after["classes_loaded"] > before["classes_loaded"]
+        assert after["jit_ms"] >= before["jit_ms"]
+        page = engine.metrics.status_html()
+        assert "Janino compiles" in page
+
+    def test_jvm_counters_absent_or_failing(self):
+        from swanlake_spark.metrics import Metrics
+
+        assert Metrics().snapshot().jvm == {}
+
+        def stopped():
+            raise RuntimeError("JVM gone")
+
+        m = Metrics(jvm_counters=stopped)
+        assert m.snapshot().jvm == {"error": "RuntimeError: JVM gone"}
+        assert "Janino" not in m.status_html()
+
 
 class TestMaterializedWarehouse:
     def test_materialize_splits_and_matches(self, engine, sf_dir):
@@ -1534,6 +1568,7 @@ class TestStatusServer:
             assert urllib.request.urlopen(f"{base}/healthz").read() == b"ok"
             payload = json.loads(urllib.request.urlopen(f"{base}/status").read())
             assert payload["total_queries"] >= 1
+            assert payload["jvm"]["janino_compiles"] > 0
             html = urllib.request.urlopen(f"{base}/").read().decode()
             assert "Engine status" in html
             with pytest.raises(urllib.error.HTTPError):

@@ -1593,6 +1593,32 @@ class TestHeavyHitters:
         )
         assert got == [("a", 5), ("b", 2)]
 
+    def test_backtick_column_names(self, spark):
+        """Column names are spliced into the sketch SQL text in backtick
+        quotes; a name containing a backtick must escape (by doubling)
+        instead of producing a malformed expression."""
+        from swanlake_spark.operators import sketch
+
+        plain = spark.range(3000).select(
+            F.concat(F.lit("w"), (F.col("id") % 61).cast("string")).alias("x")
+        )
+        df = plain.withColumnRenamed("x", "x`y")
+        got = sorted(
+            (r["value"], r["cnt"])
+            for r in sketch.heavy_hitters(df, "x`y", 50).collect()
+        )
+        assert got == self._exact(plain, "x", 50)
+        cms = sketch.count_min(df, "x`y", d=3, w=32).select(
+            F.col("cms").alias("c`ms")
+        )
+        est = (
+            df.groupBy(F.col("`x``y`")).count()
+            .crossJoin(F.broadcast(cms))
+            .select("count", sketch.cm_estimate("c`ms", "x`y", 3, 32).alias("est"))
+        )
+        assert est.count() == 61
+        assert est.where(F.col("est") < F.col("count")).count() == 0
+
 
 class TestKmvSketch:
     """KMV theta sketch (operators/sketch.py KMV section): exact below
@@ -1925,3 +1951,20 @@ class TestHistogramQuantile:
         width = 599.0 / 64
         for r in med:
             assert abs(r["m"] - 299.5) <= width + 1.0, r
+
+    def test_backtick_column_names(self, spark):
+        """hist_quantile's SQL-text path quotes the counts/lo/hi names;
+        names containing a backtick give the same quantile as plain
+        names."""
+        from swanlake_spark.operators import sketch
+
+        df = spark.range(5000).select((F.col("id") % 500).cast("double").alias("v"))
+        sk = sketch.histogram_sketch(df, "v", bins=64)
+        plain = sk.select(sketch.hist_quantile("counts", "lo", "hi", 0.5)).collect()[0][0]
+        odd = sk.select(
+            F.col("counts").alias("co`unts"),
+            F.col("lo").alias("l`o"),
+            F.col("hi").alias("h`i"),
+        )
+        got = odd.select(sketch.hist_quantile("co`unts", "l`o", "h`i", 0.5)).collect()[0][0]
+        assert got == plain

@@ -509,3 +509,89 @@ class TestClientDialect:
             assert r.p == "C:\\tmp\\new"
         finally:
             eng.sessions.remove("bslash-client")
+
+
+def _server_engine(spark, **cfg):
+    """A server Engine on a fork of the test session, so its confs stay
+    off the shared one."""
+    from swanlake_spark.config import EngineConfig
+    from swanlake_spark.engine import Engine
+
+    return Engine(spark=spark.newSession(), config=EngineConfig(cpus=4, **cfg))
+
+
+class TestSessionEngine:
+    """Each session builds one Engine on its Spark fork, from the
+    server's EngineConfig, and every request reuses it."""
+
+    def test_server_conf_survives_requests(self, spark):
+        eng = _server_engine(
+            spark, shuffle_partitions=7, broadcast_threshold_bytes=12345
+        )
+        sess = eng.sessions.get_or_create("conf-client")
+        try:
+            sess.query("SELECT 1 AS one").collect()
+            st = sess.create_prepared_statement("SELECT ? AS p")
+            sess.set_parameters(st.handle, [[2]])
+            assert sess.execute_prepared(st.handle).collect()[0].p == 2
+            assert sess.spark.conf.get("spark.sql.shuffle.partitions") == "7"
+            assert (
+                sess.spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+                == "12345"
+            )
+        finally:
+            eng.sessions.remove("conf-client")
+
+    def test_requests_build_no_engine(self, spark, monkeypatch):
+        from swanlake_spark import engine as engine_mod
+
+        eng = _server_engine(spark, client_dialect="duckdb")
+        sess = eng.sessions.get_or_create("no-engine-client")
+        built = []
+        init = engine_mod.Engine.__init__
+
+        def counting_init(self, *args, **kwargs):
+            built.append(1)
+            init(self, *args, **kwargs)
+
+        monkeypatch.setattr(engine_mod.Engine, "__init__", counting_init)
+        try:
+            assert sess.query("SELECT 1 AS one").collect()[0].one == 1
+            st = sess.create_prepared_statement("SELECT list_sum([1, 2]) AS s")
+            assert sess.execute_prepared(st.handle).collect()[0].s == 3
+            assert sess.session_engine.metrics is eng.metrics
+            assert built == []
+        finally:
+            eng.sessions.remove("no-engine-client")
+
+
+class TestCodegenCache:
+    def test_tpch_second_pass_reuses_generated_code(self, spark, sf_dir):
+        """The 22 prepared TPC-H statements need about 310 generated
+        classes; with Spark's default codegen cache (100 entries) every
+        pass evicts and recompiles them. Compares compile deltas only:
+        other tests share the JVM."""
+        from swanlake_spark.metrics import jvm_counters
+        from swanlake_spark.queries.tpch import TPCH_QUERIES
+
+        eng = _server_engine(spark, client_dialect="duckdb")
+        eng.attach_warehouse(sf_dir)
+        sess = eng.sessions.get_or_create("codegen-client")
+        try:
+            handles = [
+                sess.create_prepared_statement(q.oracle).handle
+                for q in TPCH_QUERIES.values()
+            ]
+            assert len(handles) == 22
+
+            def compiles_per_pass() -> int:
+                before = jvm_counters(spark)["janino_compiles"]
+                for h in handles:
+                    sess.execute_prepared(h).to_arrow()
+                return jvm_counters(spark)["janino_compiles"] - before
+
+            first = compiles_per_pass()
+            second = compiles_per_pass()
+            assert second * 10 <= first, (first, second)
+        finally:
+            eng.sessions.remove("codegen-client")

@@ -122,6 +122,19 @@ class TestDuplicateSpans:
             assert got == exp, (trial, docs)
 
 
+    def test_merged_spans_backtick_column_name(self, spark):
+        """The span fold is rendered as SQL text over a column name; a
+        name containing a backtick must escape, not break the text."""
+        df = spark.createDataFrame(
+            [(1, [0, 1, 2, 9, 20, 21])], "_id int, ss array<bigint>"
+        )
+        plain = df.select(SD._merged_spans("ss", 4).alias("m")).collect()
+        odd = df.withColumnRenamed("ss", "s`s")
+        got = odd.select(SD._merged_spans("s`s", 4).alias("m")).collect()
+        assert got == plain
+        assert [(r.s, r.e) for r in plain[0].m] == [(0, 6), (9, 13), (20, 25)]
+
+
 class TestStripDuplicateSpans:
     def test_keep_first_preserves_one_copy(self, spark):
         passage = "one two three four five six seven eight"
