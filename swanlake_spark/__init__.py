@@ -29,7 +29,6 @@ from swanlake_spark.errors import (
     ResourceExhausted,
 )
 from swanlake_spark.session import Session, SessionRegistry
-from swanlake_spark.wire import WireClient, start_wire_server
 
 __version__ = "0.2.0"
 
@@ -44,8 +43,6 @@ __all__ = [
     "UpdateResult",
     "Session",
     "SessionRegistry",
-    "WireClient",
-    "start_wire_server",
     "EngineError",
     "InvalidArgument",
     "FailedPrecondition",

@@ -102,7 +102,7 @@ class EngineConfig:
     # ANSI mode matches DuckDB's error-on-overflow semantics
     # (SURVEY.md §7.4 risk #3).
     ansi: bool = True
-    # SQL dialect applied to CLIENT sessions (Flight SQL / wire / the
+    # SQL dialect applied to CLIENT sessions (Flight SQL and the
     # session API): "duckdb" transpiles DuckDB-only spellings before
     # execution — the reference's clients speak DuckDB SQL, so a
     # deployment serving them sets this. Default None keeps the session

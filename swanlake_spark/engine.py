@@ -19,7 +19,7 @@ from __future__ import annotations
 
 import re
 import time
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -29,11 +29,13 @@ from swanlake_spark.config import EngineConfig
 from swanlake_spark.errors import EngineError, InvalidArgument
 from swanlake_spark.metrics import Metrics, jvm_counters
 from swanlake_spark.plans import (
+    ParsedStatement,
     classify,
     quote_identifier,
     split_statements,
     strip_select_locks,
 )
+from swanlake_spark.plans.parser import count_placeholders
 from swanlake_spark.sources import register_tables
 
 # EngineConfig.spark_confs() entries Spark reads only when the session is
@@ -113,16 +115,14 @@ class QueryResult:
 
 
 def apply_pivot_adjustments(
-    res: "QueryResult", zero_cols: list[str], renames_in: dict
+    res: "QueryResult", zero_cols: tuple[str, ...], renames_in: dict
 ) -> None:
     """Apply the duckdb-dialect PIVOT post-pass to a QueryResult:
     zero-fill the count output columns (DuckDB zero-fills empty pivot
     count cells; Spark leaves them NULL — the NULL is produced by the
     pivot itself, so no SQL-text rewrite can fix it in place) and
     rename single-ALIASED-aggregate columns to DuckDB's
-    ``<value>_<agg>`` convention. Shared by Engine.query's dialect
-    path and Session.query (the Flight SQL / wire surface under
-    EngineConfig.client_dialect). Also wraps an existing ``_requery``
+    ``<value>_<agg>`` convention. Also wraps an existing ``_requery``
     so a swap-safe re-run keeps the adjustments."""
     if not (zero_cols or renames_in) or not res.is_query or res.df is None:
         return
@@ -143,7 +143,7 @@ def apply_pivot_adjustments(
         cols = []
         for c in df.columns:
             name = renames.get(c, c)
-            col = _F.col(f"`{c}`")
+            col = _F.col(quote_identifier(c))
             if name in targets:
                 col = _F.coalesce(col, _F.lit(0))
             cols.append(col.alias(name))
@@ -154,6 +154,25 @@ def apply_pivot_adjustments(
     prev = res._requery
     if prev is not None:
         res._requery = lambda: zero_fill(prev())
+
+
+@dataclass(frozen=True)
+class Statement:
+    """Client SQL made runnable by :meth:`Engine.statement`.
+
+    ``sql`` is Spark SQL, transpiled from the client dialect exactly
+    once: nothing transpiles a Statement again (the literal-escape pass
+    is not idempotent). The last three fields are the result post-pass
+    (:meth:`Engine.post_pass`): PIVOT count columns to zero-fill, PIVOT
+    column renames, and a parameter-free probe whose analyzed column
+    order is a ``* REPLACE`` query's."""
+
+    sql: str
+    parsed: ParsedStatement
+    parameter_count: int
+    pivot_zero_cols: tuple[str, ...] = ()
+    pivot_renames: dict = field(default_factory=dict)
+    replace_probe: str | None = None
 
 
 class Engine:
@@ -229,25 +248,16 @@ class Engine:
 
     # -- SQL front door ----------------------------------------------------
 
-    def query(
-        self,
-        sql: str,
-        dialect: str | None = None,
-        args: list | None = None,
-    ) -> QueryResult:
-        """Execute SQL that returns rows. Multi-statement scripts run
-        sequentially; the result is the last row-returning statement's
-        (reference: ``contains_query`` + ``execute_batch``).
-
-        ``dialect="duckdb"`` transpiles DuckDB-only function spellings
-        (the reference's native dialect) to Spark equivalents first.
-        ``args`` binds ``?`` placeholders through Spark's native
-        parameterized SQL (typed, injection-safe); statements the engine
-        routes itself (DML rewrite, COPY, PRAGMA, ...) reject args — the
-        session layer falls back to typed literal rendering there."""
-        pivot_zero_cols: list[str] = []
-        pivot_renames: dict = {}
-        replace_probe: str | None = None
+    def statement(self, sql: str, dialect: str | None = None) -> Statement:
+        """The one front end: client SQL → :class:`Statement`, for
+        every entry point (``query``, sessions, prepared statements,
+        Flight SQL). ``dialect="duckdb"`` expands ``COLUMNS(...)``,
+        aligns ``UNION BY NAME`` arms, orders ``* REPLACE`` DML sources,
+        collects the post-pass and transpiles; the rewrites analyze
+        parts of the statement on this engine's session, nothing runs."""
+        zero_cols: list[str] = []
+        renames: dict = {}
+        probe: str | None = None
         if dialect == "duckdb":
             from swanlake_spark.functions import transpile_duckdb
             from swanlake_spark.functions.dialect import (
@@ -255,46 +265,74 @@ class Engine:
                 replace_position_probe,
             )
 
-            # DuckDB zero-fills empty PIVOT count cells (Spark leaves
-            # them NULL — the cell NULL is produced by the pivot
-            # itself, so no SQL-text rewrite can fix it in place) and
-            # names single-ALIASED-aggregate pivot columns
-            # `<value>_<agg>` where Spark drops the agg alias. Collect
-            # both adjustments now, apply on the result frame below.
-            pivot_zero_cols, pivot_renames = pivot_adjustments(sql)
-            # `* REPLACE` keeps each replaced column at its original
-            # star position in DuckDB; the transpiled star-EXCEPT form
-            # appends them at the end. The probe (same statement, bare
-            # `*`) analyzes to DuckDB's column order; the result frame
-            # is reordered to it below (analysis only — never runs).
             if re.search(r"\bCOLUMNS\s*\(", sql, re.IGNORECASE):
                 sql = self._expand_columns_star(sql)
             if re.search(r"\bBY\s+NAME\b", sql, re.IGNORECASE):
                 sql = self._rewrite_union_by_name(sql)
-            probe_raw = replace_position_probe(sql)
-            if probe_raw is not None:
-                # a result-frame reorder can't reach DML: an INSERT
-                # binds its source select POSITIONALLY, so the
-                # end-position REPLACE columns would write swapped
-                # VALUES (ADVICE r11). Rewrite the DML's source select
-                # to the probe's column order before execution.
+            if replace_position_probe(sql) is not None:
+                # `* REPLACE` keeps each replaced column at its star
+                # position in DuckDB; the transpiled star-EXCEPT form
+                # appends them. DML binds its source positionally, so
+                # it is reordered here (ADVICE r11); a query's result
+                # is reordered by the post-pass, to the column order of
+                # the same statement with a bare `*`.
                 sql = self._reorder_replace_dml(sql)
-                probe_raw = replace_position_probe(sql)
+                probe = replace_position_probe(sql)
+            # DuckDB zero-fills empty PIVOT count cells and names
+            # single-aliased-aggregate pivot columns `<value>_<agg>`
+            zero_cols, renames = pivot_adjustments(sql)
             sql = transpile_duckdb(sql)
-            if probe_raw is not None:
-                replace_probe = transpile_duckdb(probe_raw)
+            if probe is not None:
+                probe = transpile_duckdb(probe)
+        sql = strip_select_locks(sql).sql
+        parsed = classify(sql)
+        if probe is not None:
+            from swanlake_spark.session import bind_parameters
+
+            # column order does not depend on the bound values
+            probe = (
+                bind_parameters(probe, [None] * count_placeholders(probe))
+                if parsed.is_query
+                else None
+            )
+        return Statement(
+            sql=sql,
+            parsed=parsed,
+            parameter_count=count_placeholders(sql),
+            pivot_zero_cols=tuple(zero_cols),
+            pivot_renames=renames,
+            replace_probe=probe,
+        )
+
+    def query(
+        self,
+        sql: "str | Statement",
+        dialect: str | None = None,
+        args: list | None = None,
+    ) -> QueryResult:
+        """Execute SQL that returns rows. Multi-statement scripts run
+        sequentially; the result is the last row-returning statement's
+        (reference: ``contains_query`` + ``execute_batch``).
+
+        ``sql`` is client SQL in ``dialect`` (see :meth:`statement`) or
+        an already built :class:`Statement`, which runs as it is.
+        ``args`` binds ``?`` placeholders through Spark's native
+        parameterized SQL (typed, injection-safe); statements the engine
+        routes itself (DML rewrite, COPY, PRAGMA, ...) reject args — the
+        session layer falls back to typed literal rendering there."""
+        st = sql if isinstance(sql, Statement) else self.statement(sql, dialect)
         t0 = time.perf_counter()
         with self.metrics.start_query():
             try:
-                res = self._run_script_swap_safe(sql, args=args)
+                res = self._run_script_swap_safe(st, args=args)
             except EngineError as e:
-                self.metrics.record_error(str(e), sql)
+                self.metrics.record_error(str(e), st.sql)
                 raise
             except Exception as e:
-                self.metrics.record_error(str(e), sql)
+                self.metrics.record_error(str(e), st.sql)
                 raise EngineError(str(e)) from e
         res.elapsed_s = time.perf_counter() - t0
-        self.metrics.record_query(res.elapsed_s, sql, is_query=res.is_query)
+        self.metrics.record_query(res.elapsed_s, st.sql, is_query=res.is_query)
         if (
             res.is_query
             and res.statements_run == 1
@@ -303,30 +341,28 @@ class Engine:
             # side-effect-free: safe to transparently re-run if a COW
             # schema publish moves files under the deferred collect
             res._requery = (
-                lambda: self._run_script_swap_safe(sql, args=args).df
+                lambda: self._run_script_swap_safe(st, args=args).df
             )
-        apply_pivot_adjustments(res, pivot_zero_cols, pivot_renames)
-        if replace_probe is not None:
-            self._apply_replace_order(res, replace_probe, args)
+        return self.post_pass(res, st)
+
+    def post_pass(self, res: QueryResult, st: Statement) -> QueryResult:
+        """Give ``res`` the client dialect's result shape (see
+        :class:`Statement`). Lazy: the ``* REPLACE`` probe is only
+        analyzed, never run."""
+        apply_pivot_adjustments(res, st.pivot_zero_cols, st.pivot_renames)
+        if st.replace_probe is not None:
+            self._apply_replace_order(res, st.replace_probe)
         return res
 
-    def _apply_replace_order(
-        self, res: QueryResult, probe_sql: str, args: list | None
-    ) -> None:
+    def _apply_replace_order(self, res: QueryResult, probe_sql: str) -> None:
         """Reorder a ``* REPLACE`` result frame to DuckDB's column
         order (replaced columns keep their original star position).
-        The probe statement analyzes lazily — no execution. Skipped
-        when the probe fails (multi-statement scripts, DDL) or the
-        result has duplicate/mismatched column names."""
+        Skipped when the probe fails or the result has
+        duplicate/mismatched column names."""
         if not res.is_query or res.df is None:
             return
         try:
-            pdf = (
-                self.spark.sql(probe_sql, args=args)
-                if args
-                else self.spark.sql(probe_sql)
-            )
-            desired = pdf.columns
+            desired = self.spark.sql(probe_sql).columns
         except Exception:
             return
         cur = res.df.columns
@@ -846,7 +882,7 @@ class Engine:
         return self.query(sql).affected_rows
 
     def _run_script_swap_safe(
-        self, sql: str, args: list | None = None
+        self, st: Statement, args: list | None = None
     ) -> QueryResult:
         """Run the script swap-safely around schema-ALTER publishes.
 
@@ -874,13 +910,13 @@ class Engine:
         still retries via the recently-swapped record."""
         from swanlake_spark.operators import schema_evolution
 
-        retry_safe = classify(strip_select_locks(sql).sql).all_queries
+        retry_safe = st.parsed.all_queries
         attempts = 0
         while True:
             for ev in schema_evolution.swap_in_progress():
                 ev.wait(30.0)
             try:
-                return self._run_script(sql, args=args)
+                return self._run_script(st.sql, args=args)
             except Exception as e:
                 msg = str(e)
                 stale_scan = (
@@ -912,13 +948,14 @@ class Engine:
                         raise
 
     def _run_script(self, sql: str, args: list | None = None) -> QueryResult:
-        stripped = strip_select_locks(sql)
-        stmts = split_statements(stripped.sql)
+        """Route and run a :class:`Statement`'s SQL (select locks
+        already stripped); a query's DataFrame is left lazy."""
+        parsed = classify(sql)
+        stmts = parsed.statements
         if not stmts:
             raise InvalidArgument("empty SQL")
         last_df: DataFrame | None = None
         affected = -1
-        parsed = classify(stripped.sql)
         for stmt in stmts:
             kw = stmt.lstrip()[:8].upper()
             if kw.startswith("ATTACH") or kw.startswith("DETACH"):
@@ -1284,13 +1321,21 @@ class Engine:
 
     # -- schema probes -----------------------------------------------------
 
-    def schema_for_query(self, sql: str) -> T.StructType:
-        """Result schema without executing (Catalyst analysis only) —
-        the reference achieves this by preparing and not fetching."""
-        one = split_statements(strip_select_locks(sql).sql)
-        if len(one) != 1:
-            raise InvalidArgument("schema_for_query takes a single statement")
-        return self.spark.sql(one[0]).schema
+    def schema_for_query(self, statement: "str | Statement") -> T.StructType:
+        """Result schema without executing — the reference prepares and
+        does not fetch. The statement takes the engine's own routing
+        (``_run_script``: a query is analyzed, not collected) and the
+        result post-pass, so this is the schema ``query`` returns."""
+        st = (
+            statement
+            if isinstance(statement, Statement)
+            else self.statement(statement)
+        )
+        if not st.parsed.is_query:
+            raise InvalidArgument(
+                "schema_for_query takes a single row-returning statement"
+            )
+        return self.post_pass(self._run_script(st.sql), st).schema
 
     def table_schema(self, name: str) -> T.StructType:
         return self.spark.table(name).schema

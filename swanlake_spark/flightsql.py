@@ -43,9 +43,12 @@ middleware), exactly how the reference rehydrates per-client state
 before handing off to handlers). Clients that send no header share the
 ``flight-anonymous`` session.
 
-Scale note: like the HTTP wire endpoint (``wire.py``), this is a
-control-plane veneer — results materialize on the driver before
-streaming, the reference's own materialize-then-stream shape
+Every statement goes through the engine's one front end
+(``Engine.statement``); GetFlightInfo announces the schema
+``Engine.schema_for_query`` derives from it, the schema DoGet streams.
+
+Scale note: this is a control-plane veneer — results materialize on the
+driver before streaming, the reference's own materialize-then-stream shape
 (``connection.rs:302-307``). Bulk extracts belong in COPY-to-storage.
 """
 
@@ -59,7 +62,6 @@ import pyarrow as pa
 import pyarrow.flight as fl
 
 from swanlake_spark.errors import EngineError, InvalidArgument
-from swanlake_spark.plans.parser import classify
 
 # --------------------------------------------------------------------------
 # Minimal protobuf wire codec (public wire format: varints + tag/length
@@ -322,15 +324,15 @@ class FlightSqlServer(fl.FlightServerBase):
             if name == "CommandStatementQuery":
                 # CommandStatementQuery: query = 1 (string)
                 sql = _str_field(pb_fields(payload), 1, "")
-                returns_rows = classify(sql).is_query
+                st = sess.statement(sql)
+                # the schema of the stream DoGet sends for this text; a
+                # script or command announces none (schema at DoGet)
+                returns_rows = st.parsed.is_query
                 schema = pa.schema([])
                 if returns_rows:
-                    try:
-                        schema = _spark_to_arrow_schema(
-                            sess.session_engine.schema_for_query(sql)
-                        )
-                    except InvalidArgument:
-                        pass  # multi-statement script: schema at DoGet time
+                    schema = _spark_to_arrow_schema(
+                        sess.session_engine.schema_for_query(st)
+                    )
                 handle = json.dumps(
                     {"session": sid, "sql": sql, "returns_rows": returns_rows}
                 ).encode()
@@ -480,10 +482,10 @@ class FlightSqlServer(fl.FlightServerBase):
             sess, _sid = self._session(context)
             param_sets = _read_param_sets(reader)
             if name == "CommandStatementUpdate":
-                sql = _str_field(pb_fields(payload), 1, "")
+                st = sess.statement(_str_field(pb_fields(payload), 1, ""))
                 affected = 0
                 for params in param_sets or [None]:
-                    affected += max(sess.execute_update(sql, params), 0)
+                    affected += max(sess.execute_update(st, params), 0)
                 writer.write(
                     pa.py_buffer(_enc_varint(1, affected))
                 )  # DoPutUpdateResult: record_count = 1
@@ -534,7 +536,7 @@ class FlightSqlServer(fl.FlightServerBase):
             return insert_arrow(sess.spark, info.table, batch, info.columns)
         total = 0
         for params in param_sets or [None]:
-            total += max(sess.execute_update(st.sql, params), 0)
+            total += max(sess.execute_update(st.statement, params), 0)
         return total
 
     # -- DoAction ----------------------------------------------------------

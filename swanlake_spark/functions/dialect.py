@@ -4302,6 +4302,63 @@ def _rewrite_cast_typenames(sql: str) -> str:
     return sql
 
 
+_DDL_NAME = r"(?:[\w.]|`(?:[^`]|``)*`|\"(?:[^\"]|\"\")*\")+"
+_DDL_COLUMNS_RE = re.compile(
+    r"\bCREATE\s+(?:OR\s+REPLACE\s+)?(?:(?:TEMP|TEMPORARY|EXTERNAL)\s+)?"
+    rf"TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?{_DDL_NAME}\s*(?P<list>\()"
+    rf"|\bALTER\s+TABLE\s+{_DDL_NAME}\s+ADD\s+(?:COLUMNS\s*(?P<alist>\()"
+    r"|(?:COLUMN\s+)?(?:IF\s+NOT\s+EXISTS\s+)?)",
+    re.IGNORECASE,
+)
+_COLUMN_DEF_RE = re.compile(
+    r"(\s*(`(?:[^`]|``)+`|\"(?:[^\"]|\"\")+\"|\w+)\s+)"  # column name
+    r"([A-Za-z_]\w*)\b(?!\s*[(\[])"  # a type with no (n) or [] suffix
+)
+
+
+def _map_column_def(d: str) -> str:
+    m = _COLUMN_DEF_RE.match(d)
+    if m is None or m.group(2).upper() in (
+        "CONSTRAINT", "PRIMARY", "FOREIGN", "UNIQUE", "CHECK",
+    ):
+        return d
+    for pat, target in _CAST_TYPE_SPELLINGS:
+        if re.fullmatch(pat, m.group(3), re.IGNORECASE):
+            return m.group(1) + target + d[m.end(3):]
+    return d
+
+
+def _rewrite_ddl_column_types(sql: str) -> str:
+    """Column types in ``CREATE TABLE t (...)`` and ``ALTER TABLE t ADD
+    [COLUMN | COLUMNS (...)]`` take the Spark spellings of
+    ``_CAST_TYPE_SPELLINGS``: a bare ``VARCHAR`` column is a Spark parse
+    error (DATATYPE_MISSING_SIZE); ``VARCHAR(n)`` and array types stay."""
+    spans = _mask_spans(sql)
+    out, last = [], 0
+    for m in _DDL_COLUMNS_RE.finditer(sql):
+        if m.start() < last or _in_span(m.start(), spans):
+            continue
+        end = m.end()
+        if m.group("list") or m.group("alist"):
+            depth = 1
+            while end < len(sql) and depth:
+                if not _in_span(end, spans):
+                    depth += {"(": 1, ")": -1}.get(sql[end], 0)
+                end += 1
+            end -= 1  # the closing paren
+        else:
+            while end < len(sql) and (
+                sql[end] != ";" or _in_span(end, spans)
+            ):
+                end += 1
+        defs = _split_top(sql[m.end() : end])
+        out.append(sql[last : m.end()])
+        out.append(",".join(_map_column_def(d) for d in defs))
+        last = end
+    out.append(sql[last:])
+    return "".join(out)
+
+
 def _rewrite_distinct_on(sql: str) -> str:
     """DuckDB ``SELECT DISTINCT ON (keys) items FROM rest [ORDER BY
     ord] [tail]`` → one row per distinct ``keys``, chosen by ``ord``:
@@ -4654,6 +4711,7 @@ def transpile_duckdb(sql: str) -> str:
     sql = _rewrite_distinct_on(sql)
     sql = _rewrite_json_casts(sql)
     sql = _rewrite_cast_typenames(sql)
+    sql = _rewrite_ddl_column_types(sql)
     sql = _rewrite_int_cast_rounding(sql)
     sql = _rewrite_decimal_cast_trunc(sql)
     sql = _rewrite_struct_literals(sql)

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 
 from swanlake_spark.errors import InvalidArgument
 from swanlake_spark.plans.parser import _IDENT, _mask_literals, _scan, _unquote
+from swanlake_spark.plans.quoting import quote_identifier
 
 _TABLE_RE = rf"{_IDENT}(?:\.{_IDENT}){{0,2}}"
 _UPDATE_HEAD = re.compile(rf"^\s*UPDATE\s+(?P<table>{_TABLE_RE})", re.IGNORECASE)
@@ -382,9 +383,11 @@ def _partition_spec(part_cols: list[str], key: tuple) -> str:
     parts = []
     for c, v in zip(part_cols, key):
         if v is None:
-            parts.append(f"`{c}` = null")
+            parts.append(f"{quote_identifier(c)} = null")
         else:
-            parts.append(f"`{c}` = '" + str(v).replace("'", "''") + "'")
+            parts.append(
+                f"{quote_identifier(c)} = '" + str(v).replace("'", "''") + "'"
+            )
     return ", ".join(parts)
 
 
@@ -1074,7 +1077,7 @@ def _output_size_ok(new_sub) -> bool:
         if t in ("string", "binary"):
             aggs.append(
                 F.coalesce(
-                    F.sum(F.octet_length(F.col(f.name))), F.lit(0)
+                    F.sum(F.octet_length(F.col(quote_identifier(f.name)))), F.lit(0)
                 ).alias(f"_b_{f.name}")
             )
         else:
@@ -1196,12 +1199,13 @@ def _update_select_list(df: DataFrame, assignments: dict[str, str]) -> str:
             raise InvalidArgument(f"unknown column in SET: {col}")
     parts = []
     for f in df.schema.fields:
+        q = quote_identifier(f.name)
         if f.name in assignments:
             parts.append(
-                f"CAST(({assignments[f.name]}) AS {types[f.name]}) AS `{f.name}`"
+                f"CAST(({assignments[f.name]}) AS {types[f.name]}) AS {q}"
             )
         else:
-            parts.append(f"`{f.name}`")
+            parts.append(q)
     return ", ".join(parts)
 
 
@@ -1212,7 +1216,7 @@ def _view_ref(view: str, alias: str | None) -> str:
     if not alias:
         return view
     bare = alias.split(".")[-1].strip('`"')
-    return f"{view} AS `{bare}`"
+    return f"{view} AS {quote_identifier(bare)}"
 
 
 def _default_pin(df: DataFrame) -> DataFrame:
@@ -1269,7 +1273,9 @@ def apply_update(
             raise InvalidArgument(f"unknown column in SET: {col}")
         out = out.withColumn(
             col,
-            F.when(cond, F.expr(val).cast(types[col])).otherwise(F.col(col)),
+            F.when(cond, F.expr(val).cast(types[col])).otherwise(
+                F.col(quote_identifier(col))
+            ),
         )
     return out
 
@@ -1560,9 +1566,10 @@ def _apply_merge_body(
     source_df.createOrReplaceTempView(sview)
     scols = source_df.columns
 
-    tref = f"{tview} AS `{ta}`"
-    sref = f"{sview} AS `{sa}`"
-    q = lambda c: f"`{ta}`.`{c}`"
+    qta, qsa = quote_identifier(ta), quote_identifier(sa)
+    tref = f"{tview} AS {qta}"
+    sref = f"{sview} AS {qsa}"
+    q = lambda c: f"{qta}.{quote_identifier(c)}"
 
     matched_clauses = [c for c in clauses if c.matched]
     notmatched_clauses = [c for c in clauses if not c.matched]
@@ -1590,7 +1597,8 @@ def _apply_merge_body(
                 else:
                     branches.append(f"WHEN ({cnd}) THEN {q(c)}")
             sel_items.append(
-                "CASE " + " ".join(branches) + f" ELSE {q(c)} END AS `{c}`"
+                "CASE " + " ".join(branches)
+                + f" ELSE {q(c)} END AS {quote_identifier(c)}"
             )
         del_branches = " ".join(
             f"WHEN ({cl.condition or 'TRUE'}) THEN {str(cl.kind() == 'delete').lower()}"
@@ -1602,14 +1610,14 @@ def _apply_merge_body(
         )
         sel_items.append(f"CASE {act_branches} ELSE false END AS `_swl_actioned`")
         sel_items.append(
-            f"count(*) OVER (PARTITION BY `{ta}`.`_swl_rid`) AS `_swl_nmatch`"
+            f"count(*) OVER (PARTITION BY {q('_swl_rid')}) AS `_swl_nmatch`"
         )
         with_id = target_df.withColumn(
             "_swl_rid", F.monotonically_increasing_id()
         )
         with_id.createOrReplaceTempView(tview)
         matched_sql = (
-            f"SELECT `{ta}`.`_swl_rid` AS `_swl_rid`, "
+            f"SELECT {q('_swl_rid')} AS `_swl_rid`, "
             + ", ".join(sel_items)
             + f" FROM {tref} JOIN {sref} ON {cond}"
         )
@@ -1623,14 +1631,15 @@ def _apply_merge_body(
             raise InvalidArgument(
                 "MERGE: a target row matched multiple source rows"
             )
-        surviving_matched = matched.filter(~F.col("_swl_del")).select(*tcols)
+        qcols = [quote_identifier(c) for c in tcols]
+        surviving_matched = matched.filter(~F.col("_swl_del")).select(*qcols)
         # unmatched target rows: untouched.
         unmatched_target = (
             spark.sql(
-                f"SELECT `{ta}`.* FROM {tref} LEFT ANTI JOIN {sref} ON {cond}"
+                f"SELECT {qta}.* FROM {tref} LEFT ANTI JOIN {sref} ON {cond}"
             )
             .drop("_swl_rid")
-            .select(*tcols)
+            .select(*qcols)
         )
         target_part = surviving_matched.unionAll(unmatched_target)
         n_matched_actioned = matched.filter("_swl_actioned").count()
@@ -1643,7 +1652,7 @@ def _apply_merge_body(
     # --- WHEN NOT MATCHED inserts: first-arm routing via prior-cond guards.
     inserts = None
     unmatched_src = spark.sql(
-        f"SELECT `{sa}`.* FROM {sref} LEFT ANTI JOIN {tview} AS `{ta}` ON {cond}"
+        f"SELECT {qsa}.* FROM {sref} LEFT ANTI JOIN {tref} ON {cond}"
     )
     unmatched_src.createOrReplaceTempView(uview)
     prior: list[str] = []
@@ -1654,18 +1663,15 @@ def _apply_merge_body(
             if colname not in types:
                 raise InvalidArgument(f"unknown column in MERGE INSERT: {colname}")
         items = [
-            (
-                f"CAST(({assigned[c]}) AS {types[c]}) AS `{c}`"
-                if c in assigned
-                else f"CAST(NULL AS {types[c]}) AS `{c}`"
-            )
+            f"CAST(({assigned[c] if c in assigned else 'NULL'}) AS {types[c]})"
+            f" AS {quote_identifier(c)}"
             for c in tcols
         ]
         guards = [f"({cl.condition})"] if cl.condition else []
         guards += [f"NOT coalesce(({p}), false)" for p in prior]
         where_sql = f" WHERE {' AND '.join(guards)}" if guards else ""
         piece = spark.sql(
-            f"SELECT {', '.join(items)} FROM {uview} AS `{sa}`{where_sql}"
+            f"SELECT {', '.join(items)} FROM {uview} AS {qsa}{where_sql}"
         )
         inserts = piece if inserts is None else inserts.unionAll(piece)
         if cl.condition:
@@ -1858,9 +1864,11 @@ def _merge_matched_files(
     )
     source_df.createOrReplaceTempView(sview)
     try:
+        qta = quote_identifier(ta)
         rows = spark.sql(
-            f"SELECT DISTINCT `{ta}`.`_swl_file` AS f "
-            f"FROM {tview} AS `{ta}` LEFT SEMI JOIN {sview} AS `{sa}` "
+            f"SELECT DISTINCT {qta}.`_swl_file` AS f "
+            f"FROM {tview} AS {qta} LEFT SEMI JOIN {sview} AS "
+            f"{quote_identifier(sa)} "
             f"ON {cond} LIMIT {_FILE_COW_MAX_FILES + 1}"
         ).collect()
     finally:

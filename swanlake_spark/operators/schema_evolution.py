@@ -49,6 +49,7 @@ import threading
 from pyspark.sql import SparkSession
 
 from swanlake_spark.errors import InvalidArgument
+from swanlake_spark.plans.quoting import quote_identifier
 
 # tables whose publish section is in flight (staged-files rename-in →
 # retire → DROP→CREATE catalog swap → refresh): engine readers consult
@@ -175,10 +176,10 @@ def _rewrite_schema(
         if part_cols:
             # keep partition columns last, the saveAsTable layout
             order = [
-                f.name
+                quote_identifier(f.name)
                 for f in new_df.schema.fields
                 if f.name not in part_cols
-            ] + [c for c in part_cols]
+            ] + [quote_identifier(c) for c in part_cols]
             new_df = new_df.select(*order)
             new_df.write.partitionBy(*part_cols).parquet(
                 staging, mode="overwrite"
@@ -187,7 +188,8 @@ def _rewrite_schema(
             new_df.write.parquet(staging, mode="overwrite")
         schema = new_df.schema
         cols_ddl = ", ".join(
-            f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields
+            f"{quote_identifier(f.name)} {f.dataType.simpleString()}"
+            for f in schema.fields
         )
         olds = [
             f"{loc.rstrip('/')}/{rel}"
@@ -241,7 +243,7 @@ def _rewrite_schema(
             spark.sql(f"DROP TABLE {table}")  # direct: keep _versions root
             part_sql = (
                 " PARTITIONED BY ("
-                + ", ".join(f"`{c}`" for c in part_cols)
+                + ", ".join(quote_identifier(c) for c in part_cols)
                 + ")"
                 if part_cols
                 else ""

@@ -26,7 +26,7 @@ import itertools
 import re
 import threading
 import time
-from dataclasses import dataclass, field
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -37,7 +37,8 @@ from swanlake_spark.errors import (
     InvalidArgument,
     ResourceExhausted,
 )
-from swanlake_spark.plans import classify, split_statements, strip_select_locks
+from swanlake_spark.engine import Engine, Statement
+from swanlake_spark.plans import split_statements
 from swanlake_spark.plans.parser import (
     _scan,
     count_placeholders,
@@ -49,13 +50,23 @@ from swanlake_spark.plans.parser import (
 @dataclass
 class PreparedStatement:
     handle: int
-    sql: str
-    is_query: bool
-    parameter_count: int
+    statement: Statement  # built once, at prepare time
     schema: T.StructType | None = None  # cached on first plan
     parameter_schema: T.StructType | None = None
     pending_params: list[list] | None = None
     ephemeral: bool = False
+
+    @property
+    def sql(self) -> str:
+        return self.statement.sql
+
+    @property
+    def is_query(self) -> bool:
+        return self.statement.parsed.is_query
+
+    @property
+    def parameter_count(self) -> int:
+        return self.statement.parameter_count
 
 
 _TARGET_TABLE_RE = re.compile(
@@ -166,6 +177,11 @@ def bind_parameters(sql: str, params: list) -> str:
     return "".join(out)
 
 
+def _bind(st: Statement, params: list) -> Statement:
+    """``st`` with its ``?`` markers rendered as typed literals."""
+    return replace(st, sql=bind_parameters(st.sql, params), parameter_count=0)
+
+
 class Session:
     """One client session: isolated SparkSession fork + handles + txn."""
 
@@ -203,8 +219,6 @@ class Session:
         # the server's EngineConfig to the fork's SQL conf and holds no
         # per-call state, so every request and connection of the session
         # shares it. Metrics stay the server's.
-        from swanlake_spark.engine import Engine
-
         self.session_engine = Engine(spark=self.spark, config=engine.config)
         self.session_engine.metrics = engine.metrics
 
@@ -213,72 +227,21 @@ class Session:
 
     # -- SQL ----------------------------------------------------------------
 
-    def query(
-        self,
-        sql: str,
-        params: list | None = None,
-        pre_transpiled: bool = False,
-    ):
+    def statement(self, sql: str) -> Statement:
+        """Client SQL in this session's dialect → a :class:`Statement`,
+        built against this session's Spark fork."""
+        return self.session_engine.statement(sql, self.dialect)
+
+    def query(self, sql: "str | Statement", params: list | None = None):
         """Execute through the engine, but against this session's Spark
         fork (temp views, USE state), with transaction staging applied.
-
-        ``pre_transpiled``: the statement already went through
-        ``transpile_duckdb`` (prepared statements are stored
-        transpiled) — transpile is applied exactly ONCE per statement;
-        the literal-escape pass (dialect.py step 10) is deliberately
-        not idempotent, so re-transpiling stored text would corrupt
-        backslash-bearing literals."""
+        ``sql`` is client SQL or a :class:`Statement` built from it
+        (prepared statements), which runs as it is."""
         self.touch()
-        from swanlake_spark.engine import apply_pivot_adjustments
-
         eng = self.session_engine
-        pivot_adj: tuple = ([], {})
-        replace_probe: str | None = None
-        if self.dialect == "duckdb" and pre_transpiled:
-            from swanlake_spark.functions.dialect import pivot_adjustments
-
-            pivot_adj = pivot_adjustments(sql)
-        if self.dialect == "duckdb" and not pre_transpiled:
-            from swanlake_spark.functions import transpile_duckdb
-            from swanlake_spark.functions.dialect import (
-                pivot_adjustments,
-                replace_position_probe,
-            )
-
-            # transpile HERE (not via eng.query's dialect arg) so the
-            # transactional and literal-binding paths below also see
-            # conventional SQL. `?` markers outside literals survive
-            # textual rewrites: _transform_calls refuses any rewrite
-            # whose call carries a bare marker (duplication/reorder
-            # would corrupt positional binding — it fails loud at
-            # analysis instead). PIVOT count zero-fill/rename applies
-            # on the result below, same as the engine's dialect path.
-            # The schema-probe rewrites (COLUMNS expansion, UNION BY
-            # NAME alignment, DML * REPLACE reorder — r12) run here
-            # too, against THIS session's Spark fork, so the
-            # client_dialect wire path reaches them.
-            if re.search(r"\bCOLUMNS\s*\(", sql, re.IGNORECASE):
-                sql = eng._expand_columns_star(sql)
-            if re.search(r"\bBY\s+NAME\b", sql, re.IGNORECASE):
-                sql = eng._rewrite_union_by_name(sql)
-            probe_raw = replace_position_probe(sql)
-            if probe_raw is not None:
-                sql = eng._reorder_replace_dml(sql)
-                probe_raw = replace_position_probe(sql)
-            pivot_adj = pivot_adjustments(sql)
-            sql = transpile_duckdb(sql)
-            if probe_raw is not None:
-                # result-frame reorder for SELECT * REPLACE (the
-                # session path used to be a documented carve-out)
-                replace_probe = transpile_duckdb(probe_raw)
-
-        def _finish(res):
-            apply_pivot_adjustments(res, *pivot_adj)
-            if replace_probe is not None:
-                eng._apply_replace_order(res, replace_probe, None)
-            return res
+        st = sql if isinstance(sql, Statement) else self.statement(sql)
         try:
-            if params and self.txn_id is None and classify(sql).all_queries:
+            if params and self.txn_id is None and st.parsed.all_queries:
                 # Native parameterized SQL (typed, injection-safe — the
                 # Spark analogue of the reference's Arrow value binding),
                 # but ONLY for pure-query scripts: a script with writes
@@ -290,55 +253,37 @@ class Session:
                 # literal rendering (engine-routed statements — COW DML,
                 # PK-checked INSERT, COPY — can't resolve markers anyway).
                 try:
-                    return _finish(eng.query(sql, args=list(params)))
+                    return eng.query(st, args=list(params))
                 except EngineError:
                     pass
             if params:
-                sql = bind_parameters(sql, params)
+                st = _bind(st, params)
             if self.txn_id is not None:
-                return _finish(self._transactional_execute(eng, sql))
-            return _finish(eng.query(sql))
+                return eng.post_pass(
+                    self._transactional_execute(eng, st.sql), st
+                )
+            return eng.query(st)
         finally:
             # touch on completion too: a query running longer than the
             # idle timeout must not leave the session looking idle to
             # the janitor (it was busy, not abandoned)
             self.touch()
 
-    def execute_update(self, sql: str, params: list | None = None) -> int:
+    def execute_update(
+        self, sql: "str | Statement", params: list | None = None
+    ) -> int:
         return self.query(sql, params).affected_rows
 
     # -- prepared statements -----------------------------------------------
 
     def create_prepared_statement(self, sql: str, ephemeral: bool = False) -> PreparedStatement:
         self.touch()
-        if self.dialect == "duckdb":
-            from swanlake_spark.functions import transpile_duckdb
-            from swanlake_spark.functions.dialect import (
-                replace_position_probe,
-            )
-
-            # stored transpiled, so classification, placeholder
-            # counting, parameter-schema inference, and the NULL-probe
-            # schema path all see conventional SQL. Schema-probe
-            # rewrites (COLUMNS, BY NAME, DML * REPLACE — r12) apply
-            # at prepare time against this session's fork.
-            eng = self.session_engine
-            if re.search(r"\bCOLUMNS\s*\(", sql, re.IGNORECASE):
-                sql = eng._expand_columns_star(sql)
-            if re.search(r"\bBY\s+NAME\b", sql, re.IGNORECASE):
-                sql = eng._rewrite_union_by_name(sql)
-            if replace_position_probe(sql) is not None:
-                sql = eng._reorder_replace_dml(sql)
-            sql = transpile_duckdb(sql)
-        stripped = strip_select_locks(sql).sql
-        parsed = classify(stripped)
+        statement = self.statement(sql)
         handle = next(self._handle_seq)
         st = PreparedStatement(
             handle=handle,
-            sql=stripped,
-            is_query=parsed.is_query,
-            parameter_count=count_placeholders(stripped),
-            parameter_schema=infer_parameter_schema(self.spark, stripped),
+            statement=statement,
+            parameter_schema=infer_parameter_schema(self.spark, statement.sql),
             ephemeral=ephemeral,
         )
         with self._lock:
@@ -373,8 +318,9 @@ class Session:
         schemas, connection.rs:286-294)."""
         st = self.get_prepared_statement(handle)
         if st.schema is None and st.is_query:
-            probe = bind_parameters(st.sql, [None] * st.parameter_count)
-            st.schema = self.spark.sql(probe).schema
+            st.schema = self.session_engine.schema_for_query(
+                _bind(st.statement, [None] * st.parameter_count)
+            )
         return st.schema
 
     def execute_prepared(self, handle: int | None = None):
@@ -388,9 +334,7 @@ class Session:
         total_affected = 0
         for params in param_sets:
             result = self.query(
-                st.sql,
-                params if st.parameter_count else None,
-                pre_transpiled=True,
+                st.statement, params if st.parameter_count else None
             )
             if result.affected_rows > 0:
                 total_affected += result.affected_rows

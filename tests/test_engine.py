@@ -279,6 +279,27 @@ class TestDialect:
         ).collect()[0]
         assert row.s == "list_contains(x)"
 
+    def test_bare_varchar_ddl(self, engine):
+        from pyspark.sql import types as T
+
+        name = f"t_{uuid.uuid4().hex[:8]}"
+        loc = tempfile.mkdtemp(prefix="swl_test_")
+        engine.query(
+            f"CREATE TABLE {name} (a INT, b VARCHAR, c VARCHAR(5)) "
+            f"USING parquet LOCATION '{loc}'",
+            dialect="duckdb",
+        )
+        engine.query(f"ALTER TABLE {name} ADD COLUMN d TEXT", dialect="duckdb")
+        types = {f.name: f.dataType for f in engine.table_schema(name).fields}
+        assert isinstance(types["b"], T.StringType)
+        assert isinstance(types["d"], T.StringType)
+        engine.query(
+            f"INSERT INTO {name} VALUES (1, 'x', 'y', 'z')", dialect="duckdb"
+        )
+        assert engine.query(f"SELECT b, c, d FROM {name}").collect()[0] == (
+            "x", "y", "z",
+        )
+
     def test_distinct_on_rewrite_text(self):
         from swanlake_spark.functions import transpile_duckdb
 
@@ -1912,6 +1933,36 @@ class TestMerge:
                 f"MERGE INTO {t} USING {s} ON {t}.id = {s}.id "
                 f"WHEN MATCHED THEN UPDATE SET v = {s}.v"
             )
+
+
+class TestQuotedColumnNames:
+    """The copy-on-write DML and schema rewrites splice every column
+    name of the table into SQL text; a name containing a backtick must
+    be escaped there, not break the statement."""
+
+    def test_update_merge_drop_column(self, engine):
+        t = _mktable(engine, "id INT, v INT, `we``ird` STRING, junk INT")
+        s = _mktable(engine, "id INT, v INT")
+        engine.execute(
+            f"INSERT INTO {t} VALUES (1, 10, 'a', 0), (2, 20, 'b', 0)"
+        )
+        engine.execute(f"INSERT INTO {s} VALUES (2, 99), (3, 33)")
+        assert engine.execute_update(f"UPDATE {t} SET v = 11 WHERE id = 1") == 1
+        assert engine.execute_update(
+            f"MERGE INTO {t} USING {s} ON {t}.id = {s}.id "
+            f"WHEN MATCHED THEN UPDATE SET v = {s}.v "
+            f"WHEN NOT MATCHED THEN INSERT (id, v) VALUES ({s}.id, {s}.v)"
+        ) == 2
+        engine.execute(f"ALTER TABLE {t} DROP COLUMN junk")
+        rows = engine.query(
+            f"SELECT id, v, `we``ird` AS w FROM {t} ORDER BY id"
+        ).collect()
+        assert [(r.id, r.v, r.w) for r in rows] == [
+            (1, 11, "a"), (2, 99, "b"), (3, 33, None),
+        ]
+        assert engine.query(f"SELECT * FROM {t}").df.columns == [
+            "id", "v", "we`ird",
+        ]
 
 
 class TestReviewRegressions:

@@ -18,6 +18,7 @@ from swanlake_spark.flightsql import (
     pb_fields,
     start_flight_server,
 )
+from swanlake_spark.queries.tpch import TPCH_QUERIES
 
 
 @pytest.fixture(scope="module")
@@ -239,6 +240,106 @@ class TestFlightSqlTransactions:
         c.rollback(txn)
         tbl = c.execute(f"SELECT count(*) AS c FROM {t}")
         assert tbl.column("c")[0].as_py() == 1
+
+
+# One statement per defect each entry point used to get differently
+# wrong (ids name the defect): (id, DuckDB SQL, parameters or None).
+_ROUTE_CASES = [
+    ("unprepared_transpile", "SELECT strftime(DATE '1995-03-15', '%Y') AS y", None),
+    (
+        "pivot_post_pass",
+        "SELECT * FROM (SELECT * FROM VALUES ('a', 'x', 1) v(k, p, n)) "
+        "PIVOT (count(*) AS c FOR p IN ('x' AS cx, 'y' AS cy))",
+        None,
+    ),
+    (
+        "replace_order",
+        "SELECT * REPLACE (n_nationkey + 100 AS n_nationkey) FROM nation "
+        "ORDER BY n_name",
+        None,
+    ),
+    ("pragma", "PRAGMA table_info('nation')", None),
+    ("summarize", "SUMMARIZE region", None),
+    ("tpch_q3", TPCH_QUERIES["tpch_q3"].oracle, None),
+    (
+        "marker",
+        "SELECT * REPLACE (upper(n_name) AS n_name) FROM nation "
+        "WHERE n_regionkey = ? ORDER BY n_nationkey",
+        [1],
+    ),
+    ("columns", "SELECT COLUMNS('^n_') FROM nation ORDER BY n_nationkey", None),
+]
+
+
+@pytest.fixture(scope="module")
+def duckdb_server(spark, sf_dir):
+    """A Flight SQL server whose clients speak DuckDB SQL, on a fork of
+    the test session."""
+    from swanlake_spark.config import EngineConfig
+    from swanlake_spark.engine import Engine
+
+    eng = Engine(
+        spark=spark.newSession(),
+        config=EngineConfig(client_dialect="duckdb", cpus=4),
+    )
+    eng.attach_warehouse(sf_dir)
+    server, port = start_flight_server(eng)
+    yield eng, f"grpc://127.0.0.1:{port}"
+    server.shutdown()
+
+
+class TestRouteEquivalence:
+    """Every entry point runs a statement through the one front end, so
+    each returns the same columns and rows, and every announced schema
+    is the schema of the stream that follows."""
+
+    @pytest.mark.parametrize(
+        "sql,params",
+        [c[1:] for c in _ROUTE_CASES],
+        ids=[c[0] for c in _ROUTE_CASES],
+    )
+    def test_routes_agree(self, duckdb_server, sql, params):
+        import pyarrow.flight as fl
+
+        from swanlake_spark.flightsql import _spark_to_arrow_schema
+
+        eng, location = duckdb_server
+        sess = eng.sessions.get_or_create(f"routes-{uuid.uuid4().hex[:8]}")
+        c = FlightSqlClient(location)
+        # route -> (announced schema or None, streamed table)
+        got = {
+            "engine": (
+                None, eng.query(sql, dialect="duckdb", args=params).to_arrow()
+            ),
+            "session": (None, sess.query(sql, params).to_arrow()),
+        }
+        st = sess.create_prepared_statement(sql)
+        if params:
+            sess.set_parameters(st.handle, [params])
+        got["prepared"] = (
+            _spark_to_arrow_schema(sess.schema_for_prepared(st.handle)),
+            sess.execute_prepared(st.handle).to_arrow(),
+        )
+        if params is None:  # an unprepared statement binds nothing
+            info = c._client.get_flight_info(
+                fl.FlightDescriptor.for_command(
+                    any_pack("CommandStatementQuery", _enc_str(1, sql))
+                ),
+                c._opts,
+            )
+            got["flight"] = (info.schema, c._read_endpoint(info))
+        fst = c.prepare(sql)
+        got["flight_prepared"] = (fst.dataset_schema, fst.execute(params))
+        fst.close()
+        eng.sessions.remove(sess.session_id)
+
+        names, rows = got["engine"][1].column_names, got["engine"][1].to_pylist()
+        for route, (announced, table) in got.items():
+            assert table.column_names == names, route
+            assert table.to_pylist() == rows, route
+            if announced is not None:
+                assert announced.names == names, route
+                assert announced.types == table.schema.types, route
 
 
 class TestCrossProcessClient:

@@ -408,8 +408,8 @@ def test_transpile_is_idempotent_on_rewritten_output():
         once = transpile_duckdb(sql)
         twice = transpile_duckdb(once)
         # Two rewrite families are non-idempotent BY NATURE and covered
-        # by the structural exactly-once guarantee instead (the session
-        # pre_transpiled flag; see test_prepared_backslash_regex_...):
+        # by the structural exactly-once guarantee instead (a Statement
+        # is never transpiled again; see test_prepared_backslash_regex_...):
         # - the literal-escape pass (backslash doubling)
         # - DuckDB division/modulo semantics (re-wrapping an already
         #   emitted `/ nullif(...)` is a semantic no-op but not a
@@ -442,11 +442,11 @@ def test_literal_escape_pass_duckdb_semantics():
 
 
 def test_prepared_statement_single_transpile():
-    """Prepared statements are stored transpiled and executed with
-    pre_transpiled=True — the escape pass must not run twice (a
+    """Prepared statements store their built Statement and never
+    transpile it again — the escape pass must not run twice (a
     double-run would corrupt '\\d' into '\\\\d')."""
     from swanlake_spark.functions.dialect import transpile_duckdb
 
     once = transpile_duckdb(r"SELECT regexp_extract(s, '\d+', 0) FROM t")
     twice = transpile_duckdb(once)
-    assert once != twice  # doubling is real — the flag is load-bearing
+    assert once != twice  # doubling is real — exactly-once is load-bearing

@@ -477,12 +477,14 @@ class TestClientDialect:
 
     def test_prepared_backslash_regex_single_transpile(self, spark):
         """A '\\d' regex through create_prepared + execute_prepared:
-        the escape pass must run exactly once (r9 pre_transpiled flag)
-        — a double transpile would turn '\\\\d' into '\\\\\\\\d' and
-        silently match nothing; no transpile at all silently matched
-        the letter 'd' (the pre-r9 bug)."""
+        the escape pass must run exactly once (a prepared statement
+        stores its built Statement) — a double transpile would turn
+        '\\\\d' into '\\\\\\\\d' and silently match nothing; no transpile at
+        all silently matched the letter 'd' (the pre-r9 bug). The same
+        holds for a prepared UPDATE sent through Flight SQL DoPut."""
         from swanlake_spark.config import EngineConfig
         from swanlake_spark.engine import Engine
+        from swanlake_spark.flightsql import FlightSqlClient, start_flight_server
 
         eng = Engine(spark=spark, config=EngineConfig(
             client_dialect="duckdb", cpus=4,
@@ -509,6 +511,28 @@ class TestClientDialect:
             assert r.p == "C:\\tmp\\new"
         finally:
             eng.sessions.remove("bslash-client")
+        # Flight SQL: unprepared and prepared UPDATE store the same
+        # 3-character DuckDB literal 'a\b'
+        server, port = start_flight_server(eng)
+        t = f"bs_{uuid.uuid4().hex[:8]}"
+        try:
+            c = FlightSqlClient(f"grpc://127.0.0.1:{port}")
+            loc = tempfile.mkdtemp(prefix="swl_bs_")
+            c.execute(
+                f"CREATE TABLE {t} (id INT, s STRING) USING parquet "
+                f"LOCATION '{loc}'"
+            )
+            c.execute(f"INSERT INTO {t} VALUES (1, 'x'), (2, 'y')")
+            assert c.execute_update(
+                rf"UPDATE {t} SET s = 'a\b' WHERE id = 1"
+            ) == 1
+            st3 = c.prepare(rf"UPDATE {t} SET s = 'a\b' WHERE id = ?")
+            assert st3.execute_update([[2]]) == 1
+            got = c.execute(f"SELECT s FROM {t} ORDER BY id").column("s")
+            assert got.to_pylist() == ["a\\b", "a\\b"]
+        finally:
+            server.shutdown()
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def _server_engine(spark, **cfg):
