@@ -303,9 +303,10 @@ _INSERT_RE = re.compile(
 )
 
 
-def check_insert_sql(spark: SparkSession, insert_sql: str) -> None:
+def check_insert_sql(spark: SparkSession, insert_sql: str, loc=None) -> None:
     """If ``insert_sql`` targets a PK-registered table, evaluate its source
-    rows and run :func:`check_insert_batch` before the insert executes.
+    rows and run :func:`check_insert_batch` before the insert executes
+    (``loc`` as there).
 
     No-op for tables without a registered key, so the normal path pays
     nothing. The source is re-expressed as a plain SELECT; for VALUES the
@@ -340,32 +341,102 @@ def check_insert_sql(spark: SparkSession, insert_sql: str) -> None:
     # INSERT OVERWRITE replaces the table: only the batch-internal
     # uniqueness check applies.
     overwrite = m.group("mode").upper() == "OVERWRITE"
-    check_insert_batch(spark, table, src_df, check_existing=not overwrite)
+    check_insert_batch(
+        spark, table, src_df, check_existing=not overwrite, loc=loc
+    )
 
 
 def bounded_existing_probe(
-    spark: SparkSession, table: str, keys: list[str], stats
-) -> DataFrame:
+    spark: SparkSession, table: str, keys: list[str], stats, loc=None
+) -> DataFrame | None:
     """Key-column scan of ``table`` restricted to the batch's key range.
 
     The ``k BETWEEN min AND max`` predicates push into the Parquet scan
     (row-group/page skipping on column min/max statistics), so at 100 TB
     an appender batch probes only the row groups its key range can
     touch instead of scanning the whole table. Falls back to the
-    unbounded scan if a bound is NULL (all-null key batch)."""
-    existing = spark.table(table).select(*keys)
+    unbounded scan if a bound is NULL (all-null key batch).
+
+    With the table's location ``loc`` (resolved by a caller holding the
+    table write lock) and integral keys, the scan also skips whole files
+    whose footer key range misses the batch's (:mod:`filestats`); None
+    means no live file can hold a batch key, so there is nothing to
+    probe."""
+    existing = spark.table(table)
+    bounds = []
     cond = None
     for c in keys:
         lo, hi = stats[f"_min_{c}"], stats[f"_max_{c}"]
         if lo is None or hi is None:
-            return existing
+            return existing.select(*keys)
+        bounds.append((c, [(lo, hi)]))
         rng = (F.col(c) >= F.lit(lo)) & (F.col(c) <= F.lit(hi))
         cond = rng if cond is None else cond & rng
-    return existing.filter(cond) if cond is not None else existing
+    from swanlake_spark import filestats
+
+    types = {f.name.lower(): f.dataType.simpleString() for f in existing.schema}
+    if loc is not None and all(
+        types.get(c.lower()) in filestats.INTEGRAL_TYPES for c in keys
+    ):
+        files = filestats.live_files(loc)
+        if files is not None:
+            hits = filestats.candidates(files, bounds)
+            if not hits:
+                return None
+            existing = spark.read.schema(existing.schema).parquet(
+                *["file:" + f.path for f in hits]
+            )
+    return existing.select(*keys).filter(cond)
+
+
+def _arrow_key_stats(arrow, keys: list[str], schema) -> dict | None:
+    """The aggregate :func:`check_insert_batch` needs (row count,
+    distinct keys, per-column min/max), computed in pyarrow without a
+    Spark job. ``arrow`` holds the batch's columns under their target
+    names. None unless every key column is present, integral in both
+    the batch and the table, fits the table type and holds no NULL —
+    the Spark aggregation decides every other case."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    by_name = {n.lower(): n for n in arrow.column_names}
+    table_types = {f.name.lower(): f.dataType.simpleString() for f in schema}
+    arrow_types = {
+        "tinyint": pa.int8(), "smallint": pa.int16(),
+        "int": pa.int32(), "bigint": pa.int64(),
+    }
+    stats: dict = {"_n": arrow.num_rows}
+    cols = []
+    for c in keys:
+        name = by_name.get(c.lower())
+        want = arrow_types.get(table_types.get(c.lower(), ""))
+        if name is None or want is None:
+            return None
+        col = arrow.column(name)
+        if not pa.types.is_integer(col.type) or col.null_count:
+            return None
+        try:
+            col = col.cast(want)  # safe cast: overflow raises
+        except pa.ArrowInvalid:
+            return None
+        mm = pc.min_max(col)
+        stats[f"_min_{c}"], stats[f"_max_{c}"] = mm["min"].as_py(), mm["max"].as_py()
+        cols.append(col)
+    if len(cols) == 1:
+        stats["_nd"] = pc.count_distinct(cols[0]).as_py()
+    else:
+        names = [f"k{i}" for i in range(len(cols))]
+        stats["_nd"] = pa.table(cols, names=names).group_by(names).aggregate([]).num_rows
+    return stats
 
 
 def check_insert_batch(
-    spark: SparkSession, table: str, new_rows: DataFrame, check_existing: bool = True
+    spark: SparkSession,
+    table: str,
+    new_rows: DataFrame,
+    check_existing: bool = True,
+    arrow=None,
+    loc=None,
 ) -> None:
     """Raise InvalidArgument if inserting ``new_rows`` would violate the
     table's primary key (collision with existing rows or duplicates
@@ -374,7 +445,12 @@ def check_insert_batch(
     One aggregation computes the internal-duplicate check (distinct key
     count vs row count) AND the per-column key min/max in a single
     driver action; the existing-table probe is then bounded to the
-    batch's key range (see :func:`bounded_existing_probe`).
+    batch's key range (see :func:`bounded_existing_probe`). When the
+    caller passes the batch as an Arrow table (``arrow``, columns under
+    their target names), integral non-null keys take those statistics
+    from pyarrow instead. ``loc`` is the table location, passed only by
+    callers holding the table write lock; it lets the probe skip files
+    by their footer key ranges.
 
     Also the single choke point for CHECK and child-side FOREIGN KEY
     constraints: every write path (INSERT SQL and the Arrow appender)
@@ -386,14 +462,18 @@ def check_insert_batch(
         return
     keys = [c for c in cols]
     batch_keys = new_rows.select(*keys)
-    aggs = [
-        F.count(F.lit(1)).alias("_n"),
-        F.count_distinct(F.struct(*[F.col(c) for c in keys])).alias("_nd"),
-    ]
-    for c in keys:
-        aggs.append(F.min(c).alias(f"_min_{c}"))
-        aggs.append(F.max(c).alias(f"_max_{c}"))
-    stats = batch_keys.agg(*aggs).collect()[0]
+    stats = None
+    if arrow is not None:
+        stats = _arrow_key_stats(arrow, keys, new_rows.schema)
+    if stats is None:
+        aggs = [
+            F.count(F.lit(1)).alias("_n"),
+            F.count_distinct(F.struct(*[F.col(c) for c in keys])).alias("_nd"),
+        ]
+        for c in keys:
+            aggs.append(F.min(c).alias(f"_min_{c}"))
+            aggs.append(F.max(c).alias(f"_max_{c}"))
+        stats = batch_keys.agg(*aggs).collect()[0]
     if stats["_nd"] < stats["_n"]:
         raise InvalidArgument(
             f"duplicate key in INSERT batch violates PRIMARY KEY ({', '.join(cols)}) "
@@ -401,7 +481,9 @@ def check_insert_batch(
         )
     if not check_existing or stats["_n"] == 0:
         return
-    existing = bounded_existing_probe(spark, table, keys, stats)
+    existing = bounded_existing_probe(spark, table, keys, stats, loc=loc)
+    if existing is None:
+        return
     clash = batch_keys.join(existing, keys, "left_semi").limit(1).collect()
     if clash:
         raise InvalidArgument(

@@ -1237,7 +1237,6 @@ class Engine:
                 )
             insert_target: str | None = None
             if kw.startswith("INSERT"):
-                constraints.check_insert_sql(self.spark, stmt)
                 im = re.match(
                     r"^\s*INSERT\s+(?:INTO|OVERWRITE)\s+(?:TABLE\s+)?"
                     r"([\w.`\"]+)",
@@ -1275,10 +1274,17 @@ class Engine:
                 # append jobs on one path share the committer's
                 # _temporary dir and can destroy each other's staging
                 # (and their manifests must be ordered anyway). Same
-                # lock every COW publish takes.
-                from swanlake_spark.operators.dml import table_write_lock
+                # lock every COW publish takes; the constraint check
+                # runs under it, so two sessions cannot both pass it
+                # with the same new key.
+                from swanlake_spark.operators.dml import (
+                    _table_location,
+                    table_write_lock,
+                )
 
-                with table_write_lock(self.spark, insert_target):
+                loc = _table_location(self.spark, insert_target)
+                with table_write_lock(self.spark, insert_target, loc=loc):
+                    constraints.check_insert_sql(self.spark, stmt, loc=loc)
                     df = (
                         self.spark.sql(stmt, args=args)
                         if args
@@ -1767,11 +1773,11 @@ class Engine:
 
         schema = self.spark.table(table).schema
         aligned = align_to_schema(src, schema, positional_names)
-        constraints.check_insert_batch(self.spark, table, aligned)
         n = aligned.count()
         from swanlake_spark.operators.dml import table_write_lock
 
         with table_write_lock(self.spark, table):
+            constraints.check_insert_batch(self.spark, table, aligned)
             aligned.write.insertInto(table)
             self._record_table_version(table, "copy")
         return n

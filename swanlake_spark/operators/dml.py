@@ -28,6 +28,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from swanlake_spark import filestats
 from swanlake_spark.errors import InvalidArgument
 from swanlake_spark.plans.parser import _IDENT, _mask_literals, _scan, _unquote
 from swanlake_spark.plans.quoting import quote_identifier
@@ -875,38 +876,6 @@ def sweep_stale_locks(staging_dir: str, throttle_s: float | None = None) -> int:
     return removed
 
 
-@contextmanager
-def _point_statement_profile(spark: SparkSession):
-    """Static execution profile for bounded point-DML work (the
-    matched-file probe and the file-granular rewrite, both capped at
-    ``_FILE_COW_MAX_FILES``): AQE's stage-by-stage re-planning only adds
-    latency to these single-stage sub-second jobs, and the probe's tiny
-    aggregate (≤ one row per matched file) never needs a wide shuffle.
-    Applied-and-restored per statement; the full-table rewrite path runs
-    under the session's settings, where AQE earns its keep."""
-    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    prev_sp = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_mpb = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    prev_oc = spark.conf.get("spark.sql.files.openCostInBytes")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    # Pack the probe's scan into few fat tasks: a point predicate is
-    # answered by parquet footer stats (row-group min/max skipping), so
-    # per-file work is a footer read — one task covering many small
-    # files beats per-file task scheduling. Scale-safe: tasks remain
-    # total_bytes / 1 GB, so a 100 TB table still probes with ~100k
-    # parallel tasks; only the per-task file packing changes.
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(1 << 30))
-    spark.conf.set("spark.sql.files.openCostInBytes", str(8 << 20))
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
-        spark.conf.set("spark.sql.shuffle.partitions", prev_sp)
-        spark.conf.set("spark.sql.files.maxPartitionBytes", prev_mpb)
-        spark.conf.set("spark.sql.files.openCostInBytes", prev_oc)
-
-
 # -- file-granular copy-on-write ---------------------------------------------
 
 # Driver-side cap on the matched-file list; a predicate touching more
@@ -1097,23 +1066,51 @@ _ARROW_SAFE_TYPES = re.compile(
 )
 
 
-def _driver_rewrite(spark: SparkSession, staged: str, new_sub, files) -> bool:
+def _driver_collect_ok(new_sub, input_bytes: int) -> bool:
+    """Whether rewritten contents may come back as one Arrow table:
+    every type round-trips through Arrow and the input is within
+    ``_DRIVER_REWRITE_MAX_BYTES``."""
+    return input_bytes <= _DRIVER_REWRITE_MAX_BYTES and all(
+        _ARROW_SAFE_TYPES.match(f.dataType.simpleString())
+        for f in new_sub.schema.fields
+    )
+
+
+def _expands_past_cap(new_sub) -> bool:
+    """True when the rewrite plan has a length-increasing expression and
+    its exact output size (one aggregation job) exceeds
+    ``_DRIVER_REWRITE_MAX_OUTPUT_BYTES`` — the input bound can't see an
+    expanding SET expression."""
+    plan_text = str(new_sub._jdf.queryExecution().analyzed())
+    return bool(_EXPANDING_EXPRS.search(plan_text)) and not _output_size_ok(
+        new_sub
+    )
+
+
+def _write_staged_arrow(base: str, tbl) -> None:
+    """Driver-side parquet write of ``tbl`` into the OS directory
+    ``base``."""
+    import pyarrow.parquet as pq
+
+    os.makedirs(base, exist_ok=True)
+    pq.write_table(
+        tbl,
+        f"{base}/part-00000-{uuid.uuid4().hex}-c000.snappy.parquet",
+        compression="snappy",
+    )
+
+
+def _driver_rewrite(
+    spark: SparkSession, staged: str, new_sub, files, driver_ok: bool = True
+) -> bool:
     """Stage the rewritten matched-file contents via a single Arrow
     collect + driver-side parquet write. Returns False when ineligible
-    (non-local staging, matched set too large, exotic types) — the
-    caller falls back to the distributed write. Local-scheme only:
-    pyarrow writes OS paths, not HDFS/s3a."""
-    base = staged
-    if base.startswith("file:"):
-        base = base[len("file:"):]
-        while base.startswith("//"):
-            base = base[1:]
-    elif "://" in base:
-        return False
-    if any(
-        not _ARROW_SAFE_TYPES.match(f.dataType.simpleString())
-        for f in new_sub.schema.fields
-    ):
+    (non-local staging, matched set too large, exotic types, or
+    ``driver_ok`` False because the statement's output guard already
+    refused) — the caller falls back to the distributed write.
+    Local-scheme only: pyarrow writes OS paths, not HDFS/s3a."""
+    base = _local_os_path(staged)
+    if base is None or not driver_ok:
         return False
     try:
         jvm = spark._jvm
@@ -1122,24 +1119,9 @@ def _driver_rewrite(spark: SparkSession, staged: str, new_sub, files) -> bool:
         for f in files:
             p = jvm.org.apache.hadoop.fs.Path(f)
             total += int(p.getFileSystem(conf).getFileStatus(p).getLen())
-        if total > _DRIVER_REWRITE_MAX_BYTES:
+        if not _driver_collect_ok(new_sub, total) or _expands_past_cap(new_sub):
             return False
-        # the input bound can't see expanding SET expressions; those
-        # pay one exact output-size agg before the driver collect
-        plan_text = str(new_sub._jdf.queryExecution().analyzed())
-        if _EXPANDING_EXPRS.search(plan_text) and not _output_size_ok(
-            new_sub
-        ):
-            return False
-        import pyarrow.parquet as pq
-
-        tbl = new_sub.toArrow()
-        os.makedirs(base, exist_ok=True)
-        pq.write_table(
-            tbl,
-            f"{base}/part-00000-{uuid.uuid4().hex}-c000.snappy.parquet",
-            compression="snappy",
-        )
+        _write_staged_arrow(base, new_sub.toArrow())
         return True
     except Exception:
         # the distributed write handles any surprise, but don't swallow
@@ -1161,6 +1143,7 @@ def _file_granular_cow(
     transform,
     files: list[str],
     loc=_UNRESOLVED,
+    driver_ok: bool = True,
 ) -> bool:
     """Copy-on-write at FILE granularity (the reference's DuckLake model:
     rewrite only the data files containing matched rows,
@@ -1175,7 +1158,7 @@ def _file_granular_cow(
     sub = spark.read.schema(spark.table(table).schema).parquet(*files)
     new_sub = transform(sub)
     staged = staging_dir(spark, table, loc)
-    if not _driver_rewrite(spark, staged, new_sub, files):
+    if not _driver_rewrite(spark, staged, new_sub, files, driver_ok):
         new_sub.write.parquet(staged, mode="overwrite")
     try:
         _publish_file_swap(spark, table, staged, files, loc=loc)
@@ -1183,6 +1166,170 @@ def _file_granular_cow(
         raise  # staged data retained for recovery (see _publish_file_swap)
     _rm_path(spark, staged)
     return True
+
+
+# -- footer-pruned point writes -----------------------------------------------
+#
+# A point UPDATE/DELETE whose WHERE bounds an integral column reads only
+# the files whose Parquet-footer range can hold a match (filestats.py),
+# and learns which of them matched from the same Arrow collect that
+# returns their rewritten rows — no separate probe job over every file.
+
+# Spark SQL identifiers: a double-quoted token is a string literal there
+_SPARK_IDENT = r"(?:[A-Za-z_][A-Za-z0-9_]*|`(?:[^`]|``)+`)"
+_TERM_COL = rf"(?:(?P<q>{_SPARK_IDENT})\.)?(?P<col>{_SPARK_IDENT})"
+_INT_LIT = r"-?\d+"
+_OP = r"(?P<op><=|>=|=|<|>)"
+_COL_OP_INT = re.compile(rf"^\s*{_TERM_COL}\s*{_OP}\s*(?P<v>{_INT_LIT})\s*$")
+_INT_OP_COL = re.compile(rf"^\s*(?P<v>{_INT_LIT})\s*{_OP}\s*{_TERM_COL}\s*$")
+_BETWEEN_TERM = re.compile(
+    rf"^\s*{_TERM_COL}\s+BETWEEN\s+(?P<lo>{_INT_LIT})\s+AND\s+(?P<hi>{_INT_LIT})\s*$",
+    re.IGNORECASE,
+)
+_IN_TERM = re.compile(
+    rf"^\s*{_TERM_COL}\s+IN\s*\((?P<vs>\s*{_INT_LIT}\s*(?:,\s*{_INT_LIT}\s*)*)\)\s*$",
+    re.IGNORECASE,
+)
+_FLIPPED = {"=": "=", "<": ">", "<=": ">=", ">": "<", ">=": "<="}
+# extra columns the pruned rewrite carries through its transform
+_SRC, _HIT = "_swl_src_file", "_swl_hit"
+
+
+def _conjuncts(where: str) -> list[str]:
+    """The depth-0 AND terms of ``where``; none when an OR or NOT at
+    depth 0 leaves no term a necessary condition. The AND of each
+    ``BETWEEN`` stays inside its term."""
+    masked = _mask_literals(where)
+    if _keyword_at_depth0(masked, "OR") >= 0 or _keyword_at_depth0(masked, "NOT") >= 0:
+        return []
+    terms: list[str] = []
+    term_start = piece_start = owed = 0
+    while True:
+        cut = _keyword_at_depth0(masked, "AND", piece_start)
+        end = cut if cut >= 0 else len(where)
+        pos = _keyword_at_depth0(masked, "BETWEEN", piece_start)
+        while 0 <= pos < end:
+            owed += 1
+            pos = _keyword_at_depth0(masked, "BETWEEN", pos + 7)
+        if owed and cut >= 0:
+            owed -= 1  # this AND closes a BETWEEN
+        else:
+            terms.append(where[term_start:end])
+            term_start, owed = end + 3, 0
+        if cut < 0:
+            return terms
+        piece_start = cut + 3
+
+
+def _term_bound(term: str, bare: str, types: dict[str, str]):
+    """``(column, intervals)`` when ``term`` bounds an integral column of
+    the table by integer literals, else None."""
+    m = next(
+        (m for rx in (_COL_OP_INT, _INT_OP_COL, _BETWEEN_TERM, _IN_TERM)
+         if (m := rx.match(term))),
+        None,
+    )
+    if m is None:
+        return None
+    q, col = m.group("q"), m.group("col")
+    if q is not None and _unquote(q).lower() != bare.lower():
+        return None
+    if not col.startswith("`") and col.upper() in ("NULL", "TRUE", "FALSE"):
+        return None
+    col = _unquote(col)
+    if types.get(col.lower()) not in filestats.INTEGRAL_TYPES:
+        return None
+    if m.re is _IN_TERM:
+        return col, [(int(v), int(v)) for v in m.group("vs").split(",")]
+    if m.re is _BETWEEN_TERM:
+        return col, [(int(m.group("lo")), int(m.group("hi")))]
+    v, op = int(m.group("v")), m.group("op")
+    if m.re is _INT_OP_COL:
+        op = _FLIPPED[op]
+    return col, [{
+        "=": (v, v), "<": (None, v - 1), "<=": (None, v),
+        ">": (v + 1, None), ">=": (v, None),
+    }[op]]
+
+
+def _pruned_cow(
+    spark: SparkSession, table: str, schema, where: str, transform, loc
+) -> tuple[int | None, bool]:
+    """Point UPDATE/DELETE over only the files whose footer key ranges
+    can hold a match. Returns ``(affected, driver_ok)``; ``affected``
+    None sends the statement to the unpruned path, and ``driver_ok``
+    False tells that path not to try a driver-side collect (the output
+    guard refused one for this statement, or the collect failed).
+
+    Caller guarantees: table write lock held, table unpartitioned,
+    predicate subquery-free, no CHECK/FK constraint registered."""
+    types = {f.name.lower(): f.dataType.simpleString() for f in schema.fields}
+    bare = table.split(".")[-1].strip('`"')
+    bounds = [
+        b for b in (_term_bound(t, bare, types) for t in _conjuncts(where)) if b
+    ]
+    files = filestats.live_files(loc) if bounds else None
+    if files is None:
+        return None, True
+    hits = filestats.candidates(files, bounds)
+    if len(hits) >= len(files):
+        return None, True
+    if not hits:
+        return 0, True
+    sub = spark.read.schema(schema).parquet(*["file:" + f.path for f in hits])
+    new_sub = transform(
+        sub.alias(bare).select(
+            "*",
+            F.col("_metadata.file_name").alias(_SRC),
+            F.expr(where).eqNullSafe(F.lit(True)).cast("int").alias(_HIT),
+        )
+    )
+    out = new_sub.drop(_SRC, _HIT)
+    if not _driver_collect_ok(out, sum(f.size for f in hits)):
+        return None, True
+    if _expands_past_cap(out):
+        return None, False
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    try:
+        tbl = new_sub.toArrow()
+    except Exception:
+        # as in _driver_rewrite: the unpruned path's distributed write
+        # handles any surprise (and raises again if the statement
+        # itself is at fault)
+        import logging
+
+        logging.getLogger(__name__).warning(
+            "pruned point write fell back to the unpruned path", exc_info=True
+        )
+        return None, False
+    per_file = tbl.group_by(_SRC).aggregate([(_SRC, "count"), (_HIT, "sum")])
+    counts = dict(zip(
+        per_file[_SRC].to_pylist(),
+        zip(per_file[f"{_SRC}_count"].to_pylist(), per_file[f"{_HIT}_sum"].to_pylist()),
+    ))
+    # matches per file: the rows a DELETE dropped plus the rows an
+    # UPDATE flagged (an UPDATE drops none; a DELETE keeps no match)
+    matched, affected = [], 0
+    for f in hits:
+        n_out, flagged = counts.get(f.name, (0, 0))
+        if f.rows - n_out + flagged:
+            matched.append(f)
+            affected += f.rows - n_out + flagged
+    if not matched:
+        return 0, True
+    keep = pa.array([f.name for f in matched])
+    staged = staging_dir(spark, table, loc)
+    _write_staged_arrow(
+        _local_os_path(staged),
+        tbl.filter(pc.is_in(tbl[_SRC], value_set=keep)).drop_columns([_SRC, _HIT]),
+    )
+    _publish_file_swap(
+        spark, table, staged, ["file:" + f.path for f in matched], loc=loc
+    )
+    _rm_path(spark, staged)
+    return affected, True
 
 
 def _as_view(df: DataFrame) -> tuple:
@@ -1266,18 +1413,30 @@ def apply_update(
         finally:
             spark.catalog.dropTempView(view)
     types = dict(df.dtypes)
-    cond = F.expr(where).eqNullSafe(F.lit(True)) if where else F.lit(True)
-    out = df
-    for col, val in assignments.items():
+    for col in assignments:
         if col not in types:
             raise InvalidArgument(f"unknown column in SET: {col}")
-        out = out.withColumn(
-            col,
-            F.when(cond, F.expr(val).cast(types[col])).otherwise(
-                F.col(quote_identifier(col))
-            ),
-        )
-    return out
+    # one projection from SQL text: a withColumn per SET column
+    # re-analyzes the plan each time (and a Column built call by call
+    # costs a JVM round trip per call), and every SET value must read
+    # the row's old values. Each fragment sits in its own parentheses,
+    # which it must not close; newlines end any trailing `--` comment.
+    for text in [where or "", *assignments.values()]:
+        depth = 0
+        for _, c in _scan(text):
+            depth += (c == "(") - (c == ")")
+            if depth < 0:
+                break
+        if depth:
+            raise InvalidArgument(f"unbalanced parentheses in {text.strip()!r}")
+    hit = f"((\n{where}\n) <=> true)" if where else "true"
+    out = []
+    for col, t in df.dtypes:
+        q = quote_identifier(col)
+        if col in assignments:
+            q = f"CASE WHEN {hit} THEN CAST((\n{assignments[col]}\n) AS {t}) ELSE {q} END AS {q}"
+        out.append(q)
+    return df.selectExpr(*out)
 
 
 def apply_delete(
@@ -1880,6 +2039,18 @@ def _merge_matched_files(
     return files
 
 
+def _unconstrained(table: str) -> bool:
+    """No CHECK or FOREIGN KEY constraint involves ``table``: the pruned
+    point-write path evaluates none of them."""
+    from swanlake_spark import constraints
+
+    return not (
+        constraints.check_exprs(table)
+        or constraints.fk_list(table)
+        or constraints.referencing_children(table)
+    )
+
+
 def _count_matching(spark: SparkSession, table: str, where: str) -> int:
     if where_has_subquery(where):
         return spark.sql(f"SELECT count(*) FROM {table} WHERE {where}").collect()[0][0]
@@ -1965,21 +2136,33 @@ def _update_table_locked(
         and not any(where_has_subquery(v) for v in assignments.values())
     )
     if file_cow_ok:
-        with _point_statement_profile(spark):
-            files, affected = _matched_files(spark, table, where, loc=loc)
-            if affected == 0:
-                return 0
-            if files is not None and _file_granular_cow(
+        affected, driver_ok = None, True
+        if _unconstrained(table):
+            affected, driver_ok = _pruned_cow(
                 spark,
                 table,
+                df.schema,
                 where,
-                lambda sub: _checked(
-                    apply_update(sub, assignments, where, alias=table)
-                ),
-                files,
-                loc=loc,
-            ):
-                return affected
+                lambda sub: apply_update(sub, assignments, where, alias=table),
+                loc,
+            )
+        if affected is not None:
+            return affected
+        files, affected = _matched_files(spark, table, where, loc=loc)
+        if affected == 0:
+            return 0
+        if files is not None and _file_granular_cow(
+            spark,
+            table,
+            where,
+            lambda sub: _checked(
+                apply_update(sub, assignments, where, alias=table)
+            ),
+            files,
+            loc=loc,
+            driver_ok=driver_ok,
+        ):
+            return affected
     else:
         affected = _count_matching(spark, table, where) if where else df.count()
         if affected == 0:
@@ -2044,19 +2227,31 @@ def _delete_from_locked(
         spark, table
     ) and not where_has_subquery(where)
     if file_cow_ok:
-        with _point_statement_profile(spark):
-            files, affected = _matched_files(spark, table, where, loc=loc)
-            if affected == 0:
-                return 0
-            if files is not None and _file_granular_cow(
+        affected, driver_ok = None, True
+        if _unconstrained(table):
+            affected, driver_ok = _pruned_cow(
                 spark,
                 table,
+                df.schema,
                 where,
                 lambda sub: apply_delete(sub, where, alias=table),
-                files,
-                loc=loc,
-            ):
-                return affected
+                loc,
+            )
+        if affected is not None:
+            return affected
+        files, affected = _matched_files(spark, table, where, loc=loc)
+        if affected == 0:
+            return 0
+        if files is not None and _file_granular_cow(
+            spark,
+            table,
+            where,
+            lambda sub: apply_delete(sub, where, alias=table),
+            files,
+            loc=loc,
+            driver_ok=driver_ok,
+        ):
+            return affected
     else:
         affected = _count_matching(spark, table, where)
         if affected == 0:

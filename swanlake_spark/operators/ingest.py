@@ -22,24 +22,19 @@ from pyspark.sql import types as T
 from swanlake_spark.errors import InvalidArgument
 
 
-def align_to_schema(
-    df: DataFrame,
+def source_columns(
+    batch_cols: list[str],
     target: T.StructType,
     insert_columns: list[str] | None = None,
-) -> DataFrame:
-    """Align a batch DataFrame to a table schema:
+) -> dict[str, str | None]:
+    """Target field name → the batch column feeding it (None: the
+    column is NULL-filled):
 
     - with ``insert_columns``: batch columns are positionally mapped onto
       the named table columns (partial-column INSERT);
     - otherwise columns are matched by (case-insensitive) name;
-    - type mismatches are cast; missing columns NULL-filled; extra batch
-      columns ignored.
-
-    Reference behavior: ``align_batch_to_table_schema``
-    (``engine/batch.rs:180-259``), exercised by partial_insert.test and
-    the appender scenarios.
+    - extra batch columns feed nothing.
     """
-    batch_cols = df.columns
     by_lower = {c.lower(): c for c in batch_cols}
     if insert_columns is not None:
         if len(insert_columns) != len(batch_cols):
@@ -56,17 +51,29 @@ def align_to_schema(
             source_for = {
                 ic.lower(): batch_cols[i] for i, ic in enumerate(insert_columns)
             }
-        insert_set = {ic.lower() for ic in insert_columns}
     else:
         source_for = by_lower
-        insert_set = None
+    return {f.name: source_for.get(f.name.lower()) for f in target.fields}
 
+
+def align_to_schema(
+    df: DataFrame,
+    target: T.StructType,
+    insert_columns: list[str] | None = None,
+) -> DataFrame:
+    """Align a batch DataFrame to a table schema: columns map as
+    :func:`source_columns` says, type mismatches are cast, missing
+    columns NULL-filled, extra batch columns ignored.
+
+    Reference behavior: ``align_batch_to_table_schema``
+    (``engine/batch.rs:180-259``), exercised by partial_insert.test and
+    the appender scenarios.
+    """
+    sources = source_columns(df.columns, target, insert_columns)
     out = []
     for field in target.fields:
-        key = field.name.lower()
-        src = source_for.get(key)
-        in_scope = insert_set is None or key in insert_set
-        if src is not None and in_scope:
+        src = sources[field.name]
+        if src is not None:
             out.append(F.col(src).cast(field.dataType).alias(field.name))
         else:
             out.append(F.lit(None).cast(field.dataType).alias(field.name))
@@ -179,18 +186,26 @@ def insert_arrow(
     tbl = normalize_arrow_for_spark(tbl, target)
     df = spark.createDataFrame(tbl)
     aligned = align_to_schema(df, target, insert_columns)
-    # PK enforcement applies on every write path in the reference (DuckDB
-    # enforces the constraint under the appender too, error_status.test:6-13).
-    from swanlake_spark import constraints
-
-    constraints.check_insert_batch(spark, table, aligned)
-    from swanlake_spark import versions
-    from swanlake_spark.operators.dml import table_write_lock
+    sources = source_columns(tbl.column_names, target, insert_columns)
+    by_target = pa.table(
+        {name: tbl.column(src) for name, src in sources.items() if src is not None}
+    )
+    from swanlake_spark import constraints, versions
+    from swanlake_spark.operators.dml import _table_location, table_write_lock
 
     # Serialized per table (engine INSERT takes the same lock): two
     # concurrent append jobs on one path share the committer's
-    # _temporary dir, and manifests must be ordered.
-    with table_write_lock(spark, table):
+    # _temporary dir, and manifests must be ordered. The constraint
+    # check runs under the lock too, so a concurrent append of the same
+    # key cannot pass it before this one lands.
+    loc = _table_location(spark, table)
+    with table_write_lock(spark, table, loc=loc):
+        # PK enforcement applies on every write path in the reference
+        # (DuckDB enforces the constraint under the appender too,
+        # error_status.test:6-13).
+        constraints.check_insert_batch(
+            spark, table, aligned, arrow=by_target, loc=loc
+        )
         aligned.write.insertInto(table)
-        versions.record_version(df.sparkSession, table, "append")
+        versions.record_version(spark, table, "append", loc=loc)
     return tbl.num_rows

@@ -124,6 +124,22 @@ class TestDML:
         assert affected == 2
         rows = engine.query(f"SELECT name, age FROM {t} ORDER BY id").collect()
         assert [(r.name, r.age) for r in rows] == [("A", 15), ("B", 25)]
+        # several SETs, a backticked name among them: every SET value
+        # reads the row's old values
+        t = _mktable(engine, "id INT, `the name` STRING, age INT, age2 INT")
+        engine.execute(f"INSERT INTO {t} VALUES (1, 'a', 10, 11), (2, 'b', 20, 21)")
+        affected = engine.execute_update(
+            f"UPDATE {t} SET age = age2, age2 = age, `the name` = upper(`the name`), "
+            "id = id * 10 WHERE id = 2"
+        )
+        assert affected == 1
+        rows = engine.query(f"SELECT * FROM {t} ORDER BY id").collect()
+        assert [tuple(r) for r in rows] == [(1, "a", 10, 11), (20, "B", 21, 20)]
+        with pytest.raises(InvalidArgument, match="unknown column in SET"):
+            engine.execute_update(f"UPDATE {t} SET nope = 1 WHERE id = 1")
+        # a SET value may not close the parentheses it is placed in
+        with pytest.raises(InvalidArgument, match="unbalanced"):
+            engine.execute_update(f"UPDATE {t} SET age = 1) + (2 WHERE id = 1")
 
     def test_delete(self, engine):
         t = _mktable(engine)
