@@ -7,11 +7,12 @@ footer (row-group min/max and the row count). This module reads them
 once per file and answers: which live files of a table can hold a value
 of column ``c`` inside these bounds?
 
-The memo is keyed per table directory by ``(file name, size)``. A
-copy-on-write publish never edits a file in place — a rewrite always
-gets a new name — so a cached footer cannot go stale, and entries whose
-file has left the listing are dropped on the next lookup, which bounds
-the memo by the live files.
+The memo is keyed per table directory by ``(file name, size, mtime)``.
+A copy-on-write publish never edits a file in place — a rewrite always
+gets a new name — and the mtime catches a file an outside writer
+replaced under the same name and size. Entries whose file has left the
+listing are dropped on the next lookup, and a table directory that is
+gone drops all of its entries, which bounds the memo by the live files.
 
 Callers list the directory under the table write lock, so no writer can
 publish between the listing and the rewrite that relies on it. Any case
@@ -59,8 +60,20 @@ class FileStats:
         )
 
 
-_MEMO: dict[str, dict[tuple[str, int], FileStats]] = {}
+_MEMO: dict[str, dict[tuple[str, int, int], FileStats]] = {}
 _MEMO_LOCK = threading.Lock()
+
+
+def is_hidden(name: str) -> bool:
+    """Spark's rule: a name starting with ``_`` or ``.`` is not data."""
+    return name.startswith(("_", "."))
+
+
+def scan_dir(osp: str) -> list[os.DirEntry]:
+    """The non-hidden top-level entries of the local directory ``osp``
+    (raises OSError). The one listing of a table's data files: the
+    copy-on-write publish and the footer statistics both take it."""
+    return [e for e in os.scandir(osp) if not is_hidden(e.name)]
 
 
 def _read_footer(name: str, path: str, size: int) -> FileStats:
@@ -100,22 +113,26 @@ def live_files(loc: str | None) -> list[FileStats] | None:
     if osp is None:
         return None
     osp = osp.rstrip("/")
-    listing: list[tuple[str, int]] = []
     try:
-        for e in os.scandir(osp):
-            if e.name.startswith(("_", ".")):
-                continue
-            if not e.is_file():
-                return None
-            listing.append((e.name, e.stat().st_size))
+        entries = scan_dir(osp)
+        if not all(e.is_file() for e in entries):
+            return None
+        listing = sorted(
+            (e.name, st.st_size, st.st_mtime_ns)
+            for e in entries
+            for st in (e.stat(),)
+        )
     except OSError:
+        with _MEMO_LOCK:
+            _MEMO.pop(osp, None)  # e.g. a dropped table's directory
         return None
     with _MEMO_LOCK:
         known = dict(_MEMO.get(osp, {}))
     out: list[FileStats] = []
-    for name, size in sorted(listing):
-        fs = known.get((name, size))
+    for key in listing:
+        fs = known.get(key)
         if fs is None:
+            name, size, _ = key
             try:
                 fs = _read_footer(name, f"{osp}/{name}", size)
             except (OSError, ValueError):
@@ -123,7 +140,7 @@ def live_files(loc: str | None) -> list[FileStats] | None:
         out.append(fs)
     with _MEMO_LOCK:
         if out:
-            _MEMO[osp] = {(f.name, f.size): f for f in out}
+            _MEMO[osp] = dict(zip(listing, out))
         else:
             _MEMO.pop(osp, None)
     return out

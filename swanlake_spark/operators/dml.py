@@ -935,16 +935,15 @@ def _list_toplevel_files(spark, loc, fs, dst) -> list[tuple[str, int]]:
         try:
             return [
                 (e.name, e.stat().st_size)
-                for e in os.scandir(osp)
-                if e.is_file() and not e.name.startswith(("_", "."))
+                for e in filestats.scan_dir(osp)
+                if e.is_file()
             ]
         except OSError:
             pass  # fall through to the FileSystem listing
-    jvm = spark._jvm
     return [
         (st.getPath().getName(), int(st.getLen()))
         for st in fs.listStatus(dst)
-        if st.isFile() and not st.getPath().getName().startswith(("_", "."))
+        if st.isFile() and not filestats.is_hidden(st.getPath().getName())
     ]
 
 
@@ -1154,8 +1153,11 @@ def _file_granular_cow(
     100 TB this turns a point UPDATE from a table rewrite into a
     one-file rewrite."""
     # the table schema is already in the session catalog — passing it
-    # skips the read's driver-side footer-inference round-trip
-    sub = spark.read.schema(spark.table(table).schema).parquet(*files)
+    # skips the read's driver-side footer-inference round-trip; the
+    # alias resolves table-qualified columns (`WHERE t.k = 1`)
+    sub = spark.read.schema(spark.table(table).schema).parquet(*files).alias(
+        table.split(".")[-1].strip('`"')
+    )
     new_sub = transform(sub)
     staged = staging_dir(spark, table, loc)
     if not _driver_rewrite(spark, staged, new_sub, files, driver_ok):
@@ -1197,10 +1199,11 @@ _SRC, _HIT = "_swl_src_file", "_swl_hit"
 
 def _conjuncts(where: str) -> list[str]:
     """The depth-0 AND terms of ``where``; none when an OR or NOT at
-    depth 0 leaves no term a necessary condition. The AND of each
+    depth 0 leaves no term a necessary condition, or when a CASE at
+    depth 0 may hold ANDs that split nothing. The AND of each
     ``BETWEEN`` stays inside its term."""
     masked = _mask_literals(where)
-    if _keyword_at_depth0(masked, "OR") >= 0 or _keyword_at_depth0(masked, "NOT") >= 0:
+    if any(_keyword_at_depth0(masked, w) >= 0 for w in ("OR", "NOT", "CASE")):
         return []
     terms: list[str] = []
     term_start = piece_start = owed = 0

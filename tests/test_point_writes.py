@@ -11,6 +11,7 @@ defects that rode along with it.
 from __future__ import annotations
 
 import os
+import shutil
 import tempfile
 import threading
 import uuid
@@ -22,7 +23,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from swanlake_spark import constraints
+from swanlake_spark import constraints, filestats
 from swanlake_spark.errors import InvalidArgument
 from swanlake_spark.operators import dml
 from swanlake_spark.operators.ingest import insert_arrow
@@ -95,6 +96,9 @@ _PREDICATES = [
     "k = '{a}'", "d = 3", "s = 'x'", "k IS NOT NULL AND k = {a}",
     # the AND belongs to the BETWEEN, whose upper bound is `k = a`
     "(k > 0) BETWEEN false AND k = {a}",
+    # the ANDs belong to the CASE: `k = a` is no necessary condition
+    "CASE WHEN g = 1 AND k = {a} AND g = 1 THEN false ELSE true END",
+    "k >= {a} AND CASE WHEN g = 1 AND k = {b} AND g = 1 THEN false ELSE true END",
 ]
 _SETS = [{"s": "'u'"}, {"g": "g + 1", "s": "'v'"}, {"k": "k + 100"}]
 
@@ -231,6 +235,55 @@ def test_failed_collect_takes_unpruned_path(spark, monkeypatch):
     assert [tuple(r) for r in spark.sql(f"SELECT * FROM {t} ORDER BY k").collect()] == [
         (0, "a"), (1, "u"), (2, "a")
     ]
+
+
+def test_case_ands_bound_nothing(spark):
+    """A depth-0 CASE whose WHEN holds ANDs yields no term: its middle
+    fragment ``k = 5`` is not a necessary condition, and the predicate
+    holds for rows in files whose range misses 5."""
+    where = "CASE WHEN g = 1 AND k = 5 AND g = 1 THEN false ELSE true END"
+    assert dml._conjuncts(where) == []
+    assert dml._conjuncts(f"k > 0 AND {where}") == []
+    table, _ = _table_from_files(
+        spark, [[(5, 0, "a", 0.5)], [(100, 0, "b", 0.5), (101, 1, "c", 0.5)]], -1
+    )
+    assert dml.delete_from(spark, table, where) == 3
+    assert _rows(spark, table) == []
+
+
+def test_unpruned_rewrite_resolves_qualified_columns(spark):
+    """The file-granular rewrite of today's path reads the matched files
+    under the table's name, so `t.col` in the WHERE resolves."""
+    table, _ = _table_from_files(
+        spark, [[(1, 0, "a", 0.5)], [(2, 0, "b", 0.5)]], -1
+    )
+    assert dml.update_table(spark, table, {"g": "9"}, f"{table}.s = 'a'") == 1
+    assert dml.delete_from(spark, table, f"{table}.s = 'b'") == 1
+    assert _rows(spark, table) == [(1, 9, "a", 0.5)]
+
+
+def test_footer_memo_sees_a_same_size_rewrite(tmp_path):
+    """A file replaced in place under the same name and size (as an
+    outside writer may do) is read again: the memo key holds the mtime."""
+    path = tmp_path / "part-0.parquet"
+    pq.write_table(pa.table({"k": pa.array([1, 2], pa.int64())}), path)
+    assert [f.ranges["k"] for f in filestats.live_files(str(tmp_path))] == [(1, 2)]
+    size, mtime = path.stat().st_size, path.stat().st_mtime_ns
+    pq.write_table(pa.table({"k": pa.array([7, 8], pa.int64())}), path)
+    assert path.stat().st_size == size
+    os.utime(path, ns=(mtime + 10**9, mtime + 10**9))  # past a coarse clock tick
+    assert [f.ranges["k"] for f in filestats.live_files(str(tmp_path))] == [(7, 8)]
+
+
+def test_footer_memo_forgets_a_dropped_directory(tmp_path):
+    loc = tmp_path / "t"
+    loc.mkdir()
+    pq.write_table(pa.table({"k": [1]}), loc / "part-0.parquet")
+    assert len(filestats.live_files(str(loc))) == 1
+    assert str(loc) in filestats._MEMO
+    shutil.rmtree(loc)
+    assert filestats.live_files(str(loc)) is None
+    assert str(loc) not in filestats._MEMO
 
 
 def _jobs(spark, fn) -> int:
