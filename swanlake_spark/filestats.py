@@ -65,15 +65,9 @@ _MEMO_LOCK = threading.Lock()
 
 
 def is_hidden(name: str) -> bool:
-    """Spark's rule: a name starting with ``_`` or ``.`` is not data."""
+    """Spark's rule: a name starting with ``_`` or ``.`` is not data.
+    Every listing of a table's data files applies it."""
     return name.startswith(("_", "."))
-
-
-def scan_dir(osp: str) -> list[os.DirEntry]:
-    """The non-hidden top-level entries of the local directory ``osp``
-    (raises OSError). The one listing of a table's data files: the
-    copy-on-write publish and the footer statistics both take it."""
-    return [e for e in os.scandir(osp) if not is_hidden(e.name)]
 
 
 def _read_footer(name: str, path: str, size: int) -> FileStats:
@@ -114,7 +108,7 @@ def live_files(loc: str | None) -> list[FileStats] | None:
         return None
     osp = osp.rstrip("/")
     try:
-        entries = scan_dir(osp)
+        entries = [e for e in os.scandir(osp) if not is_hidden(e.name)]
         if not all(e.is_file() for e in entries):
             return None
         listing = sorted(

@@ -13,18 +13,33 @@ At cluster scale compaction is partition-granular: only partitions whose
 file count exceeds the threshold are rewritten, and the rewrite is a
 repartition to ceil(bytes/target) — a shuffle sized to the data being
 compacted, not the table.
+
+Compaction and clustering follow the engine's one write rule: stage the
+new files, then publish them (``dml.publish``) under the table write
+lock, like every other writer.
 """
 
 from __future__ import annotations
 
 import json
+import logging
 import os
 import threading
 import time
 
 from pyspark.sql import SparkSession
 
-from swanlake_spark.operators.dml import _WriteLock
+from swanlake_spark import versions
+from swanlake_spark.errors import FailedPrecondition, InvalidArgument
+from swanlake_spark.operators.dml import (
+    _overwrite,
+    _partition_columns,
+    _rm_path,
+    _WriteLock,
+    publish,
+    staging_dir,
+    table_write_lock,
+)
 
 
 class CompactionLock(_WriteLock):
@@ -48,29 +63,16 @@ def table_location(spark: SparkSession, table: str) -> str | None:
     return None
 
 
-def _parquet_parts(spark: SparkSession, location: str) -> list[tuple[str, int]]:
-    """(path, size) of the table's data files, listed via the table's
-    own Hadoop FileSystem so any scheme (local/HDFS/s3a) works — not a
-    driver-local os.listdir. Non-recursive: a partitioned table's
-    per-partition files live in subdirectories, which this (flat-table)
-    compactor deliberately leaves alone."""
-    if not location:
-        return []
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(location)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(hpath):
-        return []
-    out = []
-    for st in fs.listStatus(hpath):
-        name = st.getPath().getName()
-        if (
-            st.isFile()
-            and name.endswith(".parquet")
-            and not name.startswith(("_", "."))
-        ):
-            out.append((st.getPath().toString(), int(st.getLen())))
-    return out
+def _live_parquet(spark: SparkSession, loc: str) -> list[tuple[str, int]]:
+    """(relative path, size) of the parquet data files under ``loc``, an
+    unpartitioned table or a partition leaf: what compaction and
+    clustering rewrite. Other files (a non-parquet table's) are left
+    alone."""
+    return [
+        (rel, size)
+        for rel, size in versions._list_data_files(spark, loc)
+        if rel.endswith(".parquet")
+    ]
 
 
 def _partition_leaf_dirs(spark: SparkSession, location: str) -> list[str]:
@@ -161,22 +163,21 @@ def compact_table(
 ) -> dict:
     """Rewrite a table's data files into ~target-sized files if it has
     accumulated more than ``min_files`` small parts. Returns a stats
-    dict (files before/after, bytes). Staging lives beside the table on
-    its own FileSystem (cluster-safe, same discipline as the COW DML
-    path — a driver-local temp dir would be invisible to executors).
+    dict (files before/after, bytes). The files it read are rewritten
+    into staging beside the table and published in their place under
+    the table write lock (:func:`_rewrite_files`); ``compacted`` is
+    False when a concurrent write replaced one of them first.
 
     Partitioned tables are compacted PARTITION-GRANULAR: only leaf
     partitions whose file count exceeds the threshold are rewritten
     (dynamic partition overwrite), so at 100 TB a hot day's small files
     compact without touching the other partitions."""
-    from swanlake_spark.operators.dml import _partition_columns, _rm_path, staging_dir
-
     loc = table_location(spark, table)
     if loc and _partition_columns(spark, table):
         return _compact_partitioned(
             spark, table, loc, target_file_bytes, min_files
         )
-    parts = _parquet_parts(spark, loc) if loc else []
+    parts = _live_parquet(spark, loc) if loc else []
     total_bytes = sum(size for _, size in parts)
     stats = {
         "table": table,
@@ -190,20 +191,54 @@ def compact_table(
     n_files = max(1, -(-total_bytes // target_file_bytes))  # ceil
     if n_files >= len(parts):
         return stats
-    staging = staging_dir(spark, table)
-    try:
-        df = spark.table(table)
-        df.repartition(int(n_files)).write.parquet(staging, mode="overwrite")
-        spark.read.parquet(staging).write.insertInto(table, overwrite=True)
-    finally:
-        _rm_path(spark, staging)
-    stats["compacted"] = True
-    stats["files_after"] = len(_parquet_parts(spark, loc))
-    analyze_table(spark, table)
-    from swanlake_spark import versions
-
-    versions.record_version(spark, table, "compact")
+    # compaction deletes its inputs (retain=False): retaining them would
+    # keep one more copy of the table per CHECKPOINT
+    if _rewrite_files(
+        spark, table, loc, parts, lambda df: df.repartition(int(n_files)),
+        "compact", retain=False,
+    ):
+        stats["compacted"] = True
+        stats["files_after"] = len(_live_parquet(spark, loc))
+        analyze_table(spark, table)
     return stats
+
+
+def _rewrite_files(
+    spark: SparkSession,
+    table: str,
+    loc: str,
+    parts: list[tuple[str, int]],
+    build,
+    op: str,
+    retain: bool,
+) -> bool:
+    """Rewrite exactly the live files ``parts`` (relative path, size) of
+    an unpartitioned table through ``build`` and publish the result in
+    their place. The rewrite is staged outside the table write lock;
+    only the publish and its manifest run under it, so writers wait for
+    a rename, not for the rewrite. Files appended meanwhile survive
+    beside the new ones. Returns False, publishing nothing, when a
+    concurrent write retired one of ``parts`` first."""
+    paths = [f"{loc.rstrip('/')}/{rel}" for rel, _ in parts]
+    staging = staging_dir(spark, table, loc)
+    try:
+        df = spark.read.schema(spark.table(table).schema).parquet(*paths)
+        build(df).write.parquet(staging, mode="overwrite")
+    except Exception:
+        _rm_path(spark, staging)
+        live = dict(versions._list_data_files(spark, loc))
+        if all(rel in live for rel, _ in parts):
+            raise
+        return False  # an input was retired while it was being read
+    with table_write_lock(spark, table, loc=loc):
+        try:
+            publish(spark, table, staging, paths, loc, retain=retain)
+        except FailedPrecondition:
+            _rm_path(spark, staging)
+            return False
+        versions.record_version(spark, table, op, loc=loc)
+    _rm_path(spark, staging)
+    return True
 
 
 def _compact_partitioned(
@@ -215,15 +250,14 @@ def _compact_partitioned(
 ) -> dict:
     """Per-partition compaction: rewrite only leaf partitions with more
     than ``min_files`` parquet files, via the COW dynamic-partition
-    overwrite path (cluster-safe staging)."""
-    from swanlake_spark.operators.dml import _overwrite
-
+    overwrite path (cluster-safe staging), each under the table write
+    lock so an append cannot land between its read and its publish."""
     leaves = _partition_leaf_dirs(spark, loc)
     files_before = files_after = 0
     total_bytes = 0
     compacted_any = False
     for leaf in leaves:
-        parts = _parquet_parts(spark, leaf)
+        parts = _live_parquet(spark, leaf)
         nbytes = sum(size for _, size in parts)
         files_before += len(parts)
         total_bytes += nbytes
@@ -232,15 +266,15 @@ def _compact_partitioned(
             files_after += len(parts)
             continue
         where_text, cond = _partition_predicate(loc, leaf)
-        pdf = spark.table(table).filter(cond).repartition(int(n_files))
-        _overwrite(spark, table, pdf, where_text)
+        with table_write_lock(spark, table, loc=loc):
+            pdf = spark.table(table).filter(cond).repartition(int(n_files))
+            _overwrite(spark, table, pdf, where_text, loc=loc)
         compacted_any = True
-        files_after += len(_parquet_parts(spark, leaf))
+        files_after += len(_live_parquet(spark, leaf))
     if compacted_any:
         analyze_table(spark, table)
-        from swanlake_spark import versions
-
-        versions.record_version(spark, table, "compact")
+        with table_write_lock(spark, table, loc=loc):
+            versions.record_version(spark, table, "compact", loc=loc)
     return {
         "table": table,
         "files_before": files_before,
@@ -304,7 +338,9 @@ class CheckpointService:
             try:
                 self.process_once()
             except Exception:
-                pass  # next interval retries; matches reference's log-and-continue
+                # log and continue, as the reference does: the next
+                # interval retries
+                logging.getLogger(__name__).exception("checkpoint pass failed")
 
     def stop(self) -> None:
         self._stop.set()
@@ -391,14 +427,6 @@ def cluster_table(
     measurable."""
     from pyspark.sql import functions as F
 
-    from swanlake_spark.errors import InvalidArgument
-    from swanlake_spark.operators.dml import (
-        _partition_columns,
-        _publish_by_move,
-        _rm_path,
-        staging_dir,
-    )
-
     if _partition_columns(spark, table):
         raise InvalidArgument(
             "cluster_table targets unpartitioned tables; Z-order within "
@@ -407,7 +435,7 @@ def cluster_table(
     loc = table_location(spark, table)
     if loc is None:
         raise InvalidArgument(f"no resolvable location for table {table}")
-    parts = _parquet_parts(spark, loc)
+    parts = _live_parquet(spark, loc)
     total_bytes = sum(size for _, size in parts)
     stats = {
         "table": table,
@@ -418,30 +446,27 @@ def cluster_table(
     }
     if total_bytes == 0:
         return stats
-    df = spark.table(table)
-    z, _minmax = _zorder_key(df, columns, bits)
     n_files = max(1, -(-total_bytes // target_file_bytes))  # ceil
-    staging = staging_dir(spark, table)
-    try:
-        out = (
+
+    def build(df):
+        z, _minmax = _zorder_key(df, columns, bits)
+        return (
             df.withColumn("_swl_z", z)
             .repartitionByRange(int(n_files), F.col("_swl_z"))
             .sortWithinPartitions("_swl_z")
             .drop("_swl_z")
         )
-        out.write.parquet(staging, mode="overwrite")
-        if not _publish_by_move(spark, table, staging):
-            spark.read.parquet(staging).write.insertInto(table, overwrite=True)
-    finally:
-        _rm_path(spark, staging)
+
+    # clustering retains its inputs: snapshots before it stay readable
+    if not _rewrite_files(
+        spark, table, loc, parts, build, "cluster", retain=True
+    ):
+        return stats
     stats["clustered"] = True
-    stats["files_after"] = len(_parquet_parts(spark, table_location(spark, table)))
+    stats["files_after"] = len(_live_parquet(spark, loc))
     # The rewrite just scanned everything; refresh table + clustered-key
     # column stats while the cost is already paid.
     analyze_table(spark, table, columns=list(columns))
-    from swanlake_spark import versions
-
-    versions.record_version(spark, table, "cluster")
     return stats
 
 
@@ -508,8 +533,6 @@ def vacuum_table(
     osp = _local_os_path(staging_root)
     if osp is not None:
         stats["locks_removed"] += sweep_stale_locks(osp, throttle_s=0.0)
-    from swanlake_spark import versions
-
     vexp = versions.expire(spark, table, keep_last=1, min_age_s=min_age_s)
     stats["snapshots_expired"] = vexp["manifests_removed"]
     stats["snapshot_bytes"] = vexp["bytes_reclaimed"]

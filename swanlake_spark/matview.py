@@ -1444,15 +1444,14 @@ def refresh_incremental(spark: SparkSession, name: str) -> int:
                         spark, staging, tbl.select(view_order)
                     )
                     if published:
-                        # new_df=None: the publish-by-move fast path
-                        # never reads the staged frame, so don't pay
-                        # its eager construction (r13)
+                        # new_df=None: the publish never reads the
+                        # staged frame, so don't pay its eager
+                        # construction
                         dml._overwrite(
                             spark,
                             name,
                             None,
                             None,
-                            staged=True,
                             staged_path=staging,
                             loc=view_loc,
                         )
@@ -1646,13 +1645,12 @@ def refresh(
                     ):
                         n = tbl.num_rows
                         # new_df=None: see refresh_incremental's
-                        # staged publish — move path never reads it
+                        # staged publish — the publish never reads it
                         dml._overwrite(
                             spark,
                             name,
                             None,
                             None,
-                            staged=True,
                             staged_path=staging,
                         )
                         dml._rm_path(spark, staging)

@@ -6,8 +6,10 @@ physical model is copy-on-write over immutable Parquet files. Spark's
 parquet tables have no DML, so this module implements the same
 physical strategy natively:
 
-- unpartitioned table → full rewrite (stage to temp, then
-  ``INSERT OVERWRITE``);
+- unpartitioned table → rewrite only the files holding matched rows
+  (or the whole table), stage the new files, and :func:`publish` them
+  in place of the old ones under :func:`table_write_lock` — the one
+  publish step every table rewrite shares;
 - partitioned table → rewrite only the partitions whose rows match the
   predicate (dynamic partition overwrite), so at 100 TB an UPDATE that
   touches one day's partition rewrites one partition, not the table.
@@ -237,86 +239,101 @@ def _rm_path(spark: SparkSession, path: str) -> None:
     fs.delete(hpath, True)
 
 
-def _publish_by_move(
-    spark: SparkSession, table: str, src_dir: str, loc=_UNRESOLVED
-) -> bool:
-    """Publish staged parquet into an unpartitioned table by file move.
+def publish(
+    spark: SparkSession,
+    table: str,
+    staged_dir: str,
+    replaced: list[str] | None,
+    loc=_UNRESOLVED,
+    retain: bool = True,
+) -> None:
+    """Swap the files staged under ``staged_dir`` into ``table`` in place
+    of the ``replaced`` data files (None: every live file). Every table
+    rewrite publishes through here, under the caller's
+    :func:`table_write_lock`:
 
-    ``insertInto(overwrite=True)`` from the staging scan decodes and
-    re-encodes every row — a second full write of the table. The staged
-    files ARE the new table contents (same schema, written by this very
-    statement), so the lakehouse-style publish is a metadata swap:
-    rename staged files in, retire current data files, refresh.
+    1. list the table's live files once;
+    2. if a ``replaced`` file is no longer live (a writer retired it
+       after the caller read it), raise FailedPrecondition and move
+       nothing;
+    3. rename each staged file to the same relative path under the
+       table (part-file names embed the writing job's UUIDs, so they
+       cannot collide with the incumbents);
+    4. retire the replaced files into the snapshot store
+       (``versions.retire_files``), or delete them when ``retain`` is
+       False; whatever could not be moved is deleted;
+    5. hand the new live set to the caller's ``record_version`` and
+       refresh the table.
 
-    Consistency window (explicit): ADD-THEN-RETIRE means a
-    DIRECTORY-SCAN reader (plain ``spark.table`` planned mid-publish)
-    can briefly see old and new files together — duplicated rows —
-    where the pre-r4 retire-then-add ordering showed missing rows.
-    Add-first is the deliberate choice: a crash mid-publish leaves a
-    recoverable superset instead of a data hole, matching DuckLake's
-    add-before-retire manifest commits. MANIFEST-RESOLVED readers
-    (``versions.read_current`` / ``AT (VERSION => n)``) never see the
-    window — the manifest flips atomically to the exact new file list —
-    and writers are excluded by the table write lock. Readers that need
-    snapshot isolation against concurrent DML read through the version
-    API; the engine's plain reads accept the transient window (the
-    reference's directory-scanning fallback has the same property).
-    Returns False (caller falls back to insertInto) when the table
-    location can't be resolved; a rename failing midway is impossible
-    to pre-check — renames within one FileSystem don't copy."""
+    Consistency window: ADD-THEN-RETIRE (DuckLake's add-before-retire
+    commit shape). Between steps 3 and 4 a directory-scan reader can see
+    old and new files together (duplicated rows); manifest-resolved
+    readers (``versions.read_current``, ``AT (VERSION => n)``) never
+    do, since the manifest flips to the new file list in one write. A
+    crash in the window leaves a recoverable superset, never a hole.
+    A rename that returns False raises IOError with the old files still
+    intact; an unresolvable location raises InvalidArgument."""
+    from urllib.parse import unquote
+
+    from swanlake_spark import versions as _versions
+    from swanlake_spark.errors import FailedPrecondition
+
     loc = _loc_or_resolve(spark, table, loc)
     if loc is None:
-        return False
+        raise InvalidArgument(f"{table} has no resolvable location to publish into")
+    loc = loc.rstrip("/")
+    live = dict(_versions._list_data_files(spark, loc))
+    if replaced is None:
+        olds = set(live)
+    else:
+        # by path relative to the table: basenames repeat across
+        # partition dirs, and input_file_name() renders file:///x
+        # URL-encoded where listStatus renders file:/x raw
+        base = (_local_os_path(loc) or loc) + "/"
+        olds, gone = set(), []
+        for f in replaced:
+            p = _local_os_path(f) or f
+            rel = next(
+                (q[len(base):] for q in (p, unquote(p))
+                 if q.startswith(base) and q[len(base):] in live),
+                None,
+            )
+            if rel is None:
+                gone.append(f)
+            else:
+                olds.add(rel)
+        if gone:
+            raise FailedPrecondition(
+                f"{len(gone)} file(s) of {table} were replaced by a "
+                f"concurrent write (e.g. {gone[0]}); nothing published"
+            )
     jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    dst = jvm.org.apache.hadoop.fs.Path(loc)
-    fs = dst.getFileSystem(conf)
-    src = jvm.org.apache.hadoop.fs.Path(src_dir)
-    if not fs.exists(src):
-        return False
-    from swanlake_spark import versions as _versions
-
-    olds = [
-        st.getPath().toString()
-        for st in fs.listStatus(dst)
-        if not st.getPath().getName().startswith(("_", "."))
-    ]
-    # ADD-THEN-RETIRE ordering (the DuckLake/Delta commit shape): the
-    # incoming files land FIRST, so at no instant does the current
-    # snapshot's manifest reference files that are neither live nor
-    # retained — a manifest-resolved reader (versions.read_current /
-    # AT (VERSION =>)) always sees exactly the old or the new snapshot.
-    # Part-file names embed the writing job's task UUIDs, so staged
-    # names cannot collide with the incumbents.
-    news: list[tuple[str, int]] = []
-    for st in fs.listStatus(src):
-        name = st.getPath().getName()
-        if name.startswith("_") or name.startswith("."):
-            continue  # _SUCCESS and friends
+    Path = jvm.org.apache.hadoop.fs.Path
+    dst = Path(loc)
+    fs = dst.getFileSystem(spark._jsc.hadoopConfiguration())
+    src = Path(staged_dir)
+    news = _versions._list_data_files(spark, staged_dir)
+    for rel, _ in news:
+        target = Path(dst, rel)
+        if "/" in rel:
+            fs.mkdirs(target.getParent())
         # FileSystem.rename signals failure by RETURN VALUE, not by
-        # raising — a silently skipped file would be data loss. Fail
-        # loud; the old table files are still intact at this point.
-        if not fs.rename(st.getPath(), jvm.org.apache.hadoop.fs.Path(dst, name)):
+        # raising — a silently skipped file would be data loss
+        if not fs.rename(Path(src, rel), target):
             raise IOError(
-                f"publish rename failed for {st.getPath()} -> {dst}; "
+                f"publish rename failed for {staged_dir}/{rel} -> {loc}; "
                 f"incumbent files untouched (earlier staged renames may "
                 f"already be in place — remove them), staged data at "
-                f"{src_dir}"
+                f"{staged_dir}"
             )
-        news.append((name, int(st.getLen())))
-    # Snapshot retention: move the outgoing data files aside instead of
-    # deleting (versions.py) — a rename, so still a metadata-only
-    # publish. Anything retire_files can't move (versioning off,
-    # partition subtrees) is deleted as before. Metadata siblings
-    # (sidecars, _SUCCESS) never match `olds` — PathFilter semantics.
-    _versions.retire_files(spark, table, olds, loc=loc)
-    for old in olds:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(old), True)
-    # The caller's record_version right after this publish can use the
-    # exact new file list instead of re-walking the directory.
-    _versions.note_published_files(table, news)
+    old_paths = [f"{loc}/{rel}" for rel in sorted(olds)]
+    if not retain or not _versions.retire_files(spark, table, old_paths, loc=loc):
+        for f in old_paths:
+            fs.delete(Path(f), False)
+    _versions.note_published_files(
+        table, sorted([(r, n) for r, n in live.items() if r not in olds] + news)
+    )
     spark.catalog.refreshTable(table)
-    return True
 
 
 class StagingPin:
@@ -477,34 +494,32 @@ def _overwrite(
     table: str,
     new_df: DataFrame | None,
     where: str | None,
-    staged: bool = False,
     staged_path: str | None = None,
     loc=_UNRESOLVED,
 ) -> None:
     """Stage-and-overwrite. Spark refuses INSERT OVERWRITE from a
     self-referencing plan, so materialize to a staging dir under the
-    table location first (skipped when ``staged`` says ``new_df`` is
-    already a scan of durably staged files at ``staged_path``). For
+    table location first (skipped when ``staged_path`` says ``new_df``
+    is already a scan of the durably staged files there). For
     partitioned tables with a predicate restricted to partition
     columns, only matching partitions are rewritten (dynamic
-    overwrite); unpartitioned full rewrites publish the staged files by
-    rename (:func:`_publish_by_move`) instead of re-encoding them
+    overwrite); unpartitioned full rewrites :func:`publish` the staged
+    files in place of every live file instead of re-encoding them
     through a second INSERT.
 
-    ``new_df=None`` (allowed only with ``staged=True`` and a
-    ``staged_path``) defers the staged-scan construction to the
-    insertInto fallback: the publish-by-move fast path never reads the
-    frame, and constructing ``spark.read.parquet(staging)`` eagerly
-    costs a schema-inference + file-listing driver round trip per
-    publish (r13)."""
-    if new_df is None and not (staged and staged_path and where is None):
+    ``new_df=None`` (allowed only with a ``staged_path`` and no
+    ``where``) defers the staged-scan construction to the partitioned
+    insertInto: the unpartitioned publish never reads the frame, and
+    constructing ``spark.read.parquet(staging)`` eagerly costs a
+    schema-inference + file-listing driver round trip per publish."""
+    if new_df is None and not (staged_path and where is None):
         raise ValueError(
             "_overwrite: new_df may be None only for a staged, "
             "unpredicated publish with a staged_path"
         )
     part_cols = _partition_columns(spark, table)
-    staging = staging_dir(spark, table, loc)
-    wrote_staging = False
+    owned = staged_path is None
+    staging = staged_path or staging_dir(spark, table, loc)
     try:
         if part_cols and where and not where_has_subquery(where):
             # Dynamic partition overwrite path: rewrite only partitions
@@ -538,9 +553,8 @@ def _overwrite(
                     filtered = new_df.join(
                         F.broadcast(affected), cond, "left_semi"
                     )
-                    if not staged:
+                    if owned:
                         filtered.write.parquet(staging, mode="overwrite")
-                        wrote_staging = True
                         filtered = spark.read.parquet(staging)
                     # Retire the affected partitions' current files for
                     # time travel BEFORE Spark's overwrite deletes them.
@@ -561,20 +575,15 @@ def _overwrite(
                     _rm_path(spark, aff_path)
             finally:
                 spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        elif staged:
-            if part_cols or staged_path is None or not _publish_by_move(
-                spark, table, staged_path, loc=loc
-            ):
-                if new_df is None:
-                    new_df = spark.read.parquet(staged_path)
-                new_df.write.insertInto(table, overwrite=True)
         else:
-            new_df.write.parquet(staging, mode="overwrite")
-            wrote_staging = True
-            if part_cols or not _publish_by_move(spark, table, staging, loc=loc):
+            if owned:
+                new_df.write.parquet(staging, mode="overwrite")
+            if part_cols:
                 spark.read.parquet(staging).write.insertInto(table, overwrite=True)
+            else:
+                publish(spark, table, staging, None, loc)
     finally:
-        if wrote_staging or not staged:
+        if owned:
             _rm_path(spark, staging)
 
 
@@ -588,11 +597,11 @@ def table_write_lock(
     timeout_s: float = 120.0,
     loc=_UNRESOLVED,
 ):
-    """Serialize COW publishes per table: every UPDATE/DELETE/MERGE
-    publish runs under an O_EXCL lock file beside the table's
-    ``_staging`` dir, so two writers can't interleave their
-    delete-then-rename windows (the race DuckLake resolves through its
-    catalog commit). Blocks up to ``timeout_s`` then raises
+    """Serialize writes per table: every writer — append, UPDATE,
+    DELETE, MERGE, ALTER, rollback, CHECKPOINT, OPTIMIZE — publishes
+    under an O_EXCL lock file beside the table's ``_staging`` dir, so
+    no two writers interleave their publishes (the race DuckLake
+    resolves through its catalog commit). Blocks up to ``timeout_s`` then raises
     FailedPrecondition — the reference's transaction-conflict status
     class. File-scheme locations only; on object stores (no atomic
     create-exclusive) the lock is skipped and concurrent writers need
@@ -925,84 +934,6 @@ def _local_os_path(loc: str) -> str | None:
     return None
 
 
-def _list_toplevel_files(spark, loc, fs, dst) -> list[tuple[str, int]]:
-    """(name, size) of non-hidden top-level files. Local locations list
-    via one os.scandir (a per-file Py4J getName/getLen loop costs
-    ~1 ms/file — real latency on the point-DML path); other schemes go
-    through the Hadoop FileSystem."""
-    osp = _local_os_path(loc)
-    if osp is not None:
-        try:
-            return [
-                (e.name, e.stat().st_size)
-                for e in filestats.scan_dir(osp)
-                if e.is_file()
-            ]
-        except OSError:
-            pass  # fall through to the FileSystem listing
-    return [
-        (st.getPath().getName(), int(st.getLen()))
-        for st in fs.listStatus(dst)
-        if st.isFile() and not filestats.is_hidden(st.getPath().getName())
-    ]
-
-
-def _publish_file_swap(
-    spark: SparkSession,
-    table: str,
-    staged_dir: str,
-    old_files: list[str],
-    loc=_UNRESOLVED,
-) -> None:
-    """Swap rewritten files into the table: delete the matched originals,
-    rename the staged replacements in, refresh. Same delete-then-move
-    ordering (and the same documented non-atomicity window) as
-    :func:`_publish_by_move`; unmatched files are never touched, so the
-    I/O is proportional to the matched files, not the table."""
-    loc = _loc_or_resolve(spark, table, loc)
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    dst = jvm.org.apache.hadoop.fs.Path(loc)
-    fs = dst.getFileSystem(conf)
-    from swanlake_spark import versions as _versions
-
-    # Survivors = current data files NOT being swapped out (the
-    # file-granular path applies to unpartitioned tables, so all data
-    # files sit at the top level). Compared by file NAME — the matched
-    # list comes from input_file_name() whose URI rendering
-    # (file:///x) differs from listStatus's (file:/x).
-    old_names = {f.rstrip("/").rsplit("/", 1)[-1] for f in old_files}
-    survivors = [
-        (name, size)
-        for name, size in _list_toplevel_files(spark, loc, fs, dst)
-        if name not in old_names
-    ]
-    # ADD-THEN-RETIRE (see _publish_by_move): staged replacements land
-    # first — old files stay intact until every rename succeeded, and
-    # manifest-resolved readers never observe a half-swapped snapshot.
-    src = jvm.org.apache.hadoop.fs.Path(staged_dir)
-    news: list[tuple[str, int]] = []
-    for st in fs.listStatus(src):
-        name = st.getPath().getName()
-        if name.startswith("_") or name.startswith("."):
-            continue
-        if not fs.rename(st.getPath(), jvm.org.apache.hadoop.fs.Path(dst, name)):
-            raise IOError(
-                f"file-swap rename failed for {st.getPath()} -> {dst}; "
-                f"incumbent files untouched (earlier staged renames may "
-                f"already be in place — remove them), staged data at "
-                f"{staged_dir}"
-            )
-        news.append((name, int(st.getLen())))
-    # Snapshot retention: retire the matched originals, delete whatever
-    # couldn't be moved.
-    _versions.retire_files(spark, table, list(old_files), loc=loc)
-    for f in old_files:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f), False)
-    _versions.note_published_files(table, sorted(survivors + news))
-    spark.catalog.refreshTable(table)
-
-
 # Point-statement driver-rewrite bound: when the matched files total at
 # most this many bytes, the rewritten contents are collected as ONE
 # Arrow batch and written by the driver — no output-committer dance, no
@@ -1162,10 +1093,8 @@ def _file_granular_cow(
     staged = staging_dir(spark, table, loc)
     if not _driver_rewrite(spark, staged, new_sub, files, driver_ok):
         new_sub.write.parquet(staged, mode="overwrite")
-    try:
-        _publish_file_swap(spark, table, staged, files, loc=loc)
-    except BaseException:
-        raise  # staged data retained for recovery (see _publish_file_swap)
+    # a failed publish keeps the staged data for recovery (see publish)
+    publish(spark, table, staged, files, loc)
     _rm_path(spark, staged)
     return True
 
@@ -1328,9 +1257,7 @@ def _pruned_cow(
         _local_os_path(staged),
         tbl.filter(pc.is_in(tbl[_SRC], value_set=keep)).drop_columns([_SRC, _HIT]),
     )
-    _publish_file_swap(
-        spark, table, staged, ["file:" + f.path for f in matched], loc=loc
-    )
+    publish(spark, table, staged, ["file:" + f.path for f in matched], loc)
     _rm_path(spark, staged)
     return affected, True
 
@@ -1961,7 +1888,7 @@ def _merge_table_locked(
                     staged_path = staging_dir(spark, table, loc)
                     new_df.write.parquet(staged_path, mode="overwrite")
                     stage.paths.append(staged_path)
-                _publish_file_swap(spark, table, staged_path, files, loc=loc)
+                publish(spark, table, staged_path, files, loc)
             stage.cleanup()
             return affected
     stage = StagingPin(spark, table, loc=loc)
@@ -1980,7 +1907,6 @@ def _merge_table_locked(
         if affected:
             _overwrite(
                 spark, table, new_df, None,
-                staged=stage.pinned(new_df),
                 staged_path=stage.paths[-1] if stage.pinned(new_df) else None,
                 loc=loc,
             )
@@ -2182,7 +2108,6 @@ def _update_table_locked(
     try:
         _overwrite(
             spark, table, new_df, overwrite_where,
-            staged=stage.pinned(new_df),
             staged_path=stage.paths[-1] if stage.pinned(new_df) else None,
             loc=loc,
         )
@@ -2268,7 +2193,6 @@ def _delete_from_locked(
     try:
         _overwrite(
             spark, table, new_df, where,
-            staged=stage.pinned(new_df),
             staged_path=stage.paths[-1] if stage.pinned(new_df) else None,
             loc=loc,
         )

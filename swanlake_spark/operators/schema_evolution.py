@@ -14,19 +14,17 @@ machinery as DML:
    RENAME is allowed on key columns because the registrations are
    rewritten to the new name;
 2. the new contents stage to the ``_staging`` sibling (cluster-visible);
-3. under the table write lock, ADD-THEN-RETIRE (the same ordering as
-   ``dml._publish_by_move``): the staged files rename INTO the table
-   location first (part-file names are unique, file-granular so
-   existing partition dirs merge instead of colliding), THEN the
-   pre-ALTER files retire into the snapshot store (the old contents
-   stay time-travelable — ``AT (VERSION => n)`` reads the retained
-   files with their old schema), and only then does the catalog entry
-   swap to the new column list at the SAME location, with a manifest
-   recording the new state (op ``alter_drop_column`` /
-   ``alter_rename_column`` / ``alter_column_type``). A crash anywhere
-   in the window leaves a table with data present (possibly briefly
-   doubled for directory-scan readers — the documented COW window),
-   never an empty or missing one;
+3. under the table write lock, ``dml.publish`` swaps the staged files
+   in for every pre-ALTER file (add first, then retire into the
+   snapshot store, so ``AT (VERSION => n)`` reads the old contents with
+   their old schema; per-file renames merge into existing partition
+   dirs), and only then does the catalog entry swap to the new column
+   list at the SAME location, with a manifest recording the new state
+   (op ``alter_drop_column`` / ``alter_rename_column`` /
+   ``alter_column_type``). A crash anywhere in the window leaves a
+   table with data present (possibly briefly doubled for directory-scan
+   readers — the documented publish window), never an empty or missing
+   one;
 4. the catalog swap itself (DROP → CREATE, Spark v1 parquet has no
    in-place column DDL) is registered in an in-process swap table so
    concurrent engine readers that hit table-not-found inside the
@@ -170,8 +168,6 @@ def _rewrite_schema(
         )
     part_cols = dml._partition_columns(spark, table)
     staging = dml.staging_dir(spark, table, loc)
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
     with dml.table_write_lock(spark, table, loc=loc):
         if part_cols:
             # keep partition columns last, the saveAsTable layout
@@ -191,38 +187,6 @@ def _rewrite_schema(
             f"{quote_identifier(f.name)} {f.dataType.simpleString()}"
             for f in schema.fields
         )
-        olds = [
-            f"{loc.rstrip('/')}/{rel}"
-            for rel, _ in versions._list_data_files(spark, loc)
-        ]
-        # ADD first (see module docstring): staged files rename into the
-        # table location file-by-file — unique part-file names can't
-        # collide with the still-present old files, and per-file renames
-        # merge into existing partition dirs instead of nesting under
-        # them the way a directory rename onto an existing dir would.
-        src = jvm.org.apache.hadoop.fs.Path(staging)
-        dst = jvm.org.apache.hadoop.fs.Path(loc)
-        fs = dst.getFileSystem(conf)
-
-        def _rename_tree(d, rel):
-            out = []
-            for st in fs.listStatus(d):
-                name = st.getPath().getName()
-                if name.startswith(("_", ".")):
-                    continue
-                child_rel = f"{rel}/{name}" if rel else name
-                if st.isDirectory():
-                    out.extend(_rename_tree(st.getPath(), child_rel))
-                    continue
-                target = jvm.org.apache.hadoop.fs.Path(dst, child_rel)
-                fs.mkdirs(target.getParent())
-                if not fs.rename(st.getPath(), target):
-                    raise IOError(
-                        f"schema-rewrite publish failed for {st.getPath()}"
-                    )
-                out.append((child_rel, int(st.getLen())))
-            return out
-
         # The whole publish section registers in _SWAPPING: new engine
         # queries pre-wait (no planning against a half-published file
         # listing = no doubled/missing rows), and in-flight readers
@@ -232,14 +196,10 @@ def _rewrite_schema(
         with _SWAP_LOCK:
             _SWAPPING[t_norm] = ev
         try:
-            news = _rename_tree(src, "")
-            fs.delete(src, True)
-            # THEN retire the pre-ALTER files (time travel) and swap
-            # the catalog entry
-            versions.retire_files(spark, table, olds, loc=loc)
-            for old in olds:
-                p = jvm.org.apache.hadoop.fs.Path(old)
-                p.getFileSystem(conf).delete(p, False)
+            # ADD-THEN-RETIRE (see module docstring), then the catalog
+            # swap to the new column list
+            dml.publish(spark, table, staging, None, loc)
+            dml._rm_path(spark, staging)
             spark.sql(f"DROP TABLE {table}")  # direct: keep _versions root
             part_sql = (
                 " PARTITIONED BY ("
@@ -262,8 +222,6 @@ def _rewrite_schema(
                 _SWAPPING.pop(t_norm, None)
                 _RECENT_SWAPS[t_norm] = time.monotonic()
             ev.set()
-        if not part_cols:
-            versions.note_published_files(table, sorted(news))
         versions.record_version(spark, table, op, loc=loc)
         # re-persist whatever the registries still hold (rename paths
         # already updated them)

@@ -13,8 +13,8 @@ capability with directory-level metadata:
   ``_versions/<table>/manifests`` sibling of the table location (same
   FileSystem as the data, like the ``_staging`` sibling; the ``_``
   prefix hides it from directory scans).
-- When a COW publish retires data files (``dml._publish_by_move`` /
-  ``dml._publish_file_swap``), the files are **renamed** into
+- When a publish retires data files (``dml.publish``, the one swap
+  step of every table rewrite), the files are **renamed** into
   ``_versions/<table>/retained/`` instead of deleted — a metadata move
   on HDFS/local. Part-file names are globally unique (task UUIDs), so
   a flat retained dir cannot collide.
@@ -32,9 +32,10 @@ Scale notes (100 TB):
   divergence, same as the COW publish itself.
 - Dynamic-partition rewrites retire the affected partitions' files
   first (``dml._retain_partition_files``), bounded at 64 partitions per
-  statement — beyond that, and on the rare ``insertInto`` fallback
-  where Spark deletes files internally, manifests still record the new
-  state but older snapshots referencing the destroyed files raise
+  statement — beyond that, on the other partitioned rewrites where
+  Spark deletes files internally, and after compaction (which deletes
+  its inputs), manifests still record the new state but older
+  snapshots referencing the destroyed files raise
   :class:`SnapshotUnavailable` instead of silently returning wrong
   rows.
 """
@@ -106,7 +107,9 @@ def _retained_dir(root: str) -> str:
 
 def _list_data_files(spark: SparkSession, loc: str) -> list[tuple[str, int]]:
     """Recursive (relpath, size) listing of the table's data files,
-    skipping ``_``/``.`` names at every level — metadata only, no read."""
+    skipping hidden (``_``/``.``) names at every level — metadata only,
+    no read."""
+    from swanlake_spark.filestats import is_hidden
     from swanlake_spark.operators.dml import _local_os_path
 
     osp = _local_os_path(loc)
@@ -123,7 +126,7 @@ def _list_data_files(spark: SparkSession, loc: str) -> list[tuple[str, int]]:
             except OSError:
                 return
             for e in entries:
-                if e.name.startswith(("_", ".")):
+                if is_hidden(e.name):
                     continue
                 if e.is_dir(follow_symlinks=True):
                     walk_os(e.path, f"{rel}{e.name}/")
@@ -142,8 +145,7 @@ def _list_data_files(spark: SparkSession, loc: str) -> list[tuple[str, int]]:
 
     def walk(p):
         for st in fs.listStatus(p):
-            name = st.getPath().getName()
-            if name.startswith("_") or name.startswith("."):
+            if is_hidden(st.getPath().getName()):
                 continue
             if st.isDirectory():
                 walk(st.getPath())
@@ -294,11 +296,10 @@ def record_version(
 ) -> int | None:
     """Append a manifest of the table's current live files. Cheap
     (driver-side listing — or the publishing path's explicit list — plus
-    one small JSON), called after every publish. The manifest file is
-    written create-exclusive and the version number retried on
-    collision, so two concurrent appends (the only writes not under the
-    table write lock) can never silently overwrite each other's
-    snapshot."""
+    one small JSON), called after every publish under the table write
+    lock. The manifest file is also written create-exclusive and the
+    version number retried on collision, so a caller outside the lock
+    can never silently overwrite another's snapshot."""
     # consume the pending explicit list unconditionally — an early
     # return (versioning disabled, unresolvable location) must not
     # leave a stale list behind for some later, unrelated manifest
@@ -669,20 +670,20 @@ def table_changes(
 def rollback(spark: SparkSession, table: str, version: int) -> int:
     """Restore the table to snapshot ``version`` as a NEW snapshot (the
     history keeps going forward — DuckLake semantics). The restored
-    contents publish through the normal COW move path, so the
-    pre-rollback state stays readable too."""
+    contents publish like any COW rewrite (``dml.publish``, retaining
+    the replaced files), so the pre-rollback state stays readable too."""
     from swanlake_spark.operators import dml
 
+    loc = dml._table_location(spark, table)
     old = read_version(spark, table, version)
     # column order must match the table (insertInto is positional, and
     # partitioned reads surface partition columns last already)
     old = old.select(*[f.name for f in spark.table(table).schema.fields])
-    staging = dml.staging_dir(spark, table)
+    staging = dml.staging_dir(spark, table, loc)
     old.write.parquet(staging)
     try:
-        with dml.table_write_lock(spark, table):
-            partitioned = bool(dml._partition_columns(spark, table))
-            if partitioned:
+        with dml.table_write_lock(spark, table, loc=loc):
+            if dml._partition_columns(spark, table):
                 # flat staged files cannot be renamed into a partitioned
                 # layout; a full static overwrite re-encodes them into
                 # the right partition dirs (retention of the replaced
@@ -702,13 +703,12 @@ def rollback(spark: SparkSession, table: str, version: int) -> int:
                     spark.conf.set(
                         "spark.sql.sources.partitionOverwriteMode", prev
                     )
-            elif not dml._publish_by_move(spark, table, staging):
-                spark.read.parquet(staging).write.insertInto(
-                    table, overwrite=True
-                )
+            else:
+                dml.publish(spark, table, staging, None, loc)
+            v = record_version(spark, table, f"rollback_to_v{version}", loc=loc)
     finally:
         dml._rm_path(spark, staging)
-    return record_version(spark, table, f"rollback_to_v{version}") or 0
+    return v or 0
 
 
 def expire(

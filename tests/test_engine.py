@@ -1621,9 +1621,9 @@ class TestCheckpoint:
         t = _mktable(engine, "id INT, v STRING")
         for i in range(8):  # 8 single-row inserts → 8 small part-files
             engine.execute(f"INSERT INTO {t} VALUES ({i}, 'r{i}')")
-        from swanlake_spark.maintenance import _parquet_parts, table_location
+        from swanlake_spark.maintenance import _live_parquet, table_location
 
-        before = len(_parquet_parts(engine.spark, table_location(engine.spark, t)))
+        before = len(_live_parquet(engine.spark, table_location(engine.spark, t)))
         assert before >= 8
         rows = {r.table.split(".")[-1]: r for r in engine.query("CHECKPOINT").collect()}
         assert rows[t].compacted and rows[t].files_after < before
@@ -1855,7 +1855,7 @@ class TestUpdateSubquerySetValue:
 class TestPartitionedCompaction:
     def test_compacts_only_hot_partition(self, engine):
         from swanlake_spark.maintenance import (
-            _parquet_parts,
+            _live_parquet,
             compact_table,
             table_location,
         )
@@ -1870,11 +1870,11 @@ class TestPartitionedCompaction:
             engine.execute(f"INSERT INTO {t} VALUES ({float(i)}, '2026-01-01')")
         engine.execute(f"INSERT INTO {t} VALUES (9.0, '2026-01-02')")
         base = table_location(engine.spark, t)
-        cold_before = _parquet_parts(engine.spark, f"{base}/day=2026-01-02")
+        cold_before = _live_parquet(engine.spark, f"{base}/day=2026-01-02")
         stats = compact_table(engine.spark, t, min_files=2)
         assert stats["compacted"] is True
-        hot_after = _parquet_parts(engine.spark, f"{base}/day=2026-01-01")
-        cold_after = _parquet_parts(engine.spark, f"{base}/day=2026-01-02")
+        hot_after = _live_parquet(engine.spark, f"{base}/day=2026-01-01")
+        cold_after = _live_parquet(engine.spark, f"{base}/day=2026-01-02")
         assert len(hot_after) < 6
         # cold partition untouched (same files, same sizes)
         assert sorted(cold_before) == sorted(cold_after)

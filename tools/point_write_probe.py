@@ -1,6 +1,7 @@
 """In-process cost of the point writes a YCSB client sends, no server.
 
 Usage: python tools/point_write_probe.py [--files N] [--rows N] [--reps N]
+                                         [--checkpoints N] [--appends N]
                                          [--cpus N] [--seed N]
 
 Builds an Engine, creates a YCSB-shaped table (``ycsb_key INT PRIMARY
@@ -10,7 +11,11 @@ over ``--rows`` keys, and then times ``--reps`` calls each of
 - a point UPDATE setting all ten fields (``Engine.execute_update``),
 - a point DELETE of one existing key (``Engine.execute_update``),
 - a one-row append of a fresh key (``operators.ingest.insert_arrow``,
-  the Flight SQL prepared-INSERT path).
+  the Flight SQL prepared-INSERT path),
+
+and then ``--checkpoints`` calls of ``CHECKPOINT`` (the compaction that
+stages the table's files and publishes them under the table write
+lock), each after ``--appends`` untimed one-row appends.
 
 For each it prints the median and quartiles of milliseconds per call and
 the Spark jobs per call (counted with a job group and the status
@@ -43,6 +48,8 @@ def main() -> None:
     ap.add_argument("--files", type=int, default=16)
     ap.add_argument("--rows", type=int, default=100_000)
     ap.add_argument("--reps", type=int, default=20)
+    ap.add_argument("--checkpoints", type=int, default=5)
+    ap.add_argument("--appends", type=int, default=8)
     ap.add_argument("--cpus", type=int, default=len(os.sched_getaffinity(0)))
     ap.add_argument("--seed", type=int, default=1)
     args = ap.parse_args()
@@ -101,11 +108,28 @@ def main() -> None:
         live.append(next_key)
         next_key += 1
 
+    def appends() -> None:
+        for _ in range(args.appends):
+            append()
+
+    def checkpoint() -> None:
+        assert eng.query("CHECKPOINT").collect()[0].compacted
+
     print(f"table: {args.files} files, {args.rows} rows; {args.reps} calls per kind")
-    for name, fn in (("update", update), ("delete", delete), ("append", append)):
+    kinds = [
+        ("update", update, None, args.reps),
+        ("delete", delete, None, args.reps),
+        ("append", append, None, args.reps),
+        ("checkpoint", checkpoint, appends, args.checkpoints),
+    ]
+    for name, fn, prep, reps in kinds:
+        if prep:
+            prep()
         fn()  # warm-up
         ms, jobs = [], []
-        for _ in range(args.reps):
+        for _ in range(reps):
+            if prep:
+                prep()
             group = f"pwp_{uuid.uuid4().hex}"
             sc.setJobGroup(group, name)
             t0 = time.perf_counter()
@@ -115,7 +139,7 @@ def main() -> None:
             jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
         q1, med, q3 = statistics.quantiles(ms, n=4)
         print(
-            f"{name:7s} ms/call median {med:7.1f} (quartiles {q1:.1f}-{q3:.1f})"
+            f"{name:10s} ms/call median {med:7.1f} (quartiles {q1:.1f}-{q3:.1f})"
             f"  spark jobs/call {statistics.mean(jobs):.2f}"
         )
     eng.stop()
