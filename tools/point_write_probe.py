@@ -1,7 +1,6 @@
 """In-process cost of the point writes a YCSB client sends, no server.
 
 Usage: python tools/point_write_probe.py [--files N] [--rows N] [--reps N]
-                                         [--checkpoints N] [--appends N]
                                          [--cpus N] [--seed N]
 
 Builds an Engine, creates a YCSB-shaped table (``ycsb_key INT PRIMARY
@@ -12,10 +11,9 @@ over ``--rows`` keys, and then times ``--reps`` calls each of
 - a point DELETE of one existing key (``Engine.execute_update``),
 - a one-row append of a fresh key (``operators.ingest.insert_arrow``,
   the Flight SQL prepared-INSERT path),
-
-and then ``--checkpoints`` calls of ``CHECKPOINT`` (the compaction that
-stages the table's files and publishes them under the table write
-lock), each after ``--appends`` untimed one-row appends.
+- a ``CHECKPOINT`` (the compaction that stages the table's files and
+  publishes them under the table write lock), each after
+  ``APPENDS_PER_CHECKPOINT`` untimed one-row appends.
 
 For each it prints the median and quartiles of milliseconds per call and
 the Spark jobs per call (counted with a job group and the status
@@ -37,6 +35,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 _FIELDS = [f"field{i}" for i in range(10)]
 _FIELD_LEN = 100
+APPENDS_PER_CHECKPOINT = 8
 
 
 def _value(rng: random.Random) -> str:
@@ -48,8 +47,6 @@ def main() -> None:
     ap.add_argument("--files", type=int, default=16)
     ap.add_argument("--rows", type=int, default=100_000)
     ap.add_argument("--reps", type=int, default=20)
-    ap.add_argument("--checkpoints", type=int, default=5)
-    ap.add_argument("--appends", type=int, default=8)
     ap.add_argument("--cpus", type=int, default=len(os.sched_getaffinity(0)))
     ap.add_argument("--seed", type=int, default=1)
     args = ap.parse_args()
@@ -109,7 +106,7 @@ def main() -> None:
         next_key += 1
 
     def appends() -> None:
-        for _ in range(args.appends):
+        for _ in range(APPENDS_PER_CHECKPOINT):
             append()
 
     def checkpoint() -> None:
@@ -117,17 +114,17 @@ def main() -> None:
 
     print(f"table: {args.files} files, {args.rows} rows; {args.reps} calls per kind")
     kinds = [
-        ("update", update, None, args.reps),
-        ("delete", delete, None, args.reps),
-        ("append", append, None, args.reps),
-        ("checkpoint", checkpoint, appends, args.checkpoints),
+        ("update", update, None),
+        ("delete", delete, None),
+        ("append", append, None),
+        ("checkpoint", checkpoint, appends),
     ]
-    for name, fn, prep, reps in kinds:
+    for name, fn, prep in kinds:
         if prep:
             prep()
         fn()  # warm-up
         ms, jobs = [], []
-        for _ in range(reps):
+        for _ in range(args.reps):
             if prep:
                 prep()
             group = f"pwp_{uuid.uuid4().hex}"
