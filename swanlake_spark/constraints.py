@@ -20,6 +20,7 @@ typically small relative to the table.
 
 from __future__ import annotations
 
+import functools
 import json
 import re
 
@@ -347,7 +348,7 @@ def check_insert_sql(spark: SparkSession, insert_sql: str, loc=None) -> None:
 
 
 def bounded_existing_probe(
-    spark: SparkSession, table: str, keys: list[str], stats, loc=None
+    spark: SparkSession, table: str, keys: list[str], stats, loc=None, schema=None
 ) -> DataFrame | None:
     """Key-column scan of ``table`` restricted to the batch's key range.
 
@@ -361,20 +362,22 @@ def bounded_existing_probe(
     table write lock) and integral keys, the scan also skips whole files
     whose footer key range misses the batch's (:mod:`filestats`); None
     means no live file can hold a batch key, so there is nothing to
-    probe."""
-    existing = spark.table(table)
+    probe. ``schema`` is the table's, when the caller has it."""
     bounds = []
     cond = None
     for c in keys:
         lo, hi = stats[f"_min_{c}"], stats[f"_max_{c}"]
         if lo is None or hi is None:
-            return existing.select(*keys)
+            return spark.table(table).select(*keys)
         bounds.append((c, [(lo, hi)]))
         rng = (F.col(c) >= F.lit(lo)) & (F.col(c) <= F.lit(hi))
         cond = rng if cond is None else cond & rng
     from swanlake_spark import filestats
 
-    types = {f.name.lower(): f.dataType.simpleString() for f in existing.schema}
+    if schema is None:
+        schema = spark.table(table).schema
+    types = {f.name.lower(): f.dataType.simpleString() for f in schema}
+    existing = None
     if loc is not None and all(
         types.get(c.lower()) in filestats.INTEGRAL_TYPES for c in keys
     ):
@@ -383,9 +386,11 @@ def bounded_existing_probe(
             hits = filestats.candidates(files, bounds)
             if not hits:
                 return None
-            existing = spark.read.schema(existing.schema).parquet(
+            existing = spark.read.schema(schema).parquet(
                 *["file:" + f.path for f in hits]
             )
+    if existing is None:
+        existing = spark.table(table)
     return existing.select(*keys).filter(cond)
 
 
@@ -433,10 +438,11 @@ def _arrow_key_stats(arrow, keys: list[str], schema) -> dict | None:
 def check_insert_batch(
     spark: SparkSession,
     table: str,
-    new_rows: DataFrame,
+    new_rows,
     check_existing: bool = True,
     arrow=None,
     loc=None,
+    schema=None,
 ) -> None:
     """Raise InvalidArgument if inserting ``new_rows`` would violate the
     table's primary key (collision with existing rows or duplicates
@@ -452,19 +458,31 @@ def check_insert_batch(
     callers holding the table write lock; it lets the probe skip files
     by their footer key ranges.
 
+    ``new_rows`` is the batch's DataFrame, or a zero-argument callable
+    that builds it, with the table's ``schema``: the driver-side
+    appender passes one, so a batch whose key statistics pyarrow takes
+    and whose key range no live file's footer overlaps never becomes a
+    DataFrame.
+
     Also the single choke point for CHECK and child-side FOREIGN KEY
     constraints: every write path (INSERT SQL and the Arrow appender)
     lands here, so those are enforced before any PK probe runs."""
-    enforce_checks(spark, table, new_rows)
-    enforce_fks_insert(spark, table, new_rows)
+    if isinstance(new_rows, DataFrame):
+        rows = lambda: new_rows  # noqa: E731
+    else:
+        rows = functools.cache(new_rows)
+    if check_exprs(table) or fk_list(table):
+        enforce_checks(spark, table, rows())
+        enforce_fks_insert(spark, table, rows())
     cols = pk_columns(table)
     if not cols:
         return
-    keys = [c for c in cols]
-    batch_keys = new_rows.select(*keys)
+    keys = list(cols)
     stats = None
     if arrow is not None:
-        stats = _arrow_key_stats(arrow, keys, new_rows.schema)
+        stats = _arrow_key_stats(
+            arrow, keys, rows().schema if schema is None else schema
+        )
     if stats is None:
         aggs = [
             F.count(F.lit(1)).alias("_n"),
@@ -473,7 +491,7 @@ def check_insert_batch(
         for c in keys:
             aggs.append(F.min(c).alias(f"_min_{c}"))
             aggs.append(F.max(c).alias(f"_max_{c}"))
-        stats = batch_keys.agg(*aggs).collect()[0]
+        stats = rows().select(*keys).agg(*aggs).collect()[0]
     if stats["_nd"] < stats["_n"]:
         raise InvalidArgument(
             f"duplicate key in INSERT batch violates PRIMARY KEY ({', '.join(cols)}) "
@@ -481,10 +499,12 @@ def check_insert_batch(
         )
     if not check_existing or stats["_n"] == 0:
         return
-    existing = bounded_existing_probe(spark, table, keys, stats, loc=loc)
+    existing = bounded_existing_probe(
+        spark, table, keys, stats, loc=loc, schema=schema
+    )
     if existing is None:
         return
-    clash = batch_keys.join(existing, keys, "left_semi").limit(1).collect()
+    clash = rows().select(*keys).join(existing, keys, "left_semi").limit(1).collect()
     if clash:
         raise InvalidArgument(
             f"duplicate key value violates PRIMARY KEY ({', '.join(cols)}) of {table}"

@@ -55,6 +55,7 @@ driver before streaming, the reference's own materialize-then-stream shape
 from __future__ import annotations
 
 import json
+import logging
 import threading
 import uuid
 
@@ -253,6 +254,10 @@ def _empty_table() -> pa.Table:
 # --------------------------------------------------------------------------
 
 _SESSION_HEADER = "x-swanlake-session"
+# the longest error message a status carries: gRPC refuses response
+# metadata past its limit (8 KB by default), and a client then sees only
+# "received initial metadata size exceeds limit" instead of the error
+STATUS_MESSAGE_MAX = 1024
 
 
 class _HeaderMiddleware(fl.ServerMiddleware):
@@ -297,19 +302,32 @@ class FlightSqlServer(fl.FlightServerBase):
         """Map the engine exception taxonomy onto Flight/gRPC statuses,
         the reference's status_from_error (service/mod.rs:84-121):
         invalid_argument / failed_precondition / resource_exhausted /
-        not_found keep their codes; everything else is internal."""
+        not_found keep their codes; everything else is internal.
+
+        The server log gets the whole exception, JVM stack trace
+        included; the status carries only the message's first line, cut
+        to ``STATUS_MESSAGE_MAX`` characters."""
         if isinstance(exc, (fl.FlightError,)):
             return exc
         from swanlake_spark import errors as E
 
+        logging.getLogger(__name__).exception(
+            "Flight SQL request failed", exc_info=exc
+        )
+        lines = str(exc).strip().splitlines()
+        if len(lines) > 1 and lines[0].startswith("An error occurred while calling"):
+            # Py4J's wrapper line names only the JVM call; the Java
+            # exception's own first line follows it
+            lines = [lines[1].lstrip(": ")]
+        msg = (lines[0] if lines else type(exc).__name__)[:STATUS_MESSAGE_MAX]
         if isinstance(exc, E.ResourceExhausted):
             # closest status pyarrow can raise client-side
-            return fl.FlightUnavailableError(f"{exc.code}: {exc}")
+            return fl.FlightUnavailableError(f"{exc.code}: {msg}")
         if isinstance(exc, E.EngineError) and exc.code != "internal":
             # pyarrow exposes no invalid_argument/failed_precondition
             # exception classes; carry the taxonomy code in-message
-            return fl.FlightServerError(f"{exc.code}: {exc}")
-        return fl.FlightServerError(str(exc))
+            return fl.FlightServerError(f"{exc.code}: {msg}")
+        return fl.FlightServerError(msg)
 
     def _flight_info(self, descriptor, schema, ticket_bytes) -> fl.FlightInfo:
         endpoint = fl.FlightEndpoint(fl.Ticket(ticket_bytes), [])
@@ -480,12 +498,12 @@ class FlightSqlServer(fl.FlightServerBase):
         try:
             name, payload = any_unpack(descriptor.command)
             sess, _sid = self._session(context)
-            param_sets = _read_param_sets(reader)
+            params = _read_put_table(reader)
             if name == "CommandStatementUpdate":
                 st = sess.statement(_str_field(pb_fields(payload), 1, ""))
                 affected = 0
-                for params in param_sets or [None]:
-                    affected += max(sess.execute_update(st, params), 0)
+                for row in _param_sets(params) or [None]:
+                    affected += max(sess.execute_update(st, row), 0)
                 writer.write(
                     pa.py_buffer(_enc_varint(1, affected))
                 )  # DoPutUpdateResult: record_count = 1
@@ -496,47 +514,46 @@ class FlightSqlServer(fl.FlightServerBase):
             handle = handle_info.get("handle")
             if name == "CommandPreparedStatementQuery":
                 # bind only — execution happens on DoGet
+                param_sets = _param_sets(params)
                 if param_sets:
                     sess.set_parameters(handle, param_sets)
                 return
             if name == "CommandPreparedStatementUpdate":
                 st = sess.get_prepared_statement(handle)
-                affected = self._prepared_update(sess, st, param_sets)
+                affected = self._prepared_update(sess, st, params)
                 writer.write(pa.py_buffer(_enc_varint(1, max(affected, 0))))
                 return
             raise InvalidArgument(f"unsupported DoPut command: {name}")
         except Exception as e:
             raise self._error(e) from e
 
-    def _prepared_update(self, sess, st, param_sets: list[list]) -> int:
+    def _prepared_update(self, sess, st, params: pa.Table | None) -> int:
         """Prepared update execution with the reference's insert fast
         path (prepared.rs:394-553 → appender): an all-placeholder INSERT
         VALUES batch goes through the Arrow appender in one aligned
-        write; everything else runs once per parameter set, summing
-        affected counts."""
+        write, its columns kept as the client sent them; everything
+        else runs once per parameter set, summing affected counts."""
         from swanlake_spark.plans.parser import insert_info
 
         info = insert_info(st.sql)
         if (
-            param_sets
+            params is not None
             and info is not None
             and info.source == "VALUES"
             and info.all_placeholders
         ):
             from swanlake_spark.operators.ingest import insert_arrow
 
-            cols = list(zip(*param_sets))
-            arrays = [pa.array(list(c)) for c in cols]
             # parameter batches carry positional values — name them after
             # the INSERT's explicit column list, else the table's columns
             names = info.columns or list(
                 sess.spark.table(info.table).columns
-            )[: len(arrays)]
-            batch = pa.table(dict(zip(names, arrays)))
+            )[: params.num_columns]
+            batch = pa.table(dict(zip(names, params.columns)))
             return insert_arrow(sess.spark, info.table, batch, info.columns)
         total = 0
-        for params in param_sets or [None]:
-            total += max(sess.execute_update(st.statement, params), 0)
+        for row in _param_sets(params) or [None]:
+            total += max(sess.execute_update(st.statement, row), 0)
         return total
 
     # -- DoAction ----------------------------------------------------------
@@ -624,16 +641,21 @@ _METADATA_SCHEMAS = {
 }
 
 
-def _read_param_sets(reader) -> list[list]:
-    """Drain a DoPut stream into one parameter set per row."""
+def _read_put_table(reader) -> pa.Table | None:
+    """Drain a DoPut stream; None when it holds no row."""
     try:
         table = reader.read_all()
     except Exception:
-        return []
-    if table.num_rows == 0:
+        return None
+    return table if table.num_rows and table.num_columns else None
+
+
+def _param_sets(table: pa.Table | None) -> list[list]:
+    """One parameter set per row of a DoPut table."""
+    if table is None:
         return []
     cols = [table.column(i).to_pylist() for i in range(table.num_columns)]
-    return [list(vals) for vals in zip(*cols)] if cols else []
+    return [list(vals) for vals in zip(*cols)]
 
 
 def _sql_info_table(info: dict, requested: set | None) -> pa.Table:

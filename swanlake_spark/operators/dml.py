@@ -138,21 +138,7 @@ def where_has_subquery(where: str | None) -> bool:
 
 
 def _partition_columns(spark: SparkSession, table: str) -> list[str]:
-    try:
-        rows = spark.sql(f"DESCRIBE TABLE {table}").collect()
-    except Exception:
-        return []
-    cols, in_part = [], False
-    for r in rows:
-        name = r.col_name.strip()
-        if name.startswith("# Partition"):
-            in_part = True
-            continue
-        if name.startswith("#") or not name:
-            continue
-        if in_part:
-            cols.append(name)
-    return cols
+    return _table_info(spark, table)[1]
 
 
 # Sentinel distinguishing "caller did not resolve the location" from a
@@ -163,16 +149,21 @@ _UNRESOLVED = object()
 
 
 def _table_location(spark: SparkSession, table: str) -> str | None:
-    # r12 fast path: resolve through the session catalog's metadata
-    # (isTempView + getTableMetadata) instead of running a full
-    # DESCRIBE FORMATTED query — one refresh/DML statement resolves
-    # several locations and the DESCRIBE round-trip is ~50 ms each vs
-    # ~10 ms here (measured local[8]). The URI is rendered via
-    # hadoop.fs.Path so the string matches DESCRIBE's form exactly
-    # (file:/tmp/..., not file:///tmp/...) — downstream code compares
-    # these strings against file paths. Any resolution surprise
-    # (persistent views have no location, quoted/exotic identifiers)
-    # falls back to the DESCRIBE scan unchanged.
+    return _table_info(spark, table)[0]
+
+
+def _table_info(spark: SparkSession, table: str) -> tuple[str | None, list[str]]:
+    """``(location, partition columns in declared order)`` of ``table``.
+
+    Resolved through the session catalog's metadata (isTempView +
+    getTableMetadata), one lookup for both, instead of a DESCRIBE query
+    each (~50 ms for DESCRIBE FORMATTED, ~17 ms for DESCRIBE TABLE, vs
+    ~1 ms here). The URI is rendered via hadoop.fs.Path so the string
+    matches DESCRIBE's form exactly (file:/tmp/..., not file:///tmp/...)
+    — downstream code compares these strings against file paths. A temp
+    view has neither. Any resolution surprise (persistent views have no
+    location, three-part or exotic identifiers) falls back to the
+    DESCRIBE scans."""
     try:
         jvm = spark.sparkContext._jvm
         cat = spark._jsparkSession.sessionState().catalog()
@@ -191,11 +182,20 @@ def _table_location(spark: SparkSession, table: str) -> str | None:
             # a temp view shadows any same-named table and has no
             # location — DESCRIBE would return None for it too
             if cat.isTempView(ident):
-                return None
-            uri = cat.getTableMetadata(ident).location()
-            return jvm.org.apache.hadoop.fs.Path(uri).toString()
+                return None, []
+            meta = cat.getTableMetadata(ident)
+            uri = meta.location()
+            seq = meta.partitionColumnNames()
+            return (
+                jvm.org.apache.hadoop.fs.Path(uri).toString(),
+                [seq.apply(i) for i in range(seq.size())],
+            )
     except Exception:  # noqa: BLE001 — fall back to DESCRIBE
         pass
+    return _describe_location(spark, table), _describe_partitions(spark, table)
+
+
+def _describe_location(spark: SparkSession, table: str) -> str | None:
     try:
         rows = spark.sql(f"DESCRIBE FORMATTED {table}").collect()
     except Exception:
@@ -204,6 +204,24 @@ def _table_location(spark: SparkSession, table: str) -> str | None:
         if r.col_name.strip() == "Location":
             return r.data_type.strip()
     return None
+
+
+def _describe_partitions(spark: SparkSession, table: str) -> list[str]:
+    try:
+        rows = spark.sql(f"DESCRIBE TABLE {table}").collect()
+    except Exception:
+        return []
+    cols, in_part = [], False
+    for r in rows:
+        name = r.col_name.strip()
+        if name.startswith("# Partition"):
+            in_part = True
+            continue
+        if name.startswith("#") or not name:
+            continue
+        if in_part:
+            cols.append(name)
+    return cols
 
 
 def _loc_or_resolve(spark: SparkSession, table: str, loc) -> str | None:
@@ -1017,17 +1035,21 @@ def _expands_past_cap(new_sub) -> bool:
     )
 
 
-def _write_staged_arrow(base: str, tbl) -> None:
+def _write_staged_arrow(base: str, tbl, slices: int = 1) -> None:
     """Driver-side parquet write of ``tbl`` into the OS directory
-    ``base``."""
+    ``base``: ``slices`` files of even row counts, the split Spark gives
+    a local relation over ``slices`` partitions."""
     import pyarrow.parquet as pq
 
     os.makedirs(base, exist_ok=True)
-    pq.write_table(
-        tbl,
-        f"{base}/part-00000-{uuid.uuid4().hex}-c000.snappy.parquet",
-        compression="snappy",
-    )
+    job, n = uuid.uuid4().hex, tbl.num_rows
+    for i in range(slices):
+        lo, hi = i * n // slices, (i + 1) * n // slices
+        pq.write_table(
+            tbl.slice(lo, hi - lo),
+            f"{base}/part-{i:05d}-{job}-c000.snappy.parquet",
+            compression="snappy",
+        )
 
 
 def _driver_rewrite(
@@ -1103,8 +1125,10 @@ def _file_granular_cow(
 #
 # A point UPDATE/DELETE whose WHERE bounds an integral column reads only
 # the files whose Parquet-footer range can hold a match (filestats.py),
-# and learns which of them matched from the same Arrow collect that
-# returns their rewritten rows — no separate probe job over every file.
+# and learns which of them matched from the same Arrow table that holds
+# their rewritten rows — no separate probe job over every file. pyarrow
+# builds that table on the driver when it can compute exactly what Spark
+# would; a Spark collect builds it otherwise.
 
 # Spark SQL identifiers: a double-quoted token is a string literal there
 _SPARK_IDENT = r"(?:[A-Za-z_][A-Za-z0-9_]*|`(?:[^`]|``)+`)"
@@ -1184,22 +1208,198 @@ def _term_bound(term: str, bare: str, types: dict[str, str]):
     }[op]]
 
 
+# Spark types whose values pyarrow reads, compares, assigns and writes
+# exactly as Spark does: the driver-side producers (the point-write
+# rewrite below and the appender in operators/ingest.py) take only
+# tables whose every column has one of them and carries no metadata
+# (CHAR/VARCHAR(n) lengths live in field metadata)
+DRIVER_TYPES = frozenset(
+    filestats.INTEGRAL_TYPES
+    + ("boolean", "float", "double", "string", "binary", "date")
+)
+# the SET values a bound parameter renders to (session._render_literal)
+_BOUND_LITERAL = re.compile(
+    r"^\s*(?:NULL|TRUE|FALSE|-?\d+(?:\.\d+)?(?:e[-+]?\d+)?|X'[0-9a-f]*'"
+    r"|(?:DATE\s+|TIMESTAMP\s+)?'(?:[^'\\]|''|\\.)*')\s*$",
+    re.IGNORECASE | re.DOTALL,
+)
+_INT64 = (-(1 << 63), (1 << 63) - 1)
+
+
+def driver_arrow_schema(schema):
+    """The Arrow schema Spark's ``toArrow`` gives ``schema``, every
+    field nullable as in the files Spark writes, or None unless every
+    field has a :data:`DRIVER_TYPES` type and no metadata."""
+    from pyspark.sql import types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if not all(
+        f.dataType.simpleString() in DRIVER_TYPES and not f.metadata
+        for f in schema.fields
+    ):
+        return None
+    return to_arrow_schema(
+        T.StructType([T.StructField(f.name, f.dataType) for f in schema.fields])
+    )
+
+
+def _read_candidates(hits, arrow_schema):
+    """The rows of the ``hits`` files in ``arrow_schema``, each tagged
+    with its file name under ``_SRC``, as Spark's scan with the table
+    schema reads them: columns match case-insensitively and a column a
+    file lacks reads as NULLs. None when a file's column has another
+    type than the table's (Spark's reader decides those)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    parts = []
+    for f in hits:
+        ft = pq.ParquetFile(f.path).read()
+        by_lower: dict[str, list[int]] = {}
+        for i, name in enumerate(ft.column_names):
+            by_lower.setdefault(name.lower(), []).append(i)
+        cols = []
+        for field in arrow_schema:
+            idx = by_lower.get(field.name.lower(), [])
+            if len(idx) > 1:
+                return None
+            if not idx:
+                cols.append(pa.nulls(ft.num_rows, field.type))
+                continue
+            col = ft.column(idx[0])
+            if col.type != field.type:
+                if col.type not in (pa.large_string(), pa.large_binary()):
+                    return None
+                col = col.cast(field.type)  # the same values, 32-bit offsets
+            cols.append(col)
+        cols.append(pa.array([f.name] * ft.num_rows, pa.string()))
+        parts.append(pa.Table.from_arrays(cols, names=arrow_schema.names + [_SRC]))
+    return pa.concat_tables(parts)
+
+
+def _bounds_mask(tbl, bounds, names: dict[str, str]):
+    """Rows of ``tbl`` inside every ``(column, intervals)`` bound; a
+    NULL key never matches. None when a bound lies outside BIGINT."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    mask = None
+    for col, intervals in bounds:
+        c = tbl[names[col.lower()]]
+        term = None
+        for lo, hi in intervals:
+            sides = []
+            for v, cmp in ((lo, pc.greater_equal), (hi, pc.less_equal)):
+                if v is None:
+                    continue
+                if not _INT64[0] <= v <= _INT64[1]:
+                    return None
+                sides.append(cmp(c, pa.scalar(v, pa.int64())))
+            m = sides[0] if len(sides) == 1 else pc.and_(*sides)
+            term = m if term is None else pc.or_(term, m)
+        mask = term if mask is None else pc.and_(mask, term)
+    return pc.fill_null(mask, False)
+
+
+def _set_values(spark: SparkSession, schema, assignments, arrow_schema) -> dict:
+    """Each SET column's new value as an Arrow scalar. Spark evaluates
+    the ``CAST((v) AS t)`` text :func:`apply_update` would, over a
+    one-row VALUES relation — optimized into a local relation, so no
+    job runs — and keeps its own (ANSI) cast errors."""
+    import pyarrow as pa
+
+    types = {f.name: f.dataType.simpleString() for f in schema.fields}
+    sel = ", ".join(
+        f"CAST(({v}) AS {types[c]}) AS {quote_identifier(c)}"
+        for c, v in assignments.items()
+    )
+    row = spark.sql(f"SELECT {sel} FROM VALUES (1) AS _one(_x)").collect()[0]
+    return {
+        c: pa.scalar(
+            bytes(v) if isinstance(v, bytearray) else v,
+            arrow_schema.field(c).type,
+        )
+        for c, v in zip(assignments, row)
+    }
+
+
+def _arrow_point_rows(
+    spark: SparkSession, table: str, schema, bounds, assignments, hits
+):
+    """The Arrow producer of :func:`_pruned_cow`: the candidate files'
+    rewritten rows, tagged with ``_SRC``/``_HIT`` like the Spark
+    producer's, computed with pyarrow on the driver. None when the
+    statement is not one it computes exactly (see the README's "Point
+    writes"): the Spark producer takes it then.
+
+    Caller guarantees: every depth-0 term of the predicate is one of
+    ``bounds``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from swanlake_spark import constraints
+
+    arrow_schema = driver_arrow_schema(schema)
+    if arrow_schema is None or sum(f.size for f in hits) > _DRIVER_REWRITE_MAX_BYTES:
+        return None
+    if assignments is not None:
+        pk = {c.lower() for c in constraints.pk_columns(table) or []}
+        if not all(
+            c in arrow_schema.names
+            and c.lower() not in pk
+            and _BOUND_LITERAL.match(v)
+            for c, v in assignments.items()
+        ):
+            return None
+    tbl = _read_candidates(hits, arrow_schema)
+    if tbl is None:
+        return None
+    mask = _bounds_mask(tbl, bounds, {n.lower(): n for n in arrow_schema.names})
+    if mask is None:
+        return None
+    if assignments is not None:
+        try:
+            values = _set_values(spark, schema, assignments, arrow_schema)
+        except Exception:
+            if pc.any(mask).as_py():
+                raise  # a matched row would raise in Spark too
+            return None  # whether Spark raises without a match is its call
+        for c, v in values.items():
+            i = tbl.schema.get_field_index(c)
+            tbl = tbl.set_column(i, c, pc.if_else(mask, v, tbl[c]))
+    tbl = tbl.append_column(_HIT, pc.cast(mask, pa.int32()))
+    if assignments is None:
+        tbl = tbl.filter(pc.invert(mask))
+    return tbl if tbl.nbytes <= _DRIVER_REWRITE_MAX_OUTPUT_BYTES else None
+
+
 def _pruned_cow(
-    spark: SparkSession, table: str, schema, where: str, transform, loc
+    spark: SparkSession,
+    table: str,
+    schema,
+    where: str,
+    assignments: dict[str, str] | None,
+    loc,
 ) -> tuple[int | None, bool]:
-    """Point UPDATE/DELETE over only the files whose footer key ranges
-    can hold a match. Returns ``(affected, driver_ok)``; ``affected``
-    None sends the statement to the unpruned path, and ``driver_ok``
-    False tells that path not to try a driver-side collect (the output
-    guard refused one for this statement, or the collect failed).
+    """Point UPDATE (``assignments``) or DELETE (``assignments`` None)
+    over only the files whose footer key ranges can hold a match.
+    Returns ``(affected, driver_ok)``; ``affected`` None sends the
+    statement to the unpruned path, and ``driver_ok`` False tells that
+    path not to try a driver-side collect (the output guard refused one
+    for this statement, or the collect failed).
+
+    Two producers build the candidate files' rewritten rows: pyarrow on
+    the driver when the predicate is exactly an AND of integer bounds
+    and every SET value a bound literal (:func:`_arrow_point_rows`), a
+    Spark collect otherwise. Both feed one tail: per-file counts,
+    staging, :func:`publish`.
 
     Caller guarantees: table write lock held, table unpartitioned,
     predicate subquery-free, no CHECK/FK constraint registered."""
     types = {f.name.lower(): f.dataType.simpleString() for f in schema.fields}
     bare = table.split(".")[-1].strip('`"')
-    bounds = [
-        b for b in (_term_bound(t, bare, types) for t in _conjuncts(where)) if b
-    ]
+    terms = [_term_bound(t, bare, types) for t in _conjuncts(where)]
+    bounds = [b for b in terms if b]
     files = filestats.live_files(loc) if bounds else None
     if files is None:
         return None, True
@@ -1208,34 +1408,41 @@ def _pruned_cow(
         return None, True
     if not hits:
         return 0, True
-    sub = spark.read.schema(schema).parquet(*["file:" + f.path for f in hits])
-    new_sub = transform(
-        sub.alias(bare).select(
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    tbl = None
+    if all(terms):
+        tbl = _arrow_point_rows(spark, table, schema, bounds, assignments, hits)
+    if tbl is None:
+        sub = spark.read.schema(schema).parquet(*["file:" + f.path for f in hits])
+        tagged = sub.alias(bare).select(
             "*",
             F.col("_metadata.file_name").alias(_SRC),
             F.expr(where).eqNullSafe(F.lit(True)).cast("int").alias(_HIT),
         )
-    )
-    out = new_sub.drop(_SRC, _HIT)
-    if not _driver_collect_ok(out, sum(f.size for f in hits)):
-        return None, True
-    if _expands_past_cap(out):
-        return None, False
-    import pyarrow as pa
-    import pyarrow.compute as pc
+        if assignments is None:
+            new_sub = apply_delete(tagged, where, alias=table)
+        else:
+            new_sub = apply_update(tagged, assignments, where, alias=table)
+        out = new_sub.drop(_SRC, _HIT)
+        if not _driver_collect_ok(out, sum(f.size for f in hits)):
+            return None, True
+        if _expands_past_cap(out):
+            return None, False
+        try:
+            tbl = new_sub.toArrow()
+        except Exception:
+            # as in _driver_rewrite: the unpruned path's distributed
+            # write handles any surprise (and raises again if the
+            # statement itself is at fault)
+            import logging
 
-    try:
-        tbl = new_sub.toArrow()
-    except Exception:
-        # as in _driver_rewrite: the unpruned path's distributed write
-        # handles any surprise (and raises again if the statement
-        # itself is at fault)
-        import logging
-
-        logging.getLogger(__name__).warning(
-            "pruned point write fell back to the unpruned path", exc_info=True
-        )
-        return None, False
+            logging.getLogger(__name__).warning(
+                "pruned point write fell back to the unpruned path",
+                exc_info=True,
+            )
+            return None, False
     per_file = tbl.group_by(_SRC).aggregate([(_SRC, "count"), (_HIT, "sum")])
     counts = dict(zip(
         per_file[_SRC].to_pylist(),
@@ -1998,10 +2205,10 @@ def update_table(
     probe/publish windows (lost updates, double file swaps)."""
     from swanlake_spark import versions
 
-    loc = _table_location(spark, table)
+    loc, part_cols = _table_info(spark, table)
     with table_write_lock(spark, table, loc=loc):
         affected = _update_table_locked(
-            spark, table, assignments, where, loc=loc
+            spark, table, assignments, where, loc=loc, part_cols=part_cols
         )
         if affected:
             versions.record_version(spark, table, "update", loc=loc)
@@ -2014,6 +2221,8 @@ def _update_table_locked(
     assignments: dict[str, str],
     where: str | None = None,
     loc=_UNRESOLVED,
+    *,
+    part_cols: list[str],
 ) -> int:
     df = spark.table(table)
 
@@ -2056,7 +2265,7 @@ def _update_table_locked(
     # partitions: the dynamic-overwrite path selects staged rows by their
     # NEW partition values but rewrites the OLD matching partitions, so a
     # moved row would vanish. Full rewrite (where=None) is the safe path.
-    part_cols = set(_partition_columns(spark, table))
+    part_cols = set(part_cols)
     file_cow_ok = (
         where
         and not part_cols
@@ -2068,12 +2277,7 @@ def _update_table_locked(
         affected, driver_ok = None, True
         if _unconstrained(table):
             affected, driver_ok = _pruned_cow(
-                spark,
-                table,
-                df.schema,
-                where,
-                lambda sub: apply_update(sub, assignments, where, alias=table),
-                loc,
+                spark, table, df.schema, where, assignments, loc
             )
         if affected is not None:
             return affected
@@ -2122,16 +2326,23 @@ def delete_from(spark: SparkSession, table: str, where: str | None = None) -> in
     table, see :func:`update_table`)."""
     from swanlake_spark import versions
 
-    loc = _table_location(spark, table)
+    loc, part_cols = _table_info(spark, table)
     with table_write_lock(spark, table, loc=loc):
-        affected = _delete_from_locked(spark, table, where, loc=loc)
+        affected = _delete_from_locked(
+            spark, table, where, loc=loc, part_cols=part_cols
+        )
         if affected:
             versions.record_version(spark, table, "delete", loc=loc)
     return affected
 
 
 def _delete_from_locked(
-    spark: SparkSession, table: str, where: str | None = None, loc=_UNRESOLVED
+    spark: SparkSession,
+    table: str,
+    where: str | None = None,
+    loc=_UNRESOLVED,
+    *,
+    part_cols: list[str],
 ) -> int:
     df = spark.table(table)
     # Parent-side FOREIGN KEY guard (DuckDB rejects deleting referenced
@@ -2151,19 +2362,12 @@ def _delete_from_locked(
         affected = df.count()
         _overwrite(spark, table, df.limit(0), None, loc=loc)
         return affected
-    file_cow_ok = not _partition_columns(
-        spark, table
-    ) and not where_has_subquery(where)
+    file_cow_ok = not part_cols and not where_has_subquery(where)
     if file_cow_ok:
         affected, driver_ok = None, True
         if _unconstrained(table):
             affected, driver_ok = _pruned_cow(
-                spark,
-                table,
-                df.schema,
-                where,
-                lambda sub: apply_delete(sub, where, alias=table),
-                loc,
+                spark, table, df.schema, where, None, loc
             )
         if affected is not None:
             return affected

@@ -1,15 +1,27 @@
-"""Bulk Arrow ingest: the appender fast path.
+"""Bulk Arrow ingest: the appender.
 
 Re-expresses the reference's performance-critical write path
 (``/root/reference/swanlake-core/src/engine/connection.rs:163-196`` —
 Arrow appender; ``engine/batch.rs:180-259`` — batch→table alignment;
-``batch.rs:10-115`` — Go-driver positional reshape) on Spark:
+``batch.rs:10-115`` — Go-driver positional reshape) on Spark. An append
+adds new immutable Parquet part-files, physically identical to a
+DuckLake appender flush. Columns align the same way on both of its two
+producers (reorder by name / INSERT column list, cast mismatched types,
+NULL-fill missing, ignore extras):
 
-Arrow batches → ``spark.createDataFrame`` (Arrow-native in Spark 4) →
-column alignment (reorder by name / INSERT column list, cast mismatched
-types, NULL-fill missing, ignore extras) → ``df.write.insertInto`` —
-append = new immutable Parquet part-files, physically identical to a
-DuckLake appender flush.
+- **driver-side**, when pyarrow computes exactly what Spark would: the
+  table is unpartitioned at a local location, every column is nullable
+  with a plain integral, boolean, float, double, string, binary or date
+  type, and each batch column casts within its type family (integer to
+  integer without overflow, string to string). The batch aligns in
+  Arrow, the primary-key check reads pyarrow statistics and the live
+  files' footer key ranges, and the driver writes the files — one per
+  even slice, as many as Spark's write makes — into staging and
+  ``dml.publish``es them under the table write lock. No Spark job runs
+  unless the check needs one;
+- **Spark** for every other batch: ``spark.createDataFrame`` (Arrow-
+  native in Spark 4) → :func:`align_to_schema` → ``df.write.insertInto``
+  under the same lock, so Spark's own cast and type errors stay.
 """
 
 from __future__ import annotations
@@ -167,14 +179,52 @@ def reshape_positional_batch(table: pa.Table, columns_per_row: int) -> pa.Table:
     return pa.table(cols)
 
 
+def _driver_aligned(
+    tbl: pa.Table, target: T.StructType, sources: dict[str, str | None]
+) -> pa.Table | None:
+    """``tbl`` aligned to ``target`` in Arrow (``sources`` as
+    :func:`source_columns` maps them), or None when the driver-side
+    append does not apply: a field that is not nullable, carries
+    metadata or has a type outside ``dml.DRIVER_TYPES``, or a batch
+    column that does not cast within its type family."""
+    from swanlake_spark.operators.dml import driver_arrow_schema
+
+    schema = driver_arrow_schema(target)
+    if schema is None or not all(f.nullable for f in target.fields):
+        return None
+    cols = []
+    for field in schema:
+        src = sources[field.name]
+        col = (
+            tbl.column(src)
+            if src is not None
+            else pa.nulls(tbl.num_rows, field.type)
+        )
+        have, want = col.type, field.type
+        if have != want:
+            if not (
+                pa.types.is_null(have)
+                or (pa.types.is_integer(have) and pa.types.is_integer(want))
+                or (pa.types.is_large_string(have) and pa.types.is_string(want))
+            ):
+                return None
+            try:
+                col = col.cast(want)  # safe: an overflow raises
+            except pa.ArrowInvalid:
+                return None
+        cols.append(col)
+    return pa.Table.from_arrays(cols, schema=schema)
+
+
 def insert_arrow(
     spark: SparkSession,
     table: str,
     batches: pa.Table | pa.RecordBatch | list[pa.RecordBatch],
     insert_columns: list[str] | None = None,
 ) -> int:
-    """The appender: Arrow data → aligned DataFrame → append to table.
-    Returns the appended row count (the reference returns the same from
+    """The appender: Arrow data → aligned → appended to ``table`` (see
+    the module docstring for its two producers). Returns the appended
+    row count (the reference returns the same from
     ``insert_with_appender``)."""
     if isinstance(batches, pa.RecordBatch):
         tbl = pa.Table.from_batches([batches])
@@ -184,28 +234,45 @@ def insert_arrow(
         tbl = batches
     target = spark.table(table).schema
     tbl = normalize_arrow_for_spark(tbl, target)
-    df = spark.createDataFrame(tbl)
-    aligned = align_to_schema(df, target, insert_columns)
     sources = source_columns(tbl.column_names, target, insert_columns)
-    by_target = pa.table(
-        {name: tbl.column(src) for name, src in sources.items() if src is not None}
-    )
     from swanlake_spark import constraints, versions
-    from swanlake_spark.operators.dml import _table_location, table_write_lock
+    from swanlake_spark.operators import dml
 
+    loc, part_cols = dml._table_info(spark, table)
+    aligned = None
+    if tbl.num_rows and not part_cols and loc and dml._local_os_path(loc):
+        aligned = _driver_aligned(tbl, target, sources)
+
+    def spark_rows() -> DataFrame:
+        return align_to_schema(spark.createDataFrame(tbl), target, insert_columns)
+
+    if aligned is None:
+        rows = spark_rows()
+        by_target = pa.table(
+            {name: tbl.column(src) for name, src in sources.items() if src is not None}
+        )
     # Serialized per table (engine INSERT takes the same lock): two
     # concurrent append jobs on one path share the committer's
     # _temporary dir, and manifests must be ordered. The constraint
     # check runs under the lock too, so a concurrent append of the same
     # key cannot pass it before this one lands.
-    loc = _table_location(spark, table)
-    with table_write_lock(spark, table, loc=loc):
+    with dml.table_write_lock(spark, table, loc=loc):
         # PK enforcement applies on every write path in the reference
         # (DuckDB enforces the constraint under the appender too,
         # error_status.test:6-13).
-        constraints.check_insert_batch(
-            spark, table, aligned, arrow=by_target, loc=loc
-        )
-        aligned.write.insertInto(table)
+        if aligned is None:
+            constraints.check_insert_batch(
+                spark, table, rows, arrow=by_target, loc=loc
+            )
+            rows.write.insertInto(table)
+        else:
+            constraints.check_insert_batch(
+                spark, table, spark_rows, arrow=aligned, loc=loc, schema=target
+            )
+            staged = dml.staging_dir(spark, table, loc)
+            slices = min(spark.sparkContext.defaultParallelism, aligned.num_rows)
+            dml._write_staged_arrow(dml._local_os_path(staged), aligned, slices)
+            dml.publish(spark, table, staged, [], loc)
+            dml._rm_path(spark, staged)
         versions.record_version(spark, table, "append", loc=loc)
     return tbl.num_rows

@@ -19,6 +19,7 @@ from __future__ import annotations
 
 import os
 import uuid
+import weakref
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -96,14 +97,15 @@ def rstable(expr: str, digits: int = 4) -> str:
     # DECIMAL(28,7) — the cast keeps the output DOUBLE on both engines.
     return f"(floor(({expr}) * {scale} + 0.5) / CAST({scale} AS DOUBLE))"
 
-# spark-session id → sf_dir currently registered as temp views
-_REGISTERED: dict[int, str] = {}
+# spark session → sf_dir currently registered as temp views. Weakly
+# keyed: an id() key outlives its session, and a later session
+# allocated at the same address would skip registration.
+_REGISTERED: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def ensure_tables(spark: SparkSession, sf_dir: str) -> None:
-    key = id(spark)
     path = os.path.abspath(sf_dir)
-    if _REGISTERED.get(key) != path:
+    if _REGISTERED.get(spark) != path:
         # Bare-session entry (driver contract, bench): ship the package
         # zip so UDF closures resolve on Python workers regardless of
         # the driver's cwd — see swanlake_spark.pyship.
@@ -111,7 +113,7 @@ def ensure_tables(spark: SparkSession, sf_dir: str) -> None:
 
         ship_package(spark)
         register_tables(spark, sf_dir)
-        _REGISTERED[key] = path
+        _REGISTERED[spark] = path
 
 
 def mark_registered(spark: SparkSession, sf_dir: str) -> None:
@@ -119,7 +121,7 @@ def mark_registered(spark: SparkSession, sf_dir: str) -> None:
     used after materialize_warehouse re-registers them over its own
     (multi-part) files so ensure_tables doesn't clobber them with plain
     single-file views."""
-    _REGISTERED[id(spark)] = os.path.abspath(sf_dir)
+    _REGISTERED[spark] = os.path.abspath(sf_dir)
 
 
 def _add(name: str, build, oracle: str | None) -> None:

@@ -92,6 +92,33 @@ class TestFlightSqlQueries:
         with pytest.raises(EngineError, match="snarkle"):
             FlightSqlClient(flight).execute("SELECT * FROM snarkle_missing")
 
+    def test_long_spark_error_reaches_client_short(self, flight, caplog):
+        """A task failure's message carries JVM stack traces far past
+        gRPC's metadata limit: the client gets the Java exception's first
+        line (not Py4J's wrapper line), the server log the whole
+        exception."""
+        import logging
+
+        import pyarrow.flight as fl
+
+        from swanlake_spark.flightsql import STATUS_MESSAGE_MAX
+
+        client = fl.FlightClient(flight)
+        sql = "SELECT java_method('java.lang.Integer', 'parseInt', 'zz') AS v"
+        info = client.get_flight_info(
+            fl.FlightDescriptor.for_command(
+                any_pack("CommandStatementQuery", _enc_str(1, sql))
+            )
+        )
+        with caplog.at_level(logging.ERROR, logger="swanlake_spark.flightsql"):
+            with pytest.raises(fl.FlightServerError) as err:
+                client.do_get(info.endpoints[0].ticket).read_all()
+        msg = str(err.value)
+        assert msg.startswith("org.apache.spark.SparkException: ")
+        assert "\tat " not in msg and len(msg) < STATUS_MESSAGE_MAX + 500
+        logged = "\n".join(caplog.text.splitlines())
+        assert "NumberFormatException" in logged and "\tat " in logged
+
 
 class TestFlightSqlUpdates:
     def test_update_via_do_put(self, flight):

@@ -243,3 +243,121 @@ class TestAppenderChecks:
             )
         finally:
             engine.execute(f"DROP TABLE IF EXISTS {name}")
+
+
+
+def _loc(spark, table: str) -> str:
+    from swanlake_spark.operators.dml import _local_os_path, _table_location
+
+    return _local_os_path(_table_location(spark, table))
+
+
+def _data_files(loc: str) -> set[str]:
+    import os
+
+    return {n for n in os.listdir(loc) if not n.startswith(("_", "."))}
+
+
+class TestDriverAppender:
+    """The driver-side appender writes the files Spark's insertInto
+    would (the same count and row split) without a Spark job, keeps the
+    primary-key checks, and leaves every batch it does not compute
+    exactly to insertInto."""
+
+    @staticmethod
+    def _insert_into_calls(monkeypatch) -> list[str]:
+        from pyspark.sql import DataFrameWriter
+
+        calls: list[str] = []
+        orig = DataFrameWriter.insertInto
+
+        def recording(self, table, *args, **kwargs):
+            calls.append(table)
+            return orig(self, table, *args, **kwargs)
+
+        monkeypatch.setattr(DataFrameWriter, "insertInto", recording)
+        return calls
+
+    @pytest.mark.parametrize("n", [1, 3, 2_000, 25_000])
+    def test_file_split_matches_spark(self, engine, spark, monkeypatch, n):
+        import pyarrow.parquet as pq
+
+        from swanlake_spark.operators import ingest
+
+        calls = self._insert_into_calls(monkeypatch)
+        batch = pa.table(
+            {"id": pa.array(range(n), pa.int64()), "name": ["x"] * n, "age": [1] * n}
+        )
+        splits = []
+        for driver in (True, False):
+            t = _mktable(engine, "id INT PRIMARY KEY, name STRING, age INT")
+            loc = _loc(spark, t)
+            with monkeypatch.context() as m:
+                if not driver:
+                    m.setattr(ingest, "_driver_aligned", lambda *a: None)
+                assert insert_arrow(spark, t, batch) == n
+            # (rows, first key) of each new file
+            splits.append(sorted(
+                (pq.read_metadata(f"{loc}/{f}").num_rows,
+                 pq.read_table(f"{loc}/{f}").column("id")[0].as_py())
+                for f in _data_files(loc)
+            ))
+            got = engine.query(f"SELECT id FROM {t} ORDER BY id").collect()
+            assert [r.id for r in got] == list(range(n))
+        assert calls == [t]  # the forced Spark append only
+        assert splits[0] == splits[1]
+
+    def test_primary_key_still_enforced(self, engine, spark, monkeypatch):
+        calls = self._insert_into_calls(monkeypatch)
+        t = _mktable(engine, "id INT PRIMARY KEY, name STRING, age INT")
+        insert_arrow(spark, t, pa.table({"id": [0, 2, 4, 6], "name": ["a"] * 4}))
+        insert_arrow(spark, t, pa.table({"id": [100, 102], "name": ["b"] * 2}))
+        with pytest.raises(InvalidArgument, match="duplicate key in INSERT batch"):
+            insert_arrow(spark, t, pa.table({"id": [7, 8, 7], "name": ["c"] * 3}))
+        # inside a file's key range: the footers cannot clear it
+        with pytest.raises(InvalidArgument, match="PRIMARY KEY"):
+            insert_arrow(spark, t, pa.table({"id": [4], "name": ["dup"]}))
+        insert_arrow(spark, t, pa.table({"id": [3], "name": ["new"]}))
+        assert engine.query(f"SELECT count(*) AS c FROM {t}").collect()[0].c == 7
+        assert calls == []
+
+    @pytest.mark.parametrize(
+        "cols, partitioned, batch",
+        [
+            ("id INT, name STRING, age INT", True,
+             pa.table({"id": [1], "name": ["a"], "age": [3]})),
+            ("id INT, name VARCHAR(5), age INT", False,
+             pa.table({"id": [1], "name": ["a"]})),
+            ("id INT, name STRING, age INT", False,
+             pa.table({"id": ["1"], "name": ["a"]})),
+        ],
+        ids=["partitioned", "varchar_n", "string_into_int"],
+    )
+    def test_fallbacks_reach_insert_into(
+        self, engine, spark, monkeypatch, cols, partitioned, batch
+    ):
+        calls = self._insert_into_calls(monkeypatch)
+        t = f"i_{uuid.uuid4().hex[:8]}"
+        loc = tempfile.mkdtemp(prefix="swl_test_")
+        part = "PARTITIONED BY (age) " if partitioned else ""
+        engine.execute(
+            f"CREATE TABLE {t} ({cols}) USING parquet {part}LOCATION '{loc}'"
+        )
+        assert insert_arrow(spark, t, batch) == 1
+        assert calls == [t]
+        row = engine.query(f"SELECT id, name FROM {t}").collect()[0]
+        assert (row.id, row.name) == (1, "a")
+
+    def test_not_null_field_takes_spark(self):
+        """Spark's Parquet catalog records every column as nullable, so
+        no DDL reaches this case: a NOT NULL field, should a schema
+        carry one, leaves the batch to insertInto."""
+        from pyspark.sql import types as T
+
+        from swanlake_spark.operators.ingest import _driver_aligned, source_columns
+
+        batch = pa.table({"id": [1]})
+        for nullable in (True, False):
+            target = T.StructType([T.StructField("id", T.IntegerType(), nullable)])
+            sources = source_columns(batch.column_names, target)
+            assert (_driver_aligned(batch, target, sources) is not None) is nullable

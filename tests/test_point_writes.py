@@ -27,6 +27,7 @@ from swanlake_spark import constraints, filestats
 from swanlake_spark.errors import InvalidArgument
 from swanlake_spark.operators import dml
 from swanlake_spark.operators.ingest import insert_arrow
+from swanlake_spark.session import _render_literal
 
 _SCHEMA = pa.schema(
     [("k", pa.int64()), ("g", pa.int32()), ("s", pa.string()), ("d", pa.float64())]
@@ -100,7 +101,16 @@ _PREDICATES = [
     "CASE WHEN g = 1 AND k = {a} AND g = 1 THEN false ELSE true END",
     "k >= {a} AND CASE WHEN g = 1 AND k = {b} AND g = 1 THEN false ELSE true END",
 ]
-_SETS = [{"s": "'u'"}, {"g": "g + 1", "s": "'v'"}, {"k": "k + 100"}]
+_SETS = [
+    {"s": "'u'"}, {"g": "g + 1", "s": "'v'"}, {"k": "k + 100"},
+    # bound parameters, rendered as a prepared statement renders them
+    {"s": _render_literal("it's a \\ path '' \\'")},
+    {"s": _render_literal(None), "g": _render_literal(None)},
+    {"g": _render_literal(7), "k": _render_literal(-3), "d": _render_literal(2)},
+    {"d": _render_literal(-1.5), "s": _render_literal("")},
+    # overflows INT: raises wherever a row matches
+    {"g": _render_literal(2**31)},
+]
 
 
 @settings(
@@ -118,29 +128,67 @@ _SETS = [{"s": "'u'"}, {"g": "g + 1", "s": "'v'"}, {"k": "k + 100"}]
 )
 def test_pruned_dml_matches_unpruned(spark, files, no_stats, template, sets, data):
     """UPDATE (``sets``) or DELETE (``sets`` None) through the pruned
-    path and, on an identical copy, through today's path (the predicate
-    recognizer forced to find nothing): same affected count, same final
-    rows, same retired files."""
+    path with each of its producers — pyarrow where it applies, Spark
+    forced by patching the Arrow producer away — and, on an identical
+    copy, through the unpruned path (the predicate recognizer forced to
+    find nothing): the same affected count (or the same failure), the
+    same final rows, the same retired files."""
     keys = sorted({r[0] for rows in files for r in rows if r[0] is not None})
     bound = st.integers(-24, 24)
     if keys:  # mostly constants that hit a stored key
         bound = st.one_of(st.sampled_from(keys), bound)
     a, b = sorted((data.draw(bound), data.draw(bound)))
     results = []
-    for prune in (True, False):
+    for route in ("arrow", "spark", "unpruned"):
         table, loc = _table_from_files(spark, files, no_stats)
         where = template.format(a=a, b=b, t=table)
         before = _data_files(loc)
         with mock.patch.object(
-            dml, "_term_bound", dml._term_bound if prune else lambda *a: None
+            dml, "_term_bound", lambda *a: None
+        ) if route == "unpruned" else mock.patch.object(
+            dml, "_arrow_point_rows",
+            dml._arrow_point_rows if route == "arrow" else lambda *a: None,
         ):
-            if sets is None:
-                affected = dml.delete_from(spark, table, where)
-            else:
-                affected = dml.update_table(spark, table, sets, where)
+            try:
+                if sets is None:
+                    affected = dml.delete_from(spark, table, where)
+                else:
+                    affected = dml.update_table(spark, table, sets, where)
+            except Exception:  # e.g. the INT overflow: each route raises
+                affected = "raised"
         results.append((affected, _rows(spark, table), before - _data_files(loc)))
         spark.sql(f"DROP TABLE {table}")
-    assert results[0] == results[1]
+    assert results[0] == results[1] == results[2]
+
+
+def test_arrow_producer_reads_older_files(spark):
+    """A file written before a column existed reads that column as NULLs,
+    and a file column matches its table column case-insensitively, in
+    the Arrow producer as in Spark's scan; the Arrow producer runs no
+    job doing it."""
+    results = []
+    for route in ("arrow", "spark"):
+        table, loc = _table_from_files(spark, [[(5, 1, "b", 0.5)]] * 2, -1)
+        os.remove(f"{loc}/part-00000.parquet")
+        pq.write_table(
+            pa.table({"K": pa.array([1, 2], pa.int64()), "g": pa.array([0, 0], pa.int32()),
+                      "s": ["a", "a"]}),
+            f"{loc}/part-00000.parquet",
+        )
+        spark.catalog.refreshTable(table)
+        with mock.patch.object(
+            dml, "_arrow_point_rows",
+            dml._arrow_point_rows if route == "arrow" else lambda *a: None,
+        ):
+            jobs = _jobs(
+                spark, lambda: dml.update_table(spark, table, {"s": "'u'"}, "k = 1")
+            )
+        assert jobs == (0 if route == "arrow" else 1)
+        results.append(_rows(spark, table))
+        spark.sql(f"DROP TABLE {table}")
+    assert results[0] == results[1] == [
+        (1, 0, "u", None), (2, 0, "a", None), (5, 1, "b", 0.5)
+    ]
 
 
 def _mktable(spark, decl: str, batches: list[pa.Table]) -> str:
@@ -299,9 +347,12 @@ def _jobs(spark, fn) -> int:
 
 
 def test_point_writes_run_one_job(spark):
-    """On a 16-file table a point UPDATE and a point DELETE each run one
-    Spark job (the rewrite's collect), and a fresh-key append's PK check
-    runs none."""
+    """On a 16-file table a fully bounded point UPDATE, a point DELETE
+    and a fresh-key one-row append run no Spark job (pyarrow builds
+    their files on the driver), and a fresh-key PK check runs none. A
+    point UPDATE with a term the bounds do not cover, or one that sets
+    the primary key, takes the Spark producer: one job, the rewrite's
+    collect."""
     t = _mktable(
         spark,
         "k INT PRIMARY KEY, v STRING",
@@ -312,8 +363,16 @@ def test_point_writes_run_one_job(spark):
     )
     loc = dml._table_location(spark, t)
     assert len(_data_files(dml._local_os_path(loc))) >= 16
-    assert _jobs(spark, lambda: dml.update_table(spark, t, {"v": "'u'"}, "k = 120")) == 1
-    assert _jobs(spark, lambda: dml.delete_from(spark, t, "k = 121")) == 1
+    assert _jobs(spark, lambda: dml.update_table(spark, t, {"v": "'u'"}, "k = 120")) == 0
+    assert _jobs(spark, lambda: dml.delete_from(spark, t, "k = 121")) == 0
+    assert _jobs(
+        spark, lambda: insert_arrow(spark, t, pa.table({"k": [20_000], "v": ["a"]}))
+    ) == 0
+    assert _jobs(
+        spark, lambda: dml.update_table(spark, t, {"v": "'w'"}, "k = 122 AND v = 'x'")
+    ) == 1
+    # a SET of the primary key takes the Spark producer too
+    assert _jobs(spark, lambda: dml.update_table(spark, t, {"k": "5000"}, "k = 130")) == 1
     batch = pa.table({"k": [10_000], "v": ["new"]})
     rows = spark.createDataFrame(batch)
     assert _jobs(
@@ -321,7 +380,9 @@ def test_point_writes_run_one_job(spark):
         lambda: constraints.check_insert_batch(spark, t, rows, arrow=batch, loc=loc),
     ) == 0
     assert spark.sql(f"SELECT v FROM {t} WHERE k = 120").collect()[0].v == "u"
-    assert _count(spark, t) == 799
+    assert spark.sql(f"SELECT v FROM {t} WHERE k = 122").collect()[0].v == "w"
+    assert spark.sql(f"SELECT v FROM {t} WHERE k = 5000").collect()[0].v == "x"
+    assert _count(spark, t) == 800
 
 
 @pytest.mark.parametrize("route", ["appender", "sql"])
@@ -417,3 +478,22 @@ def test_interleaved_updates_leave_session_conf(spark, monkeypatch):
         assert not th.is_alive()
     assert errors == []
     assert spark.conf.get("spark.sql.adaptive.enabled") == server_value
+
+
+def test_table_info_reads_partition_columns(spark):
+    """One catalog lookup gives a table's location and its partition
+    columns in declared order, as DESCRIBE lists them; a temp view has
+    neither."""
+    name = f"pwp_{uuid.uuid4().hex[:8]}"
+    loc = tempfile.mkdtemp(prefix="swl_pw_")
+    spark.sql(
+        f"CREATE TABLE {name} (v STRING, b INT, a STRING) USING parquet "
+        f"PARTITIONED BY (b, a) LOCATION '{loc}'"
+    )
+    got_loc, parts = dml._table_info(spark, name)
+    assert dml._local_os_path(got_loc) == loc
+    assert parts == ["b", "a"] == dml._describe_partitions(spark, name)
+    assert dml._partition_columns(spark, name) == ["b", "a"]
+    spark.range(1).createOrReplaceTempView(name + "_v")
+    assert dml._table_info(spark, name + "_v") == (None, [])
+    spark.sql(f"DROP TABLE {name}")

@@ -8,12 +8,17 @@ KEY`` plus ten 100-character string fields) as ``--files`` Parquet files
 over ``--rows`` keys, and then times ``--reps`` calls each of
 
 - a point UPDATE setting all ten fields (``Engine.execute_update``),
+  which pyarrow rewrites on the driver,
+- the same UPDATE with an extra term the footer bounds do not cover
+  (``AND field0 <> ''``), which takes the Spark producer,
 - a point DELETE of one existing key (``Engine.execute_update``),
 - a one-row append of a fresh key (``operators.ingest.insert_arrow``,
   the Flight SQL prepared-INSERT path),
 - a ``CHECKPOINT`` (the compaction that stages the table's files and
   publishes them under the table write lock), each after
-  ``APPENDS_PER_CHECKPOINT`` untimed one-row appends.
+  ``APPENDS_PER_CHECKPOINT`` untimed one-row appends,
+- a ``BULK_ROWS``-row append of fresh keys, the size of one perfbench
+  ``ycsb_mix`` load batch.
 
 For each it prints the median and quartiles of milliseconds per call and
 the Spark jobs per call (counted with a job group and the status
@@ -36,6 +41,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 _FIELDS = [f"field{i}" for i in range(10)]
 _FIELD_LEN = 100
 APPENDS_PER_CHECKPOINT = 8
+BULK_ROWS = 25_000
 
 
 def _value(rng: random.Random) -> str:
@@ -90,10 +96,11 @@ def main() -> None:
     rng.shuffle(live)
     next_key = args.rows
 
-    def update() -> None:
+    def update(extra: str = "") -> None:
         sets = ", ".join(f"{f} = '{_value(rng)}'" for f in _FIELDS)
         key = live[rng.randrange(len(live))]
-        assert eng.execute_update(f"UPDATE {table} SET {sets} WHERE ycsb_key = {key}") == 1
+        sql = f"UPDATE {table} SET {sets} WHERE ycsb_key = {key}{extra}"
+        assert eng.execute_update(sql) == 1
 
     def delete() -> None:
         assert eng.execute_update(f"DELETE FROM {table} WHERE ycsb_key = {live.pop()}") == 1
@@ -105,6 +112,14 @@ def main() -> None:
         live.append(next_key)
         next_key += 1
 
+    def bulk_append() -> None:
+        nonlocal next_key
+        keys = list(range(next_key, next_key + BULK_ROWS))
+        row = {"ycsb_key": keys} | {f: [rng.choice(pool) for _ in keys] for f in _FIELDS}
+        insert_arrow(spark, table, pa.table(row))
+        live.extend(keys)
+        next_key += BULK_ROWS
+
     def appends() -> None:
         for _ in range(APPENDS_PER_CHECKPOINT):
             append()
@@ -115,9 +130,12 @@ def main() -> None:
     print(f"table: {args.files} files, {args.rows} rows; {args.reps} calls per kind")
     kinds = [
         ("update", update, None),
+        ("update-spark", lambda: update(" AND field0 <> ''"), None),
         ("delete", delete, None),
         ("append", append, None),
         ("checkpoint", checkpoint, appends),
+        # last: the rows it adds would grow the table CHECKPOINT rewrites
+        ("append-25k", bulk_append, None),
     ]
     for name, fn, prep in kinds:
         if prep:
@@ -136,7 +154,7 @@ def main() -> None:
             jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
         q1, med, q3 = statistics.quantiles(ms, n=4)
         print(
-            f"{name:10s} ms/call median {med:7.1f} (quartiles {q1:.1f}-{q3:.1f})"
+            f"{name:12s} ms/call median {med:7.1f} (quartiles {q1:.1f}-{q3:.1f})"
             f"  spark jobs/call {statistics.mean(jobs):.2f}"
         )
     eng.stop()
