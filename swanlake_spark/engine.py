@@ -69,6 +69,9 @@ class QueryResult:
     # the (lazy) df when a collect races a COW schema publish and the
     # already-analyzed plan pins a stale file listing
     _requery: object = None
+    # rows pyarrow computed on the driver (a point read, see
+    # DriverResult): collect and to_arrow return them without a job
+    arrow: object = None
 
     def _materialize(self, fn):
         """Run ``fn(df)`` swap-safely: a COW schema-ALTER publish moves
@@ -101,17 +104,55 @@ class QueryResult:
             raise
 
     def collect(self):
-        out = self._materialize(lambda df: df.collect()) if self.df is not None else []
+        if self.arrow is not None:
+            from pyspark.sql import Row
+
+            make = Row(*self.arrow.column_names)
+            out = [make(*r) for r in zip(*(c.to_pylist() for c in self.arrow.columns))]
+        elif self.df is not None:
+            out = self._materialize(lambda df: df.collect())
+        else:
+            out = []
         self.rows = len(out)
         return out
 
     def to_arrow(self):
-        if self.df is None:
+        """The result as an Arrow table; None when the statement returns
+        no rows (a command)."""
+        if self.arrow is not None:
+            tbl = self.arrow
+        elif self.df is not None:
+            tbl = self._materialize(lambda df: df.toArrow())
+        else:
             return None
-        tbl = self._materialize(lambda df: df.toArrow())
         self.rows = tbl.num_rows
         self.bytes = tbl.nbytes
         return tbl
+
+
+class DriverResult(QueryResult):
+    """A point read's result (``operators/point.py``): ``collect`` and
+    ``to_arrow`` read the Arrow table pyarrow computed, and ``df`` is a
+    local relation over the same table, built on first access, so every
+    accessor sees the same rows."""
+
+    def __init__(self, spark: SparkSession, arrow, schema: T.StructType):
+        self._spark = spark
+        self._local = None
+        super().__init__(df=None, schema=schema, is_query=True, arrow=arrow)
+
+    @property
+    def df(self):
+        if self._local is None and self.arrow is not None:
+            self._local = self._spark.createDataFrame(self.arrow, self.schema)
+        return self._local
+
+    @df.setter
+    def df(self, value):
+        # QueryResult.__init__ assigns None; a frame set later replaces
+        # the rows
+        if value is not None:
+            self._local, self.arrow = value, None
 
 
 def apply_pivot_adjustments(
@@ -324,7 +365,9 @@ class Engine:
         t0 = time.perf_counter()
         with self.metrics.start_query():
             try:
-                res = self._run_script_swap_safe(st, args=args)
+                res = self._driver_read(st, args)
+                if res is None:
+                    res = self._run_script_swap_safe(st, args=args)
             except EngineError as e:
                 self.metrics.record_error(str(e), st.sql)
                 raise
@@ -337,6 +380,7 @@ class Engine:
             res.is_query
             and res.statements_run == 1
             and res.affected_rows < 0
+            and res.arrow is None
         ):
             # side-effect-free: safe to transparently re-run if a COW
             # schema publish moves files under the deferred collect
@@ -344,6 +388,28 @@ class Engine:
                 lambda: self._run_script_swap_safe(st, args=args).df
             )
         return self.post_pass(res, st)
+
+    def _driver_read(self, st: Statement, args: list | None) -> QueryResult | None:
+        """``st`` answered by pyarrow on the driver when it is a point
+        read (``operators/point.py``, README "Point reads"), else None:
+        Spark runs it. A statement of the point-read shape that the
+        driver hands back to Spark is counted, as is every one it
+        serves."""
+        if (
+            len(st.parsed.statements) != 1
+            or st.pivot_zero_cols
+            or st.pivot_renames
+            or st.replace_probe is not None
+        ):
+            return None
+        from swanlake_spark.operators import point
+
+        shape = point.read_shape(st.sql, args)
+        if shape is None:
+            return None
+        got = point.read(self.spark, shape)
+        self.metrics.record_driver_read(served=got is not None)
+        return None if got is None else DriverResult(self.spark, *got)
 
     def post_pass(self, res: QueryResult, st: Statement) -> QueryResult:
         """Give ``res`` the client dialect's result shape (see

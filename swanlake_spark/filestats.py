@@ -14,8 +14,10 @@ replaced under the same name and size. Entries whose file has left the
 listing are dropped on the next lookup, and a table directory that is
 gone drops all of its entries, which bounds the memo by the live files.
 
-Callers list the directory under the table write lock, so no writer can
-publish between the listing and the rewrite that relies on it. Any case
+Writers list the directory under the table write lock, so no writer can
+publish between the listing and the rewrite that relies on it. Point
+reads list it without the lock and serve it only when it agrees with
+the table's newest manifest (``operators/point.py``). Any case
 the statistics cannot vouch for answers ``None`` and the caller takes
 its unpruned path: a non-local location, a subdirectory in the table
 root, or an unreadable footer.
@@ -95,30 +97,54 @@ def _read_footer(name: str, path: str, size: int) -> FileStats:
     return FileStats(name, path, size, md.num_rows, ranges)
 
 
+def file_stats(name: str, path: str) -> FileStats:
+    """Footer statistics of the one Parquet file at OS path ``path``
+    (not memoized: point reads ask this of a retained file)."""
+    return _read_footer(name, path, os.stat(path).st_size)
+
+
 def live_files(loc: str | None) -> list[FileStats] | None:
     """Footer statistics of every live data file under the table
     location ``loc``, or None when they cannot vouch for the table's
     contents: a non-local location, a non-hidden subdirectory (Spark
     would read files the top-level listing does not show), or a file
-    whose footer does not read as Parquet."""
+    whose footer does not read as Parquet. A file that leaves the
+    directory between the listing and its footer read (a reader
+    outside the table write lock racing a publish) lists again."""
     from swanlake_spark.operators.dml import _local_os_path
 
     osp = _local_os_path(loc) if loc else None
     if osp is None:
         return None
     osp = osp.rstrip("/")
+    for _ in range(3):
+        try:
+            return _live_files(osp)
+        except FileNotFoundError:
+            continue
+    return None
+
+
+def _live_files(osp: str) -> list[FileStats] | None:
+    """:func:`live_files` of the OS directory ``osp``; raises
+    FileNotFoundError when a listed file is gone before it is read."""
     try:
         entries = [e for e in os.scandir(osp) if not is_hidden(e.name)]
-        if not all(e.is_file() for e in entries):
-            return None
+    except OSError:
+        with _MEMO_LOCK:
+            _MEMO.pop(osp, None)  # e.g. a dropped table's directory
+        return None
+    if not all(e.is_file() for e in entries):
+        return None
+    try:
         listing = sorted(
             (e.name, st.st_size, st.st_mtime_ns)
             for e in entries
             for st in (e.stat(),)
         )
+    except FileNotFoundError:
+        raise
     except OSError:
-        with _MEMO_LOCK:
-            _MEMO.pop(osp, None)  # e.g. a dropped table's directory
         return None
     with _MEMO_LOCK:
         known = dict(_MEMO.get(osp, {}))
@@ -129,6 +155,8 @@ def live_files(loc: str | None) -> list[FileStats] | None:
             name, size, _ = key
             try:
                 fs = _read_footer(name, f"{osp}/{name}", size)
+            except FileNotFoundError:
+                raise
             except (OSError, ValueError):
                 return None  # includes pyarrow's ArrowInvalid
         out.append(fs)

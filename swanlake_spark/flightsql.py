@@ -249,6 +249,14 @@ def _empty_table() -> pa.Table:
     return pa.Table.from_pydict({})
 
 
+def _result_stream(res) -> fl.RecordBatchStream:
+    """DoGet's stream of a statement's result: its rows, or no columns
+    for a command. A point read's result has its rows without a frame,
+    so only ``to_arrow`` tells."""
+    tbl = res.to_arrow() if res is not None and res.is_query else None
+    return fl.RecordBatchStream(tbl if tbl is not None else _empty_table())
+
+
 # --------------------------------------------------------------------------
 # Server
 # --------------------------------------------------------------------------
@@ -305,8 +313,11 @@ class FlightSqlServer(fl.FlightServerBase):
         not_found keep their codes; everything else is internal.
 
         The server log gets the whole exception, JVM stack trace
-        included; the status carries only the message's first line, cut
-        to ``STATUS_MESSAGE_MAX`` characters."""
+        included; the status carries only the message's first line,
+        followed by the first line of its last ``Caused by:`` (the root
+        cause of a JVM exception chain: a failed collect's first line is
+        Spark's ``Exception thrown in awaitResult:``), cut to
+        ``STATUS_MESSAGE_MAX`` characters."""
         if isinstance(exc, (fl.FlightError,)):
             return exc
         from swanlake_spark import errors as E
@@ -315,11 +326,15 @@ class FlightSqlServer(fl.FlightServerBase):
             "Flight SQL request failed", exc_info=exc
         )
         lines = str(exc).strip().splitlines()
+        cause = next((ln for ln in reversed(lines) if ln.startswith("Caused by: ")), None)
         if len(lines) > 1 and lines[0].startswith("An error occurred while calling"):
             # Py4J's wrapper line names only the JVM call; the Java
             # exception's own first line follows it
             lines = [lines[1].lstrip(": ")]
-        msg = (lines[0] if lines else type(exc).__name__)[:STATUS_MESSAGE_MAX]
+        msg = lines[0] if lines else type(exc).__name__
+        if cause is not None:
+            msg = f"{msg} {cause}"
+        msg = msg[:STATUS_MESSAGE_MAX]
         if isinstance(exc, E.ResourceExhausted):
             # closest status pyarrow can raise client-side
             return fl.FlightUnavailableError(f"{exc.code}: {msg}")
@@ -394,17 +409,11 @@ class FlightSqlServer(fl.FlightServerBase):
                 info = json.loads(
                     _bytes_field(pb_fields(payload), 1).decode() or "{}"
                 )
-                res = sess.query(info.get("sql", ""))
-                if res.df is None or not res.is_query:
-                    return fl.RecordBatchStream(_empty_table())
-                return fl.RecordBatchStream(res.to_arrow())
+                return _result_stream(sess.query(info.get("sql", "")))
             if name == "CommandPreparedStatementQuery":
                 handle = _bytes_field(pb_fields(payload), 1)
                 info = json.loads(handle.decode() or "{}")
-                res = sess.execute_prepared(info.get("handle"))
-                if res is None or res.df is None or not res.is_query:
-                    return fl.RecordBatchStream(_empty_table())
-                return fl.RecordBatchStream(res.to_arrow())
+                return _result_stream(sess.execute_prepared(info.get("handle")))
             if name in _METADATA_SCHEMAS or name == "CommandGetTables":
                 return fl.RecordBatchStream(
                     self._metadata_table(name, payload, sess)

@@ -37,6 +37,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from swanlake_spark.config import PARQUET_CODEC
 from swanlake_spark.errors import InvalidArgument, NotFound
 
 
@@ -667,8 +668,8 @@ def _write_arrow_dir(spark: SparkSession, path: str, tbl) -> bool:
         os.makedirs(base, exist_ok=True)
         pq.write_table(
             tbl,
-            f"{base}/part-00000-{_uuid.uuid4().hex}-c000.snappy.parquet",
-            compression="snappy",
+            f"{base}/part-00000-{_uuid.uuid4().hex}-c000.{PARQUET_CODEC}.parquet",
+            compression=PARQUET_CODEC,
         )
         return True
     except Exception:

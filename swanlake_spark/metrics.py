@@ -109,6 +109,10 @@ class Snapshot:
     # jvm_counters() at snapshot time: empty without a reader, {"error"}
     # when the read failed
     jvm: dict = field(default_factory=dict)
+    # point reads (operators/point.py): SELECTs pyarrow answered on the
+    # driver, and SELECTs of that shape handed to Spark
+    driver_reads: int = 0
+    driver_read_fallbacks: int = 0
 
     # kept for backward compatibility with earlier callers
     @property
@@ -156,6 +160,8 @@ class Metrics:
         self._total_errors = 0
         self._in_flight_queries = 0
         self._in_flight_updates = 0
+        self._driver_reads = 0
+        self._driver_read_fallbacks = 0
         self._started_at = time.time()
         self.slow_threshold_s = slow_threshold_s
 
@@ -204,6 +210,15 @@ class Metrics:
                         ),
                     }
                 )
+
+    def record_driver_read(self, served: bool) -> None:
+        """A point-read-shaped SELECT: ``served`` by the driver, or
+        handed to Spark."""
+        with self._lock:
+            if served:
+                self._driver_reads += 1
+            else:
+                self._driver_read_fallbacks += 1
 
     def record_error(
         self, message: str = "", sql: str | None = None, context: str = "query"
@@ -288,6 +303,8 @@ class Metrics:
                 recent_errors=list(self._errors),
                 history_size=self.RING_SIZE,
                 jvm=jvm,
+                driver_reads=self._driver_reads,
+                driver_read_fallbacks=self._driver_read_fallbacks,
             )
 
     # -- status endpoints --------------------------------------------------
@@ -324,6 +341,8 @@ class Metrics:
             f"<p>uptime {s.uptime_ms // 1000}s — {s.total_queries} queries, "
             f"{s.total_updates} updates, {s.total_errors} errors; "
             f"in flight: {s.in_flight_queries}q/{s.in_flight_updates}u</p>"
+            f"<p>point reads: {s.driver_reads} on the driver, "
+            f"{s.driver_read_fallbacks} handed to Spark</p>"
             f"<p>latency ms: avg {s.avg_ms:.1f} / p50 {s.p50_ms:.1f} / "
             f"p95 {s.p95_ms:.1f} / p99 {s.p99_ms:.1f} / max {s.max_ms:.1f}</p>"
             "<h2>Slow statements</h2>"

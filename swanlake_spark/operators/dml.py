@@ -20,6 +20,7 @@ returns them in ``x-swanlake-affected-rows``).
 
 from __future__ import annotations
 
+import functools
 import os
 import re
 import socket as _socket
@@ -31,8 +32,17 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from swanlake_spark import filestats
+from swanlake_spark.config import PARQUET_CODEC
 from swanlake_spark.errors import InvalidArgument
-from swanlake_spark.plans.parser import _IDENT, _mask_literals, _scan, _unquote
+from swanlake_spark.operators import point
+from swanlake_spark.operators.point import _SRC
+from swanlake_spark.plans.parser import (
+    _IDENT,
+    _keyword_at_depth0,
+    _mask_literals,
+    _scan,
+    _unquote,
+)
 from swanlake_spark.plans.quoting import quote_identifier
 
 _TABLE_RE = rf"{_IDENT}(?:\.{_IDENT}){{0,2}}"
@@ -40,27 +50,6 @@ _UPDATE_HEAD = re.compile(rf"^\s*UPDATE\s+(?P<table>{_TABLE_RE})", re.IGNORECASE
 _DELETE_HEAD = re.compile(
     rf"^\s*DELETE\s+FROM\s+(?P<table>{_TABLE_RE})", re.IGNORECASE
 )
-
-
-def _keyword_at_depth0(masked: str, word: str, start: int = 0) -> int:
-    """Position of the first occurrence of ``word`` at paren-depth 0 in
-    the literal-masked statement, or -1. Masking + depth tracking means
-    keywords inside strings, comments, quoted identifiers, or subqueries
-    never match — the scanner-grade parsing the round-1 regexes lacked."""
-    up = masked.upper()
-    depth = 0
-    for i, ch in enumerate(masked):
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        elif depth == 0 and i >= start and up.startswith(word, i):
-            before_ok = i == 0 or not (masked[i - 1].isalnum() or masked[i - 1] in '_"`')
-            j = i + len(word)
-            after_ok = j >= len(masked) or not (masked[j].isalnum() or masked[j] in '_"`')
-            if before_ok and after_ok:
-                return i
-    return -1
 
 
 def _split_depth0_commas(text: str) -> list[str]:
@@ -153,46 +142,50 @@ def _table_location(spark: SparkSession, table: str) -> str | None:
 
 
 def _table_info(spark: SparkSession, table: str) -> tuple[str | None, list[str]]:
-    """``(location, partition columns in declared order)`` of ``table``.
-
-    Resolved through the session catalog's metadata (isTempView +
-    getTableMetadata), one lookup for both, instead of a DESCRIBE query
-    each (~50 ms for DESCRIBE FORMATTED, ~17 ms for DESCRIBE TABLE, vs
-    ~1 ms here). The URI is rendered via hadoop.fs.Path so the string
-    matches DESCRIBE's form exactly (file:/tmp/..., not file:///tmp/...)
-    — downstream code compares these strings against file paths. A temp
-    view has neither. Any resolution surprise (persistent views have no
-    location, three-part or exotic identifiers) falls back to the
-    DESCRIBE scans."""
+    """``(location, partition columns in declared order)`` of ``table``,
+    from one session-catalog lookup (:func:`_catalog_meta`) instead of
+    a DESCRIBE query each (~50 ms for DESCRIBE FORMATTED, ~17 ms for
+    DESCRIBE TABLE, vs ~1 ms here). A temp view has neither. Any
+    resolution surprise (persistent views have no location, three-part
+    or exotic identifiers) falls back to the DESCRIBE scans."""
     try:
-        jvm = spark.sparkContext._jvm
-        cat = spark._jsparkSession.sessionState().catalog()
-        parts = [p.strip("`") for p in table.split(".")]
-        if len(parts) == 1:
-            ident = jvm.org.apache.spark.sql.catalyst.TableIdentifier(
-                parts[0]
-            )
-        elif len(parts) == 2:
-            ident = jvm.org.apache.spark.sql.catalyst.TableIdentifier(
-                parts[1], jvm.scala.Option.apply(parts[0])
-            )
-        else:
-            ident = None
-        if ident is not None:
-            # a temp view shadows any same-named table and has no
-            # location — DESCRIBE would return None for it too
-            if cat.isTempView(ident):
-                return None, []
-            meta = cat.getTableMetadata(ident)
-            uri = meta.location()
-            seq = meta.partitionColumnNames()
-            return (
-                jvm.org.apache.hadoop.fs.Path(uri).toString(),
-                [seq.apply(i) for i in range(seq.size())],
-            )
+        meta = _catalog_meta(spark, table)
     except Exception:  # noqa: BLE001 — fall back to DESCRIBE
-        pass
-    return _describe_location(spark, table), _describe_partitions(spark, table)
+        return _describe_location(spark, table), _describe_partitions(spark, table)
+    return (None, []) if meta is None else (meta[0], meta[1])
+
+
+def _catalog_meta(spark: SparkSession, table: str):
+    """``(location, partition columns, Java CatalogTable)`` of ``table``
+    from the session catalog (isTempView + getTableMetadata), or None
+    for a temp view, which shadows any same-named table and has no
+    location. The URI is rendered via hadoop.fs.Path so the string
+    matches DESCRIBE's form exactly (file:/tmp/..., not file:///tmp/...)
+    — downstream code compares these strings against file paths. Raises
+    for an identifier the parser or the catalog cannot resolve (three
+    parts, a persistent view's missing location).
+
+    Every point statement asks this, so it costs ~12 Py4J calls: the
+    identifier comes from Spark's parser (one call) and the Path class
+    is looked up once per JVM (each package step of a ``jvm.a.b.C``
+    lookup is a call)."""
+    state = spark._jsparkSession.sessionState()
+    ident = state.sqlParser().parseTableIdentifier(table)
+    cat = state.catalog()
+    if cat.isTempView(ident):
+        return None
+    meta = cat.getTableMetadata(ident)
+    seq = meta.partitionColumnNames()
+    return (
+        _hadoop_path(spark.sparkContext._jvm)(meta.location()).toString(),
+        [seq.apply(i) for i in range(seq.size())],
+        meta,
+    )
+
+
+@functools.lru_cache(maxsize=None)
+def _hadoop_path(jvm):
+    return jvm.org.apache.hadoop.fs.Path
 
 
 def _describe_location(spark: SparkSession, table: str) -> str | None:
@@ -1047,8 +1040,8 @@ def _write_staged_arrow(base: str, tbl, slices: int = 1) -> None:
         lo, hi = i * n // slices, (i + 1) * n // slices
         pq.write_table(
             tbl.slice(lo, hi - lo),
-            f"{base}/part-{i:05d}-{job}-c000.snappy.parquet",
-            compression="snappy",
+            f"{base}/part-{i:05d}-{job}-c000.{PARQUET_CODEC}.parquet",
+            compression=PARQUET_CODEC,
         )
 
 
@@ -1128,177 +1121,29 @@ def _file_granular_cow(
 # and learns which of them matched from the same Arrow table that holds
 # their rewritten rows — no separate probe job over every file. pyarrow
 # builds that table on the driver when it can compute exactly what Spark
-# would; a Spark collect builds it otherwise.
+# would; a Spark collect builds it otherwise. The predicate recognizer
+# and the Arrow reader are operators/point.py's, shared with point reads.
 
-# Spark SQL identifiers: a double-quoted token is a string literal there
-_SPARK_IDENT = r"(?:[A-Za-z_][A-Za-z0-9_]*|`(?:[^`]|``)+`)"
-_TERM_COL = rf"(?:(?P<q>{_SPARK_IDENT})\.)?(?P<col>{_SPARK_IDENT})"
-_INT_LIT = r"-?\d+"
-_OP = r"(?P<op><=|>=|=|<|>)"
-_COL_OP_INT = re.compile(rf"^\s*{_TERM_COL}\s*{_OP}\s*(?P<v>{_INT_LIT})\s*$")
-_INT_OP_COL = re.compile(rf"^\s*(?P<v>{_INT_LIT})\s*{_OP}\s*{_TERM_COL}\s*$")
-_BETWEEN_TERM = re.compile(
-    rf"^\s*{_TERM_COL}\s+BETWEEN\s+(?P<lo>{_INT_LIT})\s+AND\s+(?P<hi>{_INT_LIT})\s*$",
-    re.IGNORECASE,
-)
-_IN_TERM = re.compile(
-    rf"^\s*{_TERM_COL}\s+IN\s*\((?P<vs>\s*{_INT_LIT}\s*(?:,\s*{_INT_LIT}\s*)*)\)\s*$",
-    re.IGNORECASE,
-)
-_FLIPPED = {"=": "=", "<": ">", "<=": ">=", ">": "<", ">=": "<="}
-# extra columns the pruned rewrite carries through its transform
-_SRC, _HIT = "_swl_src_file", "_swl_hit"
-
-
-def _conjuncts(where: str) -> list[str]:
-    """The depth-0 AND terms of ``where``; none when an OR or NOT at
-    depth 0 leaves no term a necessary condition, or when a CASE at
-    depth 0 may hold ANDs that split nothing. The AND of each
-    ``BETWEEN`` stays inside its term."""
-    masked = _mask_literals(where)
-    if any(_keyword_at_depth0(masked, w) >= 0 for w in ("OR", "NOT", "CASE")):
-        return []
-    terms: list[str] = []
-    term_start = piece_start = owed = 0
-    while True:
-        cut = _keyword_at_depth0(masked, "AND", piece_start)
-        end = cut if cut >= 0 else len(where)
-        pos = _keyword_at_depth0(masked, "BETWEEN", piece_start)
-        while 0 <= pos < end:
-            owed += 1
-            pos = _keyword_at_depth0(masked, "BETWEEN", pos + 7)
-        if owed and cut >= 0:
-            owed -= 1  # this AND closes a BETWEEN
-        else:
-            terms.append(where[term_start:end])
-            term_start, owed = end + 3, 0
-        if cut < 0:
-            return terms
-        piece_start = cut + 3
-
-
-def _term_bound(term: str, bare: str, types: dict[str, str]):
-    """``(column, intervals)`` when ``term`` bounds an integral column of
-    the table by integer literals, else None."""
-    m = next(
-        (m for rx in (_COL_OP_INT, _INT_OP_COL, _BETWEEN_TERM, _IN_TERM)
-         if (m := rx.match(term))),
-        None,
-    )
-    if m is None:
-        return None
-    q, col = m.group("q"), m.group("col")
-    if q is not None and _unquote(q).lower() != bare.lower():
-        return None
-    if not col.startswith("`") and col.upper() in ("NULL", "TRUE", "FALSE"):
-        return None
-    col = _unquote(col)
-    if types.get(col.lower()) not in filestats.INTEGRAL_TYPES:
-        return None
-    if m.re is _IN_TERM:
-        return col, [(int(v), int(v)) for v in m.group("vs").split(",")]
-    if m.re is _BETWEEN_TERM:
-        return col, [(int(m.group("lo")), int(m.group("hi")))]
-    v, op = int(m.group("v")), m.group("op")
-    if m.re is _INT_OP_COL:
-        op = _FLIPPED[op]
-    return col, [{
-        "=": (v, v), "<": (None, v - 1), "<=": (None, v),
-        ">": (v + 1, None), ">=": (v, None),
-    }[op]]
-
-
-# Spark types whose values pyarrow reads, compares, assigns and writes
-# exactly as Spark does: the driver-side producers (the point-write
-# rewrite below and the appender in operators/ingest.py) take only
-# tables whose every column has one of them and carries no metadata
-# (CHAR/VARCHAR(n) lengths live in field metadata)
-DRIVER_TYPES = frozenset(
-    filestats.INTEGRAL_TYPES
-    + ("boolean", "float", "double", "string", "binary", "date")
-)
+# the match flag the pruned rewrite carries through its transform, beside
+# point._SRC (the source file)
+_HIT = "_swl_hit"
+# A copy-on-write publish retires every file it rewrites whole, and the
+# snapshot store keeps it, so a point write costs stored bytes in
+# proportion to the files it rewrites. The pruned rewrite's output is
+# split into key-sorted files of _POINT_FILE_BYTES Arrow bytes, but into
+# at most _POINT_SPLIT of them: each point write adds at most that many
+# files, and repeated writes near one key shrink its file geometrically
+# (a 128 MB file to 16 MB, 2 MB, 256 KB) until the next one there
+# rewrites and retains at most about _POINT_FILE_BYTES. CHECKPOINT
+# compacts the small files.
+_POINT_FILE_BYTES = 256 << 10
+_POINT_SPLIT = 8
 # the SET values a bound parameter renders to (session._render_literal)
 _BOUND_LITERAL = re.compile(
     r"^\s*(?:NULL|TRUE|FALSE|-?\d+(?:\.\d+)?(?:e[-+]?\d+)?|X'[0-9a-f]*'"
     r"|(?:DATE\s+|TIMESTAMP\s+)?'(?:[^'\\]|''|\\.)*')\s*$",
     re.IGNORECASE | re.DOTALL,
 )
-_INT64 = (-(1 << 63), (1 << 63) - 1)
-
-
-def driver_arrow_schema(schema):
-    """The Arrow schema Spark's ``toArrow`` gives ``schema``, every
-    field nullable as in the files Spark writes, or None unless every
-    field has a :data:`DRIVER_TYPES` type and no metadata."""
-    from pyspark.sql import types as T
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    if not all(
-        f.dataType.simpleString() in DRIVER_TYPES and not f.metadata
-        for f in schema.fields
-    ):
-        return None
-    return to_arrow_schema(
-        T.StructType([T.StructField(f.name, f.dataType) for f in schema.fields])
-    )
-
-
-def _read_candidates(hits, arrow_schema):
-    """The rows of the ``hits`` files in ``arrow_schema``, each tagged
-    with its file name under ``_SRC``, as Spark's scan with the table
-    schema reads them: columns match case-insensitively and a column a
-    file lacks reads as NULLs. None when a file's column has another
-    type than the table's (Spark's reader decides those)."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    parts = []
-    for f in hits:
-        ft = pq.ParquetFile(f.path).read()
-        by_lower: dict[str, list[int]] = {}
-        for i, name in enumerate(ft.column_names):
-            by_lower.setdefault(name.lower(), []).append(i)
-        cols = []
-        for field in arrow_schema:
-            idx = by_lower.get(field.name.lower(), [])
-            if len(idx) > 1:
-                return None
-            if not idx:
-                cols.append(pa.nulls(ft.num_rows, field.type))
-                continue
-            col = ft.column(idx[0])
-            if col.type != field.type:
-                if col.type not in (pa.large_string(), pa.large_binary()):
-                    return None
-                col = col.cast(field.type)  # the same values, 32-bit offsets
-            cols.append(col)
-        cols.append(pa.array([f.name] * ft.num_rows, pa.string()))
-        parts.append(pa.Table.from_arrays(cols, names=arrow_schema.names + [_SRC]))
-    return pa.concat_tables(parts)
-
-
-def _bounds_mask(tbl, bounds, names: dict[str, str]):
-    """Rows of ``tbl`` inside every ``(column, intervals)`` bound; a
-    NULL key never matches. None when a bound lies outside BIGINT."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    mask = None
-    for col, intervals in bounds:
-        c = tbl[names[col.lower()]]
-        term = None
-        for lo, hi in intervals:
-            sides = []
-            for v, cmp in ((lo, pc.greater_equal), (hi, pc.less_equal)):
-                if v is None:
-                    continue
-                if not _INT64[0] <= v <= _INT64[1]:
-                    return None
-                sides.append(cmp(c, pa.scalar(v, pa.int64())))
-            m = sides[0] if len(sides) == 1 else pc.and_(*sides)
-            term = m if term is None else pc.or_(term, m)
-        mask = term if mask is None else pc.and_(mask, term)
-    return pc.fill_null(mask, False)
 
 
 def _set_values(spark: SparkSession, schema, assignments, arrow_schema) -> dict:
@@ -1339,7 +1184,7 @@ def _arrow_point_rows(
 
     from swanlake_spark import constraints
 
-    arrow_schema = driver_arrow_schema(schema)
+    arrow_schema = point.driver_arrow_schema(schema)
     if arrow_schema is None or sum(f.size for f in hits) > _DRIVER_REWRITE_MAX_BYTES:
         return None
     if assignments is not None:
@@ -1351,10 +1196,10 @@ def _arrow_point_rows(
             for c, v in assignments.items()
         ):
             return None
-    tbl = _read_candidates(hits, arrow_schema)
+    tbl = point._read_candidates(hits, arrow_schema)
     if tbl is None:
         return None
-    mask = _bounds_mask(tbl, bounds, {n.lower(): n for n in arrow_schema.names})
+    mask = point._bounds_mask(tbl, bounds, {n.lower(): n for n in arrow_schema.names})
     if mask is None:
         return None
     if assignments is not None:
@@ -1392,13 +1237,14 @@ def _pruned_cow(
     the driver when the predicate is exactly an AND of integer bounds
     and every SET value a bound literal (:func:`_arrow_point_rows`), a
     Spark collect otherwise. Both feed one tail: per-file counts,
-    staging, :func:`publish`.
+    staging (key-sorted files of at most ``_POINT_FILE_BYTES``),
+    :func:`publish`.
 
     Caller guarantees: table write lock held, table unpartitioned,
     predicate subquery-free, no CHECK/FK constraint registered."""
     types = {f.name.lower(): f.dataType.simpleString() for f in schema.fields}
     bare = table.split(".")[-1].strip('`"')
-    terms = [_term_bound(t, bare, types) for t in _conjuncts(where)]
+    terms = [point._term_bound(t, bare, types) for t in point._conjuncts(where)]
     bounds = [b for b in terms if b]
     files = filestats.live_files(loc) if bounds else None
     if files is None:
@@ -1459,11 +1305,15 @@ def _pruned_cow(
     if not matched:
         return 0, True
     keep = pa.array([f.name for f in matched])
+    out = tbl.filter(pc.is_in(tbl[_SRC], value_set=keep)).drop_columns([_SRC, _HIT])
+    slices = min(-(-out.nbytes // _POINT_FILE_BYTES), _POINT_SPLIT)
+    if slices > 1:
+        # key-sorted, so each new file holds one key range its footer
+        # names, and the next point statement on a key opens one of them
+        key = bounds[0][0].lower()
+        out = out.sort_by(next(n for n in out.column_names if n.lower() == key))
     staged = staging_dir(spark, table, loc)
-    _write_staged_arrow(
-        _local_os_path(staged),
-        tbl.filter(pc.is_in(tbl[_SRC], value_set=keep)).drop_columns([_SRC, _HIT]),
-    )
+    _write_staged_arrow(_local_os_path(staged), out, max(1, slices))
     publish(spark, table, staged, ["file:" + f.path for f in matched], loc)
     _rm_path(spark, staged)
     return affected, True

@@ -185,9 +185,9 @@ def _driver_aligned(
     """``tbl`` aligned to ``target`` in Arrow (``sources`` as
     :func:`source_columns` maps them), or None when the driver-side
     append does not apply: a field that is not nullable, carries
-    metadata or has a type outside ``dml.DRIVER_TYPES``, or a batch
+    metadata or has a type outside ``point.DRIVER_TYPES``, or a batch
     column that does not cast within its type family."""
-    from swanlake_spark.operators.dml import driver_arrow_schema
+    from swanlake_spark.operators.point import driver_arrow_schema
 
     schema = driver_arrow_schema(target)
     if schema is None or not all(f.nullable for f in target.fields):

@@ -231,6 +231,27 @@ def _mask_literals(stmt: str) -> str:
     return "".join(c if i in keep else " " for i, c in enumerate(stmt))
 
 
+def _keyword_at_depth0(masked: str, word: str, start: int = 0) -> int:
+    """Position of the first occurrence of ``word`` at paren-depth 0 in
+    the literal-masked statement, or -1. Masking + depth tracking means
+    keywords inside strings, comments, quoted identifiers, or subqueries
+    never match."""
+    up = masked.upper()
+    depth = 0
+    for i, ch in enumerate(masked):
+        if ch == "(":
+            depth += 1
+        elif ch == ")":
+            depth -= 1
+        elif depth == 0 and i >= start and up.startswith(word, i):
+            before_ok = i == 0 or not (masked[i - 1].isalnum() or masked[i - 1] in '_"`')
+            j = i + len(word)
+            after_ok = j >= len(masked) or not (masked[j].isalnum() or masked[j] in '_"`')
+            if before_ok and after_ok:
+                return i
+    return -1
+
+
 _COL = rf"{_IDENT}(?:\.{_IDENT})*"
 _CMP = r"(?:=|<=|>=|<>|!=|<|>)"
 _BEHIND_CMP = re.compile(rf"({_COL})\s*{_CMP}\s*$", re.DOTALL)

@@ -31,6 +31,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from swanlake_spark.config import PARQUET_CODEC
+
 
 def parse_s3_uri(uri: str) -> tuple[str, str]:
     """``s3://bucket/key`` (or s3a://, s3n://) → (bucket, key)."""
@@ -104,7 +106,7 @@ def write_parquet(df: DataFrame, uri: str) -> int:
     bucket, key = parse_s3_uri(uri)
     tbl = df.toArrow()
     sink = pa.BufferOutputStream()
-    pq.write_table(tbl, sink, compression="snappy")
+    pq.write_table(tbl, sink, compression=PARQUET_CODEC)
     s3_client().put_object(
         Bucket=bucket, Key=key, Body=sink.getvalue().to_pybytes()
     )

@@ -253,7 +253,11 @@ def _write_json_exclusive(spark: SparkSession, path: str, payload: dict) -> bool
     """Create-exclusive JSON write: False when the path already exists
     (another writer claimed this version number).
 
-    Local file: scheme goes through POSIX ``O_CREAT|O_EXCL`` — Hadoop's
+    Local file: scheme writes a hidden temp file and hard-links it to
+    the path — the link fails if the path exists, like ``O_EXCL``, and
+    the manifest appears with its whole content, so a reader never
+    parses a half-written one (point reads read the newest manifest
+    without the table lock). Hadoop's
     ``RawLocalFileSystem.create(overwrite=false)`` is CHECK-THEN-ACT
     (exists() then create), and two in-process threads racing the same
     version number could both "win", silently losing one manifest
@@ -266,16 +270,19 @@ def _write_json_exclusive(spark: SparkSession, path: str, payload: dict) -> bool
     osp = _local_os_path(path)
     if osp is not None:
         import os as _os
+        import uuid as _uuid
 
-        _os.makedirs(_os.path.dirname(osp), exist_ok=True)
+        d, name = _os.path.split(osp)
+        _os.makedirs(d, exist_ok=True)
+        tmp = f"{d}/.{name}.{_uuid.uuid4().hex}"
+        with open(tmp, "wb") as f:
+            f.write(json.dumps(payload).encode("utf-8"))
         try:
-            fd = _os.open(osp, _os.O_WRONLY | _os.O_CREAT | _os.O_EXCL)
+            _os.link(tmp, osp)
         except FileExistsError:
             return False
-        try:
-            _os.write(fd, json.dumps(payload).encode("utf-8"))
         finally:
-            _os.close(fd)
+            _os.unlink(tmp)
         return True
     jvm, fs, p = _fs(spark, path)
     try:

@@ -1599,6 +1599,14 @@ class TestStatusServer:
         from swanlake_spark.status_server import start_status_server
 
         engine.query("SELECT 1")
+        t = _mktable(engine, "k BIGINT, v STRING")
+        engine.execute(f"INSERT INTO {t} VALUES (1, 'a')")
+        before = engine.metrics.snapshot()
+        # a point read the driver serves, and one of that shape on a
+        # temp view, which it hands to Spark
+        assert engine.query(f"SELECT v FROM {t} WHERE k = 1").collect()[0].v == "a"
+        engine.spark.table(t).createOrReplaceTempView("status_points")
+        assert engine.query("SELECT v FROM status_points WHERE k = 1").collect()[0].v == "a"
         server, port = start_status_server(engine.metrics)
         try:
             base = f"http://127.0.0.1:{port}"
@@ -1606,6 +1614,8 @@ class TestStatusServer:
             payload = json.loads(urllib.request.urlopen(f"{base}/status").read())
             assert payload["total_queries"] >= 1
             assert payload["jvm"]["janino_compiles"] > 0
+            assert payload["driver_reads"] == before.driver_reads + 1
+            assert payload["driver_read_fallbacks"] == before.driver_read_fallbacks + 1
             html = urllib.request.urlopen(f"{base}/").read().decode()
             assert "Engine status" in html
             with pytest.raises(urllib.error.HTTPError):

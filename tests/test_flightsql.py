@@ -95,7 +95,8 @@ class TestFlightSqlQueries:
     def test_long_spark_error_reaches_client_short(self, flight, caplog):
         """A task failure's message carries JVM stack traces far past
         gRPC's metadata limit: the client gets the Java exception's first
-        line (not Py4J's wrapper line), the server log the whole
+        line (not Py4J's wrapper line) and its root cause (the first line
+        of the last ``Caused by:``), the server log the whole
         exception."""
         import logging
 
@@ -116,6 +117,7 @@ class TestFlightSqlQueries:
         msg = str(err.value)
         assert msg.startswith("org.apache.spark.SparkException: ")
         assert "\tat " not in msg and len(msg) < STATUS_MESSAGE_MAX + 500
+        assert "NumberFormatException" in msg
         logged = "\n".join(caplog.text.splitlines())
         assert "NumberFormatException" in logged and "\tat " in logged
 
@@ -295,6 +297,19 @@ _ROUTE_CASES = [
         [1],
     ),
     ("columns", "SELECT COLUMNS('^n_') FROM nation ORDER BY n_nationkey", None),
+    # point reads: pyarrow answers them on the driver
+    ("point_read", "SELECT * FROM route_points WHERE k = 3", None),
+    ("point_read_prepared", "SELECT * FROM route_points WHERE k = ?", [3]),
+    (
+        "point_scan",
+        "SELECT * FROM route_points WHERE k >= 2 AND k < 6 ORDER BY k",
+        None,
+    ),
+    (
+        "point_scan_prepared",
+        "SELECT s, K FROM route_points WHERE k >= ? AND k < ? ORDER BY k DESC",
+        [2, 6],
+    ),
 ]
 
 
@@ -310,9 +325,19 @@ def duckdb_server(spark, sf_dir):
         config=EngineConfig(client_dialect="duckdb", cpus=4),
     )
     eng.attach_warehouse(sf_dir)
+    eng.execute("DROP TABLE IF EXISTS route_points")
+    eng.execute(
+        "CREATE TABLE route_points (k BIGINT, s STRING, d DATE) USING parquet "
+        f"LOCATION '{tempfile.mkdtemp(prefix='swl_route_')}'"
+    )
+    eng.execute(
+        "INSERT INTO route_points VALUES (1, 'a', DATE '2020-01-01'), "
+        "(3, 'c', NULL), (4, NULL, DATE '1999-12-31'), (5, 'e', NULL), (9, 'i', NULL)"
+    )
     server, port = start_flight_server(eng)
     yield eng, f"grpc://127.0.0.1:{port}"
     server.shutdown()
+    eng.execute("DROP TABLE route_points")
 
 
 class TestRouteEquivalence:
@@ -331,6 +356,7 @@ class TestRouteEquivalence:
         from swanlake_spark.flightsql import _spark_to_arrow_schema
 
         eng, location = duckdb_server
+        served = eng.metrics.snapshot().driver_reads
         sess = eng.sessions.get_or_create(f"routes-{uuid.uuid4().hex[:8]}")
         c = FlightSqlClient(location)
         # route -> (announced schema or None, streamed table)
@@ -367,6 +393,9 @@ class TestRouteEquivalence:
             if announced is not None:
                 assert announced.names == names, route
                 assert announced.types == table.schema.types, route
+        if "route_points" in sql:  # every route's execution read on the driver
+            assert eng.metrics.snapshot().driver_reads - served == len(got)
+            assert rows  # the bounds hold keys
 
 
 class TestCrossProcessClient:

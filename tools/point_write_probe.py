@@ -1,12 +1,19 @@
-"""In-process cost of the point writes a YCSB client sends, no server.
+"""In-process cost of the point statements a YCSB client sends, no server.
 
 Usage: python tools/point_write_probe.py [--files N] [--rows N] [--reps N]
                                          [--cpus N] [--seed N]
 
 Builds an Engine, creates a YCSB-shaped table (``ycsb_key INT PRIMARY
 KEY`` plus ten 100-character string fields) as ``--files`` Parquet files
-over ``--rows`` keys, and then times ``--reps`` calls each of
+over ``--rows`` keys, records them as the table's snapshot, and then
+times ``--reps`` calls each of
 
+- a prepared point read, ``SELECT * … WHERE ycsb_key = ?``
+  (``Engine.query`` with the key bound, then ``to_arrow``), which
+  pyarrow answers on the driver,
+- a prepared ``SCAN_KEYS``-key scan, ``WHERE ycsb_key >= ? AND ycsb_key
+  < ? ORDER BY ycsb_key NULLS LAST`` (the transpiled YCSB scan), also
+  answered on the driver,
 - a point UPDATE setting all ten fields (``Engine.execute_update``),
   which pyarrow rewrites on the driver,
 - the same UPDATE with an extra term the footer bounds do not cover
@@ -42,6 +49,7 @@ _FIELDS = [f"field{i}" for i in range(10)]
 _FIELD_LEN = 100
 APPENDS_PER_CHECKPOINT = 8
 BULK_ROWS = 25_000
+SCAN_KEYS = 40
 
 
 def _value(rng: random.Random) -> str:
@@ -60,6 +68,7 @@ def main() -> None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from swanlake_spark import versions
     from swanlake_spark.config import EngineConfig
     from swanlake_spark.engine import Engine
     from swanlake_spark.operators.ingest import insert_arrow
@@ -89,12 +98,28 @@ def main() -> None:
         data = {"ycsb_key": pa.array(keys, pa.int32())}
         for f in _FIELDS:
             data[f] = [rng.choice(pool) for _ in keys]
-        pq.write_table(pa.table(data), f"{loc}/part-{i:05d}.snappy.parquet")
+        pq.write_table(pa.table(data), f"{loc}/part-{i:05d}.parquet")
     spark.catalog.refreshTable(table)
+    versions.record_version(spark, table, "load")
 
     live = list(range(args.rows))
     rng.shuffle(live)
     next_key = args.rows
+
+    point_read = eng.statement(f"SELECT * FROM {table} WHERE ycsb_key = ?")
+    scan_keys = eng.statement(
+        f"SELECT * FROM {table} WHERE ycsb_key >= ? AND ycsb_key < ? "
+        "ORDER BY ycsb_key NULLS LAST"
+    )
+
+    def read() -> None:
+        key = live[rng.randrange(len(live))]
+        assert eng.query(point_read, args=[key]).to_arrow().num_rows == 1
+
+    def scan() -> None:
+        lo = live[rng.randrange(len(live))]
+        keys = eng.query(scan_keys, args=[lo, lo + SCAN_KEYS]).to_arrow().column(0)
+        assert 0 < len(keys) <= SCAN_KEYS and keys.to_pylist() == sorted(keys.to_pylist())
 
     def update(extra: str = "") -> None:
         sets = ", ".join(f"{f} = '{_value(rng)}'" for f in _FIELDS)
@@ -129,6 +154,8 @@ def main() -> None:
 
     print(f"table: {args.files} files, {args.rows} rows; {args.reps} calls per kind")
     kinds = [
+        ("read", read, None),
+        ("scan", scan, None),
         ("update", update, None),
         ("update-spark", lambda: update(" AND field0 <> ''"), None),
         ("delete", delete, None),
