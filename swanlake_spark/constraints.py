@@ -364,14 +364,11 @@ def bounded_existing_probe(
     means no live file can hold a batch key, so there is nothing to
     probe. ``schema`` is the table's, when the caller has it."""
     bounds = []
-    cond = None
     for c in keys:
         lo, hi = stats[f"_min_{c}"], stats[f"_max_{c}"]
         if lo is None or hi is None:
             return spark.table(table).select(*keys)
         bounds.append((c, [(lo, hi)]))
-        rng = (F.col(c) >= F.lit(lo)) & (F.col(c) <= F.lit(hi))
-        cond = rng if cond is None else cond & rng
     from swanlake_spark import filestats
 
     if schema is None:
@@ -391,6 +388,15 @@ def bounded_existing_probe(
             )
     if existing is None:
         existing = spark.table(table)
+    # the Column range is built only for a probe that runs: each F.col
+    # and F.lit is a Py4J call
+    cond = functools.reduce(
+        lambda a, b: a & b,
+        [
+            (F.col(c) >= F.lit(lo)) & (F.col(c) <= F.lit(hi))
+            for c, [(lo, hi)] in bounds
+        ],
+    )
     return existing.select(*keys).filter(cond)
 
 

@@ -286,6 +286,22 @@ class _HeaderMiddlewareFactory(fl.ServerMiddlewareFactory):
         return _HeaderMiddleware(sid)
 
 
+def append_parameters(spark, info, params: pa.Table) -> int:
+    """Append the parameter batch of an all-placeholder prepared
+    ``INSERT … VALUES`` (``info``, from ``plans.parser.insert_info``)
+    through the Arrow appender in one aligned write, its columns kept as
+    the client sent them. Parameter columns are positional: they are
+    named after the INSERT's explicit column list, else the table's
+    leading columns, from the catalog lookup the append then reuses."""
+    from swanlake_spark.operators import dml
+    from swanlake_spark.operators.ingest import insert_arrow
+
+    meta = dml._table_meta(spark, info.table)
+    names = info.columns or meta[2].names[: params.num_columns]
+    batch = pa.table(dict(zip(names, params.columns)))
+    return insert_arrow(spark, info.table, batch, info.columns, meta=meta)
+
+
 class FlightSqlServer(fl.FlightServerBase):
     """Flight SQL facade over :class:`swanlake_spark.engine.Engine`."""
 
@@ -539,8 +555,7 @@ class FlightSqlServer(fl.FlightServerBase):
     def _prepared_update(self, sess, st, params: pa.Table | None) -> int:
         """Prepared update execution with the reference's insert fast
         path (prepared.rs:394-553 → appender): an all-placeholder INSERT
-        VALUES batch goes through the Arrow appender in one aligned
-        write, its columns kept as the client sent them; everything
+        VALUES batch goes through :func:`append_parameters`; everything
         else runs once per parameter set, summing affected counts."""
         from swanlake_spark.plans.parser import insert_info
 
@@ -551,15 +566,7 @@ class FlightSqlServer(fl.FlightServerBase):
             and info.source == "VALUES"
             and info.all_placeholders
         ):
-            from swanlake_spark.operators.ingest import insert_arrow
-
-            # parameter batches carry positional values — name them after
-            # the INSERT's explicit column list, else the table's columns
-            names = info.columns or list(
-                sess.spark.table(info.table).columns
-            )[: params.num_columns]
-            batch = pa.table(dict(zip(names, params.columns)))
-            return insert_arrow(sess.spark, info.table, batch, info.columns)
+            return append_parameters(sess.spark, info, params)
         total = 0
         for row in _param_sets(params) or [None]:
             total += max(sess.execute_update(st.statement, row), 0)

@@ -21,8 +21,10 @@ returns them in ``x-swanlake-affected-rows``).
 from __future__ import annotations
 
 import functools
+import json
 import os
 import re
+import shutil
 import socket as _socket
 import time as _time_mod
 import uuid
@@ -30,6 +32,7 @@ from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from swanlake_spark import filestats
 from swanlake_spark.config import PARQUET_CODEC
@@ -155,6 +158,30 @@ def _table_info(spark: SparkSession, table: str) -> tuple[str | None, list[str]]
     return (None, []) if meta is None else (meta[0], meta[1])
 
 
+def _table_meta(
+    spark: SparkSession, table: str
+) -> tuple[str | None, list[str], T.StructType]:
+    """``(location, partition columns, schema)`` of ``table`` from one
+    catalog lookup (:func:`_catalog_meta`); the schema is the stored
+    one, which ``spark.table(table).schema`` equals, without resolving
+    the relation and listing its files through Spark (~20 ms). A temp
+    view, or a name the lookup cannot resolve, takes its location and
+    partitions as :func:`_table_info` does and its schema from
+    ``spark.table``."""
+    try:
+        meta = _catalog_meta(spark, table)
+    except Exception:  # noqa: BLE001 — fall back to DESCRIBE
+        return (
+            _describe_location(spark, table),
+            _describe_partitions(spark, table),
+            spark.table(table).schema,
+        )
+    if meta is None:
+        return None, [], spark.table(table).schema
+    loc, part_cols, jmeta = meta
+    return loc, part_cols, T.StructType.fromJson(json.loads(jmeta.schema().json()))
+
+
 def _catalog_meta(spark: SparkSession, table: str):
     """``(location, partition columns, Java CatalogTable)`` of ``table``
     from the session catalog (isTempView + getTableMetadata), or None
@@ -242,12 +269,113 @@ def staging_dir(spark: SparkSession, table: str, loc=_UNRESOLVED) -> str:
 
 
 def _rm_path(spark: SparkSession, path: str) -> None:
-    """Recursively delete a path via the table's Hadoop FileSystem
-    (works for any scheme, not just local)."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    fs.delete(hpath, True)
+    """Recursively delete a path, whatever its scheme (:class:`_Files`);
+    a missing path is no error."""
+    _Files(spark, path).delete(path, recursive=True)
+
+
+def _crc(path: str) -> str:
+    """Hadoop's checksum sidecar of a local file."""
+    d, name = os.path.split(path)
+    return f"{d}/.{name}.crc"
+
+
+class _Files:
+    """Moves and deletes on the file system of one location: OS calls
+    for a local (``file:`` or absolute scheme-less) location, Hadoop
+    ``FileSystem`` calls over Py4J (about 1 ms each) for any other
+    scheme. Paths are given as the location renders them. A local move
+    or delete carries the file's Hadoop checksum sidecar
+    (``.<name>.crc``, which Spark's writes leave) along, as Hadoop's
+    LocalFileSystem does."""
+
+    def __init__(self, spark: SparkSession, loc: str) -> None:
+        self.local = _local_os_path(loc) is not None
+        if not self.local:
+            self._path = _hadoop_path(spark.sparkContext._jvm)
+            self._fs = self._path(loc).getFileSystem(
+                spark._jsc.hadoopConfiguration()
+            )
+
+    def kind(self, path: str) -> str | None:
+        """``"file"``, ``"dir"``, or None when nothing is at ``path``."""
+        if self.local:
+            p = _local_os_path(path)
+            if os.path.isdir(p):
+                return "dir"
+            return "file" if os.path.lexists(p) else None
+        hp = self._path(path)
+        if not self._fs.exists(hp):
+            return None
+        return "dir" if self._fs.getFileStatus(hp).isDirectory() else "file"
+
+    def rename(self, src: str, dst: str) -> bool:
+        """Move the file ``src`` to ``dst``, creating ``dst``'s parent
+        directories. False when nothing moved: the rename failed, or
+        (locally, where a rename would replace it) ``dst`` exists."""
+        if not self.local:
+            hdst = self._path(dst)
+            self._fs.mkdirs(hdst.getParent())
+            return bool(self._fs.rename(self._path(src), hdst))
+        s, d = _local_os_path(src), _local_os_path(dst)
+        if os.path.lexists(d):
+            return False
+        try:
+            os.makedirs(os.path.dirname(d), exist_ok=True)
+            os.rename(s, d)
+        except OSError:
+            return False
+        if os.path.exists(_crc(s)):
+            os.replace(_crc(s), _crc(d))
+        return True
+
+    def delete(self, path: str, recursive: bool = False) -> None:
+        """Delete ``path`` (a directory only when ``recursive``); a
+        missing path is no error."""
+        if not self.local:
+            self._fs.delete(self._path(path), recursive)
+            return
+        p = _local_os_path(path)
+        try:
+            if recursive and os.path.isdir(p) and not os.path.islink(p):
+                shutil.rmtree(p)
+                return
+            os.remove(p)
+        except FileNotFoundError:
+            return
+        try:
+            os.remove(_crc(p))
+        except FileNotFoundError:
+            pass
+
+
+def _refresh(spark: SparkSession, table: str, loc: str) -> None:
+    """Make the session's next statement on ``table`` (at ``loc``) list
+    its files afresh, and every cached plan that reads ``loc`` hold the
+    current rows.
+
+    The session's cached relation is dropped (``invalidateCachedTable``),
+    so the next statement builds a new file index, as it would after
+    ``refreshTable``; that costs a few Py4J calls, where ``refreshTable``
+    re-resolves the table and lists every file (~30 ms). Only when the
+    shared CacheManager holds a plan (``CACHE TABLE``) is ``loc``
+    re-listed, by ``refreshByPath``: it refreshes the file index inside
+    each cached plan over ``loc`` before re-caching it. ``refreshTable``
+    re-caches from the index the plan was cached with, which a second
+    write leaves naming retired files. A name the table-identifier
+    parser cannot take is refreshed with ``refreshTable``."""
+    js = spark._jsparkSession
+    state = js.sessionState()
+    try:
+        ident = state.sqlParser().parseTableIdentifier(table)
+    except Exception:  # noqa: BLE001 — refreshTable resolves it
+        ident = None
+    if ident is None:
+        spark.catalog.refreshTable(table)
+    else:
+        state.catalog().invalidateCachedTable(ident)
+    if not js.sharedState().cacheManager().isEmpty():
+        spark.catalog.refreshByPath(loc)
 
 
 def publish(
@@ -274,7 +402,10 @@ def publish(
        (``versions.retire_files``), or delete them when ``retain`` is
        False; whatever could not be moved is deleted;
     5. hand the new live set to the caller's ``record_version`` and
-       refresh the table.
+       refresh the table (:func:`_refresh`).
+
+    Renames and deletes are OS calls for a local location, Hadoop
+    FileSystem calls for any other (:class:`_Files`).
 
     Consistency window: ADD-THEN-RETIRE (DuckLake's add-before-retire
     commit shape). Between steps 3 and 4 a directory-scan reader can see
@@ -282,8 +413,9 @@ def publish(
     readers (``versions.read_current``, ``AT (VERSION => n)``) never
     do, since the manifest flips to the new file list in one write. A
     crash in the window leaves a recoverable superset, never a hole.
-    A rename that returns False raises IOError with the old files still
-    intact; an unresolvable location raises InvalidArgument."""
+    A rename that fails, or whose local target exists, raises IOError
+    with the old files still intact; an unresolvable location raises
+    InvalidArgument."""
     from urllib.parse import unquote
 
     from swanlake_spark import versions as _versions
@@ -318,19 +450,13 @@ def publish(
                 f"{len(gone)} file(s) of {table} were replaced by a "
                 f"concurrent write (e.g. {gone[0]}); nothing published"
             )
-    jvm = spark._jvm
-    Path = jvm.org.apache.hadoop.fs.Path
-    dst = Path(loc)
-    fs = dst.getFileSystem(spark._jsc.hadoopConfiguration())
-    src = Path(staged_dir)
+    files = _Files(spark, loc)
+    staged_dir = staged_dir.rstrip("/")
     news = _versions._list_data_files(spark, staged_dir)
     for rel, _ in news:
-        target = Path(dst, rel)
-        if "/" in rel:
-            fs.mkdirs(target.getParent())
-        # FileSystem.rename signals failure by RETURN VALUE, not by
-        # raising — a silently skipped file would be data loss
-        if not fs.rename(Path(src, rel), target):
+        # a failed rename is a return value, not an exception — a
+        # silently skipped file would be data loss
+        if not files.rename(f"{staged_dir}/{rel}", f"{loc}/{rel}"):
             raise IOError(
                 f"publish rename failed for {staged_dir}/{rel} -> {loc}; "
                 f"incumbent files untouched (earlier staged renames may "
@@ -340,11 +466,11 @@ def publish(
     old_paths = [f"{loc}/{rel}" for rel in sorted(olds)]
     if not retain or not _versions.retire_files(spark, table, old_paths, loc=loc):
         for f in old_paths:
-            fs.delete(Path(f), False)
+            files.delete(f)
     _versions.note_published_files(
         table, sorted([(r, n) for r, n in live.items() if r not in olds] + news)
     )
-    spark.catalog.refreshTable(table)
+    _refresh(spark, table, loc)
 
 
 class StagingPin:
@@ -1031,18 +1157,45 @@ def _expands_past_cap(new_sub) -> bool:
 def _write_staged_arrow(base: str, tbl, slices: int = 1) -> None:
     """Driver-side parquet write of ``tbl`` into the OS directory
     ``base``: ``slices`` files of even row counts, the split Spark gives
-    a local relation over ``slices`` partitions."""
+    a local relation over ``slices`` partitions. Each file
+    dictionary-encodes only the columns a dictionary shrinks
+    (:func:`_dictionary_columns`)."""
     import pyarrow.parquet as pq
 
     os.makedirs(base, exist_ok=True)
     job, n = uuid.uuid4().hex, tbl.num_rows
     for i in range(slices):
         lo, hi = i * n // slices, (i + 1) * n // slices
+        part = tbl.slice(lo, hi - lo)
         pq.write_table(
-            tbl.slice(lo, hi - lo),
+            part,
             f"{base}/part-{i:05d}-{job}-c000.{PARQUET_CODEC}.parquet",
             compression=PARQUET_CODEC,
+            use_dictionary=_dictionary_columns(part),
         )
+
+
+# rows _dictionary_columns judges a file's columns on: counting distinct
+# values hashes every one, and a 25k-row append of ten string columns
+# would spend ~20 ms on it
+_DICTIONARY_SAMPLE = 1024
+
+
+def _dictionary_columns(tbl) -> list[str]:
+    """The columns of ``tbl`` worth a dictionary page: at most half as
+    many distinct values as rows among the first
+    :data:`_DICTIONARY_SAMPLE`. pyarrow dictionary-encodes every column
+    by default; on mostly-unique values (YCSB's random strings) the
+    dictionary repeats the data and the file is ~10% larger than plain
+    encoding, which is what parquet-mr's writer falls back to."""
+    import pyarrow.compute as pc
+
+    head = tbl.slice(0, _DICTIONARY_SAMPLE)
+    half = head.num_rows // 2
+    return [
+        name for name, col in zip(head.column_names, head.columns)
+        if pc.count_distinct(col).as_py() <= half
+    ]
 
 
 def _driver_rewrite(
@@ -1087,6 +1240,7 @@ def _file_granular_cow(
     where: str,
     transform,
     files: list[str],
+    schema: T.StructType,
     loc=_UNRESOLVED,
     driver_ok: bool = True,
 ) -> bool:
@@ -1098,10 +1252,10 @@ def _file_granular_cow(
     True when published; False → caller runs the full-table path. At
     100 TB this turns a point UPDATE from a table rewrite into a
     one-file rewrite."""
-    # the table schema is already in the session catalog — passing it
-    # skips the read's driver-side footer-inference round-trip; the
-    # alias resolves table-qualified columns (`WHERE t.k = 1`)
-    sub = spark.read.schema(spark.table(table).schema).parquet(*files).alias(
+    # passing the table ``schema`` skips the read's driver-side
+    # footer-inference round-trip; the alias resolves table-qualified
+    # columns (`WHERE t.k = 1`)
+    sub = spark.read.schema(schema).parquet(*files).alias(
         table.split(".")[-1].strip('`"')
     )
     new_sub = transform(sub)
@@ -1133,10 +1287,10 @@ _HIT = "_swl_hit"
 # split into key-sorted files of _POINT_FILE_BYTES Arrow bytes, but into
 # at most _POINT_SPLIT of them: each point write adds at most that many
 # files, and repeated writes near one key shrink its file geometrically
-# (a 128 MB file to 16 MB, 2 MB, 256 KB) until the next one there
-# rewrites and retains at most about _POINT_FILE_BYTES. CHECKPOINT
+# (a 128 MB file to 16 MB, 2 MB, 256 KB, 64 KB) until the next one
+# there rewrites and retains at most about _POINT_FILE_BYTES. CHECKPOINT
 # compacts the small files.
-_POINT_FILE_BYTES = 256 << 10
+_POINT_FILE_BYTES = 64 << 10
 _POINT_SPLIT = 8
 # the SET values a bound parameter renders to (session._render_literal)
 _BOUND_LITERAL = re.compile(
@@ -1146,25 +1300,54 @@ _BOUND_LITERAL = re.compile(
 )
 
 
+# a string literal as session._render_literal renders a bound str: its
+# only escapes are '' and \\ (Spark's default escapedStringLiterals=false
+# reads \\ as one backslash, which is why the renderer doubles them)
+_RENDERED_STRING = re.compile(r"^\s*'((?:[^'\\]|''|\\\\)*)'\s*$", re.DOTALL)
+_RENDERED_ESCAPE = re.compile(r"''|\\\\")
+_NULL_LITERAL = re.compile(r"^\s*NULL\s*$", re.IGNORECASE)
+# _literal_value's answer when only Spark may evaluate the text
+_SPARK = object()
+
+
+def _literal_value(text: str, type_name: str):
+    """The value Spark gives ``CAST((text) AS type_name)``, computed in
+    Python where that is exactly the literal — ``NULL``, or a rendered
+    string literal (:data:`_RENDERED_STRING`) into a ``string`` column —
+    else :data:`_SPARK`."""
+    if _NULL_LITERAL.match(text):
+        return None
+    m = _RENDERED_STRING.match(text) if type_name == "string" else None
+    if m is None:
+        return _SPARK
+    return _RENDERED_ESCAPE.sub(lambda e: e.group()[0], m.group(1))
+
+
 def _set_values(spark: SparkSession, schema, assignments, arrow_schema) -> dict:
-    """Each SET column's new value as an Arrow scalar. Spark evaluates
-    the ``CAST((v) AS t)`` text :func:`apply_update` would, over a
-    one-row VALUES relation — optimized into a local relation, so no
-    job runs — and keeps its own (ANSI) cast errors."""
+    """Each SET column's new value as an Arrow scalar. A value that is
+    exactly its literal (:func:`_literal_value`) is computed in Python.
+    Spark evaluates the others as the ``CAST((v) AS t)`` text
+    :func:`apply_update` would, over a one-row VALUES relation —
+    optimized into a local relation, so no job runs — and keeps its own
+    (ANSI) cast errors."""
     import pyarrow as pa
 
     types = {f.name: f.dataType.simpleString() for f in schema.fields}
-    sel = ", ".join(
-        f"CAST(({v}) AS {types[c]}) AS {quote_identifier(c)}"
-        for c, v in assignments.items()
-    )
-    row = spark.sql(f"SELECT {sel} FROM VALUES (1) AS _one(_x)").collect()[0]
+    values = {c: _literal_value(v, types[c]) for c, v in assignments.items()}
+    rest = [c for c, v in values.items() if v is _SPARK]
+    if rest:
+        sel = ", ".join(
+            f"CAST(({assignments[c]}) AS {types[c]}) AS {quote_identifier(c)}"
+            for c in rest
+        )
+        row = spark.sql(f"SELECT {sel} FROM VALUES (1) AS _one(_x)").collect()[0]
+        values.update(zip(rest, row))
     return {
         c: pa.scalar(
             bytes(v) if isinstance(v, bytearray) else v,
             arrow_schema.field(c).type,
         )
-        for c, v in zip(assignments, row)
+        for c, v in values.items()
     }
 
 
@@ -2055,10 +2238,11 @@ def update_table(
     probe/publish windows (lost updates, double file swaps)."""
     from swanlake_spark import versions
 
-    loc, part_cols = _table_info(spark, table)
+    loc, part_cols, schema = _table_meta(spark, table)
     with table_write_lock(spark, table, loc=loc):
         affected = _update_table_locked(
-            spark, table, assignments, where, loc=loc, part_cols=part_cols
+            spark, table, assignments, where, loc=loc, part_cols=part_cols,
+            schema=schema,
         )
         if affected:
             versions.record_version(spark, table, "update", loc=loc)
@@ -2073,9 +2257,8 @@ def _update_table_locked(
     loc=_UNRESOLVED,
     *,
     part_cols: list[str],
+    schema: T.StructType,
 ) -> int:
-    df = spark.table(table)
-
     # CHECK constraints (DuckDB enforces them on UPDATE too) plus
     # child-side FK revalidation when the UPDATE reassigns one of this
     # table's OWN foreign-key columns (``UPDATE child SET pid = 99``
@@ -2127,7 +2310,7 @@ def _update_table_locked(
         affected, driver_ok = None, True
         if _unconstrained(table):
             affected, driver_ok = _pruned_cow(
-                spark, table, df.schema, where, assignments, loc
+                spark, table, schema, where, assignments, loc
             )
         if affected is not None:
             return affected
@@ -2142,14 +2325,19 @@ def _update_table_locked(
                 apply_update(sub, assignments, where, alias=table)
             ),
             files,
+            schema,
             loc=loc,
             driver_ok=driver_ok,
         ):
             return affected
     else:
-        affected = _count_matching(spark, table, where) if where else df.count()
+        affected = (
+            _count_matching(spark, table, where) if where
+            else spark.table(table).count()
+        )
         if affected == 0:
             return 0
+    df = spark.table(table)
     overwrite_where = None if part_cols & set(assignments) else where
     stage = StagingPin(spark, table, loc=loc)
     try:
@@ -2176,10 +2364,10 @@ def delete_from(spark: SparkSession, table: str, where: str | None = None) -> in
     table, see :func:`update_table`)."""
     from swanlake_spark import versions
 
-    loc, part_cols = _table_info(spark, table)
+    loc, part_cols, schema = _table_meta(spark, table)
     with table_write_lock(spark, table, loc=loc):
         affected = _delete_from_locked(
-            spark, table, where, loc=loc, part_cols=part_cols
+            spark, table, where, loc=loc, part_cols=part_cols, schema=schema
         )
         if affected:
             versions.record_version(spark, table, "delete", loc=loc)
@@ -2193,8 +2381,8 @@ def _delete_from_locked(
     loc=_UNRESOLVED,
     *,
     part_cols: list[str],
+    schema: T.StructType,
 ) -> int:
-    df = spark.table(table)
     # Parent-side FOREIGN KEY guard (DuckDB rejects deleting referenced
     # rows): checked before any rewrite starts. Free when no child
     # references this table.
@@ -2206,9 +2394,12 @@ def _delete_from_locked(
         elif where_has_subquery(where):
             deleted = spark.sql(f"SELECT * FROM {table} WHERE {where}")
         else:
-            deleted = df.filter(F.expr(where).eqNullSafe(F.lit(True)))
+            deleted = spark.table(table).filter(
+                F.expr(where).eqNullSafe(F.lit(True))
+            )
         constraints.enforce_fks_delete(spark, table, deleted)
     if where is None:
+        df = spark.table(table)
         affected = df.count()
         _overwrite(spark, table, df.limit(0), None, loc=loc)
         return affected
@@ -2217,7 +2408,7 @@ def _delete_from_locked(
         affected, driver_ok = None, True
         if _unconstrained(table):
             affected, driver_ok = _pruned_cow(
-                spark, table, df.schema, where, None, loc
+                spark, table, schema, where, None, loc
             )
         if affected is not None:
             return affected
@@ -2230,6 +2421,7 @@ def _delete_from_locked(
             where,
             lambda sub: apply_delete(sub, where, alias=table),
             files,
+            schema,
             loc=loc,
             driver_ok=driver_ok,
         ):
@@ -2240,7 +2432,7 @@ def _delete_from_locked(
             return 0
     stage = StagingPin(spark, table, loc=loc)
     try:
-        new_df = apply_delete(df, where, alias=table, pin=stage)
+        new_df = apply_delete(spark.table(table), where, alias=table, pin=stage)
     except BaseException:
         stage.cleanup()  # planning failed; nothing published — tidy up
         raise

@@ -221,24 +221,25 @@ def insert_arrow(
     table: str,
     batches: pa.Table | pa.RecordBatch | list[pa.RecordBatch],
     insert_columns: list[str] | None = None,
+    meta: tuple | None = None,
 ) -> int:
     """The appender: Arrow data → aligned → appended to ``table`` (see
     the module docstring for its two producers). Returns the appended
     row count (the reference returns the same from
-    ``insert_with_appender``)."""
+    ``insert_with_appender``). ``meta`` is the table's
+    ``dml._table_meta`` when the caller already looked it up."""
+    from swanlake_spark import constraints, versions
+    from swanlake_spark.operators import dml
+
     if isinstance(batches, pa.RecordBatch):
         tbl = pa.Table.from_batches([batches])
     elif isinstance(batches, list):
         tbl = pa.Table.from_batches(batches)
     else:
         tbl = batches
-    target = spark.table(table).schema
+    loc, part_cols, target = meta or dml._table_meta(spark, table)
     tbl = normalize_arrow_for_spark(tbl, target)
     sources = source_columns(tbl.column_names, target, insert_columns)
-    from swanlake_spark import constraints, versions
-    from swanlake_spark.operators import dml
-
-    loc, part_cols = dml._table_info(spark, table)
     aligned = None
     if tbl.num_rows and not part_cols and loc and dml._local_os_path(loc):
         aligned = _driver_aligned(tbl, target, sources)
@@ -262,7 +263,7 @@ def insert_arrow(
         # error_status.test:6-13).
         if aligned is None:
             constraints.check_insert_batch(
-                spark, table, rows, arrow=by_target, loc=loc
+                spark, table, rows, arrow=by_target, loc=loc, schema=target
             )
             rows.write.insertInto(table)
         else:

@@ -1,12 +1,14 @@
-"""Shared correctness-comparison helpers (used by tests and
-tools/compare_oracle.py): order-insensitive DataFrame comparison against
-a DuckDB oracle, mirroring the driver's row-count + columns + value
-check."""
+"""Shared helpers for tests and tools: order-insensitive DataFrame
+comparison against a DuckDB oracle, mirroring the driver's row-count +
+columns + value check (tools/compare_oracle.py), and a count of the
+Py4J round trips a block of code makes (tools/point_write_probe.py)."""
 
 from __future__ import annotations
 
 import math
 import os
+import threading
+from contextlib import contextmanager
 
 import pandas as pd
 
@@ -76,3 +78,27 @@ def compare_frames(spark_df: pd.DataFrame, duck_df: pd.DataFrame) -> list[str]:
                 if len(issues) > 3:
                     return issues
     return issues
+
+
+@contextmanager
+def py4j_calls(spark):
+    """Count the Py4J round trips this thread makes to the JVM inside the
+    block: yields a one-item list whose item is the count. Every Java
+    call, field read and object lookup is one ``send_command`` on the
+    gateway client; calls from other threads (py4j's finalizer thread
+    releasing Java objects, other sessions) pass through uncounted."""
+    client = spark.sparkContext._gateway._gateway_client
+    orig = client.send_command
+    me = threading.get_ident()
+    count = [0]
+
+    def counted(*args, **kwargs):
+        if threading.get_ident() == me:
+            count[0] += 1
+        return orig(*args, **kwargs)
+
+    client.send_command = counted
+    try:
+        yield count
+    finally:
+        client.send_command = orig

@@ -359,39 +359,42 @@ def retire_files(
     loc: str | None = None,
 ) -> bool:
     """Move retiring data files into the retained dir instead of
-    deleting them (rename = metadata op on a real FileSystem). Returns
-    False when versioning is off or the move isn't possible — the
-    caller falls back to deletion (snapshot hole, resolved loudly at
-    read time)."""
+    deleting them (rename = metadata op on a real FileSystem; OS calls
+    for a local location, see ``dml._Files``). Returns False when
+    versioning is off or a move isn't possible — the caller falls back
+    to deletion (snapshot hole, resolved loudly at read time)."""
+    from swanlake_spark.operators import dml
+
     if not _ENABLED:
         return False
     if loc is None:
-        from swanlake_spark.operators.dml import _table_location
-
-        loc = _table_location(spark, table)
+        loc = dml._table_location(spark, table)
     if loc is None:
         return False
     root = versions_root(spark, table, loc)
     if root is None:
         return False
-    jvm, fs, rdir = _fs(spark, _retained_dir(root))
+    files = dml._Files(spark, loc)
+    rdir = _retained_dir(root)
     loc = loc.rstrip("/")
+    base = dml._local_os_path(loc) or loc
     for f in paths:
-        src = jvm.org.apache.hadoop.fs.Path(f)
-        if not fs.exists(src):
+        kind = files.kind(f)
+        if kind is None:
             continue
-        if fs.getFileStatus(src).isDirectory():
+        if kind == "dir":
             # whole-directory retirement isn't modeled; the caller
             # deletes it (documented hole)
             return False
-        fstr = src.toString()
-        rel = fstr[len(loc) + 1 :] if fstr.startswith(loc + "/") else src.getName()
+        if files.local:
+            p = dml._local_os_path(f)
+        else:
+            p = dml._hadoop_path(spark.sparkContext._jvm)(f).toString()
+        rel = p[len(base) + 1 :] if p.startswith(base + "/") else p.rsplit("/", 1)[-1]
         # MIRROR the table-relative path under retained/ (not a flat
         # rename): partition-dir structure survives, so snapshot reads
         # recover directory-encoded partition values via basePath.
-        dst = jvm.org.apache.hadoop.fs.Path(rdir, rel)
-        fs.mkdirs(dst.getParent())
-        if not fs.rename(src, dst):
+        if not files.rename(f, f"{rdir}/{rel}"):
             return False
     return True
 

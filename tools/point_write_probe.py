@@ -19,17 +19,20 @@ times ``--reps`` calls each of
 - the same UPDATE with an extra term the footer bounds do not cover
   (``AND field0 <> ''``), which takes the Spark producer,
 - a point DELETE of one existing key (``Engine.execute_update``),
-- a one-row append of a fresh key (``operators.ingest.insert_arrow``,
-  the Flight SQL prepared-INSERT path),
+- a one-row append of a fresh key as Flight SQL's DoPut sends it: the
+  positional parameter batch of a prepared ``INSERT … VALUES (?, …)``
+  (``flightsql.append_parameters``, which names the columns after the
+  table's and appends them with ``operators.ingest.insert_arrow``),
 - a ``CHECKPOINT`` (the compaction that stages the table's files and
   publishes them under the table write lock), each after
   ``APPENDS_PER_CHECKPOINT`` untimed one-row appends,
 - a ``BULK_ROWS``-row append of fresh keys, the size of one perfbench
   ``ycsb_mix`` load batch.
 
-For each it prints the median and quartiles of milliseconds per call and
-the Spark jobs per call (counted with a job group and the status
-tracker). The first call of each kind is a warm-up and is not counted.
+For each it prints the median and quartiles of milliseconds per call, the
+Spark jobs per call (counted with a job group and the status tracker) and
+the Py4J round trips to the JVM per call (``testing.py4j_calls``). The
+first call of each kind is a warm-up and is not counted.
 """
 
 from __future__ import annotations
@@ -71,7 +74,10 @@ def main() -> None:
     from swanlake_spark import versions
     from swanlake_spark.config import EngineConfig
     from swanlake_spark.engine import Engine
+    from swanlake_spark.flightsql import append_parameters
     from swanlake_spark.operators.ingest import insert_arrow
+    from swanlake_spark.plans.parser import insert_info
+    from swanlake_spark.testing import py4j_calls
 
     rng = random.Random(args.seed)
     eng = Engine(
@@ -107,6 +113,9 @@ def main() -> None:
     next_key = args.rows
 
     point_read = eng.statement(f"SELECT * FROM {table} WHERE ycsb_key = ?")
+    insert = insert_info(
+        f"INSERT INTO {table} VALUES ({', '.join('?' * (1 + len(_FIELDS)))})"
+    )
     scan_keys = eng.statement(
         f"SELECT * FROM {table} WHERE ycsb_key >= ? AND ycsb_key < ? "
         "ORDER BY ycsb_key NULLS LAST"
@@ -132,8 +141,9 @@ def main() -> None:
 
     def append() -> None:
         nonlocal next_key
-        row = {"ycsb_key": [next_key]} | {f: [_value(rng)] for f in _FIELDS}
-        insert_arrow(spark, table, pa.table(row))
+        values = [pa.array([next_key], pa.int32())] + [[_value(rng)] for _ in _FIELDS]
+        params = pa.table({f"p{i}": v for i, v in enumerate(values)})
+        assert append_parameters(spark, insert, params) == 1
         live.append(next_key)
         next_key += 1
 
@@ -168,21 +178,24 @@ def main() -> None:
         if prep:
             prep()
         fn()  # warm-up
-        ms, jobs = [], []
+        ms, jobs, calls = [], [], []
         for _ in range(args.reps):
             if prep:
                 prep()
             group = f"pwp_{uuid.uuid4().hex}"
             sc.setJobGroup(group, name)
-            t0 = time.perf_counter()
-            fn()
-            ms.append((time.perf_counter() - t0) * 1000)
+            with py4j_calls(spark) as n:
+                t0 = time.perf_counter()
+                fn()
+                ms.append((time.perf_counter() - t0) * 1000)
             sc.setLocalProperty("spark.jobGroup.id", None)
             jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+            calls.append(n[0])
         q1, med, q3 = statistics.quantiles(ms, n=4)
         print(
             f"{name:12s} ms/call median {med:7.1f} (quartiles {q1:.1f}-{q3:.1f})"
             f"  spark jobs/call {statistics.mean(jobs):.2f}"
+            f"  py4j calls/call {statistics.mean(calls):.1f}"
         )
     eng.stop()
 
