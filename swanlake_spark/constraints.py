@@ -42,10 +42,9 @@ _PK_REGISTRY: dict[str, list[str]] = {}
 # (``<parent>/_versions/<table>/_swl_constraints.json``), lazy-loaded on
 # first touch per table, so a restarted engine keeps enforcing every
 # previously declared constraint. The ``_versions`` sibling — not the
-# table root — is deliberate: overwrite-shaped publishes (SQL INSERT
-# OVERWRITE, ``insertInto(overwrite=True)``, full partitioned rewrites)
-# clear the TABLE ROOT, and a root-resident sidecar silently vanished
-# with them while the in-process cache masked the loss until restart.
+# table root — is deliberate: a user's SQL INSERT OVERWRITE clears the
+# TABLE ROOT, and a root-resident sidecar silently vanished with it
+# while the in-process cache masked the loss until restart.
 # The sibling dir survives every data publish and is removed by the same
 # engine paths that remove a dropped/CTAS-replaced table's version
 # history, so constraint lifetime tracks table lifetime exactly. Legacy

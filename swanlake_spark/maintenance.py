@@ -9,10 +9,10 @@ target-sized files. Mutual exclusion uses an O_EXCL lock file (any
 external mutex works; the semantics match the advisory lock's
 acquire-or-skip behavior).
 
-At cluster scale compaction is partition-granular: only partitions whose
-file count exceeds the threshold are rewritten, and the rewrite is a
-repartition to ceil(bytes/target) — a shuffle sized to the data being
-compacted, not the table.
+At cluster scale compaction is partition-granular: only partition leaf
+directories whose file count exceeds the threshold are rewritten, and
+the rewrite is a repartition to ceil(bytes/target) — a shuffle sized to
+the data being compacted, not the table.
 
 Compaction and clustering follow the engine's one write rule: stage the
 new files, then publish them (``dml.publish``) under the table write
@@ -28,13 +28,14 @@ import threading
 import time
 
 from pyspark.sql import SparkSession
+from pyspark.sql import types as T
 
 from swanlake_spark import versions
 from swanlake_spark.errors import FailedPrecondition, InvalidArgument
 from swanlake_spark.operators.dml import (
-    _overwrite,
-    _partition_columns,
     _rm_path,
+    _table_info,
+    _table_meta,
     _WriteLock,
     publish,
     staging_dir,
@@ -50,85 +51,15 @@ class CompactionLock(_WriteLock):
     caller breaks it and the one after acquires."""
 
 
-def table_location(spark: SparkSession, table: str) -> str | None:
-    for row in spark.sql(f"DESCRIBE TABLE EXTENDED {table}").collect():
-        if row.col_name.strip() == "Location":
-            loc = row.data_type.strip()
-            if loc.startswith("file:"):
-                loc = loc[len("file:"):]
-                # normalize file://host/path and file:///path forms
-                while loc.startswith("//"):
-                    loc = loc[1:]
-            return loc
-    return None
-
-
 def _live_parquet(spark: SparkSession, loc: str) -> list[tuple[str, int]]:
-    """(relative path, size) of the parquet data files under ``loc``, an
-    unpartitioned table or a partition leaf: what compaction and
-    clustering rewrite. Other files (a non-parquet table's) are left
-    alone."""
+    """(relative path, size) of the parquet data files under ``loc``, a
+    table or a partition leaf: what compaction and clustering rewrite.
+    Other files (a non-parquet table's) are left alone."""
     return [
         (rel, size)
         for rel, size in versions._list_data_files(spark, loc)
         if rel.endswith(".parquet")
     ]
-
-
-def _partition_leaf_dirs(spark: SparkSession, location: str) -> list[str]:
-    """Hive-layout leaf partition directories (k=v path segments) under
-    a table location, via the table's FileSystem."""
-    jvm = spark._jvm
-    root = jvm.org.apache.hadoop.fs.Path(location)
-    fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(root):
-        return []
-    leaves, stack = [], [root]
-    while stack:
-        d = stack.pop()
-        subdirs = []
-        for st in fs.listStatus(d):
-            name = st.getPath().getName()
-            if st.isDirectory() and "=" in name and not name.startswith(("_", ".")):
-                subdirs.append(st.getPath())
-        if subdirs:
-            stack.extend(subdirs)
-        elif "=" in d.getName():
-            leaves.append(d.toString())
-    return leaves
-
-
-def _partition_predicate(location: str, leaf: str):
-    """(human-readable predicate string, Column) for a leaf partition
-    dir like .../day=2026-01-01/hour=3."""
-    from urllib.parse import unquote
-
-    from pyspark.sql import functions as F
-
-    # Take the trailing k=v segments (the leaf's path may carry a
-    # file:/hdfs: scheme the DESCRIBE location string doesn't, so a
-    # prefix-length strip is unreliable).
-    segs: list[str] = []
-    for seg in reversed(leaf.rstrip("/").split("/")):
-        if "=" not in seg:
-            break
-        segs.append(seg)
-    segs.reverse()
-    cond, texts = None, []
-    for seg in segs:
-        k, _, v = seg.partition("=")
-        v = unquote(v)
-        if v == "__HIVE_DEFAULT_PARTITION__":
-            c = F.col(k).isNull()
-            texts.append(f"{k} IS NULL")
-        else:
-            c = F.col(k).cast("string") == F.lit(v)
-            # SQL-escape the value: a partition value containing a quote
-            # (name=O'Brien) must not break — or inject into — the
-            # predicate text handed to F.expr.
-            texts.append(f"{k} = '{v.replace(chr(39), chr(39) * 2)}'")
-        cond = c if cond is None else (cond & c)
-    return " AND ".join(texts), cond
 
 
 def analyze_table(
@@ -161,43 +92,44 @@ def compact_table(
     target_file_bytes: int = 128 * 1024 * 1024,
     min_files: int = 4,
 ) -> dict:
-    """Rewrite a table's data files into ~target-sized files if it has
-    accumulated more than ``min_files`` small parts. Returns a stats
-    dict (files before/after, bytes). The files it read are rewritten
-    into staging beside the table and published in their place under
-    the table write lock (:func:`_rewrite_files`); ``compacted`` is
-    False when a concurrent write replaced one of them first.
-
-    Partitioned tables are compacted PARTITION-GRANULAR: only leaf
-    partitions whose file count exceeds the threshold are rewritten
-    (dynamic partition overwrite), so at 100 TB a hot day's small files
-    compact without touching the other partitions."""
-    loc = table_location(spark, table)
-    if loc and _partition_columns(spark, table):
-        return _compact_partitioned(
-            spark, table, loc, target_file_bytes, min_files
-        )
+    """Rewrite a table's data files into ~target-sized files where they
+    have piled up: each directory holding them — the table root, or a
+    leaf partition of a partitioned table — with more than
+    ``min_files`` small parts is compacted on its own, so at 100 TB a
+    hot day's small files compact without touching the other
+    partitions. Returns a stats dict (files before/after, bytes). The
+    files a directory's rewrite read are staged beside the table and
+    published in their place under the table write lock
+    (:func:`_rewrite_files`), one snapshot per directory; ``compacted``
+    is False when no directory was rewritten, e.g. because a concurrent
+    write replaced one of its files first."""
+    loc, part_cols, schema = _table_meta(spark, table)
     parts = _live_parquet(spark, loc) if loc else []
-    total_bytes = sum(size for _, size in parts)
+    leaves: dict[str, list[tuple[str, int]]] = {}
+    for rel, size in parts:
+        leaves.setdefault(rel.rpartition("/")[0], []).append((rel, size))
+    # a data file holds the table's columns less the partition columns
+    columns = T.StructType([f for f in schema.fields if f.name not in part_cols])
     stats = {
         "table": table,
         "files_before": len(parts),
-        "bytes": total_bytes,
+        "bytes": sum(size for _, size in parts),
         "compacted": False,
         "files_after": len(parts),
     }
-    if len(parts) <= min_files or total_bytes == 0:
-        return stats
-    n_files = max(1, -(-total_bytes // target_file_bytes))  # ceil
-    if n_files >= len(parts):
-        return stats
-    # compaction deletes its inputs (retain=False): retaining them would
-    # keep one more copy of the table per CHECKPOINT
-    if _rewrite_files(
-        spark, table, loc, parts, lambda df: df.repartition(int(n_files)),
-        "compact", retain=False,
-    ):
-        stats["compacted"] = True
+    for leaf in leaves.values():
+        nbytes = sum(size for _, size in leaf)
+        n_files = max(1, -(-nbytes // target_file_bytes))  # ceil
+        if len(leaf) <= min_files or nbytes == 0 or n_files >= len(leaf):
+            continue
+        # compaction deletes its inputs (retain=False): retaining them
+        # would keep one more copy of the table per CHECKPOINT
+        stats["compacted"] |= _rewrite_files(
+            spark, table, loc, leaf,
+            lambda df, n=int(n_files): df.repartition(n),
+            "compact", retain=False, schema=columns,
+        )
+    if stats["compacted"]:
         stats["files_after"] = len(_live_parquet(spark, loc))
         analyze_table(spark, table)
     return stats
@@ -211,19 +143,24 @@ def _rewrite_files(
     build,
     op: str,
     retain: bool,
+    schema=None,
 ) -> bool:
-    """Rewrite exactly the live files ``parts`` (relative path, size) of
-    an unpartitioned table through ``build`` and publish the result in
-    their place. The rewrite is staged outside the table write lock;
-    only the publish and its manifest run under it, so writers wait for
-    a rename, not for the rewrite. Files appended meanwhile survive
+    """Rewrite exactly the live files ``parts`` (relative path, size)
+    of one directory of the table — its root, or a partition leaf —
+    through ``build`` and publish the result in their place. The files
+    are read with ``schema`` (default: the table's; a partition leaf's
+    files hold the data columns only) and the rewrite is staged under
+    the same relative directory, outside the table write lock; only the
+    publish and its manifest run under it, so writers wait for a
+    rename, not for the rewrite. Files appended meanwhile survive
     beside the new ones. Returns False, publishing nothing, when a
     concurrent write retired one of ``parts`` first."""
+    leaf = parts[0][0].rpartition("/")[0]
     paths = [f"{loc.rstrip('/')}/{rel}" for rel, _ in parts]
     staging = staging_dir(spark, table, loc)
     try:
-        df = spark.read.schema(spark.table(table).schema).parquet(*paths)
-        build(df).write.parquet(staging, mode="overwrite")
+        df = spark.read.schema(schema or spark.table(table).schema).parquet(*paths)
+        build(df).write.parquet(f"{staging}/{leaf}", mode="overwrite")
     except Exception:
         _rm_path(spark, staging)
         live = dict(versions._list_data_files(spark, loc))
@@ -239,49 +176,6 @@ def _rewrite_files(
         versions.record_version(spark, table, op, loc=loc)
     _rm_path(spark, staging)
     return True
-
-
-def _compact_partitioned(
-    spark: SparkSession,
-    table: str,
-    loc: str,
-    target_file_bytes: int,
-    min_files: int,
-) -> dict:
-    """Per-partition compaction: rewrite only leaf partitions with more
-    than ``min_files`` parquet files, via the COW dynamic-partition
-    overwrite path (cluster-safe staging), each under the table write
-    lock so an append cannot land between its read and its publish."""
-    leaves = _partition_leaf_dirs(spark, loc)
-    files_before = files_after = 0
-    total_bytes = 0
-    compacted_any = False
-    for leaf in leaves:
-        parts = _live_parquet(spark, leaf)
-        nbytes = sum(size for _, size in parts)
-        files_before += len(parts)
-        total_bytes += nbytes
-        n_files = max(1, -(-nbytes // target_file_bytes))  # ceil
-        if len(parts) <= min_files or nbytes == 0 or n_files >= len(parts):
-            files_after += len(parts)
-            continue
-        where_text, cond = _partition_predicate(loc, leaf)
-        with table_write_lock(spark, table, loc=loc):
-            pdf = spark.table(table).filter(cond).repartition(int(n_files))
-            _overwrite(spark, table, pdf, where_text, loc=loc)
-        compacted_any = True
-        files_after += len(_live_parquet(spark, leaf))
-    if compacted_any:
-        analyze_table(spark, table)
-        with table_write_lock(spark, table, loc=loc):
-            versions.record_version(spark, table, "compact", loc=loc)
-    return {
-        "table": table,
-        "files_before": files_before,
-        "bytes": total_bytes,
-        "compacted": compacted_any,
-        "files_after": files_after,
-    }
 
 
 class CheckpointService:
@@ -427,12 +321,12 @@ def cluster_table(
     measurable."""
     from pyspark.sql import functions as F
 
-    if _partition_columns(spark, table):
+    loc, part_cols = _table_info(spark, table)
+    if part_cols:
         raise InvalidArgument(
             "cluster_table targets unpartitioned tables; Z-order within "
             "partitions by clustering before the partitioned write"
         )
-    loc = table_location(spark, table)
     if loc is None:
         raise InvalidArgument(f"no resolvable location for table {table}")
     parts = _live_parquet(spark, loc)

@@ -19,15 +19,15 @@ SQL surface (engine.py routes these):
   (versions.py records a snapshot per refresh).
 - ``REFRESH MATERIALIZED VIEW mv WHERE <pred>`` — partial refresh:
   recompute only the rows matching ``pred`` (pushed into the defining
-  query) and overwrite just those rows; with a partitioned view this is
-  the dynamic-partition overwrite, i.e. a day's rollup refresh touches
-  one partition. The predicate must reference output columns of the
-  view.
+  query) and replace just those rows: only the view's files holding
+  matching rows are rewritten, so on a day-partitioned view a day's
+  rollup refresh touches that day's files. The predicate must reference
+  output columns of the view.
 - ``DROP MATERIALIZED VIEW mv`` — drop table + sidecar.
 
 Scale notes: refresh cost equals the defining query (Catalyst optimizes
 it like any other); partial refresh bounds the rewrite to the matched
-partitions. The sidecar is one tiny JSON — never a data copy.
+files. The sidecar is one tiny JSON — never a data copy.
 """
 
 from __future__ import annotations
@@ -1426,7 +1426,8 @@ def refresh_incremental(spark: SparkSession, name: str) -> int:
         state_published = False
         published = False
         maintain_state = state_mode != "none"
-        if small and not dml._partition_columns(spark, name):
+        part_cols = dml._partition_columns(spark, name)
+        if small and not part_cols:
             # ONE Arrow collect serves both publishes: the combined
             # projection carries the view columns AND the state
             # components, the driver slices it into the two parquet
@@ -1445,17 +1446,7 @@ def refresh_incremental(spark: SparkSession, name: str) -> int:
                         spark, staging, tbl.select(view_order)
                     )
                     if published:
-                        # new_df=None: the publish never reads the
-                        # staged frame, so don't pay its eager
-                        # construction
-                        dml._overwrite(
-                            spark,
-                            name,
-                            None,
-                            None,
-                            staged_path=staging,
-                            loc=view_loc,
-                        )
+                        dml.publish(spark, name, staging, None, view_loc)
                         dml._rm_path(spark, staging)
         if maintain_state and not state_published:
             _publish_state(
@@ -1468,12 +1459,8 @@ def refresh_incremental(spark: SparkSession, name: str) -> int:
                 loc=view_loc,
             )
         if not published:
-            dml._overwrite(
-                spark,
-                name,
-                _aligned(spark, name, combined),
-                None,
-                loc=view_loc,
+            dml.StagingPin(spark, name, view_loc, part_cols).publish(
+                _aligned(spark, name, combined), None
             )
         stamp_extra = {}
         if is_join:
@@ -1504,8 +1491,8 @@ def create(
     partition_by: list[str] | None = None,
 ) -> int:
     """CREATE MATERIALIZED VIEW: run the query, persist as a parquet
-    table (optionally partitioned — the prerequisite for
-    partition-scoped partial refresh), write the definition sidecar
+    table (optionally partitioned, so reads and a partial refresh's
+    match scan prune partitions), write the definition sidecar
     (with the base snapshot stamp when the definition is incrementally
     maintainable)."""
     if spark.catalog.tableExists(name):
@@ -1540,34 +1527,10 @@ def create(
     return spark.table(name).count()
 
 
-def _pred_columns(spark: SparkSession, name: str, where: str) -> set | None:
-    """Lower-cased column names the predicate references, resolved
-    against the view's schema via Catalyst (exact — identifiers inside
-    strings or function names never count). None when analysis fails;
-    callers treat that conservatively."""
-    from pyspark.sql import functions as F
-
-    try:
-        jplan = (
-            spark.table(name)
-            .filter(F.expr(where))
-            ._jdf.queryExecution()
-            .analyzed()
-        )
-        it = jplan.references().iterator()
-        cols = set()
-        while it.hasNext():
-            cols.add(it.next().name().lower())
-        return cols
-    except Exception:
-        return None
-
-
 def _aligned(spark: SparkSession, name: str, df: DataFrame) -> DataFrame:
-    """Reorder ``df`` to the table's column order before publishing.
+    """Reorder ``df`` to the table's column order before publishing:
     ``saveAsTable(partitionBy=...)`` moves partition columns to the end
-    of the saved schema, so a defining query that does not list them
-    last would otherwise positionally misalign through insertInto."""
+    of the saved schema, whatever the defining query's order."""
     return df.select(*[f.name for f in spark.table(name).schema.fields])
 
 
@@ -1575,11 +1538,10 @@ def refresh(
     spark: SparkSession, name: str, where: str | None = None
 ) -> int:
     """REFRESH MATERIALIZED VIEW: recompute the defining query and
-    publish through the COW overwrite path. With ``where``, only the
-    matching output rows recompute and overwrite (partition-scoped when
-    the view is partitioned AND the predicate references partition
-    columns exclusively). Returns the number of rows in the refreshed
-    region."""
+    publish it through the COW path (``dml.publish``). With ``where``,
+    only the matching output rows recompute, and only the view's files
+    holding matching rows are rewritten. Returns the number of rows in
+    the refreshed region."""
     q = definition(spark, name)
     if q is None:
         raise NotFound(f"{name} is not a materialized view")
@@ -1601,16 +1563,15 @@ def refresh(
         # is the stability proxy for the recomputed size — rollup
         # cardinality doesn't move between refreshes. Saves the
         # separate count() job and the distributed staging write.
+        loc, part_cols = dml._table_info(spark, name)
         try:
             small = _total_bytes(
                 spark, list(spark.table(name).inputFiles())
-            ) <= dml._DRIVER_REWRITE_MAX_BYTES and not dml._partition_columns(
-                spark, name
-            )
+            ) <= dml._DRIVER_REWRITE_MAX_BYTES and not part_cols
         except Exception:
             small = False
         n = None
-        with dml.table_write_lock(spark, name):
+        with dml.table_write_lock(spark, name, loc=loc):
             published = False
             state_published = False
             if small:
@@ -1645,20 +1606,12 @@ def refresh(
                         spark, staging, tbl.select(view_order)
                     ):
                         n = tbl.num_rows
-                        # new_df=None: see refresh_incremental's
-                        # staged publish — the publish never reads it
-                        dml._overwrite(
-                            spark,
-                            name,
-                            None,
-                            None,
-                            staged_path=staging,
-                        )
+                        dml.publish(spark, name, staging, None, loc)
                         dml._rm_path(spark, staging)
                         published = True
             if not published:
                 n = new_df.count()
-                dml._overwrite(spark, name, new_df, None)
+                dml.StagingPin(spark, name, loc, part_cols).publish(new_df, None)
             if stamp and not state_published:
                 _publish_state(
                     spark, name, state, _stamp_state_key(stamp),
@@ -1671,52 +1624,33 @@ def refresh(
                 # if no base publish landed across materialization
                 if not _stamp_still_current(spark, stamp):
                     stamp = {}
-            # A static INSERT OVERWRITE of a partitioned view clears the
-            # table root (sidecar included); re-write it so the
-            # definition stays durable across every publish shape.
+            # the sidecar carries the new stamp
             _write_sidecar(spark, name, q, **stamp)
             versions.record_version(spark, name, "matview_refresh")
         return n
     # Partial refresh = refresh-UPSERT on the predicate's region: the
     # predicate applies to the VIEW's output columns; the matching rows
     # recompute from source and replace the view's current matching
-    # region. The dynamic-partition overwrite (a day's rollup refresh
-    # rewrites one partition) applies ONLY when the predicate references
-    # partition columns exclusively — a narrower predicate (e.g.
-    # ``day='d2' AND domain='x'`` on a day-partitioned view) would
-    # replace all of d2 with just the domain='x' rows, silently dropping
-    # the rest of the partition. Any other predicate rebuilds as
-    # keep(NOT pred) ∪ recomputed, published through staging.
+    # region. Only the files holding matching rows are rewritten, as
+    # their non-matching rows ∪ the recomputed region; on a
+    # partitioned view each row lands in its own partition directory.
     new_df = _aligned(
         spark, name, spark.sql(f"SELECT * FROM ({q}) __mv WHERE {where}")
     )
     n = new_df.count()
-    part_cols = dml._partition_columns(spark, name)
-    pred_cols = _pred_columns(spark, name, where)
-    partition_scoped = (
-        bool(part_cols)
-        and pred_cols is not None
-        and pred_cols <= {c.lower() for c in part_cols}
-    )
-    with dml.table_write_lock(spark, name):
-        if partition_scoped:
-            affected = new_df.select(*part_cols).distinct()
-            dml._retain_partition_files(spark, name, part_cols, affected)
-            prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", "dynamic"
+    loc, part_cols, schema = dml._table_meta(spark, name)
+    with dml.table_write_lock(spark, name, loc=loc):
+        files, matched = dml._matched_files(spark, name, where, loc=loc)
+        if matched:
+            region = (
+                spark.table(name) if files is None
+                else dml._read_table_files(spark, files, schema, loc)
             )
-            try:
-                new_df.write.insertInto(name, overwrite=True)
-            finally:
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", prev
-                )
+            keep = region.filter(~F.coalesce(F.expr(where), F.lit(False)))
+            new_df = keep.unionByName(new_df)
         else:
-            keep = spark.table(name).filter(
-                ~F.coalesce(F.expr(where), F.lit(False))
-            )
-            dml._overwrite(spark, name, keep.unionByName(new_df), None)
+            files = []  # nothing to replace: the region is new rows
+        dml.StagingPin(spark, name, loc, part_cols).publish(new_df, files)
         # Partial refresh leaves the view reflecting TWO base
         # snapshots (the refreshed region sees newer base data than
         # the rest), so the incremental base stamp is no longer a
@@ -1724,7 +1658,9 @@ def refresh(
         # re-establishes it. Keeping the old stamp would double-count
         # appends inside the refreshed region on the next INCREMENTAL.
         _write_sidecar(spark, name, q)
-        versions.record_version(spark, name, "matview_refresh_partial")
+        versions.record_version(
+            spark, name, "matview_refresh_partial", loc=loc
+        )
     return n
 
 

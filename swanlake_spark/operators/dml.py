@@ -6,13 +6,15 @@ physical model is copy-on-write over immutable Parquet files. Spark's
 parquet tables have no DML, so this module implements the same
 physical strategy natively:
 
-- unpartitioned table → rewrite only the files holding matched rows
-  (or the whole table), stage the new files, and :func:`publish` them
-  in place of the old ones under :func:`table_write_lock` — the one
-  publish step every table rewrite shares;
-- partitioned table → rewrite only the partitions whose rows match the
-  predicate (dynamic partition overwrite), so at 100 TB an UPDATE that
-  touches one day's partition rewrites one partition, not the table.
+Every rewrite, partitioned table or not, stages its new files and
+swaps them in for the files it replaces with :func:`publish`, under
+:func:`table_write_lock` — the one publish step every table rewrite
+shares. A subquery-free UPDATE / DELETE / MERGE rewrites only the data
+files holding matched rows (file-granular copy-on-write, the DuckLake
+commit unit), so at 100 TB an UPDATE that touches one day's rows
+rewrites that day's files, not the table. A partitioned table's staged
+files sit in ``k=v`` directories (:func:`_stage_frame`), and the publish
+brings the catalog's partition list up to date from them.
 
 Affected-row counts are computed from the predicate (the reference
 returns them in ``x-swanlake-affected-rows``).
@@ -404,6 +406,13 @@ def publish(
     5. hand the new live set to the caller's ``record_version`` and
        refresh the table (:func:`_refresh`).
 
+    On a partitioned table the catalog's partition list follows the
+    files (:func:`_partition_dirs`): a directory that gains its first
+    live file in step 3 is added (``ADD IF NOT EXISTS PARTITION``)
+    before step 4, and one that step 4 leaves with no live file is
+    dropped (``DROP IF EXISTS PARTITION``) and removed after it. An
+    unpartitioned table's files sit in its root, so it costs no call.
+
     Renames and deletes are OS calls for a local location, Hadoop
     FileSystem calls for any other (:class:`_Files`).
 
@@ -463,18 +472,66 @@ def publish(
                 f"already be in place — remove them), staged data at "
                 f"{staged_dir}"
             )
+    kept = [(r, n) for r, n in live.items() if r not in olds]
+    new_names = [r for r, _ in news]
+    for d in sorted(_partition_dirs(new_names) - _partition_dirs(live)):
+        spark.sql(f"ALTER TABLE {table} ADD IF NOT EXISTS PARTITION ({_dir_spec(d)})")
     old_paths = [f"{loc}/{rel}" for rel in sorted(olds)]
     if not retain or not _versions.retire_files(spark, table, old_paths, loc=loc):
         for f in old_paths:
             files.delete(f)
-    _versions.note_published_files(
-        table, sorted([(r, n) for r, n in live.items() if r not in olds] + news)
-    )
+    for d in sorted(
+        _partition_dirs(olds) - _partition_dirs([r for r, _ in kept] + new_names)
+    ):
+        spark.sql(f"ALTER TABLE {table} DROP IF EXISTS PARTITION ({_dir_spec(d)})")
+        files.delete(f"{loc}/{d}", recursive=True)
+    _versions.note_published_files(table, sorted(kept + news))
     _refresh(spark, table, loc)
 
 
+def _partition_dirs(rels) -> set[str]:
+    """The partition directories (every segment ``k=v``) holding the
+    table-relative files ``rels``."""
+    dirs = {r.rpartition("/")[0] for r in rels}
+    return {d for d in dirs if d and all("=" in s for s in d.split("/"))}
+
+
+def _dir_spec(d: str) -> str:
+    """The ``PARTITION (...)`` spec of the partition directory ``d``:
+    Spark escapes names and values in the path (``%3A``), and writes a
+    NULL value as ``__HIVE_DEFAULT_PARTITION__``."""
+    from urllib.parse import unquote
+
+    cols, key = [], []
+    for seg in d.split("/"):
+        k, _, v = seg.partition("=")
+        cols.append(unquote(k))
+        v = unquote(v)
+        key.append(None if v == "__HIVE_DEFAULT_PARTITION__" else v)
+    return _partition_spec(cols, key)
+
+
+def _stage_frame(df: DataFrame, path: str, part_cols: list[str]) -> T.StructType:
+    """Write ``df`` as parquet under ``path`` in its table's file
+    layout, ready for :func:`publish`: flat files for an unpartitioned
+    table; for a partitioned one, the partition columns last (the
+    ``saveAsTable`` column order) and one ``k=v`` directory level per
+    partition column, in the table's order (``partitionBy``). Returns
+    the schema the staged files read back with."""
+    if part_cols:
+        by_lower = {f.name.lower(): f.name for f in df.schema.fields}
+        parts = [by_lower[c.lower()] for c in part_cols]
+        data = [f.name for f in df.schema.fields if f.name not in parts]
+        df = df.select(*[quote_identifier(c) for c in data + parts])
+        df.write.partitionBy(*parts).parquet(path, mode="overwrite")
+    else:
+        df.write.parquet(path, mode="overwrite")
+    return df.schema
+
+
 class StagingPin:
-    """Durable materialization of DML intermediates.
+    """Durable materialization of DML intermediates, and the staging
+    step of every Spark-written table rewrite.
 
     ``localCheckpoint(eager=True)`` pins a full copy of the computed
     table contents on non-replicated executor-local storage: correct on
@@ -486,28 +543,49 @@ class StagingPin:
     (:func:`update_table` / :func:`delete_from` / :func:`merge_table`)
     pins through here; transaction staging (no publish until COMMIT,
     bounded OLTP-sized statements) keeps the localCheckpoint default.
+    Every write lays the files out as the table does
+    (:func:`_stage_frame`), so the latest one publishes as it is
+    (:meth:`publish`)."""
 
-    The caller owns :meth:`cleanup` — after the publish completes, not
-    before (the published INSERT reads the staged files)."""
-
-    def __init__(self, spark: SparkSession, table: str, loc=_UNRESOLVED):
+    def __init__(
+        self, spark: SparkSession, table: str, loc=_UNRESOLVED, part_cols=()
+    ):
         self.spark = spark
         self.table = table
         self.loc = loc
+        self.part_cols = list(part_cols)
         self.paths: list[str] = []
         self.last: DataFrame | None = None
 
-    def __call__(self, df: DataFrame) -> DataFrame:
+    def write(self, df: DataFrame) -> str:
+        """Stage ``df`` under a new staging dir; returns the dir. A
+        write that fails leaves nothing behind."""
         path = staging_dir(self.spark, self.table, self.loc)
-        df.write.parquet(path, mode="overwrite")
+        try:
+            self._schema = _stage_frame(df, path, self.part_cols)
+        except BaseException:
+            _rm_path(self.spark, path)
+            raise
         self.paths.append(path)
-        self.last = self.spark.read.parquet(path)
+        return path
+
+    def __call__(self, df: DataFrame) -> DataFrame:
+        path = self.write(df)
+        self.last = self.spark.read.schema(self._schema).parquet(path)
         return self.last
 
     def pinned(self, df: DataFrame) -> bool:
         """True if ``df`` is the read-back of this pin's latest write —
         i.e. already durably staged, safe to publish without re-staging."""
         return self.last is not None and df is self.last
+
+    def publish(self, df: DataFrame, replaced: list[str] | None) -> None:
+        """:func:`publish` ``df`` in place of ``replaced`` (None: every
+        live file) — its staged files when ``df`` is :meth:`pinned`,
+        else a new staging of it — then :meth:`cleanup`."""
+        path = self.paths[-1] if self.pinned(df) else self.write(df)
+        publish(self.spark, self.table, path, replaced, self.loc)
+        self.cleanup()
 
     def cleanup(self) -> None:
         """Remove the staged dirs. Call on SUCCESSFUL publish only — a
@@ -519,209 +597,15 @@ class StagingPin:
         self.paths = []
 
 
-def _emptied_keys(
-    affected: DataFrame, filtered: DataFrame, part_cols: list[str]
-) -> list[tuple]:
-    """Affected partition keys with NO surviving rows in the new
-    contents (null-safe anti join). Driver-materialized because each
-    emptied partition needs one DDL statement anyway; the list is
-    bounded by the number of partitions the statement fully empties."""
-    kept = filtered.select(*part_cols).distinct()
-    cond = None
-    for c in part_cols:
-        eq = affected[c].eqNullSafe(kept[c])
-        cond = eq if cond is None else (cond & eq)
-    return [tuple(r) for r in affected.join(kept, cond, "left_anti").collect()]
-
-
-def _partition_spec(part_cols: list[str], key: tuple) -> str:
+def _partition_spec(part_cols: list[str], key) -> str:
     parts = []
     for c, v in zip(part_cols, key):
         if v is None:
             parts.append(f"{quote_identifier(c)} = null")
         else:
-            parts.append(
-                f"{quote_identifier(c)} = '" + str(v).replace("'", "''") + "'"
-            )
+            v = str(v).replace("\\", "\\\\").replace("'", "''")
+            parts.append(f"{quote_identifier(c)} = '{v}'")
     return ", ".join(parts)
-
-
-def _drop_partitions(
-    spark: SparkSession, table: str, part_cols: list[str], keys: list[tuple]
-) -> None:
-    """Drop partitions emptied by a DELETE: remove the catalog entry and
-    the partition directory (external tables keep files on DROP
-    PARTITION alone, which a later INSERT into the same key would
-    resurrect)."""
-    for key in keys:
-        spec = _partition_spec(part_cols, key)
-        loc = None
-        try:
-            for r in spark.sql(
-                f"DESCRIBE FORMATTED {table} PARTITION ({spec})"
-            ).collect():
-                if r.col_name.strip() == "Location":
-                    loc = r.data_type.strip()
-                    break
-        except Exception:
-            loc = None
-        spark.sql(f"ALTER TABLE {table} DROP IF EXISTS PARTITION ({spec})")
-        if loc:
-            _rm_path(spark, loc)
-    spark.catalog.refreshTable(table)
-
-
-def _retain_partition_files(
-    spark: SparkSession,
-    table: str,
-    part_cols: list[str],
-    affected: DataFrame,
-    cap: int = 64,
-) -> None:
-    """Snapshot retention for the dynamic-partition overwrite path:
-    move the affected partitions' current data files aside before Spark
-    replaces them (Spark deletes internally, bypassing the publish-path
-    retention). Bounded: a rewrite touching more than ``cap`` partitions
-    skips retention — renaming 10⁵ partitions' files serially on the
-    driver is the wrong trade, and the skipped snapshot resolves loudly
-    as SnapshotUnavailable at read time (versions.py's documented
-    contract for bulk rewrites)."""
-    from swanlake_spark import versions
-
-    if not versions.enabled():
-        return
-    rows = affected.limit(cap + 1).collect()
-    if not rows or len(rows) > cap:
-        return
-    loc = _table_location(spark, table)
-    if loc is None:
-        return
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    files: list[str] = []
-    for r in rows:
-        key = tuple(r[c] for c in part_cols)
-        spec = _partition_spec(part_cols, key)
-        ploc = None
-        try:
-            for pr in spark.sql(
-                f"DESCRIBE FORMATTED {table} PARTITION ({spec})"
-            ).collect():
-                if pr.col_name.strip() == "Location":
-                    ploc = pr.data_type.strip()
-                    break
-        except Exception:
-            continue  # partition vanished between probe and here
-        if not ploc:
-            continue
-        hp = jvm.org.apache.hadoop.fs.Path(ploc)
-        fs = hp.getFileSystem(conf)
-        if not fs.exists(hp):
-            continue
-        for st in fs.listStatus(hp):
-            nm = st.getPath().getName()
-            if not nm.startswith(("_", ".")) and not st.isDirectory():
-                files.append(st.getPath().toString())
-    if files:
-        versions.retire_files(spark, table, files, loc=loc)
-
-
-def _overwrite(
-    spark: SparkSession,
-    table: str,
-    new_df: DataFrame | None,
-    where: str | None,
-    staged_path: str | None = None,
-    loc=_UNRESOLVED,
-) -> None:
-    """Stage-and-overwrite. Spark refuses INSERT OVERWRITE from a
-    self-referencing plan, so materialize to a staging dir under the
-    table location first (skipped when ``staged_path`` says ``new_df``
-    is already a scan of the durably staged files there). For
-    partitioned tables with a predicate restricted to partition
-    columns, only matching partitions are rewritten (dynamic
-    overwrite); unpartitioned full rewrites :func:`publish` the staged
-    files in place of every live file instead of re-encoding them
-    through a second INSERT.
-
-    ``new_df=None`` (allowed only with a ``staged_path`` and no
-    ``where``) defers the staged-scan construction to the partitioned
-    insertInto: the unpartitioned publish never reads the frame, and
-    constructing ``spark.read.parquet(staging)`` eagerly costs a
-    schema-inference + file-listing driver round trip per publish."""
-    if new_df is None and not (staged_path and where is None):
-        raise ValueError(
-            "_overwrite: new_df may be None only for a staged, "
-            "unpredicated publish with a staged_path"
-        )
-    part_cols = _partition_columns(spark, table)
-    owned = staged_path is None
-    staging = staged_path or staging_dir(spark, table, loc)
-    try:
-        if part_cols and where and not where_has_subquery(where):
-            # Dynamic partition overwrite path: rewrite only partitions
-            # that contain matching rows.
-            prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-            try:
-                # Affected-key selection is a broadcast semi-join on the
-                # distinct partition keys, not a collected OR-chain: an
-                # UPDATE touching 10⁵ partitions must not build a
-                # 10⁵-term boolean expression on the driver. The key set
-                # is staged to parquet (tiny — one row per affected
-                # partition) so the publish never scans the target table
-                # it is overwriting.
-                aff_path = staging_dir(spark, table, loc)
-                (
-                    spark.table(table)
-                    .filter(F.expr(where))
-                    .select(*part_cols)
-                    .distinct()
-                    .write.parquet(aff_path, mode="overwrite")
-                )
-                affected = spark.read.parquet(aff_path)
-                try:
-                    if affected.limit(1).count() == 0:
-                        return
-                    cond = None
-                    for c in part_cols:
-                        eq = new_df[c].eqNullSafe(affected[c])
-                        cond = eq if cond is None else (cond & eq)
-                    filtered = new_df.join(
-                        F.broadcast(affected), cond, "left_semi"
-                    )
-                    if owned:
-                        filtered.write.parquet(staging, mode="overwrite")
-                        filtered = spark.read.parquet(staging)
-                    # Retire the affected partitions' current files for
-                    # time travel BEFORE Spark's overwrite deletes them.
-                    # Safe here: `filtered` scans staged parquet (or the
-                    # caller's durable staging), never the live table.
-                    _retain_partition_files(spark, table, part_cols, affected)
-                    # Dynamic overwrite only touches partitions PRESENT
-                    # in the inserted data — a DELETE that empties a
-                    # partition contributes no rows for it, so the old
-                    # files would silently survive. Drop those
-                    # partitions explicitly (catalog + files).
-                    emptied = _emptied_keys(affected, filtered, part_cols)
-                    if emptied:
-                        _drop_partitions(spark, table, part_cols, emptied)
-                    if not emptied or filtered.limit(1).count() > 0:
-                        filtered.write.insertInto(table, overwrite=True)
-                finally:
-                    _rm_path(spark, aff_path)
-            finally:
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-        else:
-            if owned:
-                new_df.write.parquet(staging, mode="overwrite")
-            if part_cols:
-                spark.read.parquet(staging).write.insertInto(table, overwrite=True)
-            else:
-                publish(spark, table, staging, None, loc)
-    finally:
-        if owned:
-            _rm_path(spark, staging)
 
 
 # -- per-table write serialization -------------------------------------------
@@ -1198,25 +1082,20 @@ def _dictionary_columns(tbl) -> list[str]:
     ]
 
 
-def _driver_rewrite(
-    spark: SparkSession, staged: str, new_sub, files, driver_ok: bool = True
-) -> bool:
+def _driver_rewrite(staged: str, new_sub, files, driver_ok: bool = True) -> bool:
     """Stage the rewritten matched-file contents via a single Arrow
     collect + driver-side parquet write. Returns False when ineligible
     (non-local staging, matched set too large, exotic types, or
     ``driver_ok`` False because the statement's output guard already
     refused) — the caller falls back to the distributed write.
     Local-scheme only: pyarrow writes OS paths, not HDFS/s3a."""
+    from urllib.parse import unquote
+
     base = _local_os_path(staged)
     if base is None or not driver_ok:
         return False
     try:
-        jvm = spark._jvm
-        conf = spark._jsc.hadoopConfiguration()
-        total = 0
-        for f in files:
-            p = jvm.org.apache.hadoop.fs.Path(f)
-            total += int(p.getFileSystem(conf).getFileStatus(p).getLen())
+        total = sum(os.path.getsize(_local_os_path(unquote(f))) for f in files)
         if not _driver_collect_ok(new_sub, total) or _expands_past_cap(new_sub):
             return False
         _write_staged_arrow(base, new_sub.toArrow())
@@ -1234,38 +1113,54 @@ def _driver_rewrite(
         return False
 
 
+def _read_table_files(
+    spark: SparkSession, files: list[str], schema: T.StructType, loc: str
+) -> DataFrame:
+    """Scan the table data files ``files`` (``input_file_name()``
+    renderings) with the table ``schema``, which skips the read's
+    footer inference; under the table's ``basePath`` a partitioned
+    table's files carry their directory-encoded partition values
+    (NULL included). The paths are unquoted: a Hadoop path string takes
+    the raw name, and the URL-encoded one names no file."""
+    from urllib.parse import unquote
+
+    return (
+        spark.read.schema(schema)
+        .option("basePath", loc)
+        .parquet(*[unquote(f) for f in files])
+    )
+
+
 def _file_granular_cow(
     spark: SparkSession,
     table: str,
-    where: str,
     transform,
     files: list[str],
     schema: T.StructType,
-    loc=_UNRESOLVED,
+    loc: str,
+    part_cols: list[str],
     driver_ok: bool = True,
-) -> bool:
+) -> None:
     """Copy-on-write at FILE granularity (the reference's DuckLake model:
     rewrite only the data files containing matched rows,
-    ``maintenance/README.md``'s compaction unit). Applies to
-    unpartitioned tables with subquery-free predicates; ``transform``
-    maps the matched files' DataFrame to its rewritten contents. Returns
-    True when published; False → caller runs the full-table path. At
-    100 TB this turns a point UPDATE from a table rewrite into a
-    one-file rewrite."""
-    # passing the table ``schema`` skips the read's driver-side
-    # footer-inference round-trip; the alias resolves table-qualified
-    # columns (`WHERE t.k = 1`)
-    sub = spark.read.schema(schema).parquet(*files).alias(
+    ``maintenance/README.md``'s compaction unit), for subquery-free
+    predicates; ``transform`` maps the matched files' DataFrame to its
+    rewritten contents, which :func:`publish` swaps in for ``files``.
+    On a partitioned table a row whose partition value the rewrite
+    changes lands in its new directory. At 100 TB this turns a point
+    UPDATE from a table rewrite into a one-file rewrite."""
+    # the alias resolves table-qualified columns (`WHERE t.k = 1`)
+    sub = _read_table_files(spark, files, schema, loc).alias(
         table.split(".")[-1].strip('`"')
     )
     new_sub = transform(sub)
     staged = staging_dir(spark, table, loc)
-    if not _driver_rewrite(spark, staged, new_sub, files, driver_ok):
-        new_sub.write.parquet(staged, mode="overwrite")
+    # the driver writes flat files only
+    if part_cols or not _driver_rewrite(staged, new_sub, files, driver_ok):
+        _stage_frame(new_sub, staged, part_cols)
     # a failed publish keeps the staged data for recovery (see publish)
     publish(spark, table, staged, files, loc)
     _rm_path(spark, staged)
-    return True
 
 
 # -- footer-pruned point writes -----------------------------------------------
@@ -1423,8 +1318,10 @@ def _pruned_cow(
     staging (key-sorted files of at most ``_POINT_FILE_BYTES``),
     :func:`publish`.
 
-    Caller guarantees: table write lock held, table unpartitioned,
-    predicate subquery-free, no CHECK/FK constraint registered."""
+    Caller guarantees: table write lock held, predicate subquery-free,
+    no CHECK/FK constraint registered. A partitioned table goes to the
+    unpruned path: ``filestats.live_files`` declines a root holding
+    directories."""
     types = {f.name.lower(): f.dataType.simpleString() for f in schema.fields}
     bare = table.split(".")[-1].strip('`"')
     terms = [point._term_bound(t, bare, types) for t in point._conjuncts(where)]
@@ -2054,24 +1951,25 @@ def merge_table(
     publish. Intermediates (the matched-join output and the new table
     contents) are pinned durably in the ``_staging`` sibling dir — never
     on executor-local storage — so the publish survives executor loss
-    and the final INSERT reads staged parquet directly (no second full
+    and the publish renames the staged files in (no second full
     materialization).
 
-    File-granular path (unpartitioned targets): only the data files
-    containing matched target rows are rewritten. This is sound because
-    the matched files contain *every* matched target row by definition —
-    so the WHEN MATCHED routing sees the same rows, the ambiguity check
-    sees the same join, and a source row anti-joined against the
-    matched-file subset is unmatched iff it is unmatched against the
-    whole target. Inserts land in the swapped-in files. Targets whose
-    match set spans every file (the bulk-upsert shape) fall back to the
-    full rewrite."""
+    File-granular path: only the data files containing matched target
+    rows are rewritten. This is sound because the matched files contain
+    *every* matched target row by definition — so the WHEN MATCHED
+    routing sees the same rows, the ambiguity check sees the same join,
+    and a source row anti-joined against the matched-file subset is
+    unmatched iff it is unmatched against the whole target. Inserts
+    land in the swapped-in files (in their own partition directories on
+    a partitioned table). Targets whose match set spans every file (the
+    bulk-upsert shape) fall back to the full rewrite."""
     from swanlake_spark import versions
 
-    loc = _table_location(spark, table)
+    loc, part_cols, schema = _table_meta(spark, table)
     with table_write_lock(spark, table, loc=loc):
         affected = _merge_table_locked(
-            spark, table, t_alias, source_text, cond, clauses, loc=loc
+            spark, table, t_alias, source_text, cond, clauses, loc,
+            part_cols=part_cols, schema=schema,
         )
         if affected:
             versions.record_version(spark, table, "merge", loc=loc)
@@ -2085,7 +1983,10 @@ def _merge_table_locked(
     source_text: str,
     cond: str,
     clauses: list[MergeClause],
-    loc=_UNRESOLVED,
+    loc,
+    *,
+    part_cols: list[str],
+    schema: T.StructType,
 ) -> int:
     # Constraint gates (DuckDB enforces them on MERGE like any other
     # write): CHECK + child-side FK evaluate over the rewritten/new
@@ -2099,59 +2000,31 @@ def _merge_table_locked(
         if any(c.matched for c in clauses)
         else []
     )
-
-    def _constrained(ndf: DataFrame) -> DataFrame:
-        constraints.enforce_checks(spark, table, ndf)
-        constraints.enforce_fks_insert(spark, table, ndf)
-        return ndf
-
-    if not _partition_columns(spark, table) and not fk_children:
+    files = None
+    if not fk_children:
         files = _merge_matched_files(
             spark, table, t_alias, source_text, cond, loc=loc
         )
-        if files is not None:
-            sub = spark.read.parquet(*files)
-            stage = StagingPin(spark, table, loc=loc)
-            try:
-                new_df, affected = apply_merge(
-                    spark, sub, table, t_alias, source_text, cond,
-                    clauses, pin=stage,
-                )
-                _constrained(new_df)
-            except BaseException:
-                stage.cleanup()
-                raise
-            if affected:
-                if stage.pinned(new_df):
-                    staged_path = stage.paths[-1]
-                else:
-                    staged_path = staging_dir(spark, table, loc)
-                    new_df.write.parquet(staged_path, mode="overwrite")
-                    stage.paths.append(staged_path)
-                publish(spark, table, staged_path, files, loc)
-            stage.cleanup()
-            return affected
-    stage = StagingPin(spark, table, loc=loc)
+    target = (
+        spark.table(table) if files is None
+        else _read_table_files(spark, files, schema, loc)
+    )
+    stage = StagingPin(spark, table, loc=loc, part_cols=part_cols)
     try:
         new_df, affected = apply_merge(
-            spark, spark.table(table), table, t_alias, source_text, cond,
-            clauses, pin=stage,
+            spark, target, table, t_alias, source_text, cond, clauses,
+            pin=stage,
         )
-        _constrained(new_df)
+        constraints.enforce_checks(spark, table, new_df)
+        constraints.enforce_fks_insert(spark, table, new_df)
         if fk_children:
             _enforce_fk_parent(spark, table, new_df, fk_children)
     except BaseException:
         stage.cleanup()  # planning/validation failed; nothing published
         raise
-    try:
-        if affected:
-            _overwrite(
-                spark, table, new_df, None,
-                staged_path=stage.paths[-1] if stage.pinned(new_df) else None,
-                loc=loc,
-            )
-    except BaseException:
-        raise  # publish failed: retain staged data (StagingPin.cleanup docs)
+    if affected:
+        # a failed publish keeps the staged data (StagingPin.cleanup)
+        stage.publish(new_df, files)
     stage.cleanup()
     return affected
 
@@ -2241,7 +2114,7 @@ def update_table(
     loc, part_cols, schema = _table_meta(spark, table)
     with table_write_lock(spark, table, loc=loc):
         affected = _update_table_locked(
-            spark, table, assignments, where, loc=loc, part_cols=part_cols,
+            spark, table, assignments, where, loc, part_cols=part_cols,
             schema=schema,
         )
         if affected:
@@ -2253,8 +2126,8 @@ def _update_table_locked(
     spark: SparkSession,
     table: str,
     assignments: dict[str, str],
-    where: str | None = None,
-    loc=_UNRESOLVED,
+    where: str | None,
+    loc,
     *,
     part_cols: list[str],
     schema: T.StructType,
@@ -2288,20 +2161,8 @@ def _update_table_locked(
         for child, ccols, pcols in _constraints.referencing_children(table)
         if set(pcols) & set(assignments)
     ]
-
-    def _fk_checked(ndf: DataFrame) -> DataFrame:
-        if _fk_touched:
-            _enforce_fk_parent(spark, table, ndf, _fk_touched)
-        return ndf
-
-    # An UPDATE that reassigns a partition column moves rows BETWEEN
-    # partitions: the dynamic-overwrite path selects staged rows by their
-    # NEW partition values but rewrites the OLD matching partitions, so a
-    # moved row would vanish. Full rewrite (where=None) is the safe path.
-    part_cols = set(part_cols)
     file_cow_ok = (
         where
-        and not part_cols
         and not _fk_touched
         and not where_has_subquery(where)
         and not any(where_has_subquery(v) for v in assignments.values())
@@ -2317,18 +2178,19 @@ def _update_table_locked(
         files, affected = _matched_files(spark, table, where, loc=loc)
         if affected == 0:
             return 0
-        if files is not None and _file_granular_cow(
-            spark,
-            table,
-            where,
-            lambda sub: _checked(
-                apply_update(sub, assignments, where, alias=table)
-            ),
-            files,
-            schema,
-            loc=loc,
-            driver_ok=driver_ok,
-        ):
+        if files is not None:
+            _file_granular_cow(
+                spark,
+                table,
+                lambda sub: _checked(
+                    apply_update(sub, assignments, where, alias=table)
+                ),
+                files,
+                schema,
+                loc,
+                part_cols,
+                driver_ok=driver_ok,
+            )
             return affected
     else:
         affected = (
@@ -2337,25 +2199,18 @@ def _update_table_locked(
         )
         if affected == 0:
             return 0
-    df = spark.table(table)
-    overwrite_where = None if part_cols & set(assignments) else where
-    stage = StagingPin(spark, table, loc=loc)
+    stage = StagingPin(spark, table, loc=loc, part_cols=part_cols)
     try:
-        new_df = _fk_checked(_checked(
-            apply_update(df, assignments, where, alias=table, pin=stage)
-        ))
+        new_df = _checked(
+            apply_update(spark.table(table), assignments, where, alias=table, pin=stage)
+        )
+        if _fk_touched:
+            _enforce_fk_parent(spark, table, new_df, _fk_touched)
     except BaseException:
         stage.cleanup()  # planning failed; nothing published — tidy up
         raise
-    try:
-        _overwrite(
-            spark, table, new_df, overwrite_where,
-            staged_path=stage.paths[-1] if stage.pinned(new_df) else None,
-            loc=loc,
-        )
-    except BaseException:
-        raise  # publish failed: retain staged data (StagingPin.cleanup docs)
-    stage.cleanup()
+    # a failed publish keeps the staged data (StagingPin.cleanup)
+    stage.publish(new_df, None)
     return affected
 
 
@@ -2367,7 +2222,7 @@ def delete_from(spark: SparkSession, table: str, where: str | None = None) -> in
     loc, part_cols, schema = _table_meta(spark, table)
     with table_write_lock(spark, table, loc=loc):
         affected = _delete_from_locked(
-            spark, table, where, loc=loc, part_cols=part_cols, schema=schema
+            spark, table, where, loc, part_cols=part_cols, schema=schema
         )
         if affected:
             versions.record_version(spark, table, "delete", loc=loc)
@@ -2377,8 +2232,8 @@ def delete_from(spark: SparkSession, table: str, where: str | None = None) -> in
 def _delete_from_locked(
     spark: SparkSession,
     table: str,
-    where: str | None = None,
-    loc=_UNRESOLVED,
+    where: str | None,
+    loc,
     *,
     part_cols: list[str],
     schema: T.StructType,
@@ -2398,13 +2253,13 @@ def _delete_from_locked(
                 F.expr(where).eqNullSafe(F.lit(True))
             )
         constraints.enforce_fks_delete(spark, table, deleted)
+    stage = StagingPin(spark, table, loc=loc, part_cols=part_cols)
     if where is None:
         df = spark.table(table)
         affected = df.count()
-        _overwrite(spark, table, df.limit(0), None, loc=loc)
+        stage.publish(df.limit(0), None)
         return affected
-    file_cow_ok = not part_cols and not where_has_subquery(where)
-    if file_cow_ok:
+    if not where_has_subquery(where):
         affected, driver_ok = None, True
         if _unconstrained(table):
             affected, driver_ok = _pruned_cow(
@@ -2415,34 +2270,27 @@ def _delete_from_locked(
         files, affected = _matched_files(spark, table, where, loc=loc)
         if affected == 0:
             return 0
-        if files is not None and _file_granular_cow(
-            spark,
-            table,
-            where,
-            lambda sub: apply_delete(sub, where, alias=table),
-            files,
-            schema,
-            loc=loc,
-            driver_ok=driver_ok,
-        ):
+        if files is not None:
+            _file_granular_cow(
+                spark,
+                table,
+                lambda sub: apply_delete(sub, where, alias=table),
+                files,
+                schema,
+                loc,
+                part_cols,
+                driver_ok=driver_ok,
+            )
             return affected
     else:
         affected = _count_matching(spark, table, where)
         if affected == 0:
             return 0
-    stage = StagingPin(spark, table, loc=loc)
     try:
         new_df = apply_delete(spark.table(table), where, alias=table, pin=stage)
     except BaseException:
         stage.cleanup()  # planning failed; nothing published — tidy up
         raise
-    try:
-        _overwrite(
-            spark, table, new_df, where,
-            staged_path=stage.paths[-1] if stage.pinned(new_df) else None,
-            loc=loc,
-        )
-    except BaseException:
-        raise  # publish failed: retain staged data (StagingPin.cleanup docs)
-    stage.cleanup()
+    # a failed publish keeps the staged data (StagingPin.cleanup)
+    stage.publish(new_df, None)
     return affected

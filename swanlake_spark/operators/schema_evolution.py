@@ -161,28 +161,14 @@ def _rewrite_schema(
     from swanlake_spark import constraints, versions
     from swanlake_spark.operators import dml
 
-    loc = dml._table_location(spark, table)
+    loc, part_cols = dml._table_info(spark, table)
     if loc is None:
         raise InvalidArgument(
             f"{table} has no resolvable location; cannot rewrite schema"
         )
-    part_cols = dml._partition_columns(spark, table)
     staging = dml.staging_dir(spark, table, loc)
     with dml.table_write_lock(spark, table, loc=loc):
-        if part_cols:
-            # keep partition columns last, the saveAsTable layout
-            order = [
-                quote_identifier(f.name)
-                for f in new_df.schema.fields
-                if f.name not in part_cols
-            ] + [quote_identifier(c) for c in part_cols]
-            new_df = new_df.select(*order)
-            new_df.write.partitionBy(*part_cols).parquet(
-                staging, mode="overwrite"
-            )
-        else:
-            new_df.write.parquet(staging, mode="overwrite")
-        schema = new_df.schema
+        schema = dml._stage_frame(new_df, staging, part_cols)
         cols_ddl = ", ".join(
             f"{quote_identifier(f.name)} {f.dataType.simpleString()}"
             for f in schema.fields

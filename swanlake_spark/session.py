@@ -474,8 +474,8 @@ class Session:
             for table, df in self._txn_staged.items():
                 from swanlake_spark import versions
                 from swanlake_spark.operators.dml import (
-                    _overwrite,
-                    _table_location,
+                    StagingPin,
+                    _table_info,
                     table_write_lock,
                 )
 
@@ -485,9 +485,9 @@ class Session:
                 # snapshot so the transaction's result is visible to
                 # AT (VERSION =>) / read_current and the pre-commit
                 # state stays time-travelable.
-                loc = _table_location(self.spark, table)
+                loc, part_cols = _table_info(self.spark, table)
                 with table_write_lock(self.spark, table, loc=loc):
-                    _overwrite(self.spark, table, df, None, loc=loc)
+                    StagingPin(self.spark, table, loc, part_cols).publish(df, None)
                     versions.record_version(
                         self.spark, table, "txn_commit", loc=loc
                     )

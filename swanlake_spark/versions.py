@@ -30,14 +30,12 @@ Scale notes (100 TB):
   configuration is ``set_enabled(False)`` + bucket versioning, or a
   manifest-primary table format (Delta/Iceberg) — documented
   divergence, same as the COW publish itself.
-- Dynamic-partition rewrites retire the affected partitions' files
-  first (``dml._retain_partition_files``), bounded at 64 partitions per
-  statement — beyond that, on the other partitioned rewrites where
-  Spark deletes files internally, and after compaction (which deletes
-  its inputs), manifests still record the new state but older
-  snapshots referencing the destroyed files raise
-  :class:`SnapshotUnavailable` instead of silently returning wrong
-  rows.
+- Every rewrite retires the files it replaces through ``dml.publish``,
+  partitioned table or not, so every older snapshot stays readable.
+  The one exception is compaction, which deletes its inputs: a
+  manifest still records the new state, and an older snapshot whose
+  files it destroyed raises :class:`SnapshotUnavailable` instead of
+  silently returning wrong rows.
 """
 
 from __future__ import annotations
@@ -684,37 +682,14 @@ def rollback(spark: SparkSession, table: str, version: int) -> int:
     the replaced files), so the pre-rollback state stays readable too."""
     from swanlake_spark.operators import dml
 
-    loc = dml._table_location(spark, table)
+    loc, part_cols = dml._table_info(spark, table)
     old = read_version(spark, table, version)
-    # column order must match the table (insertInto is positional, and
-    # partitioned reads surface partition columns last already)
     old = old.select(*[f.name for f in spark.table(table).schema.fields])
     staging = dml.staging_dir(spark, table, loc)
-    old.write.parquet(staging)
     try:
+        dml._stage_frame(old, staging, part_cols)
         with dml.table_write_lock(spark, table, loc=loc):
-            if dml._partition_columns(spark, table):
-                # flat staged files cannot be renamed into a partitioned
-                # layout; a full static overwrite re-encodes them into
-                # the right partition dirs (retention of the replaced
-                # files is skipped here — the pre-rollback state already
-                # has its own manifest from the write that created it)
-                prev = spark.conf.get(
-                    "spark.sql.sources.partitionOverwriteMode"
-                )
-                spark.conf.set(
-                    "spark.sql.sources.partitionOverwriteMode", "static"
-                )
-                try:
-                    spark.read.parquet(staging).write.insertInto(
-                        table, overwrite=True
-                    )
-                finally:
-                    spark.conf.set(
-                        "spark.sql.sources.partitionOverwriteMode", prev
-                    )
-            else:
-                dml.publish(spark, table, staging, None, loc)
+            dml.publish(spark, table, staging, None, loc)
             v = record_version(spark, table, f"rollback_to_v{version}", loc=loc)
     finally:
         dml._rm_path(spark, staging)

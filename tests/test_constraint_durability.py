@@ -100,9 +100,9 @@ class TestOverwriteDurability:
             eng.execute("DROP TABLE IF EXISTS cd_ow")
 
     def test_partitioned_update_keeps_check_after_restart(self, spark, eng):
-        """Partitioned UPDATE publishes via insertInto(overwrite) /
-        dynamic-partition overwrite — the root-clearing path the r4
-        advisor flagged."""
+        """A partitioned UPDATE rewrites files in partition directories;
+        the CHECK registration, kept outside the table root, survives
+        it and a restart."""
         eng.execute(
             f"CREATE TABLE cd_owp (id INT, qty INT CHECK (qty > 0), p INT) "
             f"USING parquet PARTITIONED BY (p) LOCATION '{_loc()}'"

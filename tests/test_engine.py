@@ -1631,9 +1631,10 @@ class TestCheckpoint:
         t = _mktable(engine, "id INT, v STRING")
         for i in range(8):  # 8 single-row inserts → 8 small part-files
             engine.execute(f"INSERT INTO {t} VALUES ({i}, 'r{i}')")
-        from swanlake_spark.maintenance import _live_parquet, table_location
+        from swanlake_spark.maintenance import _live_parquet
+        from swanlake_spark.operators.dml import _table_location
 
-        before = len(_live_parquet(engine.spark, table_location(engine.spark, t)))
+        before = len(_live_parquet(engine.spark, _table_location(engine.spark, t)))
         assert before >= 8
         rows = {r.table.split(".")[-1]: r for r in engine.query("CHECKPOINT").collect()}
         assert rows[t].compacted and rows[t].files_after < before
@@ -1864,11 +1865,8 @@ class TestUpdateSubquerySetValue:
 
 class TestPartitionedCompaction:
     def test_compacts_only_hot_partition(self, engine):
-        from swanlake_spark.maintenance import (
-            _live_parquet,
-            compact_table,
-            table_location,
-        )
+        from swanlake_spark.maintenance import _live_parquet, compact_table
+        from swanlake_spark.operators.dml import _table_location
 
         t = f"pc_{uuid.uuid4().hex[:8]}"
         loc = tempfile.mkdtemp(prefix="swl_pc_")
@@ -1879,7 +1877,7 @@ class TestPartitionedCompaction:
         for i in range(6):  # six small files in the hot partition
             engine.execute(f"INSERT INTO {t} VALUES ({float(i)}, '2026-01-01')")
         engine.execute(f"INSERT INTO {t} VALUES (9.0, '2026-01-02')")
-        base = table_location(engine.spark, t)
+        base = _table_location(engine.spark, t)
         cold_before = _live_parquet(engine.spark, f"{base}/day=2026-01-02")
         stats = compact_table(engine.spark, t, min_files=2)
         assert stats["compacted"] is True

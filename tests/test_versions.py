@@ -135,9 +135,8 @@ class TestSnapshots:
         assert versions.resolve_files(spark, "vt", v_now)
 
     def test_partitioned_dynamic_overwrite_retains(self, spark):
-        """The dynamic-partition UPDATE path must retire the rewritten
-        partitions' files (bounded retention) so older snapshots of
-        partitioned tables stay readable."""
+        """A partitioned UPDATE retires the files it rewrites, so older
+        snapshots of partitioned tables stay readable."""
         import tempfile
 
         eng = self._engine(spark)
@@ -167,8 +166,8 @@ class TestSnapshots:
             spark.sql("DROP TABLE IF EXISTS vpt")
 
     def test_partitioned_rollback(self, spark):
-        """Rollback of a partitioned table re-encodes through a static
-        overwrite (flat staged files can't rename into partition dirs)."""
+        """Rollback of a partitioned table stages the restored rows in
+        partition directories and publishes them like any rewrite."""
         import tempfile
 
         eng = self._engine(spark)
