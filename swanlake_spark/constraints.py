@@ -78,9 +78,12 @@ def _legacy_sidecar_path(spark: SparkSession, table: str) -> str | None:
     """Pre-r5 location inside the table root (cleared by overwrite
     publishes — the reason it moved). Read-only: consulted for
     migration, deleted after a successful persist to the new path."""
-    from swanlake_spark.operators.dml import _table_location
+    from swanlake_spark.operators.dml import _table_meta
 
-    loc = _table_location(spark, table)
+    try:
+        loc = _table_meta(spark, table)[0]
+    except Exception:  # noqa: BLE001 — no such table: no sidecar
+        return None
     if loc is None:
         return None
     return loc.rstrip("/") + "/" + _SIDECAR_NAME

@@ -24,7 +24,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from swanlake_spark import constraints
+from swanlake_spark import constraints, sync
 from swanlake_spark.config import EngineConfig
 from swanlake_spark.errors import EngineError, InvalidArgument
 from swanlake_spark.metrics import Metrics, jvm_counters
@@ -65,43 +65,28 @@ class QueryResult:
     statements_run: int = 1
     rows: int | None = None  # filled on collect/to_arrow (connection.rs:305)
     bytes: int | None = None
-    # set by Engine.query for pure single-statement queries: rebuilds
-    # the (lazy) df when a collect races a COW schema publish and the
-    # already-analyzed plan pins a stale file listing
+    # set by Engine.query for pure single-statement queries: re-runs
+    # the statement, post-pass included, on the newest manifests
     _requery: object = None
     # rows pyarrow computed on the driver (a point read, see
     # DriverResult): collect and to_arrow return them without a job
     arrow: object = None
 
     def _materialize(self, fn):
-        """Run ``fn(df)`` swap-safely: a COW schema-ALTER publish moves
-        data files under an already-planned scan, so the deferred
-        collect — not the planning the engine already guards — can hit
-        FAILED_READ_FILE. Re-query (fresh file listing) after waiting
-        any in-flight publish out; bounded retries cover back-to-back
-        ALTERs."""
-        try:
-            return fn(self.df)
-        except Exception as e:
-            msg = str(e)
-            if self._requery is None or not (
-                "FAILED_READ_FILE" in msg or "FILE_NOT_EXIST" in msg
-            ):
-                raise
-            from swanlake_spark.operators import schema_evolution
-
-            for _ in range(4):
-                for ev in schema_evolution.swap_in_progress():
-                    ev.wait(30.0)
-                try:
-                    self.df = self._requery()
-                    return fn(self.df)
-                except Exception as e2:
-                    msg = str(e2)
-                    if "FAILED_READ_FILE" in msg or "FILE_NOT_EXIST" in msg:
-                        continue
+        """Run ``fn(df)``; when the scan hits a file that a later
+        publish moved away after the statement planned, re-run the
+        statement (it then reads the newest manifest), a bounded number
+        of times."""
+        for attempt in range(5):
+            try:
+                return fn(self.df)
+            except Exception as e:
+                msg = str(e)
+                if self._requery is None or attempt == 4 or not (
+                    "FAILED_READ_FILE" in msg or "FILE_NOT_EXIST" in msg
+                ):
                     raise
-            raise
+            self.df = self._requery()
 
     def collect(self):
         if self.arrow is not None:
@@ -163,8 +148,7 @@ def apply_pivot_adjustments(
     count cells; Spark leaves them NULL — the NULL is produced by the
     pivot itself, so no SQL-text rewrite can fix it in place) and
     rename single-ALIASED-aggregate columns to DuckDB's
-    ``<value>_<agg>`` convention. Also wraps an existing ``_requery``
-    so a swap-safe re-run keeps the adjustments."""
+    ``<value>_<agg>`` convention."""
     if not (zero_cols or renames_in) or not res.is_query or res.df is None:
         return
     from pyspark.sql import functions as _F
@@ -192,9 +176,6 @@ def apply_pivot_adjustments(
 
     res.df = zero_fill(res.df)
     res.schema = res.df.schema
-    prev = res._requery
-    if prev is not None:
-        res._requery = lambda: zero_fill(prev())
 
 
 @dataclass(frozen=True)
@@ -367,7 +348,7 @@ class Engine:
             try:
                 res = self._driver_read(st, args)
                 if res is None:
-                    res = self._run_script_swap_safe(st, args=args)
+                    res = self._run_script(st.sql, args=args)
             except EngineError as e:
                 self.metrics.record_error(str(e), st.sql)
                 raise
@@ -376,18 +357,19 @@ class Engine:
                 raise EngineError(str(e)) from e
         res.elapsed_s = time.perf_counter() - t0
         self.metrics.record_query(res.elapsed_s, st.sql, is_query=res.is_query)
+        res = self.post_pass(res, st)
         if (
             res.is_query
             and res.statements_run == 1
             and res.affected_rows < 0
             and res.arrow is None
         ):
-            # side-effect-free: safe to transparently re-run if a COW
-            # schema publish moves files under the deferred collect
+            # side-effect-free: safe to re-run if a publish moves files
+            # under the deferred collect
             res._requery = (
-                lambda: self._run_script_swap_safe(st, args=args).df
+                lambda: self.post_pass(self._run_script(st.sql, args), st).df
             )
-        return self.post_pass(res, st)
+        return res
 
     def _driver_read(self, st: Statement, args: list | None) -> QueryResult | None:
         """``st`` answered by pyarrow on the driver when it is a point
@@ -441,9 +423,6 @@ class Engine:
         quoted = [quote_identifier(c) for c in desired]
         res.df = res.df.select(*quoted)
         res.schema = res.df.schema
-        prev = res._requery
-        if prev is not None:
-            res._requery = lambda: prev().select(*quoted)
 
     def _reorder_replace_dml(self, sql: str) -> str:
         """Rewrite any DML statement whose SOURCE SELECT carries a
@@ -947,82 +926,37 @@ class Engine:
         the underlying writer reports them (−1 otherwise)."""
         return self.query(sql).affected_rows
 
-    def _run_script_swap_safe(
-        self, st: Statement, args: list | None = None
-    ) -> QueryResult:
-        """Run the script swap-safely around schema-ALTER publishes.
-
-        An ALTER's COW publish briefly renames staged files in, retires
-        the old ones, and swaps the catalog entry (DROP→CREATE — v1
-        parquet has no in-place column DDL). Two reader races exist:
-        a new query planning against the half-published file listing,
-        and an already-planned query whose scan hits a moved file or
-        the catalog gap. The first is closed by pre-waiting any
-        in-flight publish before planning; the second by waiting the
-        publish out and retrying once (the writer's refreshTable has
-        invalidated the stale listing by then). A concurrent reader
-        thus observes the old or the new schema, never an error.
-
-        The retry re-runs the WHOLE script, so it is gated to scripts
-        whose every statement is side-effect-free (``all_queries``): a
-        script containing DML/DDL may have committed a non-idempotent
-        statement (an INSERT) before a later statement hit the race,
-        and a full re-run would silently duplicate its effect — such
-        scripts raise instead. The missing-table check is keyed to the
-        table NAMED in the error: a query on a genuinely nonexistent
-        table errors immediately even while an unrelated ALTER is in
-        flight, and a reader whose failure surfaced just AFTER the
-        swap completed (the table is no longer in the in-flight set)
-        still retries via the recently-swapped record."""
-        from swanlake_spark.operators import schema_evolution
-
-        retry_safe = st.parsed.all_queries
-        attempts = 0
-        while True:
-            for ev in schema_evolution.swap_in_progress():
-                ev.wait(30.0)
-            try:
-                return self._run_script(st.sql, args=args)
-            except Exception as e:
-                msg = str(e)
-                stale_scan = (
-                    "FAILED_READ_FILE" in msg or "FILE_NOT_EXIST" in msg
-                )
-                missing_table = (
-                    "TABLE_OR_VIEW_NOT_FOUND" in msg
-                    or "cannot be found" in msg
-                )
-                if not (stale_scan or missing_table) or not retry_safe:
-                    raise
-                attempts += 1
-                if attempts > 4:
-                    raise
-                # a genuinely absent table must still error; a
-                # moved-file scan failure in a COW engine always means
-                # a publish raced this query's file listing — retry
-                # even if the publish already finished (its
-                # refreshTable fixed the listing). Back-to-back ALTERs
-                # can race successive retries, hence the loop (each
-                # pass pre-waits whatever publish is now in flight).
-                if missing_table and not stale_scan:
-                    mt = re.search(r"`([^`]+)`", msg)
-                    tname = mt.group(1).split(".")[-1] if mt else None
-                    in_flight = schema_evolution.swap_in_progress(tname) if tname else schema_evolution.swap_in_progress()
-                    if not in_flight and not (
-                        tname and schema_evolution.recently_swapped(tname)
-                    ):
-                        raise
-
     def _run_script(self, sql: str, args: list | None = None) -> QueryResult:
         """Route and run a :class:`Statement`'s SQL (select locks
-        already stripped); a query's DataFrame is left lazy."""
+        already stripped); a query's DataFrame is left lazy. Each
+        statement reads every engine table from its newest manifest
+        (``sync.py``); the helper views it planned against are dropped
+        once the script has run."""
         parsed = classify(sql)
         stmts = parsed.statements
         if not stmts:
             raise InvalidArgument("empty SQL")
+        views: list[str] = []
+        try:
+            last_df, affected = self._run_statements(stmts, args, views)
+        finally:
+            for view in views:
+                self.spark.catalog.dropTempView(view)
+        return QueryResult(
+            df=last_df,
+            schema=last_df.schema if last_df is not None else None,
+            is_query=parsed.contains_query,
+            affected_rows=affected,
+            statements_run=len(stmts),
+        )
+
+    def _run_statements(self, stmts: list[str], args, views: list[str]):
+        """``(last query's DataFrame, affected rows)`` of running
+        ``stmts`` in order (:meth:`_run_script`)."""
         last_df: DataFrame | None = None
         affected = -1
         for stmt in stmts:
+            sync.sync(self.spark, stmt)
             kw = stmt.lstrip()[:8].upper()
             if kw.startswith("ATTACH") or kw.startswith("DETACH"):
                 self._attach_detach(stmt)
@@ -1117,7 +1051,7 @@ class Engine:
                 stmt,
                 re.IGNORECASE,
             ):
-                stmt = self._rewrite_time_travel(stmt)
+                stmt = self._rewrite_time_travel(stmt, views)
             if kw.startswith("TRUNCATE"):
                 # Spark refuses TRUNCATE on external tables; DELETE-all
                 # through the copy-on-write layer has identical semantics.
@@ -1301,6 +1235,7 @@ class Engine:
                 stmt, fk_table, fk_defs = constraints.extract_and_strip_fks(
                     stmt
                 )
+            is_query = classify(stmt).is_query
             insert_target: str | None = None
             if kw.startswith("INSERT"):
                 im = re.match(
@@ -1311,7 +1246,7 @@ class Engine:
                 )
                 if im:
                     insert_target = im.group(1).strip('`"')
-            dropped_versions_root: str | None = None
+            dropped_loc: str | None = None
             if kw.startswith("DROP"):
                 m = re.match(
                     r"^\s*DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?([\w.`\"]+)",
@@ -1322,19 +1257,14 @@ class Engine:
                     constraints.drop_pk(m.group(1))
                     constraints.drop_checks(m.group(1))
                     constraints.drop_fks(m.group(1))
-                    # Snapshot history must not survive re-creation: a
-                    # same-named table would otherwise continue the old
-                    # manifest chain and AT (VERSION => n) would return
-                    # the dropped table's rows. Resolve the root while
-                    # the table still exists; remove after the DROP.
-                    try:
-                        from swanlake_spark import versions
+                    # resolve the location while the table exists: its
+                    # snapshot history goes after the DROP (versions.forget)
+                    from swanlake_spark.operators.dml import _table_meta
 
-                        dropped_versions_root = versions.versions_root(
-                            self.spark, m.group(1).strip('`"')
-                        )
+                    try:
+                        dropped_loc = _table_meta(self.spark, m.group(1).strip('`"'))[0]
                     except Exception:
-                        dropped_versions_root = None
+                        dropped_loc = None
             if insert_target is not None:
                 # Serialize appends per table: two concurrent Spark
                 # append jobs on one path share the committer's
@@ -1343,12 +1273,12 @@ class Engine:
                 # lock every COW publish takes; the constraint check
                 # runs under it, so two sessions cannot both pass it
                 # with the same new key.
-                from swanlake_spark.operators.dml import (
-                    _table_location,
-                    table_write_lock,
-                )
+                from swanlake_spark.operators.dml import _table_meta, table_write_lock
 
-                loc = _table_location(self.spark, insert_target)
+                try:
+                    loc = _table_meta(self.spark, insert_target)[0]
+                except Exception:  # noqa: BLE001 — the INSERT reports it
+                    loc = None
                 with table_write_lock(self.spark, insert_target, loc=loc):
                     constraints.check_insert_sql(self.spark, stmt, loc=loc)
                     df = (
@@ -1357,15 +1287,15 @@ class Engine:
                         else self.spark.sql(stmt)
                     )
                     self._record_table_version(insert_target, "insert")
+            elif is_query:
+                with sync.planning(self.spark):
+                    df = self.spark.sql(stmt, args=args) if args else self.spark.sql(stmt)
             else:
                 df = self.spark.sql(stmt, args=args) if args else self.spark.sql(stmt)
-            if dropped_versions_root:
-                try:
-                    from swanlake_spark.operators.dml import _rm_path
+            if dropped_loc:
+                from swanlake_spark import versions
 
-                    _rm_path(self.spark, dropped_versions_root)
-                except Exception:
-                    pass
+                versions.forget(self.spark, dropped_loc)
             if pk_table and pk_cols:
                 constraints.register_pk(pk_table, pk_cols)
             if ck_table and ck_list:
@@ -1381,15 +1311,22 @@ class Engine:
                 )
                 if cm:
                     self._record_table_version(cm.group(1).strip('`"'), "create")
-            if classify(stmt).is_query:
+            am = re.match(
+                r"^\s*ALTER\s+TABLE\s+([\w.`\"]+)(?:\s+RENAME\s+TO\s+([\w.`\"]+))?",
+                stmt,
+                re.IGNORECASE,
+            )
+            if am:
+                # Spark's own ALTER (ADD COLUMNS, RENAME TO, ...): the
+                # manifest takes the table's new schema or name
+                from swanlake_spark.operators.dml import table_write_lock
+
+                altered = (am.group(2) or am.group(1)).strip('`"')
+                with table_write_lock(self.spark, altered):
+                    self._record_table_version(altered, "alter")
+            if is_query:
                 last_df = df
-        return QueryResult(
-            df=last_df,
-            schema=last_df.schema if last_df is not None else None,
-            is_query=parsed.contains_query,
-            affected_rows=affected,
-            statements_run=len(stmts),
-        )
+        return last_df, affected
 
     # -- schema probes -----------------------------------------------------
 
@@ -1442,25 +1379,13 @@ class Engine:
                 if before_ok and re.match(r"^(SELECT|WITH|VALUES|TABLE|FROM)\b", after):
                     as_pos = i
                     break
-        old_loc = None
-        try:
-            rows = self.spark.sql(f"DESCRIBE FORMATTED {table}").collect()
-            for r in rows:
-                if r.col_name.strip() == "Location":
-                    old_loc = r.data_type.strip()
-                    break
-        except Exception:
-            pass
-        old_versions_root = None
-        if old_loc:
-            try:
-                from swanlake_spark import versions as _versions
+        from swanlake_spark import versions
+        from swanlake_spark.operators.dml import _table_meta
 
-                old_versions_root = _versions.versions_root(
-                    self.spark, table, old_loc
-                )
-            except Exception:
-                old_versions_root = None
+        try:
+            old_loc = _table_meta(self.spark, table)[0]
+        except Exception:
+            old_loc = None
         if as_pos >= 0:
             head, query = stmt[:as_pos].rstrip(), stmt[as_pos + 2 :]
             src = self.spark.sql(query)  # analysis errors surface here
@@ -1491,14 +1416,9 @@ class Engine:
             if old_loc:
                 _rm_path(self.spark, old_loc)
             self.spark.sql(stmt)
-        if old_versions_root:
-            # the replacement is a NEW table: the dropped table's
-            # snapshot chain (manifests + retained files) must not leak
-            # into its history (same reasoning as the DROP TABLE path)
-            try:
-                _rm_path(self.spark, old_versions_root)
-            except Exception:
-                pass
+        # the replacement is a NEW table: the dropped table's snapshot
+        # chain must not leak into its history (as on DROP TABLE)
+        versions.forget(self.spark, old_loc)
         if pk_table and pk_cols:
             constraints.register_pk(pk_table, pk_cols)
         if ck_table and ck_list:
@@ -1873,15 +1793,20 @@ class Engine:
         raise InvalidArgument(f"unsupported ATTACH/DETACH syntax: {stmt.strip()!r}")
 
     def _record_table_version(self, table: str, op: str) -> None:
-        """Append a snapshot manifest after a write (versions.py).
-        Best-effort bookkeeping: a manifest failure must never fail the
-        write that already succeeded."""
-        try:
-            from swanlake_spark import versions
+        """Append a snapshot manifest after a write (versions.py). A
+        failed manifest write raises: every engine read scans the newest
+        manifest, so a write without one would not be seen. A name the
+        statement's table regex did not capture whole (a quoted name
+        with a space) is not looked up, so that table has no manifest
+        and Spark lists it."""
+        from swanlake_spark import versions
+        from swanlake_spark.operators.dml import _table_meta
 
-            versions.record_version(self.spark, table, op)
-        except Exception:
-            pass
+        try:
+            loc, _, schema = _table_meta(self.spark, table)
+        except Exception:  # noqa: BLE001 — see above
+            return
+        versions.record_version(self.spark, table, op, loc, schema)
 
     _AT_RE = re.compile(
         r"([\w.`\"]+)\s+AT\s*\(\s*(VERSION|TIMESTAMP)\s*=>([^)]*)\)",
@@ -1906,7 +1831,7 @@ class Engine:
         r"\bkmv_overlap\s*\(([^)]*)\)", re.IGNORECASE
     )
 
-    def _rewrite_time_travel(self, stmt: str) -> str:
+    def _rewrite_time_travel(self, stmt: str, views: list[str]) -> str:
         """DuckLake's time-travel surface on COW tables:
 
         - ``FROM t AT (VERSION => 3)`` / ``AT (TIMESTAMP => '…')`` →
@@ -1931,7 +1856,9 @@ class Engine:
 
         Matching runs on the literal-masked text (so string contents
         can't trigger a rewrite); argument values are sliced from the
-        original text, since masking blanks literals."""
+        original text, since masking blanks literals. The helper views'
+        names are appended to ``views``; the caller drops them once the
+        statement has run."""
         import uuid as _uuid
 
         from swanlake_spark import versions
@@ -1958,30 +1885,15 @@ class Engine:
                             dt = dt.replace(tzinfo=timezone.utc)
                         ts = dt.timestamp()
                     v = versions.version_at_timestamp(self.spark, table, ts)
-                view = (
-                    f"_swl_tt_{table.replace('.', '_')}_{_uuid.uuid4().hex[:6]}"
-                )
-                versions.read_version(self.spark, table, v) \
-                    .createOrReplaceTempView(view)
-                out = out[: m.start()] + view + out[m.end():]
-                continue
-            m = self._SNAPSHOTS_RE.search(masked)
-            if m:
+                df, name = versions.read_version(self.spark, table, v), f"tt_{table}"
+            elif m := self._SNAPSHOTS_RE.search(masked):
                 arg = out[m.start(1):m.end(1)].strip()
                 am = re.match(r"^'([^']+)'$", arg)
                 if am is None:
                     break  # not the snapshots('t') shape; leave untouched
                 table = am.group(1)
-                view = (
-                    f"_swl_snap_{table.replace('.', '_')}"
-                    f"_{_uuid.uuid4().hex[:6]}"
-                )
-                versions.snapshots(self.spark, table) \
-                    .createOrReplaceTempView(view)
-                out = out[: m.start()] + view + out[m.end():]
-                continue
-            m = self._CHANGES_RE.search(masked)
-            if m:
+                df, name = versions.snapshots(self.spark, table), f"snap_{table}"
+            elif m := self._CHANGES_RE.search(masked):
                 raw = out[m.start(1):m.end(1)]
                 cm = re.match(
                     r"^\s*'([^']+)'\s*,\s*(\d+)\s*,\s*(\d+)\s*$", raw
@@ -1989,17 +1901,11 @@ class Engine:
                 if cm is None:
                     break  # not table_changes('t', v1, v2); leave as-is
                 table = cm.group(1)
-                view = (
-                    f"_swl_cdc_{table.replace('.', '_')}"
-                    f"_{_uuid.uuid4().hex[:6]}"
-                )
-                versions.table_changes(
+                df = versions.table_changes(
                     self.spark, table, int(cm.group(2)), int(cm.group(3))
-                ).createOrReplaceTempView(view)
-                out = out[: m.start()] + view + out[m.end():]
-                continue
-            m = self._HH_RE.search(masked)
-            if m:
+                )
+                name = f"cdc_{table}"
+            elif m := self._HH_RE.search(masked):
                 raw = out[m.start(1):m.end(1)]
                 hm = re.match(
                     r"^\s*'([^']+)'\s*,\s*'([^']+)'\s*,\s*(\d+)\s*$", raw
@@ -2009,17 +1915,11 @@ class Engine:
                 from swanlake_spark.operators import sketch
 
                 table, col = hm.group(1), hm.group(2)
-                view = (
-                    f"_swl_hh_{table.replace('.', '_')}"
-                    f"_{_uuid.uuid4().hex[:6]}"
-                )
-                sketch.heavy_hitters(
+                df = sketch.heavy_hitters(
                     self.spark.table(table), col, int(hm.group(3))
-                ).createOrReplaceTempView(view)
-                out = out[: m.start()] + view + out[m.end():]
-                continue
-            m = self._KMV_RE.search(masked)
-            if m:
+                )
+                name = f"hh_{table}"
+            elif m := self._KMV_RE.search(masked):
                 raw = out[m.start(1):m.end(1)]
                 km = re.match(
                     r"^\s*'([^']+)'\s*,\s*'([^']+)'\s*,\s*(\d+)"
@@ -2037,19 +1937,12 @@ class Engine:
                 sk = sketch.kmv_sketch(
                     self.spark.table(table), col, k=k, by=by
                 )
-                est = sk.select(
+                df = sk.select(
                     *by,
                     sketch.kmv_distinct(F.col("kmv"), k).alias("est"),
                 )
-                view = (
-                    f"_swl_kmv_{table.replace('.', '_')}"
-                    f"_{_uuid.uuid4().hex[:6]}"
-                )
-                est.createOrReplaceTempView(view)
-                out = out[: m.start()] + view + out[m.end():]
-                continue
-            m = self._KMVOP_RE.search(masked)
-            if m:
+                name = f"kmv_{table}"
+            elif m := self._KMVOP_RE.search(masked):
                 raw = out[m.start(1):m.end(1)]
                 km = re.match(
                     r"^\s*'([^']+)'\s*,\s*'([^']+)'\s*,\s*'([^']+)'"
@@ -2069,17 +1962,13 @@ class Engine:
                 b = sketch.kmv_sketch(
                     self.spark.table(km.group(3)), km.group(4), k=k
                 ).select(F.col("kmv").alias("__kb"))
-                ops = a.crossJoin(b).select(
+                df = a.crossJoin(b).select(
                     sketch.kmv_set_ops(
                         F.col("__ka"), F.col("__kb"), k
                     ).alias("o")
                 ).select("o.union_est", "o.intersect_est", "o.jaccard")
-                view = f"_swl_kmvop_{_uuid.uuid4().hex[:6]}"
-                ops.createOrReplaceTempView(view)
-                out = out[: m.start()] + view + out[m.end():]
-                continue
-            m = self._STRIP_RE.search(masked)
-            if m:
+                name = "kmvop"
+            elif m := self._STRIP_RE.search(masked):
                 raw = out[m.start(1):m.end(1)]
                 sm = re.match(
                     r"^\s*'([^']+)'\s*,\s*'([^']+)'\s*,\s*(\d+)\s*$", raw
@@ -2089,18 +1978,18 @@ class Engine:
                 from swanlake_spark.operators import span_dedup
 
                 corpus, ref = sm.group(1), sm.group(2)
-                view = (
-                    f"_swl_strip_{corpus.replace('.', '_')}"
-                    f"_{_uuid.uuid4().hex[:6]}"
-                )
-                span_dedup.strip_contaminated_spans(
+                df = span_dedup.strip_contaminated_spans(
                     self.spark.table(corpus),
                     self.spark.table(ref),
                     min_tokens=int(sm.group(3)),
-                ).createOrReplaceTempView(view)
-                out = out[: m.start()] + view + out[m.end():]
-                continue
-            break
+                )
+                name = f"strip_{corpus}"
+            else:
+                break
+            view = f"_swl_{name.replace('.', '_')}_{_uuid.uuid4().hex[:6]}"
+            df.createOrReplaceTempView(view)
+            views.append(view)
+            out = out[: m.start()] + view + out[m.end():]
         return out
 
     def _rewrite_information_schema(self, stmt: str) -> str:

@@ -16,11 +16,11 @@ gone drops all of its entries, which bounds the memo by the live files.
 
 Writers list the directory under the table write lock, so no writer can
 publish between the listing and the rewrite that relies on it. Point
-reads list it without the lock and serve it only when it agrees with
-the table's newest manifest (``operators/point.py``). Any case
-the statistics cannot vouch for answers ``None`` and the caller takes
-its unpruned path: a non-local location, a subdirectory in the table
-root, or an unreadable footer.
+reads take the files of the table's newest manifest instead, without a
+listing (:func:`snapshot_files`, ``operators/point.py``). Any case the
+statistics cannot vouch for answers ``None`` and the caller takes its
+unpruned path: a non-local location, a subdirectory in the table root,
+or an unreadable footer.
 """
 
 from __future__ import annotations
@@ -63,6 +63,8 @@ class FileStats:
 
 
 _MEMO: dict[str, dict[tuple[str, int, int], FileStats]] = {}
+# per table directory: (manifest seq, its files' statistics)
+_SNAPSHOT: dict[str, tuple[int, list[FileStats]]] = {}
 _MEMO_LOCK = threading.Lock()
 
 
@@ -97,62 +99,29 @@ def _read_footer(name: str, path: str, size: int) -> FileStats:
     return FileStats(name, path, size, md.num_rows, ranges)
 
 
-def file_stats(name: str, path: str) -> FileStats:
-    """Footer statistics of the one Parquet file at OS path ``path``
-    (not memoized: point reads ask this of a retained file)."""
-    return _read_footer(name, path, os.stat(path).st_size)
-
-
-def live_files(loc: str | None) -> list[FileStats] | None:
-    """Footer statistics of every live data file under the table
-    location ``loc``, or None when they cannot vouch for the table's
-    contents: a non-local location, a non-hidden subdirectory (Spark
-    would read files the top-level listing does not show), or a file
-    whose footer does not read as Parquet. A file that leaves the
-    directory between the listing and its footer read (a reader
-    outside the table write lock racing a publish) lists again."""
+def snapshot_files(m) -> list[FileStats] | None:
+    """Footer statistics of every file the manifest ``m`` (a
+    ``versions.Manifest``) names, or None when they cannot vouch for
+    them: a non-local location, a file in a subdirectory, or a footer
+    that does not read as Parquet. Built once per manifest, reusing
+    the statistics of the previous manifest's files by name and size (a
+    publish never rewrites a file in place). Raises FileNotFoundError
+    for a file that a later publish moved away before its footer was
+    read."""
     from swanlake_spark.operators.dml import _local_os_path
 
-    osp = _local_os_path(loc) if loc else None
-    if osp is None:
-        return None
-    osp = osp.rstrip("/")
-    for _ in range(3):
-        try:
-            return _live_files(osp)
-        except FileNotFoundError:
-            continue
-    return None
-
-
-def _live_files(osp: str) -> list[FileStats] | None:
-    """:func:`live_files` of the OS directory ``osp``; raises
-    FileNotFoundError when a listed file is gone before it is read."""
-    try:
-        entries = [e for e in os.scandir(osp) if not is_hidden(e.name)]
-    except OSError:
-        with _MEMO_LOCK:
-            _MEMO.pop(osp, None)  # e.g. a dropped table's directory
-        return None
-    if not all(e.is_file() for e in entries):
-        return None
-    try:
-        listing = sorted(
-            (e.name, st.st_size, st.st_mtime_ns)
-            for e in entries
-            for st in (e.stat(),)
-        )
-    except FileNotFoundError:
-        raise
-    except OSError:
-        return None
+    osp = _local_os_path(m.loc)
     with _MEMO_LOCK:
-        known = dict(_MEMO.get(osp, {}))
+        got = _SNAPSHOT.get(osp)
+        if got is not None and got[0] == m.seq:
+            return got[1]
+    if osp is None or any("/" in name for name, _ in m.files):
+        return None
+    known = {(f.name, f.size): f for f in got[1]} if got else {}
     out: list[FileStats] = []
-    for key in listing:
-        fs = known.get(key)
+    for name, size in m.files:
+        fs = known.get((name, size))
         if fs is None:
-            name, size, _ = key
             try:
                 fs = _read_footer(name, f"{osp}/{name}", size)
             except FileNotFoundError:
@@ -161,11 +130,48 @@ def _live_files(osp: str) -> list[FileStats] | None:
                 return None  # includes pyarrow's ArrowInvalid
         out.append(fs)
     with _MEMO_LOCK:
+        if osp not in _SNAPSHOT or _SNAPSHOT[osp][0] < m.seq:
+            _SNAPSHOT[osp] = (m.seq, out)
+    return out
+
+
+def live_files(loc: str | None) -> list[FileStats] | None:
+    """Footer statistics of every live data file under the table
+    location ``loc``, or None when they cannot vouch for the table's
+    contents: a non-local location, a non-hidden subdirectory (Spark
+    would read files the top-level listing does not show), or a file
+    whose footer does not read as Parquet. Its callers hold the table
+    write lock, so no file leaves the directory meanwhile."""
+    from swanlake_spark.operators.dml import _local_os_path
+
+    osp = _local_os_path(loc) if loc else None
+    if osp is None:
+        return None
+    osp = osp.rstrip("/")
+    try:
+        entries = [e for e in os.scandir(osp) if not is_hidden(e.name)]
+        if not all(e.is_file() for e in entries):
+            return None
+        listing = sorted(
+            (e.name, st.st_size, st.st_mtime_ns)
+            for e in entries
+            for st in (e.stat(),)
+        )
+        with _MEMO_LOCK:
+            known = dict(_MEMO.get(osp, {}))
+        out = [
+            known.get(key) or _read_footer(key[0], f"{osp}/{key[0]}", key[1])
+            for key in listing
+        ]
+    except (OSError, ValueError):  # includes pyarrow's ArrowInvalid
+        out = []  # e.g. a dropped table's directory
+        listing = None
+    with _MEMO_LOCK:
         if out:
             _MEMO[osp] = dict(zip(listing, out))
         else:
             _MEMO.pop(osp, None)
-    return out
+    return out if listing is not None else None
 
 
 def candidates(
@@ -173,6 +179,6 @@ def candidates(
 ) -> list[FileStats]:
     """The files that may hold a row satisfying every ``(column,
     intervals)`` bound."""
-    return [
-        f for f in files if all(f.may_hold(c, iv) for c, iv in bounds)
-    ]
+    for c, iv in bounds:
+        files = [f for f in files if f.may_hold(c, iv)]
+    return files

@@ -34,7 +34,6 @@ from swanlake_spark import versions
 from swanlake_spark.errors import FailedPrecondition, InvalidArgument
 from swanlake_spark.operators.dml import (
     _rm_path,
-    _table_info,
     _table_meta,
     _WriteLock,
     publish,
@@ -321,7 +320,7 @@ def cluster_table(
     measurable."""
     from pyspark.sql import functions as F
 
-    loc, part_cols = _table_info(spark, table)
+    loc, part_cols, _ = _table_meta(spark, table)
     if part_cols:
         raise InvalidArgument(
             "cluster_table targets unpartitioned tables; Z-order within "
@@ -386,9 +385,9 @@ def vacuum_table(
     snapshots_expired, snapshot_bytes}``."""
     import time as _time
 
-    from swanlake_spark.operators.dml import _table_location
+    from swanlake_spark.operators.dml import _table_meta
 
-    loc = _table_location(spark, table)
+    loc = _table_meta(spark, table)[0]
     stats = {
         "table": table,
         "staging_dirs_removed": 0,

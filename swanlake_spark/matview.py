@@ -42,9 +42,12 @@ from swanlake_spark.errors import InvalidArgument, NotFound
 
 
 def _sidecar_path(spark: SparkSession, table: str) -> str | None:
-    from swanlake_spark.operators.dml import _table_location
+    from swanlake_spark.operators.dml import _table_meta
 
-    loc = _table_location(spark, table)
+    try:
+        loc = _table_meta(spark, table)[0]
+    except Exception:  # noqa: BLE001 — no such table: no sidecar
+        return None
     if loc is None:
         return None
     return loc.rstrip("/") + "/_swl_matview.json"
@@ -548,9 +551,9 @@ def _state_path(
     loc: str | None = None,
 ) -> str:
     if loc is None:
-        from swanlake_spark.operators.dml import _table_location
+        from swanlake_spark.operators.dml import _table_meta
 
-        loc = _table_location(spark, name)
+        loc = _table_meta(spark, name)[0]
     return f"{loc.rstrip('/')}/{_STATE_DIR}/v{base_version}"
 
 
@@ -966,7 +969,7 @@ def refresh_incremental(spark: SparkSession, name: str) -> int:
     # state helper below takes the threaded location (the metadata tax
     # otherwise dominates a small refresh — measured ~0.7 s of DESCRIBE
     # + repeat resolution on a 30-group rollup)
-    view_loc = dml._table_location(spark, name)
+    view_loc = dml._table_meta(spark, name)[0]
 
     def _snap_diff(tbl, stamped_v, loc):
         cur = versions.current_version(spark, tbl, loc)
@@ -993,7 +996,7 @@ def refresh_incremental(spark: SparkSession, name: str) -> int:
     # removed/added file-name delta
     tinfo: list[dict] = []
     for tbl, sv in stamped:
-        loc = dml._table_location(spark, tbl)
+        loc = dml._table_meta(spark, tbl)[0]
         cur, old_n, rem, add = _snap_diff(tbl, sv, loc)
         tinfo.append(
             dict(tbl=tbl, sv=sv, cur=cur, loc=loc, old=old_n,
@@ -1065,7 +1068,22 @@ def refresh_incremental(spark: SparkSession, name: str) -> int:
         # IVM asymmetry reduced to key-local fact I/O. Delta sides
         # under the broadcast bound ship as broadcasts.
         ntab = len(tinfo)
-        schemas = [spark.table(t["tbl"]).schema for t in tinfo]
+        _anchors: dict[tuple[int, str], DataFrame] = {}
+
+        def _anchor(j: int, which: str) -> DataFrame:
+            if (j, which) not in _anchors:
+                t = tinfo[j]
+                v = t["sv"] if which == "old" else t["cur"]
+                # both anchors read with the schema their manifest
+                # records, so a concurrent ALTER cannot split a
+                # snapshot's files from its schema, and no parquet
+                # schema-inference job runs
+                _anchors[(j, which)] = versions.read_version(
+                    spark, t["tbl"], v, t["loc"]
+                )
+            return _anchors[(j, which)]
+
+        schemas = [_anchor(j, "new").schema for j in range(ntab)]
         colsets = [{f.name.lower() for f in sch.fields} for sch in schemas]
         # normalize each ON so lcol lives in the earlier chain prefix
         # and rcol in the joined table (stamp time validated this)
@@ -1077,23 +1095,6 @@ def refresh_incremental(spark: SparkSession, name: str) -> int:
                 lon, ron = ron, lon
             conds.append((lon, ron))
             seen |= colsets[i + 1]
-
-        _anchors: dict[tuple[int, str], DataFrame] = {}
-
-        def _anchor(j: int, which: str) -> DataFrame:
-            if (j, which) not in _anchors:
-                t = tinfo[j]
-                v = t["sv"] if which == "old" else t["cur"]
-                # "new" anchors read the CURRENT snapshot, whose files
-                # carry the current catalog schema — pinning it skips
-                # one parquet schema-inference driver job per anchor
-                # (the _read_delta rule, r13). "old" anchors keep
-                # inference: historical files surface their own schema.
-                _anchors[(j, which)] = versions.read_version(
-                    spark, t["tbl"], v, t["loc"],
-                    schema=schemas[j] if which == "new" else None,
-                )
-            return _anchors[(j, which)]
 
         def _dside(tbl, names, label, loc):
             df = _read_delta(spark, tbl, names, label, loc)
@@ -1336,12 +1337,8 @@ def refresh_incremental(spark: SparkSession, name: str) -> int:
                 [_anchor(j, "new") for j in range(len(tinfo))]
             )
         else:
-            # current snapshot = current catalog schema; pin it to skip
-            # the inference job (the _read_delta rule, r13)
-            cur_base = versions.read_version(
-                spark, base, cur_v, base_loc,
-                schema=spark.table(base).schema,
-            )
+            # read with the schema the snapshot's manifest records
+            cur_base = versions.read_version(spark, base, cur_v, base_loc)
         if shape["pred"]:
             cur_base = cur_base.filter(F.expr(shape["pred"]))
         rec_aggs = [
@@ -1426,7 +1423,7 @@ def refresh_incremental(spark: SparkSession, name: str) -> int:
         state_published = False
         published = False
         maintain_state = state_mode != "none"
-        part_cols = dml._partition_columns(spark, name)
+        part_cols = dml._table_meta(spark, name)[1]
         if small and not part_cols:
             # ONE Arrow collect serves both publishes: the combined
             # projection carries the view columns AND the state
@@ -1563,7 +1560,7 @@ def refresh(
         # is the stability proxy for the recomputed size — rollup
         # cardinality doesn't move between refreshes. Saves the
         # separate count() job and the distributed staging write.
-        loc, part_cols = dml._table_info(spark, name)
+        loc, part_cols = dml._table_meta(spark, name)[:2]
         try:
             small = _total_bytes(
                 spark, list(spark.table(name).inputFiles())
@@ -1668,9 +1665,11 @@ def drop(spark: SparkSession, name: str) -> None:
     """DROP MATERIALIZED VIEW: remove sidecar + table + files."""
     if definition(spark, name) is None:
         raise NotFound(f"{name} is not a materialized view")
-    from swanlake_spark.operators.dml import _rm_path, _table_location
+    from swanlake_spark import versions
+    from swanlake_spark.operators.dml import _rm_path, _table_meta
 
-    loc = _table_location(spark, name)
+    loc = _table_meta(spark, name)[0]
     spark.sql(f"DROP TABLE IF EXISTS {name}")
+    versions.forget(spark, loc)
     if loc:
         _rm_path(spark, loc)

@@ -131,10 +131,6 @@ def where_has_subquery(where: str | None) -> bool:
     return bool(re.search(r"\b(SELECT|EXISTS)\b", _mask_literals(where), re.IGNORECASE))
 
 
-def _partition_columns(spark: SparkSession, table: str) -> list[str]:
-    return _table_info(spark, table)[1]
-
-
 # Sentinel distinguishing "caller did not resolve the location" from a
 # genuinely unresolvable (None) location: every DESCRIBE FORMATTED is a
 # Catalyst round-trip (~25 ms), and one OLTP-shaped statement used to
@@ -142,74 +138,50 @@ def _partition_columns(spark: SparkSession, table: str) -> list[str]:
 _UNRESOLVED = object()
 
 
-def _table_location(spark: SparkSession, table: str) -> str | None:
-    return _table_info(spark, table)[0]
-
-
-def _table_info(spark: SparkSession, table: str) -> tuple[str | None, list[str]]:
-    """``(location, partition columns in declared order)`` of ``table``,
-    from one session-catalog lookup (:func:`_catalog_meta`) instead of
-    a DESCRIBE query each (~50 ms for DESCRIBE FORMATTED, ~17 ms for
-    DESCRIBE TABLE, vs ~1 ms here). A temp view has neither. Any
-    resolution surprise (persistent views have no location, three-part
-    or exotic identifiers) falls back to the DESCRIBE scans."""
-    try:
-        meta = _catalog_meta(spark, table)
-    except Exception:  # noqa: BLE001 — fall back to DESCRIBE
-        return _describe_location(spark, table), _describe_partitions(spark, table)
-    return (None, []) if meta is None else (meta[0], meta[1])
-
-
 def _table_meta(
     spark: SparkSession, table: str
 ) -> tuple[str | None, list[str], T.StructType]:
-    """``(location, partition columns, schema)`` of ``table`` from one
-    catalog lookup (:func:`_catalog_meta`); the schema is the stored
-    one, which ``spark.table(table).schema`` equals, without resolving
-    the relation and listing its files through Spark (~20 ms). A temp
-    view, or a name the lookup cannot resolve, takes its location and
-    partitions as :func:`_table_info` does and its schema from
-    ``spark.table``."""
+    """``(location, partition columns in declared order, schema)`` of
+    ``table``: the one table-metadata lookup. The session catalog answers
+    it (~12 Py4J calls, 1 ms, where DESCRIBE FORMATTED costs ~50 ms) with
+    the stored schema, without resolving the relation and listing its
+    files; the location is rendered via hadoop.fs.Path, DESCRIBE's form
+    (file:/tmp/..., not file:///tmp/...), which downstream code compares
+    against file paths. A temp view, which shadows any same-named table,
+    has no location and no partitions. A name the lookup cannot take
+    (three parts, a persistent view's missing location) falls back to
+    DESCRIBE FORMATTED. A temp view's or a fallback name's schema comes
+    from ``spark.table``, which raises for a name that does not
+    resolve."""
     try:
-        meta = _catalog_meta(spark, table)
-    except Exception:  # noqa: BLE001 — fall back to DESCRIBE
+        state = spark._jsparkSession.sessionState()
+        ident = state.sqlParser().parseTableIdentifier(table)
+        cat = state.catalog()
+        if cat.isTempView(ident):
+            return None, [], spark.table(table).schema
+        meta = cat.getTableMetadata(ident)
+        seq = meta.partitionColumnNames()
         return (
-            _describe_location(spark, table),
-            _describe_partitions(spark, table),
-            spark.table(table).schema,
+            _hadoop_path(spark.sparkContext._jvm)(meta.location()).toString(),
+            [seq.apply(i) for i in range(seq.size())],
+            T.StructType.fromJson(json.loads(meta.schema().json())),
         )
-    if meta is None:
-        return None, [], spark.table(table).schema
-    loc, part_cols, jmeta = meta
-    return loc, part_cols, T.StructType.fromJson(json.loads(jmeta.schema().json()))
-
-
-def _catalog_meta(spark: SparkSession, table: str):
-    """``(location, partition columns, Java CatalogTable)`` of ``table``
-    from the session catalog (isTempView + getTableMetadata), or None
-    for a temp view, which shadows any same-named table and has no
-    location. The URI is rendered via hadoop.fs.Path so the string
-    matches DESCRIBE's form exactly (file:/tmp/..., not file:///tmp/...)
-    — downstream code compares these strings against file paths. Raises
-    for an identifier the parser or the catalog cannot resolve (three
-    parts, a persistent view's missing location).
-
-    Every point statement asks this, so it costs ~12 Py4J calls: the
-    identifier comes from Spark's parser (one call) and the Path class
-    is looked up once per JVM (each package step of a ``jvm.a.b.C``
-    lookup is a call)."""
-    state = spark._jsparkSession.sessionState()
-    ident = state.sqlParser().parseTableIdentifier(table)
-    cat = state.catalog()
-    if cat.isTempView(ident):
-        return None
-    meta = cat.getTableMetadata(ident)
-    seq = meta.partitionColumnNames()
-    return (
-        _hadoop_path(spark.sparkContext._jvm)(meta.location()).toString(),
-        [seq.apply(i) for i in range(seq.size())],
-        meta,
-    )
+    except Exception:  # noqa: BLE001 — fall back to DESCRIBE
+        pass
+    try:
+        rows = spark.sql(f"DESCRIBE FORMATTED {table}").collect()
+    except Exception:  # noqa: BLE001 — spark.table reports the name
+        rows = []
+    loc, part_cols, in_part = None, [], False
+    for r in rows:
+        name = r.col_name.strip()
+        if name == "Location":
+            loc = r.data_type.strip()
+        elif name.startswith("#") and name != "# col_name":
+            in_part = name.startswith("# Partition")
+        elif in_part and name and name != "# col_name":
+            part_cols.append(name)
+    return loc, part_cols, spark.table(table).schema
 
 
 @functools.lru_cache(maxsize=None)
@@ -217,37 +189,8 @@ def _hadoop_path(jvm):
     return jvm.org.apache.hadoop.fs.Path
 
 
-def _describe_location(spark: SparkSession, table: str) -> str | None:
-    try:
-        rows = spark.sql(f"DESCRIBE FORMATTED {table}").collect()
-    except Exception:
-        return None
-    for r in rows:
-        if r.col_name.strip() == "Location":
-            return r.data_type.strip()
-    return None
-
-
-def _describe_partitions(spark: SparkSession, table: str) -> list[str]:
-    try:
-        rows = spark.sql(f"DESCRIBE TABLE {table}").collect()
-    except Exception:
-        return []
-    cols, in_part = [], False
-    for r in rows:
-        name = r.col_name.strip()
-        if name.startswith("# Partition"):
-            in_part = True
-            continue
-        if name.startswith("#") or not name:
-            continue
-        if in_part:
-            cols.append(name)
-    return cols
-
-
 def _loc_or_resolve(spark: SparkSession, table: str, loc) -> str | None:
-    return _table_location(spark, table) if loc is _UNRESOLVED else loc
+    return _table_meta(spark, table)[0] if loc is _UNRESOLVED else loc
 
 
 def staging_dir(spark: SparkSession, table: str, loc=_UNRESOLVED) -> str:
@@ -364,19 +307,11 @@ def _refresh(spark: SparkSession, table: str, loc: str) -> None:
     re-listed, by ``refreshByPath``: it refreshes the file index inside
     each cached plan over ``loc`` before re-caching it. ``refreshTable``
     re-caches from the index the plan was cached with, which a second
-    write leaves naming retired files. A name the table-identifier
-    parser cannot take is refreshed with ``refreshTable``."""
-    js = spark._jsparkSession
-    state = js.sessionState()
-    try:
-        ident = state.sqlParser().parseTableIdentifier(table)
-    except Exception:  # noqa: BLE001 — refreshTable resolves it
-        ident = None
-    if ident is None:
-        spark.catalog.refreshTable(table)
-    else:
-        state.catalog().invalidateCachedTable(ident)
-    if not js.sharedState().cacheManager().isEmpty():
+    write leaves naming retired files (``sync._invalidate``)."""
+    from swanlake_spark import sync
+
+    sync._invalidate(spark, table)
+    if not spark._jsparkSession.sharedState().cacheManager().isEmpty():
         spark.catalog.refreshByPath(loc)
 
 
@@ -419,8 +354,8 @@ def publish(
     Consistency window: ADD-THEN-RETIRE (DuckLake's add-before-retire
     commit shape). Between steps 3 and 4 a directory-scan reader can see
     old and new files together (duplicated rows); manifest-resolved
-    readers (``versions.read_current``, ``AT (VERSION => n)``) never
-    do, since the manifest flips to the new file list in one write. A
+    readers (every engine statement, ``sync.py``; ``AT (VERSION => n)``)
+    never do, since the manifest flips to the new file list in one write. A
     crash in the window leaves a recoverable superset, never a hole.
     A rename that fails, or whose local target exists, raises IOError
     with the old files still intact; an unresolvable location raises
@@ -626,14 +561,18 @@ def table_write_lock(
     FailedPrecondition — the reference's transaction-conflict status
     class. File-scheme locations only; on object stores (no atomic
     create-exclusive) the lock is skipped and concurrent writers need
-    an external coordinator, as documented in SCALE.md."""
+    an external coordinator, as documented in SCALE.md. Inside, the
+    session's cached relation of ``table`` lists the newest manifest
+    (``sync.release``), which a Spark write plans against."""
     import time as _time
 
+    from swanlake_spark import sync
     from swanlake_spark.errors import FailedPrecondition
 
     base = _loc_or_resolve(spark, table, loc)
     path = _write_lock_path(table, base)
     if path is None:
+        sync.release(spark, table, base)
         yield
         return
     lock = _WriteLock(path)
@@ -646,6 +585,7 @@ def table_write_lock(
             )
         _time.sleep(0.02)
     try:
+        sync.release(spark, table, base)
         yield
     finally:
         lock.release()
@@ -1972,7 +1912,7 @@ def merge_table(
             part_cols=part_cols, schema=schema,
         )
         if affected:
-            versions.record_version(spark, table, "merge", loc=loc)
+            versions.record_version(spark, table, "merge", loc, schema)
     return affected
 
 
@@ -2118,7 +2058,7 @@ def update_table(
             schema=schema,
         )
         if affected:
-            versions.record_version(spark, table, "update", loc=loc)
+            versions.record_version(spark, table, "update", loc, schema)
     return affected
 
 
@@ -2225,7 +2165,7 @@ def delete_from(spark: SparkSession, table: str, where: str | None = None) -> in
             spark, table, where, loc, part_cols=part_cols, schema=schema
         )
         if affected:
-            versions.record_version(spark, table, "delete", loc=loc)
+            versions.record_version(spark, table, "delete", loc, schema)
     return affected
 
 

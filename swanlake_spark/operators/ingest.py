@@ -275,5 +275,5 @@ def insert_arrow(
             dml._write_staged_arrow(dml._local_os_path(staged), aligned, slices)
             dml.publish(spark, table, staged, [], loc)
             dml._rm_path(spark, staged)
-        versions.record_version(spark, table, "append", loc=loc)
+        versions.record_version(spark, table, "append", loc, target)
     return tbl.num_rows

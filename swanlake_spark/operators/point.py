@@ -21,8 +21,6 @@ and "Point writes" sections state the rules.
 
 from __future__ import annotations
 
-import json
-import os
 import re
 import time
 from dataclasses import dataclass
@@ -209,8 +207,8 @@ _SELECT = re.compile(
     rf"\s*;?\s*$",
     re.IGNORECASE | re.DOTALL,
 )
-# tries to find the newest snapshot's files all present: a try fails when
-# a compaction deleted one of them before its manifest was recorded
+# tries to read the newest manifest's candidates: a try fails when a
+# publish retired one of them before its manifest was recorded
 _READ_TRIES = 6
 
 
@@ -262,7 +260,7 @@ def read(spark, shape: PointRead):
     columns and the schema; the table must be unpartitioned, local,
     typed with :data:`DRIVER_TYPES` only, and every WHERE term must
     bound an integral column (``ORDER BY`` names one of them). The rows
-    come from the newest snapshot's files (:func:`_snapshot_rows`)."""
+    come from the newest manifest's files (:func:`_snapshot_rows`)."""
     import pyarrow as pa
     import pyarrow.compute as pc
     from pyspark.sql import types as T
@@ -270,15 +268,11 @@ def read(spark, shape: PointRead):
     from swanlake_spark.operators import dml
 
     try:
-        meta = dml._catalog_meta(spark, shape.table)
+        loc, part_cols, schema = dml._table_meta(spark, shape.table)
     except Exception:  # noqa: BLE001 — Spark resolves (or reports) it
         return None
-    if meta is None:
+    if loc is None or part_cols or dml._local_os_path(loc) is None:
         return None
-    loc, part_cols, jmeta = meta
-    if part_cols or dml._local_os_path(loc) is None:
-        return None
-    schema = T.StructType.fromJson(json.loads(jmeta.schema().json()))
     arrow_schema = driver_arrow_schema(schema)
     if arrow_schema is None:
         return None
@@ -327,63 +321,29 @@ def read(spark, shape: PointRead):
 
 def _snapshot_rows(spark, table: str, loc: str, bounds, arrow_schema):
     """The candidate rows (:func:`_read_candidates`) of the table's
-    newest snapshot, or None: Spark reads the table. The candidates are
-    read whole into driver memory, so they are capped like a point
-    write's (``dml._DRIVER_REWRITE_MAX_BYTES``).
-
-    The newest manifest's file set is the snapshot when it equals the
-    live listing, or, while the table's write-lock file exists, in
-    place of the listing: a writer between ``dml.publish``'s rename-in
-    and its ``record_version`` has added files the manifest does not
-    name yet and may have retired some it does, so its names resolve
-    retained-first (``versions._resolve_names``). A file that vanished
-    (a compaction deleting its inputs, or an expiry the newest
-    manifest) re-resolves, up to :data:`_READ_TRIES` times. A manifest that disagrees with the
-    listing while no writer holds the lock (an outside writer, or
-    versioning off) leaves the table to Spark after one more look."""
+    newest manifest (``versions.newest``, held in memory), or None:
+    Spark reads the table. The candidates are read whole into driver
+    memory, so they are capped like a point write's
+    (``dml._DRIVER_REWRITE_MAX_BYTES``). A candidate that a later
+    publish moved away before it was read re-reads the then newest
+    manifest, up to :data:`_READ_TRIES` times."""
     from swanlake_spark import versions
     from swanlake_spark.operators import dml
 
-    root = versions.versions_root(spark, table, loc)
-    lock = dml._write_lock_path(table, loc)
-    if root is None or lock is None:
-        return None
-    stale = False
     for attempt in range(_READ_TRIES):
         if attempt:
             time.sleep(min(0.005 * 2 ** (attempt - 1), 0.05))
-        live = filestats.live_files(loc)
-        manifests = versions._manifest_paths(spark, root)
-        if live is None or not manifests:
+        m = versions.newest(spark, table, loc)
+        if m is None:
             return None
-        by_name = {f.name: f for f in live}
         try:
-            names = [
-                f["name"]
-                for f in versions._read_json(spark, manifests[-1][1])["files"]
-            ]
-            if set(names) == set(by_name):
-                files = live
-            elif os.path.exists(lock):
-                files = []
-                for name, path in zip(names, versions._resolve_names(
-                    spark, table, names, f"v{manifests[-1][0]}", loc
-                )):
-                    osp = dml._local_os_path(path)
-                    known = by_name.get(name)
-                    files.append(
-                        known if known is not None and known.path == osp
-                        else filestats.file_stats(name, osp)
-                    )
-            elif stale:
+            files = filestats.snapshot_files(m)
+            if files is None:
                 return None
-            else:
-                stale = True  # a writer may have finished between the looks
-                continue
             hits = filestats.candidates(files, bounds)
             if sum(f.size for f in hits) > dml._DRIVER_REWRITE_MAX_BYTES:
                 return None
             return _read_candidates(hits, arrow_schema)
-        except (FileNotFoundError, versions.SnapshotUnavailable):
+        except FileNotFoundError:
             continue
     return None

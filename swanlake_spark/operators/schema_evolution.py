@@ -13,24 +13,21 @@ machinery as DML:
    silently retyped PK/FK column would change FK-probe join semantics);
    RENAME is allowed on key columns because the registrations are
    rewritten to the new name;
-2. the new contents stage to the ``_staging`` sibling (cluster-visible);
-3. under the table write lock, ``dml.publish`` swaps the staged files
-   in for every pre-ALTER file (add first, then retire into the
-   snapshot store, so ``AT (VERSION => n)`` reads the old contents with
-   their old schema; per-file renames merge into existing partition
-   dirs), and only then does the catalog entry swap to the new column
-   list at the SAME location, with a manifest recording the new state
-   (op ``alter_drop_column`` / ``alter_rename_column`` /
-   ``alter_column_type``). A crash anywhere in the window leaves a
-   table with data present (possibly briefly doubled for directory-scan
-   readers — the documented publish window), never an empty or missing
-   one;
-4. the catalog swap itself (DROP → CREATE, Spark v1 parquet has no
-   in-place column DDL) is registered in an in-process swap table so
-   concurrent engine readers that hit table-not-found inside the
-   window wait for the swap and retry instead of erroring
-   (``swap_in_progress`` / engine.query's retry);
-5. constraint registrations survive: RENAME rewrites the PK/FK column
+2. under the table write lock, the new contents are staged from the
+   table as it is then to the ``_staging`` sibling (cluster-visible),
+   ``dml.publish`` swaps them in for every
+   pre-ALTER file (add first, then retire into the snapshot store, so
+   ``AT (VERSION => n)`` reads the old contents with their old schema;
+   per-file renames merge into existing partition dirs), the catalog's
+   column list changes in place (``alterTableDataSchema``: no DROP, so
+   the table never leaves the catalog), and a manifest records the new
+   files and schema (op ``alter_drop_column`` / ``alter_rename_column``
+   / ``alter_column_type``). Every session then reads the new schema
+   from that manifest (``sync.py``). A crash anywhere in the window
+   leaves a table with data present (possibly briefly doubled for
+   directory-scan readers — the documented publish window), never an
+   empty or missing one;
+3. constraint registrations survive: RENAME rewrites the PK/FK column
    lists and re-persists the sidecar (CHECK expressions referencing the
    column are rejected rather than text-rewritten — expression surgery
    on SQL text is how silent corruption happens).
@@ -42,52 +39,10 @@ compaction.
 
 from __future__ import annotations
 
-import threading
-
 from pyspark.sql import SparkSession
+from pyspark.sql import types as T
 
 from swanlake_spark.errors import InvalidArgument
-from swanlake_spark.plans.quoting import quote_identifier
-
-# tables whose publish section is in flight (staged-files rename-in →
-# retire → DROP→CREATE catalog swap → refresh): engine readers consult
-# this — new queries wait before planning (so they can't plan against a
-# half-published file listing), and queries that planned BEFORE the
-# window and hit a moved file or the briefly-absent catalog entry wait
-# it out and retry instead of failing
-_SWAP_LOCK = threading.Lock()
-_SWAPPING: dict[str, threading.Event] = {}
-# completed-publish times (monotonic) per table: a reader that hit the
-# DROP→CREATE gap but whose exception surfaced AFTER the swap finished
-# finds the table absent from _SWAPPING — this record makes that
-# "swap recently completed for this table" case retryable
-_RECENT_SWAPS: dict[str, float] = {}
-
-
-def swap_in_progress(table: str | None = None) -> list[threading.Event]:
-    """Events for schema-rewrite publishes currently in flight. With
-    ``table``, only that table's publish (engine retry decisions key on
-    the table named in the error — a query on a genuinely nonexistent
-    table must not wait out an unrelated ALTER); without, every
-    in-flight publish (the cheap pre-planning wait — ALTERs are rare
-    DDL, so waiting on all of them before planning is simpler and
-    safe)."""
-    with _SWAP_LOCK:
-        if table is None:
-            return list(_SWAPPING.values())
-        ev = _SWAPPING.get(table.strip('`"').lower())
-        return [ev] if ev is not None else []
-
-
-def recently_swapped(table: str, horizon_s: float = 120.0) -> bool:
-    """True when ``table``'s publish completed within ``horizon_s`` —
-    the window in which an already-failed reader may still surface a
-    stale TABLE_OR_VIEW_NOT_FOUND for it."""
-    import time
-
-    with _SWAP_LOCK:
-        ts = _RECENT_SWAPS.get(table.strip('`"').lower())
-    return ts is not None and (time.monotonic() - ts) <= horizon_s
 
 
 def _guard_dependencies(table: str, column: str, mode: str) -> None:
@@ -154,61 +109,29 @@ def _rename_registrations(table: str, old: str, new: str) -> None:
     C._persist(t)
 
 
-def _rewrite_schema(
-    spark: SparkSession, table: str, new_df, op: str
-) -> None:
-    """The COW schema-rewrite publish (see module docstring)."""
-    from swanlake_spark import constraints, versions
+def _rewrite_schema(spark: SparkSession, table: str, build, op: str) -> None:
+    """The COW schema-rewrite publish (see module docstring): ``build``
+    maps the table's rows to the new contents."""
+    from swanlake_spark import constraints, sync, versions
     from swanlake_spark.operators import dml
 
-    loc, part_cols = dml._table_info(spark, table)
+    loc, part_cols, _ = dml._table_meta(spark, table)
     if loc is None:
         raise InvalidArgument(
             f"{table} has no resolvable location; cannot rewrite schema"
         )
     staging = dml.staging_dir(spark, table, loc)
     with dml.table_write_lock(spark, table, loc=loc):
-        schema = dml._stage_frame(new_df, staging, part_cols)
-        cols_ddl = ", ".join(
-            f"{quote_identifier(f.name)} {f.dataType.simpleString()}"
-            for f in schema.fields
+        schema = dml._stage_frame(build(spark.table(table)), staging, part_cols)
+        dml.publish(spark, table, staging, None, loc)
+        dml._rm_path(spark, staging)
+        data = T.StructType([f for f in schema.fields if f.name not in part_cols])
+        js = spark._jsparkSession
+        js.sharedState().externalCatalog().alterTableDataSchema(
+            *versions.qualified(spark, table), js.parseDataType(data.json())
         )
-        # The whole publish section registers in _SWAPPING: new engine
-        # queries pre-wait (no planning against a half-published file
-        # listing = no doubled/missing rows), and in-flight readers
-        # that hit a moved file or the DROP→CREATE gap retry after it.
-        t_norm = table.strip('`"').lower()
-        ev = threading.Event()
-        with _SWAP_LOCK:
-            _SWAPPING[t_norm] = ev
-        try:
-            # ADD-THEN-RETIRE (see module docstring), then the catalog
-            # swap to the new column list
-            dml.publish(spark, table, staging, None, loc)
-            dml._rm_path(spark, staging)
-            spark.sql(f"DROP TABLE {table}")  # direct: keep _versions root
-            part_sql = (
-                " PARTITIONED BY ("
-                + ", ".join(quote_identifier(c) for c in part_cols)
-                + ")"
-                if part_cols
-                else ""
-            )
-            spark.sql(
-                f"CREATE TABLE {table} ({cols_ddl}) USING parquet"
-                f"{part_sql} LOCATION '{loc}'"
-            )
-            if part_cols:
-                spark.sql(f"ALTER TABLE {table} RECOVER PARTITIONS")
-            spark.catalog.refreshTable(table)
-        finally:
-            import time
-
-            with _SWAP_LOCK:
-                _SWAPPING.pop(t_norm, None)
-                _RECENT_SWAPS[t_norm] = time.monotonic()
-            ev.set()
-        versions.record_version(spark, table, op, loc=loc)
+        sync._invalidate(spark, table)
+        versions.record_version(spark, table, op, loc, schema)
         # re-persist whatever the registries still hold (rename paths
         # already updated them)
         constraints._persist(table)
@@ -224,14 +147,14 @@ def drop_column(spark: SparkSession, table: str, column: str) -> None:
     if len(df.columns) == 1:
         raise InvalidArgument(f"cannot drop the only column of {table}")
     if column.lower() in [
-        c.lower() for c in dml._partition_columns(spark, table)
+        c.lower() for c in dml._table_meta(spark, table)[1]
     ]:
         raise InvalidArgument(
             f"cannot drop partition column {column} of {table}"
         )
     _guard_dependencies(table, column, mode="drop")
     _rewrite_schema(
-        spark, table, df.drop(names[column.lower()]), "alter_drop_column"
+        spark, table, lambda d: d.drop(names[column.lower()]), "alter_drop_column"
     )
 
 
@@ -251,7 +174,7 @@ def alter_column_type(
     if column.lower() not in names:
         raise InvalidArgument(f"no column {column} in {table}")
     if column.lower() in [
-        c.lower() for c in dml._partition_columns(spark, table)
+        c.lower() for c in dml._table_meta(spark, table)[1]
     ]:
         raise InvalidArgument(
             f"cannot retype partition column {column} of {table}"
@@ -259,12 +182,15 @@ def alter_column_type(
     _guard_dependencies(table, column, mode="retype")
     real = names[column.lower()]
     try:
-        new_df = df.withColumn(real, F.col(real).cast(new_type))
+        df.withColumn(real, F.col(real).cast(new_type))
     except Exception as e:
         raise InvalidArgument(
             f"cannot cast {column} to {new_type}: {e}"
         ) from e
-    _rewrite_schema(spark, table, new_df, "alter_column_type")
+    _rewrite_schema(
+        spark, table, lambda d: d.withColumn(real, F.col(real).cast(new_type)),
+        "alter_column_type",
+    )
 
 
 def rename_column(
@@ -279,7 +205,7 @@ def rename_column(
     if new.lower() in names:
         raise InvalidArgument(f"column {new} already exists in {table}")
     if old.lower() in [
-        c.lower() for c in dml._partition_columns(spark, table)
+        c.lower() for c in dml._table_meta(spark, table)[1]
     ]:
         raise InvalidArgument(
             f"cannot rename partition column {old} of {table}"
@@ -288,7 +214,7 @@ def rename_column(
     _rewrite_schema(
         spark,
         table,
-        df.withColumnRenamed(names[old.lower()], new),
+        lambda d: d.withColumnRenamed(names[old.lower()], new),
         "alter_rename_column",
     )
     _rename_registrations(table, old, new)

@@ -388,9 +388,12 @@ class Session:
         session/mod.rs:185-211)."""
         from swanlake_spark.operators import dml as dml_ops
 
+        from swanlake_spark import sync
+
         stmts = split_statements(sql)
         last = None
         for stmt in stmts:
+            sync.sync(self.spark, stmt)
             upd = dml_ops.parse_update(stmt)
             dele = dml_ops.parse_delete(stmt) if upd is None else None
             if upd is not None:
@@ -475,7 +478,7 @@ class Session:
                 from swanlake_spark import versions
                 from swanlake_spark.operators.dml import (
                     StagingPin,
-                    _table_info,
+                    _table_meta,
                     table_write_lock,
                 )
 
@@ -485,11 +488,11 @@ class Session:
                 # snapshot so the transaction's result is visible to
                 # AT (VERSION =>) / read_current and the pre-commit
                 # state stays time-travelable.
-                loc, part_cols = _table_info(self.spark, table)
+                loc, part_cols, schema = _table_meta(self.spark, table)
                 with table_write_lock(self.spark, table, loc=loc):
                     StagingPin(self.spark, table, loc, part_cols).publish(df, None)
                     versions.record_version(
-                        self.spark, table, "txn_commit", loc=loc
+                        self.spark, table, "txn_commit", loc, schema
                     )
         except Exception as e:
             self._aborted_txns.add(self.txn_id)

@@ -27,9 +27,13 @@ Scale notes (100 TB):
   only data-volume cost is deferred deletion (retained files hold disk
   until ``expire``/VACUUM), identical to DuckLake/Delta retention.
 - On object stores rename is a server-side copy; there the honest
-  configuration is ``set_enabled(False)`` + bucket versioning, or a
-  manifest-primary table format (Delta/Iceberg) — documented
-  divergence, same as the COW publish itself.
+  configuration is bucket versioning, or a manifest-primary table
+  format (Delta/Iceberg) — documented divergence, same as the COW
+  publish itself.
+- The newest manifest is the table: :func:`record_version` also keeps
+  it in memory (:func:`newest`), with the table's schema, and every
+  engine read takes its files and schema from there
+  (``swanlake_spark/sync.py``, ``operators/point.py``).
 - Every rewrite retires the files it replaces through ``dml.publish``,
   partitioned table or not, so every older snapshot stays readable.
   The one exception is compaction, which deletes its inputs: a
@@ -40,29 +44,21 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
+import itertools
 import json
 import os
 import time
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 from swanlake_spark.errors import InvalidArgument, NotFound
-
-_ENABLED = os.environ.get("SWL_TABLE_VERSIONS", "1") != "0"
 
 
 class SnapshotUnavailable(NotFound):
     """A manifest references files that a non-retaining write path has
     since destroyed (or that expire()/VACUUM reclaimed)."""
-
-
-def set_enabled(on: bool) -> None:
-    global _ENABLED
-    _ENABLED = on
-
-
-def enabled() -> bool:
-    return _ENABLED
 
 
 # -- paths & FS plumbing ------------------------------------------------------
@@ -83,9 +79,12 @@ def versions_root(
     ``DESCRIBE FORMATTED`` costs a Catalyst round-trip, so the write
     paths resolve it once and thread it through."""
     if loc is None:
-        from swanlake_spark.operators.dml import _table_location
+        from swanlake_spark.operators.dml import _table_meta
 
-        loc = _table_location(spark, table)
+        try:
+            loc = _table_meta(spark, table)[0]
+        except Exception:  # noqa: BLE001 — no such table: no root
+            return None
     if loc is None:
         return None
     loc = loc.rstrip("/")
@@ -176,15 +175,6 @@ def _read_json(spark: SparkSession, path: str) -> dict:
     return json.loads(data.decode("utf-8"))
 
 
-def _write_json(spark: SparkSession, path: str, payload: dict) -> None:
-    jvm, fs, p = _fs(spark, path)
-    out = fs.create(p, True)
-    try:
-        out.write(bytearray(json.dumps(payload).encode("utf-8")))
-    finally:
-        out.close()
-
-
 def _manifest_paths(spark: SparkSession, root: str) -> list[tuple[int, str]]:
     mdir_str = _manifest_dir(root)
     from swanlake_spark.operators.dml import _local_os_path
@@ -247,6 +237,11 @@ def note_published_files(table: str, files: list[tuple[str, int]]) -> None:
     _PENDING_FILES[table.strip('`"').lower()] = list(files)
 
 
+def _dumps(payload: dict) -> bytes:
+    # compact separators: manifests count towards stored bytes
+    return json.dumps(payload, separators=(",", ":")).encode("utf-8")
+
+
 def _write_json_exclusive(spark: SparkSession, path: str, payload: dict) -> bool:
     """Create-exclusive JSON write: False when the path already exists
     (another writer claimed this version number).
@@ -274,7 +269,7 @@ def _write_json_exclusive(spark: SparkSession, path: str, payload: dict) -> bool
         _os.makedirs(d, exist_ok=True)
         tmp = f"{d}/.{name}.{_uuid.uuid4().hex}"
         with open(tmp, "wb") as f:
-            f.write(json.dumps(payload).encode("utf-8"))
+            f.write(_dumps(payload))
         try:
             _os.link(tmp, osp)
         except FileExistsError:
@@ -290,34 +285,107 @@ def _write_json_exclusive(spark: SparkSession, path: str, payload: dict) -> bool
             return False
         raise
     try:
-        out.write(bytearray(json.dumps(payload).encode("utf-8")))
+        out.write(bytearray(_dumps(payload)))
     finally:
         out.close()
     return True
 
 
+@dataclass(frozen=True)
+class Manifest:
+    """A table's newest snapshot as this process knows it: what every
+    engine read of the table scans (``sync.py``, ``operators/point.py``).
+    ``seq`` orders every manifest the process has taken in, across
+    tables, so a session can tell which tables moved since it looked."""
+
+    seq: int
+    table: tuple[str, str]  # (database, table), lower-cased
+    loc: str
+    files: tuple[tuple[str, int], ...]  # (table-relative name, size)
+    schema: T.StructType | None  # None for a manifest older than schemas
+
+
+# the newest manifest of every table this process recorded or read, by
+# table location (single dict operations: atomic under the GIL)
+_NEWEST: dict[str, Manifest] = {}
+_SEQ = itertools.count(1)
+
+
+def qualified(spark: SparkSession, table: str) -> tuple[str, str]:
+    """``(database, table)`` of a one-, two- or three-part name,
+    lower-cased; a bare name is in the session's current database."""
+    parts = [p.strip('`"').lower() for p in table.split(".")]
+    if len(parts) == 1:
+        return spark.catalog.currentDatabase().lower(), parts[0]
+    return parts[-2], parts[-1]
+
+
+def newest(spark: SparkSession, table: str, loc: str) -> Manifest | None:
+    """The newest manifest of ``table`` at ``loc``, or None when it has
+    none. A table this process has not recorded is read from its newest
+    manifest file once."""
+    m = _NEWEST.get(loc.rstrip("/"))
+    v = current_version(spark, table, loc) if m is None else 0
+    if v == 0:
+        return m
+    d = _manifest(spark, table, v, loc)
+    m = Manifest(
+        next(_SEQ), qualified(spark, table), loc.rstrip("/"),
+        tuple((f["name"], f["size"]) for f in d["files"]), _schema_of(d),
+    )
+    # a record that landed meanwhile is newer than this file
+    return _NEWEST.setdefault(m.loc, m)
+
+
+def forget(spark: SparkSession, loc: str | None) -> None:
+    """Drop the snapshot history (in memory and on disk) of a dropped
+    table at ``loc``: a same-named table would otherwise continue the
+    old manifest chain, and ``AT (VERSION => n)`` would return the
+    dropped table's rows."""
+    if loc:
+        from swanlake_spark.operators.dml import _rm_path
+
+        _NEWEST.pop(loc.rstrip("/"), None)
+        try:
+            _rm_path(spark, versions_root(spark, "", loc))
+        except Exception:  # noqa: BLE001 — best effort, as the DROP is done
+            pass
+
+
+def _schema_of(manifest: dict) -> T.StructType | None:
+    s = manifest.get("schema")
+    return T.StructType.fromJson(s) if s is not None else None
+
+
 def record_version(
-    spark: SparkSession, table: str, op: str, loc: str | None = None
-) -> int | None:
-    """Append a manifest of the table's current live files. Cheap
+    spark: SparkSession,
+    table: str,
+    op: str,
+    loc: str | None = None,
+    schema: T.StructType | None = None,
+) -> int:
+    """Append a manifest of the table's current live files and schema,
+    and make it the table's newest in memory (:func:`newest`). Cheap
     (driver-side listing — or the publishing path's explicit list — plus
     one small JSON), called after every publish under the table write
-    lock. The manifest file is also written create-exclusive and the
-    version number retried on collision, so a caller outside the lock
-    can never silently overwrite another's snapshot."""
+    lock; callers that already looked the table up pass its location
+    and schema. The manifest file is also written create-exclusive and
+    the version number retried on collision, so a caller outside the
+    lock can never silently overwrite another's snapshot. Raises when
+    the manifest cannot be written: the newest manifest is what every
+    engine read scans, so a missing one would hide the write."""
     # consume the pending explicit list unconditionally — an early
-    # return (versioning disabled, unresolvable location) must not
-    # leave a stale list behind for some later, unrelated manifest
+    # error must not leave a stale list behind for some later,
+    # unrelated manifest
     files = _PENDING_FILES.pop(table.strip('`"').lower(), None)
-    if not _ENABLED:
-        return None
-    if loc is None:
-        from swanlake_spark.operators.dml import _table_location
+    if loc is None or schema is None:
+        from swanlake_spark.operators.dml import _table_meta
 
-        loc = _table_location(spark, table)
+        found, _, found_schema = _table_meta(spark, table)
+        loc, schema = loc or found, schema or found_schema
     root = versions_root(spark, table, loc)
     if loc is None or root is None:
-        return None
+        raise InvalidArgument(f"{table} has no resolvable location to version")
     if files is None:
         files = _list_data_files(spark, loc)
     n = current_version(spark, table, loc) + 1
@@ -326,6 +394,7 @@ def record_version(
         "ts": time.time(),
         "op": op,
         "files": [{"name": rel, "size": size} for rel, size in files],
+        "schema": schema.jsonValue() if schema is not None else None,
     }
     transient = 0
     for _ in range(64):
@@ -343,6 +412,18 @@ def record_version(
                 raise
             continue
         if claimed:
+            from swanlake_spark import sync
+
+            prev = _NEWEST.get(loc.rstrip("/"))
+            name = table.split(".")[-1].strip('`"').lower()
+            m = Manifest(
+                next(_SEQ),
+                prev.table if prev and prev.table[1] == name else qualified(spark, table),
+                loc.rstrip("/"), tuple(files), schema,
+            )
+            _NEWEST[m.loc] = m
+            # the write itself refreshed the recording session's cache
+            sync.listed(spark, m)
             return n
         n += 1
     raise IOError(
@@ -358,15 +439,13 @@ def retire_files(
 ) -> bool:
     """Move retiring data files into the retained dir instead of
     deleting them (rename = metadata op on a real FileSystem; OS calls
-    for a local location, see ``dml._Files``). Returns False when
-    versioning is off or a move isn't possible — the caller falls back
-    to deletion (snapshot hole, resolved loudly at read time)."""
+    for a local location, see ``dml._Files``). Returns False when a
+    move isn't possible — the caller falls back to deletion (snapshot
+    hole, resolved loudly at read time)."""
     from swanlake_spark.operators import dml
 
-    if not _ENABLED:
-        return False
     if loc is None:
-        loc = dml._table_location(spark, table)
+        loc = dml._table_meta(spark, table)[0]
     if loc is None:
         return False
     root = versions_root(spark, table, loc)
@@ -427,13 +506,19 @@ def snapshot_file_names(
     """Table-relative data-file names recorded in snapshot
     ``version``'s manifest (metadata only — no existence resolution;
     delta computations diff these sets across versions)."""
+    return [f["name"] for f in _manifest(spark, table, version, loc)["files"]]
+
+
+def _manifest(
+    spark: SparkSession, table: str, version: int, loc: str | None = None
+) -> dict:
     root = versions_root(spark, table, loc)
     if root is None:
         raise InvalidArgument(f"table {table} has no resolvable location")
     ms = dict(_manifest_paths(spark, root))
     if version not in ms:
         raise NotFound(f"no snapshot v{version} for {table}")
-    return [f["name"] for f in _read_json(spark, ms[version])["files"]]
+    return _read_json(spark, ms[version])
 
 
 def resolve_files(
@@ -447,13 +532,7 @@ def resolve_files(
     and such a reader fails LOUDLY (FILE_NOT_EXIST) and re-resolves;
     partial or duplicated rows are never observable (optimistic
     snapshot reads, the MVCC retry discipline)."""
-    root = versions_root(spark, table, loc)
-    if root is None:
-        raise InvalidArgument(f"table {table} has no resolvable location")
-    ms = dict(_manifest_paths(spark, root))
-    if version not in ms:
-        raise NotFound(f"no snapshot v{version} for {table}")
-    m = _read_json(spark, ms[version])
+    m = _manifest(spark, table, version, loc)
     return _resolve_names(
         spark, table, [f["name"] for f in m["files"]], f"v{version}", loc
     )
@@ -473,9 +552,9 @@ def _resolve_names(
     costs a Catalyst round-trip per call — the metadata tax dominates
     small incremental refreshes otherwise)."""
     if loc is None:
-        from swanlake_spark.operators.dml import _table_location
+        from swanlake_spark.operators.dml import _table_meta
 
-        loc = _table_location(spark, table)
+        loc = _table_meta(spark, table)[0]
     root = versions_root(spark, table, loc)
     loc = loc.rstrip("/")
     rdir = _retained_dir(root)
@@ -534,15 +613,19 @@ def version_at_timestamp(spark: SparkSession, table: str, ts: float) -> int:
 
 
 def read_version(
-    spark: SparkSession, table: str, version: int, loc: str | None = None,
-    schema=None,
+    spark: SparkSession, table: str, version: int, loc: str | None = None
 ) -> DataFrame:
-    """Scan exactly the snapshot's file list. Files are read under
-    their tree's basePath (table dir or the mirrored retained dir) so
+    """Scan exactly the snapshot's file list with the schema its
+    manifest records (a manifest written before manifests carried a
+    schema keeps parquet schema inference). Files are read under their
+    tree's basePath (table dir or the mirrored retained dir) so
     directory-encoded partition values are recovered on partitioned
     tables; a snapshot spanning both trees unions the two scans."""
-    files = resolve_files(spark, table, version, loc)
-    return _read_files(spark, table, files, loc, schema)
+    m = _manifest(spark, table, version, loc)
+    files = _resolve_names(
+        spark, table, [f["name"] for f in m["files"]], f"v{version}", loc
+    )
+    return _read_files(spark, table, files, loc, _schema_of(m))
 
 
 def _read_files(
@@ -567,9 +650,9 @@ def _read_files(
     if not files:
         return spark.table(table).limit(0)
     if loc is None:
-        from swanlake_spark.operators.dml import _table_location
+        from swanlake_spark.operators.dml import _table_meta
 
-        loc = _table_location(spark, table)
+        loc = _table_meta(spark, table)[0]
     loc = loc.rstrip("/")
     root = versions_root(spark, table, loc)
     rdir = _retained_dir(root)
@@ -594,24 +677,12 @@ def read_current(spark: SparkSession, table: str) -> DataFrame:
     manifest-primary read): the file list comes from the newest
     manifest, never from a directory listing, so a reader racing a COW
     publish sees exactly the pre- or post-publish snapshot — the
-    add-then-retire publish ordering guarantees every manifest entry is
-    resolvable (live or retained) at every instant. Falls back to the
-    catalog table when no snapshot exists (versioning off / fresh
-    table)."""
-    last_err: Exception | None = None
-    for _ in range(3):
-        v = current_version(spark, table)
-        if v == 0:
-            return spark.table(table)
-        try:
-            # spark.read.parquet(explicit files) reads footers at plan
-            # time, so a file retired between resolution and here fails
-            # NOW — re-resolve (it's in retained by then). Execution-time
-            # races surface to the caller as loud retryable errors.
-            return read_version(spark, table, v)
-        except Exception as e:  # noqa: BLE001 — re-resolve and retry
-            last_err = e
-    raise last_err
+    add-then-retire publish ordering keeps every manifest entry
+    resolvable (live or retained), and a file retired between
+    resolution and scan fails loudly. Falls back to the catalog table
+    when no snapshot exists (a table no engine write recorded)."""
+    v = current_version(spark, table)
+    return read_version(spark, table, v) if v else spark.table(table)
 
 
 def table_changes(
@@ -682,18 +753,20 @@ def rollback(spark: SparkSession, table: str, version: int) -> int:
     the replaced files), so the pre-rollback state stays readable too."""
     from swanlake_spark.operators import dml
 
-    loc, part_cols = dml._table_info(spark, table)
+    loc, part_cols, schema = dml._table_meta(spark, table)
     old = read_version(spark, table, version)
-    old = old.select(*[f.name for f in spark.table(table).schema.fields])
+    old = old.select(*[f.name for f in schema.fields])
     staging = dml.staging_dir(spark, table, loc)
     try:
         dml._stage_frame(old, staging, part_cols)
         with dml.table_write_lock(spark, table, loc=loc):
             dml.publish(spark, table, staging, None, loc)
-            v = record_version(spark, table, f"rollback_to_v{version}", loc=loc)
+            v = record_version(
+                spark, table, f"rollback_to_v{version}", loc, schema
+            )
     finally:
         dml._rm_path(spark, staging)
-    return v or 0
+    return v
 
 
 def expire(

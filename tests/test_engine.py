@@ -1632,9 +1632,9 @@ class TestCheckpoint:
         for i in range(8):  # 8 single-row inserts → 8 small part-files
             engine.execute(f"INSERT INTO {t} VALUES ({i}, 'r{i}')")
         from swanlake_spark.maintenance import _live_parquet
-        from swanlake_spark.operators.dml import _table_location
+        from swanlake_spark.operators.dml import _table_meta
 
-        before = len(_live_parquet(engine.spark, _table_location(engine.spark, t)))
+        before = len(_live_parquet(engine.spark, _table_meta(engine.spark, t)[0]))
         assert before >= 8
         rows = {r.table.split(".")[-1]: r for r in engine.query("CHECKPOINT").collect()}
         assert rows[t].compacted and rows[t].files_after < before
@@ -1756,7 +1756,7 @@ class TestDMLScannerAndStaging:
         from swanlake_spark.operators import dml
 
         t = _mktable(engine)
-        loc = dml._table_location(engine.spark, t)
+        loc = dml._table_meta(engine.spark, t)[0]
         assert loc is not None
         parent = loc.rstrip("/").rsplit("/", 1)[0]
         staging = dml.staging_dir(engine.spark, t)
@@ -1770,13 +1770,20 @@ class TestDMLScannerAndStaging:
         from swanlake_spark.operators import dml
 
         t = _mktable(engine)
-        engine.execute(f"INSERT INTO {t} VALUES (1, 'a', 10), (2, 'b', 20)")
-        engine.execute_update(f"UPDATE {t} SET age = 1 WHERE id = 1")
-        loc = dml._table_location(engine.spark, t)
+        loc = dml._table_meta(engine.spark, t)[0]
         local = urlparse(loc).path or loc
         parent = local.rstrip("/").rsplit("/", 1)[0]
         staged = os.path.join(parent, "_staging")
-        assert not os.path.exists(staged) or not os.listdir(staged)
+
+        def entries():
+            return set(os.listdir(staged)) if os.path.isdir(staged) else set()
+
+        # the _staging dir is shared by every table beside this one:
+        # only this test's statements must leave no entry in it
+        before = entries()
+        engine.execute(f"INSERT INTO {t} VALUES (1, 'a', 10), (2, 'b', 20)")
+        engine.execute_update(f"UPDATE {t} SET age = 1 WHERE id = 1")
+        assert entries() - before == set()
         # the table itself still reads clean (underscore paths are hidden
         # from scans anyway)
         assert engine.query(f"SELECT count(*) AS c FROM {t}").collect()[0].c == 2
@@ -1866,7 +1873,7 @@ class TestUpdateSubquerySetValue:
 class TestPartitionedCompaction:
     def test_compacts_only_hot_partition(self, engine):
         from swanlake_spark.maintenance import _live_parquet, compact_table
-        from swanlake_spark.operators.dml import _table_location
+        from swanlake_spark.operators.dml import _table_meta
 
         t = f"pc_{uuid.uuid4().hex[:8]}"
         loc = tempfile.mkdtemp(prefix="swl_pc_")
@@ -1877,7 +1884,7 @@ class TestPartitionedCompaction:
         for i in range(6):  # six small files in the hot partition
             engine.execute(f"INSERT INTO {t} VALUES ({float(i)}, '2026-01-01')")
         engine.execute(f"INSERT INTO {t} VALUES (9.0, '2026-01-02')")
-        base = _table_location(engine.spark, t)
+        base = _table_meta(engine.spark, t)[0]
         cold_before = _live_parquet(engine.spark, f"{base}/day=2026-01-02")
         stats = compact_table(engine.spark, t, min_files=2)
         assert stats["compacted"] is True
@@ -2088,10 +2095,19 @@ class TestReviewRegressions:
         """No _staging droppings survive a MERGE or subquery UPDATE."""
         import os
 
-        from swanlake_spark.operators.dml import _table_location
+        from swanlake_spark.operators.dml import _table_meta
 
         t = _mktable(engine, "id INT, v INT")
         s = _mktable(engine, "id INT, v INT")
+        base = _table_meta(engine.spark, t)[0].replace("file:", "")
+        staging = os.path.join(os.path.dirname(base.rstrip("/")), "_staging")
+
+        def entries():
+            return set(os.listdir(staging)) if os.path.isdir(staging) else set()
+
+        # the _staging dir is shared by every table beside these: only
+        # this test's statements must leave no entry in it
+        before = entries()
         engine.execute(f"INSERT INTO {t} VALUES (1, 1), (2, 2)")
         engine.execute(f"INSERT INTO {s} VALUES (2, 22)")
         engine.execute_update(
@@ -2101,10 +2117,7 @@ class TestReviewRegressions:
         engine.execute_update(
             f"UPDATE {t} SET v = 0 WHERE id IN (SELECT id FROM {s})"
         )
-        base = _table_location(engine.spark, t).replace("file:", "")
-        staging = os.path.join(os.path.dirname(base.rstrip("/")), "_staging")
-        leftovers = os.listdir(staging) if os.path.isdir(staging) else []
-        assert leftovers == []
+        assert entries() - before == set()
 
     def test_partitioned_update_null_partition_key(self, engine):
         """Dynamic-partition selection is a null-safe broadcast
@@ -2309,12 +2322,12 @@ class TestFileGranularCow:
         import time
 
         from swanlake_spark.operators.dml import (
-            _table_location,
+            _table_meta,
             _write_lock_path,
         )
 
         t = multi_file_table
-        path = _write_lock_path(t, _table_location(engine.spark, t))
+        path = _write_lock_path(t, _table_meta(engine.spark, t)[0])
         assert path is not None and not os.path.exists(path)
         # crash-holding writer: acquires via the REAL lock class, then
         # dies without releasing
@@ -2353,12 +2366,12 @@ class TestFileGranularCow:
         from swanlake_spark.errors import FailedPrecondition
         from swanlake_spark.operators.dml import (
             _WriteLock,
-            _table_location,
+            _table_meta,
             _write_lock_path,
         )
 
         t = multi_file_table
-        path = _write_lock_path(t, _table_location(engine.spark, t))
+        path = _write_lock_path(t, _table_meta(engine.spark, t)[0])
         lock = _WriteLock(path)
         assert lock.try_acquire()
         # age it so only LIVENESS (not the mtime guard) protects it
@@ -2369,7 +2382,7 @@ class TestFileGranularCow:
             with pytest.raises(FailedPrecondition, match="write lock"):
                 with table_write_lock(
                     engine.spark, t, timeout_s=1.0,
-                    loc=_table_location(engine.spark, t),
+                    loc=_table_meta(engine.spark, t)[0],
                 ):
                     pass  # pragma: no cover
             assert os.path.exists(path)  # never broken
@@ -2419,7 +2432,7 @@ class TestFileGranularCow:
         from swanlake_spark.operators import dml
 
         t = multi_file_table
-        path = dml._write_lock_path(t, dml._table_location(engine.spark, t))
+        path = dml._write_lock_path(t, dml._table_meta(engine.spark, t)[0])
         staging = os.path.dirname(path)
         dead = 99999  # find a PID that verifiably does not exist
         while True:
@@ -2547,11 +2560,11 @@ class TestShowCreateWithConstraints:
 
 
 class TestSwapSafeRetryGating:
-    """ADVICE r5: the swap-safe retry re-runs the WHOLE script, so it
-    must be gated to side-effect-free scripts — a script whose INSERT
-    committed before a later statement hit a COW race would otherwise
-    be silently re-applied — and the missing-table check must key on
-    the table NAMED in the error, not the global in-flight set."""
+    """A statement is never re-run at planning time: it plans against
+    the newest manifests (``sync.py``), so a planning error — a missing
+    table included — raises at once, and a script with DML is never
+    applied twice. Only a lazy query's collect re-runs the statement
+    (``QueryResult._materialize``), when its scan hits a moved file."""
 
     def _raising_run_script(self, engine, monkeypatch, msg, calls):
         def fake(sql, args=None):
@@ -2569,71 +2582,46 @@ class TestSwapSafeRetryGating:
             engine.query("INSERT INTO audit VALUES (1); SELECT * FROM t")
         assert len(calls) == 1  # the INSERT must not run twice
 
-    def test_pure_select_script_retries(self, engine, monkeypatch):
-        calls = []
-        self._raising_run_script(
-            engine, monkeypatch, "[FAILED_READ_FILE] moved under us", calls
-        )
-        with pytest.raises(EngineError):
-            engine.query("SELECT 1; SELECT 2")
-        assert len(calls) == 5  # initial + 4 retries (idempotent script)
-
     def test_missing_table_unrelated_swap_raises_immediately(
         self, engine, monkeypatch
     ):
-        import threading
         import time as _time
 
-        from swanlake_spark.operators import schema_evolution as se
+        calls = []
+        self._raising_run_script(
+            engine,
+            monkeypatch,
+            "[TABLE_OR_VIEW_NOT_FOUND] The table or view "
+            "`nope_missing` cannot be found.",
+            calls,
+        )
+        t0 = _time.monotonic()
+        with pytest.raises(EngineError):
+            engine.query("SELECT * FROM nope_missing")
+        assert len(calls) == 1
+        assert _time.monotonic() - t0 < 5.0
 
-        ev = threading.Event()
-        ev.set()  # pre-wait returns instantly; registry still lists it
-        se._SWAPPING["some_other_table"] = ev
-        try:
-            calls = []
-            self._raising_run_script(
-                engine,
-                monkeypatch,
-                "[TABLE_OR_VIEW_NOT_FOUND] The table or view "
-                "`nope_missing` cannot be found.",
-                calls,
-            )
-            t0 = _time.monotonic()
-            with pytest.raises(EngineError):
-                engine.query("SELECT * FROM nope_missing")
-            # keyed check: an UNRELATED in-flight ALTER must not make a
-            # genuinely nonexistent table loop 4 x 30 s retries
-            assert len(calls) == 1
-            assert _time.monotonic() - t0 < 5.0
-        finally:
-            se._SWAPPING.pop("some_other_table", None)
+    def test_collect_reruns_on_moved_file(self, engine):
+        """A collect whose scan hits a moved file re-runs the statement
+        once, post-pass included; any other error raises."""
+        res = engine.query("SELECT 1 AS x")
+        reruns = []
 
-    def test_missing_table_recently_swapped_retries(
-        self, engine, monkeypatch
-    ):
-        import time as _time
+        def requery():
+            reruns.append(1)
+            return engine.spark.sql("SELECT 2 AS x")
 
-        from swanlake_spark.operators import schema_evolution as se
+        res._requery = requery
 
-        with se._SWAP_LOCK:
-            se._RECENT_SWAPS["recent_t"] = _time.monotonic()
-        try:
-            calls = []
-            self._raising_run_script(
-                engine,
-                monkeypatch,
-                "[TABLE_OR_VIEW_NOT_FOUND] The table or view `recent_t` "
-                "cannot be found.",
-                calls,
-            )
-            with pytest.raises(EngineError):
-                engine.query("SELECT * FROM recent_t")
-            # reader that hit the DROP->CREATE gap after the swap
-            # completed: retryable via the recently-swapped record
-            assert len(calls) == 5
-        finally:
-            with se._SWAP_LOCK:
-                se._RECENT_SWAPS.pop("recent_t", None)
+        class Moved:
+            def collect(self):
+                raise RuntimeError("[FAILED_READ_FILE.FILE_NOT_EXIST] gone")
+
+        res.df = Moved()
+        assert [r.x for r in res.collect()] == [2] and reruns == [1]
+        res.df = None
+        with pytest.raises(AttributeError):
+            res._materialize(lambda df: df.collect())
 
 
 class TestDialectR10:

@@ -247,9 +247,9 @@ class TestAppenderChecks:
 
 
 def _loc(spark, table: str) -> str:
-    from swanlake_spark.operators.dml import _local_os_path, _table_location
+    from swanlake_spark.operators.dml import _local_os_path, _table_meta
 
-    return _local_os_path(_table_location(spark, table))
+    return _local_os_path(_table_meta(spark, table)[0])
 
 
 def _data_files(loc: str) -> set[str]:

@@ -165,7 +165,7 @@ class TestPartitionPruning:
         )
         from swanlake_spark.operators import dml
 
-        table_loc = urlparse(dml._table_location(engine.spark, t)).path or loc
+        table_loc = urlparse(dml._table_meta(engine.spark, t)[0]).path or loc
         other = os.path.join(table_loc, "day=2026-01-01")
         before = sorted(os.listdir(other))
         n = engine.execute_update(f"UPDATE {t} SET v = 9.0 WHERE day = '2026-01-02'")

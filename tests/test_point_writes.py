@@ -500,7 +500,7 @@ def test_point_writes_run_one_job(spark):
             for i in range(16)
         ],
     )
-    loc = dml._table_location(spark, t)
+    loc = dml._table_meta(spark, t)[0]
     assert len(_data_files(dml._local_os_path(loc))) >= 16
     assert _jobs(spark, lambda: dml.update_table(spark, t, {"v": "'u'"}, "k = 120")) == 0
     assert _jobs(spark, lambda: dml.delete_from(spark, t, "k = 121")) == 0
@@ -620,19 +620,22 @@ def test_interleaved_updates_leave_session_conf(spark, monkeypatch):
 
 
 def test_table_info_reads_partition_columns(spark):
-    """One catalog lookup gives a table's location and its partition
-    columns in declared order, as DESCRIBE lists them; a temp view has
-    neither."""
+    """One catalog lookup gives a table's location, its partition
+    columns in declared order and its schema; the DESCRIBE fallback (a
+    three-part name the lookup does not take) gives the same; a temp
+    view has no location and no partitions."""
     name = f"pwp_{uuid.uuid4().hex[:8]}"
     loc = tempfile.mkdtemp(prefix="swl_pw_")
     spark.sql(
         f"CREATE TABLE {name} (v STRING, b INT, a STRING) USING parquet "
         f"PARTITIONED BY (b, a) LOCATION '{loc}'"
     )
-    got_loc, parts = dml._table_info(spark, name)
+    got_loc, parts, schema = dml._table_meta(spark, name)
     assert dml._local_os_path(got_loc) == loc
-    assert parts == ["b", "a"] == dml._describe_partitions(spark, name)
-    assert dml._partition_columns(spark, name) == ["b", "a"]
+    assert parts == ["b", "a"]
+    assert schema == spark.table(name).schema
+    described = dml._table_meta(spark, f"spark_catalog.default.{name}")
+    assert described == (got_loc, ["b", "a"], schema)
     spark.range(1).createOrReplaceTempView(name + "_v")
-    assert dml._table_info(spark, name + "_v") == (None, [])
+    assert dml._table_meta(spark, name + "_v") == (None, [], spark.range(1).schema)
     spark.sql(f"DROP TABLE {name}")

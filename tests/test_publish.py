@@ -154,7 +154,7 @@ class TestConcurrentRewrite:
         t = f"{db}.t"
         _create(engine, t)
         spark = engine.spark
-        loc = dml._table_location(spark, t)
+        loc = dml._table_meta(spark, t)[0]
 
         def retire_after_read(df):
             pinned = df.localCheckpoint()
@@ -342,7 +342,7 @@ def _partitions(spark, table: str) -> list[str]:
 
 
 def _partition_dirs(spark, table: str) -> list[str]:
-    loc = dml._table_location(spark, table)
+    loc = dml._table_meta(spark, table)[0]
     return sorted({
         rel.rpartition("/")[0] for rel, _ in versions._list_data_files(spark, loc)
     })
@@ -368,7 +368,7 @@ class TestPartitionedPublish:
         assert [r.id for r in df.collect()] == [10]
         engine.execute(f"DELETE FROM {t} WHERE p = 2")
         assert _partitions(spark, t) == _partition_dirs(spark, t) == ["p=0", "p=7"]
-        loc = dml._local_os_path(dml._table_location(spark, t))
+        loc = dml._local_os_path(dml._table_meta(spark, t)[0])
         assert not os.path.exists(f"{loc}/p=2")
 
     def test_point_update_rewrites_only_its_file(self, engine, db):
@@ -377,7 +377,7 @@ class TestPartitionedPublish:
         _create(engine, t, partitioned=True)
         for i in range(3):
             engine.execute(f"INSERT INTO {t} VALUES ({20 + i}, 'z', 1)")
-        loc = dml._table_location(spark, t)
+        loc = dml._table_meta(spark, t)[0]
         before = dict(versions._list_data_files(spark, loc))
         engine.execute(f"UPDATE {t} SET v = 'hit' WHERE id = 21")
         after = dict(versions._list_data_files(spark, loc))

@@ -219,9 +219,9 @@ class TestRetypeGuards:
 
 class TestConcurrentReaderDuringAlter:
     def test_reader_never_sees_missing_table(self, spark, eng):
-        """Readers racing the ALTER's DROP→CREATE catalog swap must
-        observe the old or new schema — never table-not-found (engine
-        retry via schema_evolution.swap_in_progress)."""
+        """Readers racing an ALTER must observe the old or new schema —
+        never table-not-found: the catalog schema changes in place and
+        every statement reads the newest manifest."""
         import threading
 
         eng.execute(

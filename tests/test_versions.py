@@ -106,20 +106,6 @@ class TestSnapshots:
         # the current version is untouched
         assert {r.v for r in spark.table("vt").collect()} == {"c"}
 
-    def test_disabled_mode_deletes_as_before(self, spark, vtable):
-        eng = self._engine(spark)
-        versions.set_enabled(False)
-        try:
-            eng.execute("INSERT INTO vt VALUES (1, 'a')")
-            eng.execute("UPDATE vt SET v = 'b' WHERE id = 1")
-            assert versions.current_version(spark, "vt") == 0
-            root = versions.versions_root(spark, "vt")
-            jvm, fs, p = versions._fs(spark, root)
-            assert not fs.exists(p)
-        finally:
-            versions.set_enabled(True)
-        assert {r.v for r in spark.table("vt").collect()} == {"b"}
-
     def test_vacuum_statement_expires_snapshots(self, spark, vtable):
         """`VACUUM t RETAIN 0 SECONDS` runs the snapshot retention sweep
         alongside staging reclamation (Delta's VACUUM contract)."""

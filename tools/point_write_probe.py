@@ -18,6 +18,9 @@ times ``--reps`` calls each of
   which pyarrow rewrites on the driver,
 - the same UPDATE with an extra term the footer bounds do not cover
   (``AND field0 <> ''``), which takes the Spark producer,
+- a ``count(*)`` that Spark runs in a second client session, each after
+  an untimed point UPDATE in the first: the second session re-installs
+  the table from its newest manifest before it plans (``sync.py``),
 - a point DELETE of one existing key (``Engine.execute_update``),
 - a one-row append of a fresh key as Flight SQL's DoPut sends it: the
   positional parameter batch of a prepared ``INSERT … VALUES (?, …)``
@@ -136,6 +139,11 @@ def main() -> None:
         sql = f"UPDATE {table} SET {sets} WHERE ycsb_key = {key}{extra}"
         assert eng.execute_update(sql) == 1
 
+    reader = eng.sessions.get_or_create("point-write-probe-reader")
+
+    def spark_read() -> None:
+        assert reader.query(f"SELECT count(*) AS n FROM {table}").collect()[0].n == len(live)
+
     def delete() -> None:
         assert eng.execute_update(f"DELETE FROM {table} WHERE ycsb_key = {live.pop()}") == 1
 
@@ -168,6 +176,7 @@ def main() -> None:
         ("scan", scan, None),
         ("update", update, None),
         ("update-spark", lambda: update(" AND field0 <> ''"), None),
+        ("spark-read", spark_read, update),
         ("delete", delete, None),
         ("append", append, None),
         ("checkpoint", checkpoint, appends),
