@@ -361,17 +361,18 @@ def bounded_existing_probe(
     unbounded scan if a bound is NULL (all-null key batch).
 
     With the table's location ``loc`` (resolved by a caller holding the
-    table write lock) and integral keys, the scan also skips whole files
-    whose footer key range misses the batch's (:mod:`filestats`); None
-    means no live file can hold a batch key, so there is nothing to
-    probe. ``schema`` is the table's, when the caller has it."""
+    table write lock, under which the newest manifest names exactly the
+    table's files) and integral keys, the scan reads only the files
+    whose footer key range can hold a batch key (:mod:`filestats`); None
+    means no live file can, so there is nothing to probe. ``schema`` is
+    the table's, when the caller has it."""
     bounds = []
     for c in keys:
         lo, hi = stats[f"_min_{c}"], stats[f"_max_{c}"]
         if lo is None or hi is None:
             return spark.table(table).select(*keys)
         bounds.append((c, [(lo, hi)]))
-    from swanlake_spark import filestats
+    from swanlake_spark import filestats, versions
 
     if schema is None:
         schema = spark.table(table).schema
@@ -380,7 +381,10 @@ def bounded_existing_probe(
     if loc is not None and all(
         types.get(c.lower()) in filestats.INTEGRAL_TYPES for c in keys
     ):
-        files = filestats.live_files(loc)
+        try:
+            files = filestats.snapshot_files(versions.newest(spark, table, loc))
+        except FileNotFoundError:
+            files = None  # a file the manifest names is gone: scan the table
         if files is not None:
             hits = filestats.candidates(files, bounds)
             if not hits:

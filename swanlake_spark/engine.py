@@ -28,6 +28,7 @@ from swanlake_spark import constraints, sync
 from swanlake_spark.config import EngineConfig
 from swanlake_spark.errors import EngineError, InvalidArgument
 from swanlake_spark.metrics import Metrics, jvm_counters
+from swanlake_spark.operators.dml import forget_meta
 from swanlake_spark.plans import (
     ParsedStatement,
     classify,
@@ -35,8 +36,19 @@ from swanlake_spark.plans import (
     split_statements,
     strip_select_locks,
 )
-from swanlake_spark.plans.parser import count_placeholders
+from swanlake_spark.plans.parser import TABLE_NAME, count_placeholders
+from swanlake_spark.plans.parser import table_ref as _table_ref
 from swanlake_spark.sources import register_tables
+
+# the table name a statement-head pattern captures (group 1)
+_TABLE = f"({TABLE_NAME})"
+# statements after which a name may resolve to another object in the
+# session: DDL (temp views included), USE, ATTACH/DETACH, SET (e.g. the
+# current catalog), CACHE ... AS (a temp view)
+_RESOLUTION_CHANGE = re.compile(
+    r"^\s*(?:CREATE|DROP|ALTER|USE|ATTACH|DETACH|SET|RESET|CACHE|UNCACHE)\b",
+    re.IGNORECASE,
+)
 
 # EngineConfig.spark_confs() entries Spark reads only when the session is
 # built; setting them on a running session raises.
@@ -249,7 +261,9 @@ class Engine:
         if not hasattr(self, "_attached_warehouses"):
             self._attached_warehouses: list[tuple[str, list[str] | None]] = []
         self._attached_warehouses.append((sf_dir, tables))
-        return register_tables(self.spark, sf_dir, tables)
+        names = register_tables(self.spark, sf_dir, tables)
+        forget_meta(self.spark)  # its temp views may shadow tables
+        return names
 
     @property
     def sessions(self):
@@ -942,6 +956,8 @@ class Engine:
         finally:
             for view in views:
                 self.spark.catalog.dropTempView(view)
+            if views or _RESOLUTION_CHANGE.match(stmts[-1]):
+                forget_meta(self.spark)
         return QueryResult(
             df=last_df,
             schema=last_df.schema if last_df is not None else None,
@@ -955,7 +971,9 @@ class Engine:
         ``stmts`` in order (:meth:`_run_script`)."""
         last_df: DataFrame | None = None
         affected = -1
-        for stmt in stmts:
+        for i, stmt in enumerate(stmts):
+            if i and _RESOLUTION_CHANGE.match(stmts[i - 1]):
+                forget_meta(self.spark)
             sync.sync(self.spark, stmt)
             kw = stmt.lstrip()[:8].upper()
             if kw.startswith("ATTACH") or kw.startswith("DETACH"):
@@ -977,15 +995,15 @@ class Engine:
                 last_df = self._vacuum(stmt)
                 continue
             scm = re.match(
-                r"^\s*SHOW\s+CREATE\s+TABLE\s+([\w.`\"]+)\s*;?\s*$",
+                r"^\s*SHOW\s+CREATE\s+TABLE\s+" + _TABLE + r"\s*;?\s*$",
                 stmt,
                 re.IGNORECASE,
             )
             if scm:
-                last_df = self._show_create_table(scm.group(1).strip('`"'))
+                last_df = self._show_create_table(_table_ref(scm.group(1)))
                 continue
             dhm = re.match(
-                r"^\s*DESCRIBE\s+HISTORY\s+([\w.`\"]+)\s*;?\s*$",
+                r"^\s*DESCRIBE\s+HISTORY\s+" + _TABLE + r"\s*;?\s*$",
                 stmt,
                 re.IGNORECASE,
             )
@@ -994,7 +1012,7 @@ class Engine:
                 from swanlake_spark import versions
 
                 last_df = versions.snapshots(
-                    self.spark, dhm.group(1).strip('`"')
+                    self.spark, _table_ref(dhm.group(1))
                 )
                 continue
             if kw.startswith("FROM"):
@@ -1004,16 +1022,16 @@ class Engine:
             if kw.startswith("SUMMARIZ"):
                 # DuckDB SUMMARIZE t → per-column summary statistics
                 m = re.match(
-                    r"^\s*SUMMARIZE\s+([\w.`\"]+)\s*;?\s*$", stmt, re.IGNORECASE
+                    r"^\s*SUMMARIZE\s+" + _TABLE + r"\s*;?\s*$", stmt, re.IGNORECASE
                 )
                 if not m:
                     raise InvalidArgument(
                         f"unsupported SUMMARIZE syntax: {stmt.strip()!r}"
                     )
-                last_df = self.spark.table(m.group(1).strip('`"')).summary()
+                last_df = self.spark.table(_table_ref(m.group(1))).summary()
                 continue
             crm = re.match(
-                r"^\s*CREATE\s+OR\s+REPLACE\s+TABLE\s+([\w.`\"]+)",
+                r"^\s*CREATE\s+OR\s+REPLACE\s+TABLE\s+" + _TABLE,
                 stmt,
                 re.IGNORECASE,
             )
@@ -1025,7 +1043,7 @@ class Engine:
                     stmt,
                     flags=re.IGNORECASE,
                 )
-                target = crm.group(1).strip('`"')
+                target = _table_ref(crm.group(1))
                 if self.spark.catalog.tableExists(target):
                     # Keep-until-success semantics (DuckDB/the reference
                     # never destroy the old table before the replacement
@@ -1056,12 +1074,12 @@ class Engine:
                 # Spark refuses TRUNCATE on external tables; DELETE-all
                 # through the copy-on-write layer has identical semantics.
                 m = re.match(
-                    r"^\s*TRUNCATE\s+(?:TABLE\s+)?([\w.`\"]+)", stmt, re.IGNORECASE
+                    r"^\s*TRUNCATE\s+(?:TABLE\s+)?" + _TABLE, stmt, re.IGNORECASE
                 )
                 if m:
                     from swanlake_spark.operators import dml
 
-                    affected = dml.delete_from(self.spark, m.group(1).strip('`"'), None)
+                    affected = dml.delete_from(self.spark, _table_ref(m.group(1)), None)
                     continue
             if kw.startswith("UPDATE") or kw.startswith("DELETE"):
                 # Parquet tables have no native DML → copy-on-write rewrite
@@ -1097,7 +1115,7 @@ class Engine:
                 from swanlake_spark import matview
 
                 cm = re.match(
-                    r"^\s*CREATE\s+MATERIALIZED\s+VIEW\s+([\w.`\"]+)\s*"
+                    r"^\s*CREATE\s+MATERIALIZED\s+VIEW\s+" + _TABLE + r"\s*"
                     r"(?:PARTITIONED\s+BY\s*\(([^)]*)\)\s*)?AS\s+(.+)$",
                     stmt,
                     re.IGNORECASE | re.DOTALL,
@@ -1109,14 +1127,14 @@ class Engine:
                         else None
                     )
                     affected = matview.create(
-                        self.spark, cm.group(1).strip('`"'),
+                        self.spark, _table_ref(cm.group(1)),
                         cm.group(3).rstrip().rstrip(";"),
                         partition_by=parts,
                     )
                     continue
                 rm = re.match(
-                    r"^\s*REFRESH\s+MATERIALIZED\s+VIEW\s+([\w.`\"]+)"
-                    r"(?:\s+(INCREMENTAL))?(?:\s+WHERE\s+(.+?))?\s*;?\s*$",
+                    r"^\s*REFRESH\s+MATERIALIZED\s+VIEW\s+" + _TABLE
+                    + r"(?:\s+(INCREMENTAL))?(?:\s+WHERE\s+(.+?))?\s*;?\s*$",
                     stmt,
                     re.IGNORECASE | re.DOTALL,
                 )
@@ -1128,28 +1146,28 @@ class Engine:
                                 "predicate (it folds base-table appends)"
                             )
                         affected = matview.refresh_incremental(
-                            self.spark, rm.group(1).strip('`"')
+                            self.spark, _table_ref(rm.group(1))
                         )
                     else:
                         affected = matview.refresh(
-                            self.spark, rm.group(1).strip('`"'), rm.group(3)
+                            self.spark, _table_ref(rm.group(1)), rm.group(3)
                         )
                     continue
                 dmv = re.match(
                     r"^\s*DROP\s+MATERIALIZED\s+VIEW\s+(?:IF\s+EXISTS\s+)?"
-                    r"([\w.`\"]+)\s*;?\s*$",
+                    + _TABLE + r"\s*;?\s*$",
                     stmt,
                     re.IGNORECASE,
                 )
                 if dmv:
-                    matview.drop(self.spark, dmv.group(1).strip('`"'))
+                    matview.drop(self.spark, _table_ref(dmv.group(1)))
                     continue
             if kw.startswith("ALTER"):
                 # Constraint ALTERs are engine-level (Spark's v1 parquet
                 # tables have no constraints); every other ALTER (ADD
                 # COLUMN, RENAME, ...) falls through to Catalyst.
                 am = re.match(
-                    r"^\s*ALTER\s+TABLE\s+([\w.`\"]+)\s+ADD\s+"
+                    r"^\s*ALTER\s+TABLE\s+" + _TABLE + r"\s+ADD\s+"
                     r"((?:CONSTRAINT\s+[\w`\"]+\s+)?"
                     r"(?:PRIMARY\s+KEY|CHECK|FOREIGN\s+KEY)\b.*)$",
                     stmt,
@@ -1157,12 +1175,12 @@ class Engine:
                 )
                 if am:
                     constraints.add_constraint(
-                        self.spark, am.group(1).strip('`"'),
+                        self.spark, _table_ref(am.group(1)),
                         am.group(2).rstrip().rstrip(";"),
                     )
                     continue
                 dm = re.match(
-                    r"^\s*ALTER\s+TABLE\s+([\w.`\"]+)\s+DROP\s+"
+                    r"^\s*ALTER\s+TABLE\s+" + _TABLE + r"\s+DROP\s+"
                     r"CONSTRAINT\s+(?:IF\s+EXISTS\s+)?([\w`\"]+)\s*;?\s*$",
                     stmt,
                     re.IGNORECASE,
@@ -1174,7 +1192,7 @@ class Engine:
                 # Spark v1 parquet tables support neither — the engine
                 # rewrites the table copy-on-write (schema_evolution.py)
                 dcm = re.match(
-                    r"^\s*ALTER\s+TABLE\s+([\w.`\"]+)\s+DROP\s+"
+                    r"^\s*ALTER\s+TABLE\s+" + _TABLE + r"\s+DROP\s+"
                     r"COLUMN\s+([\w`\"]+)\s*;?\s*$",
                     stmt,
                     re.IGNORECASE,
@@ -1184,12 +1202,12 @@ class Engine:
 
                     schema_evolution.drop_column(
                         self.spark,
-                        dcm.group(1).strip('`"'),
+                        _table_ref(dcm.group(1)),
                         dcm.group(2).strip('`"'),
                     )
                     continue
                 rcm = re.match(
-                    r"^\s*ALTER\s+TABLE\s+([\w.`\"]+)\s+RENAME\s+"
+                    r"^\s*ALTER\s+TABLE\s+" + _TABLE + r"\s+RENAME\s+"
                     r"COLUMN\s+([\w`\"]+)\s+TO\s+([\w`\"]+)\s*;?\s*$",
                     stmt,
                     re.IGNORECASE,
@@ -1199,13 +1217,13 @@ class Engine:
 
                     schema_evolution.rename_column(
                         self.spark,
-                        rcm.group(1).strip('`"'),
+                        _table_ref(rcm.group(1)),
                         rcm.group(2).strip('`"'),
                         rcm.group(3).strip('`"'),
                     )
                     continue
                 tcm = re.match(
-                    r"^\s*ALTER\s+TABLE\s+([\w.`\"]+)\s+ALTER\s+"
+                    r"^\s*ALTER\s+TABLE\s+" + _TABLE + r"\s+ALTER\s+"
                     r"(?:COLUMN\s+)?([\w`\"]+)\s+(?:SET\s+DATA\s+)?TYPE\s+"
                     r"([\w()\s,]+?)\s*;?\s*$",
                     stmt,
@@ -1216,7 +1234,7 @@ class Engine:
 
                     schema_evolution.alter_column_type(
                         self.spark,
-                        tcm.group(1).strip('`"'),
+                        _table_ref(tcm.group(1)),
                         tcm.group(2).strip('`"'),
                         tcm.group(3).strip(),
                     )
@@ -1239,17 +1257,16 @@ class Engine:
             insert_target: str | None = None
             if kw.startswith("INSERT"):
                 im = re.match(
-                    r"^\s*INSERT\s+(?:INTO|OVERWRITE)\s+(?:TABLE\s+)?"
-                    r"([\w.`\"]+)",
+                    r"^\s*INSERT\s+(?:INTO|OVERWRITE)\s+(?:TABLE\s+)?" + _TABLE,
                     stmt,
                     re.IGNORECASE,
                 )
                 if im:
-                    insert_target = im.group(1).strip('`"')
+                    insert_target = _table_ref(im.group(1))
             dropped_loc: str | None = None
             if kw.startswith("DROP"):
                 m = re.match(
-                    r"^\s*DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?([\w.`\"]+)",
+                    r"^\s*DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?" + _TABLE,
                     stmt,
                     re.IGNORECASE,
                 )
@@ -1262,7 +1279,7 @@ class Engine:
                     from swanlake_spark.operators.dml import _table_meta
 
                     try:
-                        dropped_loc = _table_meta(self.spark, m.group(1).strip('`"'))[0]
+                        dropped_loc = _table_meta(self.spark, _table_ref(m.group(1)))[0]
                     except Exception:
                         dropped_loc = None
             if insert_target is not None:
@@ -1305,14 +1322,14 @@ class Engine:
             if kw.startswith("CREATE"):
                 cm = re.match(
                     r"^\s*CREATE\s+(?:EXTERNAL\s+)?TABLE\s+"
-                    r"(?:IF\s+NOT\s+EXISTS\s+)?([\w.`\"]+)",
+                    r"(?:IF\s+NOT\s+EXISTS\s+)?" + _TABLE,
                     stmt,
                     re.IGNORECASE,
                 )
                 if cm:
-                    self._record_table_version(cm.group(1).strip('`"'), "create")
+                    self._record_table_version(_table_ref(cm.group(1)), "create")
             am = re.match(
-                r"^\s*ALTER\s+TABLE\s+([\w.`\"]+)(?:\s+RENAME\s+TO\s+([\w.`\"]+))?",
+                r"^\s*ALTER\s+TABLE\s+" + _TABLE + r"(?:\s+RENAME\s+TO\s+" + _TABLE + r")?",
                 stmt,
                 re.IGNORECASE,
             )
@@ -1321,7 +1338,7 @@ class Engine:
                 # manifest takes the table's new schema or name
                 from swanlake_spark.operators.dml import table_write_lock
 
-                altered = (am.group(2) or am.group(1)).strip('`"')
+                altered = _table_ref(am.group(2) or am.group(1))
                 with table_write_lock(self.spark, altered):
                     self._record_table_version(altered, "alter")
             if is_query:
@@ -1795,10 +1812,8 @@ class Engine:
     def _record_table_version(self, table: str, op: str) -> None:
         """Append a snapshot manifest after a write (versions.py). A
         failed manifest write raises: every engine read scans the newest
-        manifest, so a write without one would not be seen. A name the
-        statement's table regex did not capture whole (a quoted name
-        with a space) is not looked up, so that table has no manifest
-        and Spark lists it."""
+        manifest, so a write without one would not be seen. A name that
+        does not resolve to a table records nothing."""
         from swanlake_spark import versions
         from swanlake_spark.operators.dml import _table_meta
 

@@ -7,25 +7,25 @@ footer (row-group min/max and the row count). This module reads them
 once per file and answers: which live files of a table can hold a value
 of column ``c`` inside these bounds?
 
-The memo is keyed per table directory by ``(file name, size, mtime)``.
-A copy-on-write publish never edits a file in place — a rewrite always
-gets a new name — and the mtime catches a file an outside writer
-replaced under the same name and size. Entries whose file has left the
-listing are dropped on the next lookup, and a table directory that is
-gone drops all of its entries, which bounds the memo by the live files.
+The statistics are kept per table directory for its newest manifest
+(:func:`snapshot_files`). A copy-on-write publish never edits a file in
+place — a rewrite always gets a new name — so the next manifest reuses
+the statistics of every file it shares with the previous one, and only
+the files a write added have their footers read.
 
-Writers list the directory under the table write lock, so no writer can
-publish between the listing and the rewrite that relies on it. Point
-reads take the files of the table's newest manifest instead, without a
-listing (:func:`snapshot_files`, ``operators/point.py``). Any case the
-statistics cannot vouch for answers ``None`` and the caller takes its
-unpruned path: a non-local location, a subdirectory in the table root,
-or an unreadable footer.
+Every caller takes the files from the table's newest manifest
+(``versions.newest``), without a directory listing: point reads
+(``operators/point.py``), and writers, which hold the table write lock,
+under which that manifest names exactly the table's files
+(``versions.held``) — point UPDATE/DELETE (``dml._pruned_cow``) and the
+primary-key probe of an append (``constraints.bounded_existing_probe``).
+Any case the statistics cannot vouch for answers ``None`` and the
+caller takes its unpruned path: no manifest, a non-local location, a
+file in a subdirectory, or an unreadable footer.
 """
 
 from __future__ import annotations
 
-import os
 import threading
 from dataclasses import dataclass
 
@@ -62,7 +62,6 @@ class FileStats:
         )
 
 
-_MEMO: dict[str, dict[tuple[str, int, int], FileStats]] = {}
 # per table directory: (manifest seq, its files' statistics)
 _SNAPSHOT: dict[str, tuple[int, list[FileStats]]] = {}
 _MEMO_LOCK = threading.Lock()
@@ -102,14 +101,16 @@ def _read_footer(name: str, path: str, size: int) -> FileStats:
 def snapshot_files(m) -> list[FileStats] | None:
     """Footer statistics of every file the manifest ``m`` (a
     ``versions.Manifest``) names, or None when they cannot vouch for
-    them: a non-local location, a file in a subdirectory, or a footer
-    that does not read as Parquet. Built once per manifest, reusing
+    them: no manifest, a non-local location, a file in a subdirectory,
+    or a footer that does not read as Parquet. Built once per manifest, reusing
     the statistics of the previous manifest's files by name and size (a
     publish never rewrites a file in place). Raises FileNotFoundError
     for a file that a later publish moved away before its footer was
     read."""
     from swanlake_spark.operators.dml import _local_os_path
 
+    if m is None:
+        return None
     osp = _local_os_path(m.loc)
     with _MEMO_LOCK:
         got = _SNAPSHOT.get(osp)
@@ -133,45 +134,6 @@ def snapshot_files(m) -> list[FileStats] | None:
         if osp not in _SNAPSHOT or _SNAPSHOT[osp][0] < m.seq:
             _SNAPSHOT[osp] = (m.seq, out)
     return out
-
-
-def live_files(loc: str | None) -> list[FileStats] | None:
-    """Footer statistics of every live data file under the table
-    location ``loc``, or None when they cannot vouch for the table's
-    contents: a non-local location, a non-hidden subdirectory (Spark
-    would read files the top-level listing does not show), or a file
-    whose footer does not read as Parquet. Its callers hold the table
-    write lock, so no file leaves the directory meanwhile."""
-    from swanlake_spark.operators.dml import _local_os_path
-
-    osp = _local_os_path(loc) if loc else None
-    if osp is None:
-        return None
-    osp = osp.rstrip("/")
-    try:
-        entries = [e for e in os.scandir(osp) if not is_hidden(e.name)]
-        if not all(e.is_file() for e in entries):
-            return None
-        listing = sorted(
-            (e.name, st.st_size, st.st_mtime_ns)
-            for e in entries
-            for st in (e.stat(),)
-        )
-        with _MEMO_LOCK:
-            known = dict(_MEMO.get(osp, {}))
-        out = [
-            known.get(key) or _read_footer(key[0], f"{osp}/{key[0]}", key[1])
-            for key in listing
-        ]
-    except (OSError, ValueError):  # includes pyarrow's ArrowInvalid
-        out = []  # e.g. a dropped table's directory
-        listing = None
-    with _MEMO_LOCK:
-        if out:
-            _MEMO[osp] = dict(zip(listing, out))
-        else:
-            _MEMO.pop(osp, None)
-    return out if listing is not None else None
 
 
 def candidates(

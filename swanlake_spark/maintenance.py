@@ -168,11 +168,10 @@ def _rewrite_files(
         return False  # an input was retired while it was being read
     with table_write_lock(spark, table, loc=loc):
         try:
-            publish(spark, table, staging, paths, loc, retain=retain)
+            publish(spark, table, staging, paths, loc, retain=retain, op=op)
         except FailedPrecondition:
             _rm_path(spark, staging)
             return False
-        versions.record_version(spark, table, op, loc=loc)
     _rm_path(spark, staging)
     return True
 

@@ -448,17 +448,20 @@ def _materialize(
         df, state, combined = _build(shape["base"] if shape else None)
         return df, state, False, combined
     from swanlake_spark import versions
+    from swanlake_spark.operators.dml import forget_meta
 
     base = stamp["base_table"]
     pins = _meta_bases(stamp)
     for t, v in pins:
         versions.read_version(spark, t, v).createOrReplaceTempView(t)
+    forget_meta(spark)  # the views shadow the base tables meanwhile
     try:
         # analysis (temp-view resolution) happens eagerly in spark.sql
         df, state, combined = _build(base)
     finally:
         for t, _v in pins:
             spark.catalog.dropTempView(t)
+        forget_meta(spark)
     return df, state, True, combined
 
 
@@ -1443,7 +1446,10 @@ def refresh_incremental(spark: SparkSession, name: str) -> int:
                         spark, staging, tbl.select(view_order)
                     )
                     if published:
-                        dml.publish(spark, name, staging, None, view_loc)
+                        dml.publish(
+                            spark, name, staging, None, view_loc,
+                            op="matview_refresh_incremental",
+                        )
                         dml._rm_path(spark, staging)
         if maintain_state and not state_published:
             _publish_state(
@@ -1456,9 +1462,10 @@ def refresh_incremental(spark: SparkSession, name: str) -> int:
                 loc=view_loc,
             )
         if not published:
-            dml.StagingPin(spark, name, view_loc, part_cols).publish(
-                _aligned(spark, name, combined), None
-            )
+            dml.StagingPin(
+                spark, name, view_loc, part_cols,
+                op="matview_refresh_incremental",
+            ).publish(_aligned(spark, name, combined), None)
         stamp_extra = {}
         if is_join:
             stamp_extra["bases"] = [
@@ -1470,9 +1477,6 @@ def refresh_incremental(spark: SparkSession, name: str) -> int:
         _write_sidecar(
             spark, name, q, base_table=base, base_version=cur_v,
             **stamp_extra,
-        )
-        versions.record_version(
-            spark, name, "matview_refresh_incremental", loc=view_loc
         )
         if maintain_state:
             _sweep_state(spark, name, key_new, view_loc)
@@ -1544,7 +1548,6 @@ def refresh(
         raise NotFound(f"{name} is not a materialized view")
     from pyspark.sql import functions as F
 
-    from swanlake_spark import versions
     from swanlake_spark.operators import dml
 
     if where is None:
@@ -1603,12 +1606,16 @@ def refresh(
                         spark, staging, tbl.select(view_order)
                     ):
                         n = tbl.num_rows
-                        dml.publish(spark, name, staging, None, loc)
+                        dml.publish(
+                            spark, name, staging, None, loc, op="matview_refresh"
+                        )
                         dml._rm_path(spark, staging)
                         published = True
             if not published:
                 n = new_df.count()
-                dml.StagingPin(spark, name, loc, part_cols).publish(new_df, None)
+                dml.StagingPin(
+                    spark, name, loc, part_cols, op="matview_refresh"
+                ).publish(new_df, None)
             if stamp and not state_published:
                 _publish_state(
                     spark, name, state, _stamp_state_key(stamp),
@@ -1623,7 +1630,6 @@ def refresh(
                     stamp = {}
             # the sidecar carries the new stamp
             _write_sidecar(spark, name, q, **stamp)
-            versions.record_version(spark, name, "matview_refresh")
         return n
     # Partial refresh = refresh-UPSERT on the predicate's region: the
     # predicate applies to the VIEW's output columns; the matching rows
@@ -1647,7 +1653,9 @@ def refresh(
             new_df = keep.unionByName(new_df)
         else:
             files = []  # nothing to replace: the region is new rows
-        dml.StagingPin(spark, name, loc, part_cols).publish(new_df, files)
+        dml.StagingPin(
+            spark, name, loc, part_cols, op="matview_refresh_partial", schema=schema
+        ).publish(new_df, files)
         # Partial refresh leaves the view reflecting TWO base
         # snapshots (the refreshed region sees newer base data than
         # the rest), so the incremental base stamp is no longer a
@@ -1655,9 +1663,6 @@ def refresh(
         # re-establishes it. Keeping the old stamp would double-count
         # appends inside the refreshed region on the next INCREMENTAL.
         _write_sidecar(spark, name, q)
-        versions.record_version(
-            spark, name, "matview_refresh_partial", loc=loc
-        )
     return n
 
 

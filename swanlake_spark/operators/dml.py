@@ -23,13 +23,16 @@ returns them in ``x-swanlake-affected-rows``).
 from __future__ import annotations
 
 import functools
+import itertools
 import json
 import os
 import re
 import shutil
 import socket as _socket
+import threading
 import time as _time_mod
 import uuid
+import weakref
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -142,8 +145,10 @@ def _table_meta(
     spark: SparkSession, table: str
 ) -> tuple[str | None, list[str], T.StructType]:
     """``(location, partition columns in declared order, schema)`` of
-    ``table``: the one table-metadata lookup. The session catalog answers
-    it (~12 Py4J calls, 1 ms, where DESCRIBE FORMATTED costs ~50 ms) with
+    ``table``: the one table-metadata lookup, kept per session and name
+    until the catalog changes (:func:`_meta_memo`), so a warm point
+    statement makes no JVM call for it. The session catalog answers it
+    (~12 Py4J calls, 1 ms, where DESCRIBE FORMATTED costs ~50 ms) with
     the stored schema, without resolving the relation and listing its
     files; the location is rendered via hadoop.fs.Path, DESCRIBE's form
     (file:/tmp/..., not file:///tmp/...), which downstream code compares
@@ -152,7 +157,13 @@ def _table_meta(
     (three parts, a persistent view's missing location) falls back to
     DESCRIBE FORMATTED. A temp view's or a fallback name's schema comes
     from ``spark.table``, which raises for a name that does not
-    resolve."""
+    resolve; neither is kept."""
+    memo = _meta_memo(spark)
+    gen = _CATALOG_GEN
+    if memo is not None:
+        got = memo.get(table)
+        if got is not None and got[0] == gen:
+            return got[1]
     try:
         state = spark._jsparkSession.sessionState()
         ident = state.sqlParser().parseTableIdentifier(table)
@@ -161,11 +172,14 @@ def _table_meta(
             return None, [], spark.table(table).schema
         meta = cat.getTableMetadata(ident)
         seq = meta.partitionColumnNames()
-        return (
+        found = (
             _hadoop_path(spark.sparkContext._jvm)(meta.location()).toString(),
             [seq.apply(i) for i in range(seq.size())],
             T.StructType.fromJson(json.loads(meta.schema().json())),
         )
+        if memo is not None:
+            memo[table] = (gen, found)
+        return found
     except Exception:  # noqa: BLE001 — fall back to DESCRIBE
         pass
     try:
@@ -182,6 +196,70 @@ def _table_meta(
         elif in_part and name and name != "# col_name":
             part_cols.append(name)
     return loc, part_cols, spark.table(table).schema
+
+
+# -- the table-metadata memo ----------------------------------------------------
+#
+# A catalog change anywhere — CREATE, DROP, ALTER (schema, RENAME TO),
+# whether through the engine or straight through Spark — posts an event
+# on the external catalog, and the listener below counts it, so every
+# memo entry taken before it is stale. What the external catalog does
+# not see is per session: a temp view shadowing a name, the current
+# database (USE), attached warehouses. The engine paths that change
+# those call :func:`forget_meta` for the session.
+
+# bumped on every external-catalog event (a plain rebinding: atomic
+# under the GIL, and the listener takes no lock)
+_CATALOG_GEN = 0
+_CATALOG_EVENTS = itertools.count(1)
+# per SparkContext: whether its catalog events reach _CATALOG_GEN
+_LISTENING: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+# per session: table name -> (catalog generation, _table_meta answer)
+_META: "weakref.WeakKeyDictionary[SparkSession, dict]" = weakref.WeakKeyDictionary()
+_META_LOCK = threading.Lock()
+
+
+class _CatalogListener:
+    """Counts the external catalog's events (a Py4J callback: the JVM
+    calls it on the thread making the change, before that change
+    returns)."""
+
+    def onEvent(self, event) -> None:  # noqa: N802 — the Java interface's name
+        global _CATALOG_GEN
+        _CATALOG_GEN = next(_CATALOG_EVENTS)
+
+    class Java:
+        implements = ["org.apache.spark.sql.catalyst.catalog.ExternalCatalogEventListener"]
+
+
+def _meta_memo(spark: SparkSession) -> dict | None:
+    """The session's :func:`_table_meta` memo, or None when the catalog's
+    events cannot be watched (no Py4J callback server), which turns the
+    memo off. The listener is registered once per SparkContext."""
+    sc = spark.sparkContext
+    with _META_LOCK:
+        if sc not in _LISTENING:
+            try:
+                from pyspark.java_gateway import ensure_callback_server_started
+
+                ensure_callback_server_started(sc._gateway)
+                spark._jsparkSession.sharedState().externalCatalog().addListener(
+                    _CatalogListener()
+                )
+                _LISTENING[sc] = True
+            except Exception:  # noqa: BLE001 — e.g. no callback server here
+                _LISTENING[sc] = False
+        if not _LISTENING[sc]:
+            return None
+        return _META.setdefault(spark, {})
+
+
+def forget_meta(spark: SparkSession) -> None:
+    """Drop the session's :func:`_table_meta` memo: a name may resolve
+    differently now (a temp view created or dropped, USE, ATTACH,
+    DETACH, DDL)."""
+    with _META_LOCK:
+        _META.pop(spark, None)
 
 
 @functools.lru_cache(maxsize=None)
@@ -301,18 +379,34 @@ def _refresh(spark: SparkSession, table: str, loc: str) -> None:
 
     The session's cached relation is dropped (``invalidateCachedTable``),
     so the next statement builds a new file index, as it would after
-    ``refreshTable``; that costs a few Py4J calls, where ``refreshTable``
-    re-resolves the table and lists every file (~30 ms). Only when the
-    shared CacheManager holds a plan (``CACHE TABLE``) is ``loc``
-    re-listed, by ``refreshByPath``: it refreshes the file index inside
-    each cached plan over ``loc`` before re-caching it. ``refreshTable``
-    re-caches from the index the plan was cached with, which a second
-    write leaves naming retired files (``sync._invalidate``)."""
+    ``refreshTable``; that costs one Py4J call once the session has
+    parsed the name, where ``refreshTable`` re-resolves the table and
+    lists every file (~30 ms). Other sessions' caches are
+    ``sync.sync``'s. The session's sync state cannot stand in for the
+    call: a ``spark.table`` anywhere caches the catalog's relation
+    without it. Only when the shared
+    CacheManager holds a plan (``CACHE TABLE``) is ``loc`` re-listed, by
+    ``refreshByPath``: it refreshes the file index inside each cached
+    plan over ``loc`` before re-caching it. ``refreshTable`` re-caches
+    from the index the plan was cached with, which a second write leaves
+    naming retired files (``sync._invalidate``)."""
     from swanlake_spark import sync
 
     sync._invalidate(spark, table)
-    if not spark._jsparkSession.sharedState().cacheManager().isEmpty():
+    if not _cache_manager(spark).isEmpty():
         spark.catalog.refreshByPath(loc)
+
+
+def _cache_manager(spark: SparkSession):
+    """The shared CacheManager (one per SparkContext), looked up once."""
+    sc = spark.sparkContext
+    got = _CACHE_MANAGERS.get(sc)
+    if got is None:
+        got = _CACHE_MANAGERS[sc] = spark._jsparkSession.sharedState().cacheManager()
+    return got
+
+
+_CACHE_MANAGERS: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 
 def publish(
@@ -322,13 +416,18 @@ def publish(
     replaced: list[str] | None,
     loc=_UNRESOLVED,
     retain: bool = True,
-) -> None:
+    *,
+    op: str = "publish",
+    schema: T.StructType | None = None,
+) -> int:
     """Swap the files staged under ``staged_dir`` into ``table`` in place
-    of the ``replaced`` data files (None: every live file). Every table
+    of the ``replaced`` data files (None: every live file), and record
+    the result as the table's version ``op`` (returned). Every table
     rewrite publishes through here, under the caller's
     :func:`table_write_lock`:
 
-    1. list the table's live files once;
+    1. take the table's live files from its newest manifest, which
+       under the lock names exactly them (``versions.held``);
     2. if a ``replaced`` file is no longer live (a writer retired it
        after the caller read it), raise FailedPrecondition and move
        nothing;
@@ -338,8 +437,9 @@ def publish(
     4. retire the replaced files into the snapshot store
        (``versions.retire_files``), or delete them when ``retain`` is
        False; whatever could not be moved is deleted;
-    5. hand the new live set to the caller's ``record_version`` and
-       refresh the table (:func:`_refresh`).
+    5. record the new live set with ``versions.record_version`` (with
+       ``schema``, or the table's) and refresh the table
+       (:func:`_refresh`).
 
     On a partitioned table the catalog's partition list follows the
     files (:func:`_partition_dirs`): a directory that gains its first
@@ -369,7 +469,10 @@ def publish(
     if loc is None:
         raise InvalidArgument(f"{table} has no resolvable location to publish into")
     loc = loc.rstrip("/")
-    live = dict(_versions._list_data_files(spark, loc))
+    m = _versions.newest(spark, table, loc)
+    if m is None:
+        raise FailedPrecondition(f"{table} has no manifest: publish outside its write lock")
+    live = dict(m.files)
     if replaced is None:
         olds = set(live)
     else:
@@ -420,8 +523,9 @@ def publish(
     ):
         spark.sql(f"ALTER TABLE {table} DROP IF EXISTS PARTITION ({_dir_spec(d)})")
         files.delete(f"{loc}/{d}", recursive=True)
-    _versions.note_published_files(table, sorted(kept + news))
+    v = _versions.record_version(spark, table, op, loc, schema, files=kept + news)
     _refresh(spark, table, loc)
+    return v
 
 
 def _partition_dirs(rels) -> set[str]:
@@ -483,12 +587,15 @@ class StagingPin:
     (:meth:`publish`)."""
 
     def __init__(
-        self, spark: SparkSession, table: str, loc=_UNRESOLVED, part_cols=()
+        self, spark: SparkSession, table: str, loc=_UNRESOLVED, part_cols=(),
+        *, op: str, schema: T.StructType | None = None,
     ):
         self.spark = spark
         self.table = table
         self.loc = loc
         self.part_cols = list(part_cols)
+        # the version :meth:`publish` records
+        self.op, self.schema = op, schema
         self.paths: list[str] = []
         self.last: DataFrame | None = None
 
@@ -519,7 +626,10 @@ class StagingPin:
         live file) — its staged files when ``df`` is :meth:`pinned`,
         else a new staging of it — then :meth:`cleanup`."""
         path = self.paths[-1] if self.pinned(df) else self.write(df)
-        publish(self.spark, self.table, path, replaced, self.loc)
+        publish(
+            self.spark, self.table, path, replaced, self.loc,
+            op=self.op, schema=self.schema,
+        )
         self.cleanup()
 
     def cleanup(self) -> None:
@@ -562,17 +672,18 @@ def table_write_lock(
     class. File-scheme locations only; on object stores (no atomic
     create-exclusive) the lock is skipped and concurrent writers need
     an external coordinator, as documented in SCALE.md. Inside, the
-    session's cached relation of ``table`` lists the newest manifest
-    (``sync.release``), which a Spark write plans against."""
+    session holds no cached relation of ``table`` older than its newest
+    manifest (``sync.release``), which a Spark write plans against, and
+    that manifest names exactly the table's files (``versions.held``):
+    every writer takes its live set from it."""
     import time as _time
 
-    from swanlake_spark import sync
     from swanlake_spark.errors import FailedPrecondition
 
     base = _loc_or_resolve(spark, table, loc)
     path = _write_lock_path(table, base)
     if path is None:
-        sync.release(spark, table, base)
+        _locked(spark, table, base)
         yield
         return
     lock = _WriteLock(path)
@@ -585,10 +696,22 @@ def table_write_lock(
             )
         _time.sleep(0.02)
     try:
-        sync.release(spark, table, base)
+        _locked(spark, table, base)
         yield
     finally:
         lock.release()
+
+
+def _locked(spark: SparkSession, table: str, loc: str | None) -> None:
+    """What a writer sees once it holds the write lock of ``table`` at
+    ``loc``: the session's relation dropped unless it is the newest
+    manifest's, and that manifest checked (or taken in) as the
+    table's."""
+    from swanlake_spark import sync, versions
+
+    sync.release(spark, table, loc)
+    if loc is not None:
+        versions.held(spark, table, loc)
 
 
 def _write_lock_path(table: str, base: str | None) -> str | None:
@@ -1079,6 +1202,7 @@ def _file_granular_cow(
     schema: T.StructType,
     loc: str,
     part_cols: list[str],
+    op: str,
     driver_ok: bool = True,
 ) -> None:
     """Copy-on-write at FILE granularity (the reference's DuckLake model:
@@ -1099,7 +1223,7 @@ def _file_granular_cow(
     if part_cols or not _driver_rewrite(staged, new_sub, files, driver_ok):
         _stage_frame(new_sub, staged, part_cols)
     # a failed publish keeps the staged data for recovery (see publish)
-    publish(spark, table, staged, files, loc)
+    publish(spark, table, staged, files, loc, op=op, schema=schema)
     _rm_path(spark, staged)
 
 
@@ -1258,15 +1382,23 @@ def _pruned_cow(
     staging (key-sorted files of at most ``_POINT_FILE_BYTES``),
     :func:`publish`.
 
-    Caller guarantees: table write lock held, predicate subquery-free,
-    no CHECK/FK constraint registered. A partitioned table goes to the
-    unpruned path: ``filestats.live_files`` declines a root holding
+    Caller guarantees: table write lock held (so the newest manifest
+    names exactly the table's files), predicate subquery-free, no
+    CHECK/FK constraint registered. A partitioned table goes to the
+    unpruned path: ``filestats.snapshot_files`` declines files in
     directories."""
+    from swanlake_spark import versions
+
     types = {f.name.lower(): f.dataType.simpleString() for f in schema.fields}
     bare = table.split(".")[-1].strip('`"')
     terms = [point._term_bound(t, bare, types) for t in point._conjuncts(where)]
     bounds = [b for b in terms if b]
-    files = filestats.live_files(loc) if bounds else None
+    files = None
+    if bounds:
+        try:
+            files = filestats.snapshot_files(versions.newest(spark, table, loc))
+        except FileNotFoundError:
+            files = None  # a file the manifest names is gone: Spark lists
     if files is None:
         return None, True
     hits = filestats.candidates(files, bounds)
@@ -1334,7 +1466,10 @@ def _pruned_cow(
         out = out.sort_by(next(n for n in out.column_names if n.lower() == key))
     staged = staging_dir(spark, table, loc)
     _write_staged_arrow(_local_os_path(staged), out, max(1, slices))
-    publish(spark, table, staged, ["file:" + f.path for f in matched], loc)
+    publish(
+        spark, table, staged, ["file:" + f.path for f in matched], loc,
+        op="delete" if assignments is None else "update", schema=schema,
+    )
     _rm_path(spark, staged)
     return affected, True
 
@@ -1903,17 +2038,12 @@ def merge_table(
     land in the swapped-in files (in their own partition directories on
     a partitioned table). Targets whose match set spans every file (the
     bulk-upsert shape) fall back to the full rewrite."""
-    from swanlake_spark import versions
-
     loc, part_cols, schema = _table_meta(spark, table)
     with table_write_lock(spark, table, loc=loc):
-        affected = _merge_table_locked(
+        return _merge_table_locked(
             spark, table, t_alias, source_text, cond, clauses, loc,
             part_cols=part_cols, schema=schema,
         )
-        if affected:
-            versions.record_version(spark, table, "merge", loc, schema)
-    return affected
 
 
 def _merge_table_locked(
@@ -1949,7 +2079,9 @@ def _merge_table_locked(
         spark.table(table) if files is None
         else _read_table_files(spark, files, schema, loc)
     )
-    stage = StagingPin(spark, table, loc=loc, part_cols=part_cols)
+    stage = StagingPin(
+        spark, table, loc=loc, part_cols=part_cols, op="merge", schema=schema
+    )
     try:
         new_df, affected = apply_merge(
             spark, target, table, t_alias, source_text, cond, clauses,
@@ -2048,18 +2180,14 @@ def update_table(
     """SQL UPDATE semantics; returns affected row count. The whole
     statement (match probe through publish) runs under the per-table
     write lock, so concurrent writers serialize instead of interleaving
-    probe/publish windows (lost updates, double file swaps)."""
-    from swanlake_spark import versions
-
+    probe/publish windows (lost updates, double file swaps). The
+    rewrite records the version (:func:`publish`)."""
     loc, part_cols, schema = _table_meta(spark, table)
     with table_write_lock(spark, table, loc=loc):
-        affected = _update_table_locked(
+        return _update_table_locked(
             spark, table, assignments, where, loc, part_cols=part_cols,
             schema=schema,
         )
-        if affected:
-            versions.record_version(spark, table, "update", loc, schema)
-    return affected
 
 
 def _update_table_locked(
@@ -2129,6 +2257,7 @@ def _update_table_locked(
                 schema,
                 loc,
                 part_cols,
+                "update",
                 driver_ok=driver_ok,
             )
             return affected
@@ -2139,7 +2268,9 @@ def _update_table_locked(
         )
         if affected == 0:
             return 0
-    stage = StagingPin(spark, table, loc=loc, part_cols=part_cols)
+    stage = StagingPin(
+        spark, table, loc=loc, part_cols=part_cols, op="update", schema=schema
+    )
     try:
         new_df = _checked(
             apply_update(spark.table(table), assignments, where, alias=table, pin=stage)
@@ -2157,16 +2288,11 @@ def _update_table_locked(
 def delete_from(spark: SparkSession, table: str, where: str | None = None) -> int:
     """SQL DELETE semantics; returns affected row count (serialized per
     table, see :func:`update_table`)."""
-    from swanlake_spark import versions
-
     loc, part_cols, schema = _table_meta(spark, table)
     with table_write_lock(spark, table, loc=loc):
-        affected = _delete_from_locked(
+        return _delete_from_locked(
             spark, table, where, loc, part_cols=part_cols, schema=schema
         )
-        if affected:
-            versions.record_version(spark, table, "delete", loc, schema)
-    return affected
 
 
 def _delete_from_locked(
@@ -2193,11 +2319,14 @@ def _delete_from_locked(
                 F.expr(where).eqNullSafe(F.lit(True))
             )
         constraints.enforce_fks_delete(spark, table, deleted)
-    stage = StagingPin(spark, table, loc=loc, part_cols=part_cols)
+    stage = StagingPin(
+        spark, table, loc=loc, part_cols=part_cols, op="delete", schema=schema
+    )
     if where is None:
         df = spark.table(table)
         affected = df.count()
-        stage.publish(df.limit(0), None)
+        if affected:
+            stage.publish(df.limit(0), None)
         return affected
     if not where_has_subquery(where):
         affected, driver_ok = None, True
@@ -2219,6 +2348,7 @@ def _delete_from_locked(
                 schema,
                 loc,
                 part_cols,
+                "delete",
                 driver_ok=driver_ok,
             )
             return affected

@@ -26,6 +26,8 @@ NULL-fill missing, ignore extras):
 
 from __future__ import annotations
 
+import weakref
+
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -266,14 +268,31 @@ def insert_arrow(
                 spark, table, rows, arrow=by_target, loc=loc, schema=target
             )
             rows.write.insertInto(table)
+            versions.record_version(spark, table, "append", loc, target)
         else:
             constraints.check_insert_batch(
                 spark, table, spark_rows, arrow=aligned, loc=loc, schema=target
             )
             staged = dml.staging_dir(spark, table, loc)
-            slices = min(spark.sparkContext.defaultParallelism, aligned.num_rows)
+            slices = min(_parallelism(spark), aligned.num_rows)
             dml._write_staged_arrow(dml._local_os_path(staged), aligned, slices)
-            dml.publish(spark, table, staged, [], loc)
+            dml.publish(
+                spark, table, staged, [], loc,
+                op="append", schema=target,
+            )
             dml._rm_path(spark, staged)
-        versions.record_version(spark, table, "append", loc, target)
     return tbl.num_rows
+
+
+# per SparkContext: its default parallelism
+_PARALLELISM: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
+
+
+def _parallelism(spark: SparkSession) -> int:
+    """Spark's default parallelism, looked up once per SparkContext: the
+    slice count of a driver-side append, as many files as Spark's write
+    of the batch makes."""
+    sc = spark.sparkContext
+    if sc not in _PARALLELISM:
+        _PARALLELISM[sc] = sc.defaultParallelism
+    return _PARALLELISM[sc]

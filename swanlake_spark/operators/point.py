@@ -256,11 +256,13 @@ def read_shape(sql: str, args: list | None) -> PointRead | None:
 def read(spark, shape: PointRead):
     """``(Arrow table, Spark schema)`` of ``shape`` computed on the
     driver, the rows Spark would return, or None: Spark runs the
-    statement. One catalog lookup gives the location, the partition
-    columns and the schema; the table must be unpartitioned, local,
-    typed with :data:`DRIVER_TYPES` only, and every WHERE term must
-    bound an integral column (``ORDER BY`` names one of them). The rows
-    come from the newest manifest's files (:func:`_snapshot_rows`)."""
+    statement. The session's memo of the catalog lookup
+    (``dml._table_meta``) gives the location, the partition columns and
+    the schema, so a warm read makes no JVM call; the table must be
+    unpartitioned, local, typed with :data:`DRIVER_TYPES` only, and
+    every WHERE term must bound an integral column (``ORDER BY`` names
+    one of them). The rows come from the newest manifest's files
+    (:func:`_snapshot_rows`)."""
     import pyarrow as pa
     import pyarrow.compute as pc
     from pyspark.sql import types as T

@@ -18,12 +18,12 @@ machinery as DML:
    ``dml.publish`` swaps them in for every
    pre-ALTER file (add first, then retire into the snapshot store, so
    ``AT (VERSION => n)`` reads the old contents with their old schema;
-   per-file renames merge into existing partition dirs), the catalog's
+   per-file renames merge into existing partition dirs) and records a
+   manifest of the new files and schema (op ``alter_drop_column`` /
+   ``alter_rename_column`` / ``alter_column_type``), then the catalog's
    column list changes in place (``alterTableDataSchema``: no DROP, so
-   the table never leaves the catalog), and a manifest records the new
-   files and schema (op ``alter_drop_column`` / ``alter_rename_column``
-   / ``alter_column_type``). Every session then reads the new schema
-   from that manifest (``sync.py``). A crash anywhere in the window
+   the table never leaves the catalog). Every session reads the new
+   schema from that manifest (``sync.py``). A crash anywhere in the window
    leaves a table with data present (possibly briefly doubled for
    directory-scan readers — the documented publish window), never an
    empty or missing one;
@@ -123,7 +123,7 @@ def _rewrite_schema(spark: SparkSession, table: str, build, op: str) -> None:
     staging = dml.staging_dir(spark, table, loc)
     with dml.table_write_lock(spark, table, loc=loc):
         schema = dml._stage_frame(build(spark.table(table)), staging, part_cols)
-        dml.publish(spark, table, staging, None, loc)
+        dml.publish(spark, table, staging, None, loc, op=op, schema=schema)
         dml._rm_path(spark, staging)
         data = T.StructType([f for f in schema.fields if f.name not in part_cols])
         js = spark._jsparkSession
@@ -131,7 +131,6 @@ def _rewrite_schema(spark: SparkSession, table: str, build, op: str) -> None:
             *versions.qualified(spark, table), js.parseDataType(data.json())
         )
         sync._invalidate(spark, table)
-        versions.record_version(spark, table, op, loc, schema)
         # re-persist whatever the registries still hold (rename paths
         # already updated them)
         constraints._persist(table)

@@ -171,6 +171,29 @@ def _unquote(ident: str) -> str:
     return ident
 
 
+# a table name as a statement writes it: one to three dot-separated
+# parts, each a plain word or a quoted identifier, which may hold spaces
+# and dots (the engine's statement-head patterns share it)
+_TABLE_PART = r'(?:\w+|"(?:[^"]|"")+"|`(?:[^`]|``)+`)'
+TABLE_NAME = rf"{_TABLE_PART}(?:\.{_TABLE_PART}){{0,2}}"
+
+
+def table_parts(text: str) -> list[str]:
+    """The unquoted parts of a :data:`TABLE_NAME`."""
+    return [_unquote(p) for p in re.findall(_TABLE_PART, text)]
+
+
+def table_ref(text: str) -> str:
+    """A :data:`TABLE_NAME` as the catalog lookups take it: each part
+    unquoted, and back-quoted again only when it is not a plain word."""
+    from swanlake_spark.plans.quoting import quote_identifier
+
+    return ".".join(
+        u if re.fullmatch(r"\w+", u) else quote_identifier(u)
+        for u in table_parts(text)
+    )
+
+
 def insert_info(stmt: str) -> InsertInfo | None:
     """Introspect an INSERT statement (target, column list, VALUES shape).
 

@@ -38,6 +38,7 @@ from swanlake_spark.errors import (
     ResourceExhausted,
 )
 from swanlake_spark.engine import Engine, Statement
+from swanlake_spark.operators.dml import forget_meta
 from swanlake_spark.plans import split_statements
 from swanlake_spark.plans.parser import (
     _scan,
@@ -371,6 +372,7 @@ class Session:
             self._txn_backup[table] = (was_temp, self.spark.table(table))
         self._txn_staged[table] = df
         df.createOrReplaceTempView(table)
+        forget_meta(self.spark)
 
     def _unshadow(self) -> None:
         for table, (was_temp, orig) in self._txn_backup.items():
@@ -379,6 +381,7 @@ class Session:
             else:
                 self.spark.catalog.dropTempView(table)
         self._txn_backup = {}
+        forget_meta(self.spark)
 
     def _transactional_execute(self, eng, sql: str):
         """Run statements against staged state. DML targets are staged
@@ -475,7 +478,6 @@ class Session:
         try:
             self._unshadow()
             for table, df in self._txn_staged.items():
-                from swanlake_spark import versions
                 from swanlake_spark.operators.dml import (
                     StagingPin,
                     _table_meta,
@@ -490,10 +492,10 @@ class Session:
                 # state stays time-travelable.
                 loc, part_cols, schema = _table_meta(self.spark, table)
                 with table_write_lock(self.spark, table, loc=loc):
-                    StagingPin(self.spark, table, loc, part_cols).publish(df, None)
-                    versions.record_version(
-                        self.spark, table, "txn_commit", loc, schema
-                    )
+                    StagingPin(
+                        self.spark, table, loc, part_cols,
+                        op="txn_commit", schema=schema,
+                    ).publish(df, None)
         except Exception as e:
             self._aborted_txns.add(self.txn_id)
             self.txn_id = None

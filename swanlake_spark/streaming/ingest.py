@@ -258,12 +258,16 @@ def streaming_append_to_table(
     from swanlake_spark.operators.ingest import align_to_schema
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
+        from swanlake_spark import versions
+        from swanlake_spark.operators.dml import table_write_lock
+
         spark = batch_df.sparkSession
         aligned = align_to_schema(batch_df, spark.table(table).schema)
-        aligned.write.insertInto(table)
-        from swanlake_spark import versions
-
-        versions.record_version(spark, table, f"stream_batch_{batch_id}")
+        # under the lock like every writer: a publish meanwhile would
+        # record the table's files without this batch's
+        with table_write_lock(spark, table):
+            aligned.write.insertInto(table)
+            versions.record_version(spark, table, f"stream_batch_{batch_id}")
 
     writer = events.writeStream.foreachBatch(sink).option(
         "checkpointLocation", checkpoint_dir

@@ -51,11 +51,14 @@ def maintain_matview_stream(
         from swanlake_spark import matview, versions
         from swanlake_spark.operators.ingest import align_to_schema
 
+        from swanlake_spark.operators.dml import table_write_lock
+
         aligned = align_to_schema(batch_df, spark.table(base_table).schema)
-        aligned.write.insertInto(base_table)
-        versions.record_version(
-            spark, base_table, f"stream_batch_{batch_id}"
-        )
+        with table_write_lock(spark, base_table):
+            aligned.write.insertInto(base_table)
+            versions.record_version(
+                spark, base_table, f"stream_batch_{batch_id}"
+            )
         # empty batches publish no files; the set-diff is empty and the
         # fold returns 0 — cheap, so no need to special-case them
         matview.refresh_incremental(spark, view)

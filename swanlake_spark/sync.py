@@ -18,6 +18,7 @@ two scans of one statement.
 
 from __future__ import annotations
 
+import functools
 import json
 import re
 import threading
@@ -29,12 +30,13 @@ from pyspark.sql import SparkSession
 from pyspark.sql import types as T
 
 from swanlake_spark import versions
+from swanlake_spark.plans.parser import TABLE_NAME, table_parts
 
 # the head of a statement that writes the table it names
 _WRITE_TARGET = re.compile(
     r"^\s*(?:INSERT\s+(?:INTO|OVERWRITE)(?:\s+TABLE)?|UPDATE|DELETE\s+FROM"
     r"|MERGE\s+INTO|TRUNCATE(?:\s+TABLE)?|ALTER\s+TABLE"
-    r"|DROP\s+TABLE(?:\s+IF\s+EXISTS)?)\s+([\w.`\"]+)",
+    rf"|DROP\s+TABLE(?:\s+IF\s+EXISTS)?)\s+({TABLE_NAME})",
     re.IGNORECASE,
 )
 # Hadoop glob metacharacters, escaped in the file-name filter
@@ -53,6 +55,10 @@ class _State:
         self.lock = threading.RLock()
         # a new session's cache is empty: nothing to drop
         self.seen = {m.loc: (m.seq, False) for m in list(versions._NEWEST.values())}
+        # the session's SessionCatalog, and its TableIdentifier per name,
+        # looked up once (:func:`_invalidate`)
+        self.catalog = None
+        self.idents: dict[str, object] = {}
 
 
 _STATES: "weakref.WeakKeyDictionary[SparkSession, _State]" = weakref.WeakKeyDictionary()
@@ -76,7 +82,7 @@ def sync(spark: SparkSession, sql: str) -> None:
     named = set(re.findall(r"[\w$]+", sql.lower()))
     target = _WRITE_TARGET.match(sql)
     if target:
-        named.discard(target.group(1).split(".")[-1].strip('`"').lower())
+        named.discard(table_parts(target.group(1))[-1].lower())
     with st.lock:
         for m in moved:
             seen = st.seen.get(m.loc)
@@ -123,18 +129,39 @@ def planning(spark: SparkSession):
 
 def _invalidate(spark: SparkSession, table) -> None:
     """Drop the session's cached relation of ``table`` (a name, or a
-    ``(database, table)`` pair): a few Py4J calls, where
-    ``refreshTable`` re-lists the table. A name the table-identifier
-    parser cannot take is refreshed with ``refreshTable``."""
+    ``(database, table)`` pair): one Py4J call once the session has
+    parsed the name, where ``refreshTable`` re-lists the table. A name
+    the table-identifier parser cannot take is refreshed with
+    ``refreshTable``."""
     if not isinstance(table, str):
         table = ".".join(f"`{p}`" for p in table)
-    state = spark._jsparkSession.sessionState()
     try:
-        ident = state.sqlParser().parseTableIdentifier(table)
+        catalog, ident = _catalog_ident(spark, table)
     except Exception:  # noqa: BLE001 — refreshTable resolves it
         spark.catalog.refreshTable(table)
         return
-    state.catalog().invalidateCachedTable(ident)
+    catalog.invalidateCachedTable(ident)
+
+
+def _catalog_ident(spark: SparkSession, table: str):
+    """``(SessionCatalog, TableIdentifier)`` of the name ``table`` in
+    ``spark``, each looked up once per session (the identifier's
+    database, when the name has none, resolves at each use). Raises for
+    a name the parser cannot take."""
+    st = _state(spark)
+    ident = st.idents.get(table)
+    if ident is None:
+        state = spark._jsparkSession.sessionState()
+        ident = state.sqlParser().parseTableIdentifier(table)
+        st.catalog = st.catalog or state.catalog()
+        st.idents[table] = ident
+    return st.catalog, ident
+
+
+@functools.lru_cache(maxsize=None)
+def _jvm_classes(jvm):
+    """``(QualifiedTableName, scala.Some)`` of one JVM, looked up once."""
+    return jvm.org.apache.spark.sql.catalyst.QualifiedTableName, jvm.scala.Some
 
 
 def _pin(spark: SparkSession, m: versions.Manifest) -> bool:
@@ -148,16 +175,16 @@ def _pin(spark: SparkSession, m: versions.Manifest) -> bool:
     relation prunes partitions before the scan), files not named
     ``*.parquet``, a table the catalog no longer has, or a publish
     between its rename-in and its manifest that outlasts the tries."""
-    state = spark._jsparkSession.sessionState()
     try:
-        ident = state.sqlParser().parseTableIdentifier(".".join(f"`{p}`" for p in m.table))
-        meta = state.catalog().getTableMetadata(ident)
+        catalog, ident = _catalog_ident(spark, ".".join(f"`{p}`" for p in m.table))
+        meta = catalog.getTableMetadata(ident)
     except Exception:  # noqa: BLE001 — e.g. dropped outside the engine
         meta = None
     if meta is None or not all("/" not in n and n.endswith(".parquet") for n, _ in m.files):
         _invalidate(spark, m.table)
         return False
     schema = m.schema or T.StructType.fromJson(json.loads(meta.schema().json()))
+    qualified_name, some = _jvm_classes(spark.sparkContext._jvm)
     for attempt in range(_PIN_TRIES):
         if attempt:
             time.sleep(0.005 * 2**attempt)
@@ -175,18 +202,12 @@ def _pin(spark: SparkSession, m: versions.Manifest) -> bool:
         if len(index.inputFiles()) == len(m.files) and index.sizeInBytes() == sum(
             size for _, size in m.files
         ):
-            jvm = spark.sparkContext._jvm
             rel = rel.copy(
-                rel.relation(), rel.output(), jvm.scala.Some(meta), rel.isStreaming(), rel.stream()
+                rel.relation(), rel.output(), some(meta), rel.isStreaming(), rel.stream()
             )
             break
     else:
         _invalidate(spark, m.table)
         return False
-    state.catalog().cacheTable(
-        spark.sparkContext._jvm.org.apache.spark.sql.catalyst.QualifiedTableName(
-            "spark_catalog", *m.table
-        ),
-        rel,
-    )
+    catalog.cacheTable(qualified_name("spark_catalog", *m.table), rel)
     return True

@@ -9,10 +9,17 @@ capability with directory-level metadata:
 
 - Every engine write (INSERT / UPDATE / DELETE / MERGE / TRUNCATE /
   compaction / clustering / rollback) appends a tiny JSON **manifest**
-  — the list of live data files (relative path + size) — under a
-  ``_versions/<table>/manifests`` sibling of the table location (same
-  FileSystem as the data, like the ``_staging`` sibling; the ``_``
-  prefix hides it from directory scans).
+  ``v<version>.json`` under a ``_versions/<table>/manifests`` sibling
+  of the table location (same FileSystem as the data, like the
+  ``_staging`` sibling; the ``_`` prefix hides it from directory
+  scans). A manifest is either a full listing of the live data files
+  (relative path + size) and the schema, or a **delta** naming the
+  version it applies to and the files added and removed since (the
+  schema only when it changed), like a DuckLake snapshot that records
+  only the files its commit changed. :func:`record_version` writes a
+  full listing whenever the deltas since the last one would outweigh
+  it, and :func:`_reconstruct` turns any version back into its full
+  listing for every reader.
 - When a publish retires data files (``dml.publish``, the one swap
   step of every table rewrite), the files are **renamed** into
   ``_versions/<table>/retained/`` instead of deleted — a metadata move
@@ -33,7 +40,9 @@ Scale notes (100 TB):
 - The newest manifest is the table: :func:`record_version` also keeps
   it in memory (:func:`newest`), with the table's schema, and every
   engine read takes its files and schema from there
-  (``swanlake_spark/sync.py``, ``operators/point.py``).
+  (``swanlake_spark/sync.py``, ``operators/point.py``). Under the table
+  write lock it names exactly the table's files (:func:`held`), so
+  writers take their live set from it too and list no directory.
 - Every rewrite retires the files it replaces through ``dml.publish``,
   partitioned table or not, so every older snapshot stays readable.
   The one exception is compaction, which deletes its inputs: a
@@ -47,8 +56,10 @@ from __future__ import annotations
 import itertools
 import json
 import os
+import threading
 import time
-from dataclasses import dataclass
+import uuid
+from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -223,20 +234,6 @@ def current_version(
     return ms[-1][0] if ms else 0
 
 
-# publish paths stash the exact post-publish file list here so the
-# record_version immediately after skips the directory walk (one fewer
-# metadata sweep per OLTP statement). Keyed by lowered table name;
-# written and consumed under the caller's table_write_lock.
-_PENDING_FILES: dict[str, list[tuple[str, int]]] = {}
-
-
-def note_published_files(table: str, files: list[tuple[str, int]]) -> None:
-    """A COW publish just installed exactly ``files`` (rel name, size)
-    as the table's live data files; the next record_version for this
-    table uses the list verbatim."""
-    _PENDING_FILES[table.strip('`"').lower()] = list(files)
-
-
 def _dumps(payload: dict) -> bytes:
     # compact separators: manifests count towards stored bytes
     return json.dumps(payload, separators=(",", ":")).encode("utf-8")
@@ -262,20 +259,17 @@ def _write_json_exclusive(spark: SparkSession, path: str, payload: dict) -> bool
 
     osp = _local_os_path(path)
     if osp is not None:
-        import os as _os
-        import uuid as _uuid
-
-        d, name = _os.path.split(osp)
-        _os.makedirs(d, exist_ok=True)
-        tmp = f"{d}/.{name}.{_uuid.uuid4().hex}"
+        d, name = os.path.split(osp)
+        os.makedirs(d, exist_ok=True)
+        tmp = f"{d}/.{name}.{uuid.uuid4().hex}"
         with open(tmp, "wb") as f:
             f.write(_dumps(payload))
         try:
-            _os.link(tmp, osp)
+            os.link(tmp, osp)
         except FileExistsError:
             return False
         finally:
-            _os.unlink(tmp)
+            os.unlink(tmp)
         return True
     jvm, fs, p = _fs(spark, path)
     try:
@@ -291,24 +285,58 @@ def _write_json_exclusive(spark: SparkSession, path: str, payload: dict) -> bool
     return True
 
 
+def _write_json_replace(spark: SparkSession, path: str, payload: dict) -> None:
+    """Replace the JSON file at ``path``: locally a rename over it, so a
+    reader sees the old or the new content whole; elsewhere an
+    overwriting create."""
+    from swanlake_spark.operators.dml import _local_os_path
+
+    osp = _local_os_path(path)
+    if osp is not None:
+        d, name = os.path.split(osp)
+        tmp = f"{d}/.{name}.{uuid.uuid4().hex}"
+        with open(tmp, "wb") as f:
+            f.write(_dumps(payload))
+        os.replace(tmp, osp)
+        return
+    _, fs, p = _fs(spark, path)
+    out = fs.create(p, True)
+    try:
+        out.write(bytearray(_dumps(payload)))
+    finally:
+        out.close()
+
+
 @dataclass(frozen=True)
 class Manifest:
     """A table's newest snapshot as this process knows it: what every
-    engine read of the table scans (``sync.py``, ``operators/point.py``).
-    ``seq`` orders every manifest the process has taken in, across
-    tables, so a session can tell which tables moved since it looked."""
+    engine read of the table scans (``sync.py``, ``operators/point.py``)
+    and, under the table write lock, what every writer takes as the
+    table's live files. ``seq`` orders every manifest the process has
+    taken in, across tables, so a session can tell which tables moved
+    since it looked."""
 
     seq: int
     table: tuple[str, str]  # (database, table), lower-cased
     loc: str
-    files: tuple[tuple[str, int], ...]  # (table-relative name, size)
+    files: tuple[tuple[str, int], ...]  # (table-relative name, size), sorted
     schema: T.StructType | None  # None for a manifest older than schemas
+    version: int
+    # bytes of the delta manifests written since the chain's last full
+    # listing; None when unknown (read from disk), which makes the next
+    # record a full listing
+    chain: int | None = None
+    # :func:`_dir_stamp` of the table's directories once the table held
+    # exactly ``files``; None when unknown (read from disk, non-local)
+    stamp: int | None = None
 
 
 # the newest manifest of every table this process recorded or read, by
-# table location (single dict operations: atomic under the GIL)
+# table location (single dict operations: atomic under the GIL; a
+# record replaces an entry only with a newer version, under _INSTALL)
 _NEWEST: dict[str, Manifest] = {}
 _SEQ = itertools.count(1)
+_INSTALL = threading.Lock()
 
 
 def qualified(spark: SparkSession, table: str) -> tuple[str, str]:
@@ -320,21 +348,105 @@ def qualified(spark: SparkSession, table: str) -> tuple[str, str]:
     return parts[-2], parts[-1]
 
 
+def _install(m: Manifest) -> Manifest:
+    """Make ``m`` its table's newest manifest in memory unless a newer
+    version is already there; returns the one in memory."""
+    with _INSTALL:
+        cur = _NEWEST.get(m.loc)
+        if cur is None or cur.version < m.version:
+            _NEWEST[m.loc] = cur = m
+        return cur
+
+
 def newest(spark: SparkSession, table: str, loc: str) -> Manifest | None:
     """The newest manifest of ``table`` at ``loc``, or None when it has
     none. A table this process has not recorded is read from its newest
     manifest file once."""
     m = _NEWEST.get(loc.rstrip("/"))
-    v = current_version(spark, table, loc) if m is None else 0
-    if v == 0:
+    if m is not None:
         return m
-    d = _manifest(spark, table, v, loc)
-    m = Manifest(
+    root = versions_root(spark, table, loc)
+    paths = dict(_manifest_paths(spark, root)) if root else {}
+    if not paths:
+        return None
+    d = _reconstruct(spark, paths, max(paths))
+    return _install(Manifest(
         next(_SEQ), qualified(spark, table), loc.rstrip("/"),
         tuple((f["name"], f["size"]) for f in d["files"]), _schema_of(d),
-    )
-    # a record that landed meanwhile is newer than this file
-    return _NEWEST.setdefault(m.loc, m)
+        int(d["version"]),
+    ))
+
+
+def held(spark: SparkSession, table: str, loc: str) -> Manifest | None:
+    """The newest manifest of ``table`` at ``loc`` for a caller holding
+    its write lock, made to name exactly the table's files. The one in
+    memory is checked without a listing: two file probes (its own
+    manifest file is there, the next version's is not, so no other
+    process recorded one since) and the modification times of the
+    table's directories (:func:`_dir_stamp`: nothing outside the engine
+    added or removed a file since it was recorded). Otherwise the
+    newest manifest is read from disk and compared with one listing of
+    the table directory; a table with no manifest, or files the
+    manifest does not name (a writer outside the engine, or a publish
+    cut short between its rename-in and its manifest), gets a manifest
+    of that listing (op ``adopt``). None for a location that cannot be
+    versioned."""
+    loc = loc.rstrip("/")
+    root = versions_root(spark, table, loc)
+    if root is None:
+        return None
+    m = _NEWEST.get(loc)
+    if m is not None:
+        mdir = _manifest_dir(root)
+        if (
+            _exists(spark, f"{mdir}/v{m.version:08d}.json")
+            and not _exists(spark, f"{mdir}/v{m.version + 1:08d}.json")
+            and m.stamp is not None
+            and m.stamp == _dir_stamp(loc, m.files)
+        ):
+            return m
+        with _INSTALL:
+            if _NEWEST.get(loc) is m:
+                del _NEWEST[loc]
+    m = newest(spark, table, loc)
+    files = _list_data_files(spark, loc)
+    if m is None or list(m.files) != files:
+        record_version(spark, table, "adopt", loc, files=files)
+        return _NEWEST[loc]
+    with _INSTALL:
+        if _NEWEST.get(loc) is m:
+            m = _NEWEST[loc] = replace(m, stamp=_dir_stamp(loc, files))
+    return m
+
+
+def _dir_stamp(loc: str, files) -> int | None:
+    """The latest modification time (ns) of the table directory at
+    ``loc`` and of every directory holding one of ``files``: any file
+    added to, removed from or renamed in any of them moves it. None for
+    a non-local location or a directory that is gone."""
+    from swanlake_spark.operators.dml import _local_os_path
+
+    osp = _local_os_path(loc)
+    if osp is None:
+        return None
+    dirs = {""}
+    for name, _ in files:
+        parts = name.split("/")[:-1]
+        dirs.update("/".join(parts[: i + 1]) for i in range(len(parts)))
+    try:
+        return max(os.stat(f"{osp}/{d}" if d else osp).st_mtime_ns for d in dirs)
+    except OSError:
+        return None
+
+
+def _exists(spark: SparkSession, path: str) -> bool:
+    from swanlake_spark.operators.dml import _local_os_path
+
+    osp = _local_os_path(path)
+    if osp is not None:
+        return os.path.exists(osp)
+    jvm, fs, p = _fs(spark, path)
+    return bool(fs.exists(p))
 
 
 def forget(spark: SparkSession, loc: str | None) -> None:
@@ -357,27 +469,43 @@ def _schema_of(manifest: dict) -> T.StructType | None:
     return T.StructType.fromJson(s) if s is not None else None
 
 
+def _listing_bytes(files, schema_json: str) -> int:
+    """About the size of a full listing of ``files``: each entry is
+    ``{"name":"…","size":…},``."""
+    return len(schema_json) + sum(len(n) + len(str(s)) + 20 for n, s in files)
+
+
 def record_version(
     spark: SparkSession,
     table: str,
     op: str,
     loc: str | None = None,
     schema: T.StructType | None = None,
+    files: list[tuple[str, int]] | None = None,
 ) -> int:
-    """Append a manifest of the table's current live files and schema,
-    and make it the table's newest in memory (:func:`newest`). Cheap
-    (driver-side listing — or the publishing path's explicit list — plus
-    one small JSON), called after every publish under the table write
-    lock; callers that already looked the table up pass its location
-    and schema. The manifest file is also written create-exclusive and
-    the version number retried on collision, so a caller outside the
-    lock can never silently overwrite another's snapshot. Raises when
-    the manifest cannot be written: the newest manifest is what every
-    engine read scans, so a missing one would hide the write."""
-    # consume the pending explicit list unconditionally — an early
-    # error must not leave a stale list behind for some later,
-    # unrelated manifest
-    files = _PENDING_FILES.pop(table.strip('`"').lower(), None)
+    """Append a manifest of the table's live files and schema, and make
+    it the table's newest in memory (:func:`newest`). ``files`` is the
+    new live set (table-relative name, size) when the caller knows it
+    (``dml.publish`` does); otherwise the table directory is listed
+    once, as after a Spark write. Callers that already looked the table
+    up pass its location and schema.
+
+    The manifest is a **delta** against the newest one in memory — the
+    files it added and removed, and the schema only when it changed —
+    unless the deltas since the chain's last full listing would then
+    outweigh one listing, or there is no newest manifest: then it is a
+    full listing (:func:`_reconstruct` reads both). So a point write
+    writes a few hundred bytes whatever the table's file count, and
+    reading any version replays at most about one listing's worth of
+    deltas.
+
+    The version number is the next after the newest one's, claimed
+    create-exclusive and retried on collision, so a caller outside the
+    table write lock can never silently overwrite another's snapshot;
+    a delta names the version it applies to (``prev``), so it stays
+    exact whichever number it lands on. Raises when the manifest cannot
+    be written: the newest manifest is what every engine read scans, so
+    a missing one would hide the write."""
     if loc is None or schema is None:
         from swanlake_spark.operators.dml import _table_meta
 
@@ -386,23 +514,37 @@ def record_version(
     root = versions_root(spark, table, loc)
     if loc is None or root is None:
         raise InvalidArgument(f"{table} has no resolvable location to version")
-    if files is None:
-        files = _list_data_files(spark, loc)
-    n = current_version(spark, table, loc) + 1
-    payload = {
-        "version": n,
-        "ts": time.time(),
-        "op": op,
-        "files": [{"name": rel, "size": size} for rel, size in files],
-        "schema": schema.jsonValue() if schema is not None else None,
-    }
+    loc = loc.rstrip("/")
+    files = tuple(sorted(_list_data_files(spark, loc) if files is None else files))
+    mdir = _manifest_dir(root)
+    prev = _NEWEST.get(loc)
+    if prev is not None and not _exists(spark, f"{mdir}/v{prev.version:08d}.json"):
+        prev = None  # its chain is gone: start a new one
+    n = prev.version + 1 if prev is not None else current_version(spark, table, loc) + 1
+    schema_value = schema.jsonValue() if schema is not None else None
+    schema_json = json.dumps(schema_value)
+    payload = {"version": n, "ts": time.time(), "op": op}
+    chain = 0
+    if prev is not None and prev.chain is not None:
+        old, new = dict(prev.files), dict(files)
+        payload |= {
+            "prev": prev.version,
+            "add": [{"name": r, "size": s} for r, s in files if old.get(r) != s],
+            "remove": [r for r in old if r not in new],
+        }
+        if schema != prev.schema:
+            payload["schema"] = schema_value
+        chain = prev.chain + len(_dumps(payload))
+        if chain > _listing_bytes(files, schema_json):
+            payload, chain = {"version": n, "ts": payload["ts"], "op": op}, 0
+    if "prev" not in payload:
+        payload["files"] = [{"name": r, "size": s} for r, s in files]
+        payload["schema"] = schema_value
     transient = 0
     for _ in range(64):
         payload["version"] = n
         try:
-            claimed = _write_json_exclusive(
-                spark, f"{_manifest_dir(root)}/v{n:08d}.json", payload
-            )
+            claimed = _write_json_exclusive(spark, f"{mdir}/v{n:08d}.json", payload)
         except Exception:
             # a non-"exists" error here is a transient FS/Py4J hiccup
             # under load, not a version collision — retry the SAME
@@ -414,16 +556,15 @@ def record_version(
         if claimed:
             from swanlake_spark import sync
 
-            prev = _NEWEST.get(loc.rstrip("/"))
             name = table.split(".")[-1].strip('`"').lower()
             m = Manifest(
                 next(_SEQ),
                 prev.table if prev and prev.table[1] == name else qualified(spark, table),
-                loc.rstrip("/"), tuple(files), schema,
+                loc, files, schema, n, chain, _dir_stamp(loc, files),
             )
-            _NEWEST[m.loc] = m
-            # the write itself refreshed the recording session's cache
-            sync.listed(spark, m)
+            if _install(m) is m:
+                # the write itself refreshed the recording session's cache
+                sync.listed(spark, m)
             return n
         n += 1
     raise IOError(
@@ -485,8 +626,10 @@ def snapshots(spark: SparkSession, table: str) -> DataFrame:
     root = versions_root(spark, table)
     rows = []
     if root is not None:
-        for n, path in _manifest_paths(spark, root):
-            m = _read_json(spark, path)
+        paths = dict(_manifest_paths(spark, root))
+        m = None
+        for n in sorted(paths):
+            m = _reconstruct(spark, paths, n, m)
             rows.append((
                 n,
                 float(m["ts"]),
@@ -509,16 +652,65 @@ def snapshot_file_names(
     return [f["name"] for f in _manifest(spark, table, version, loc)["files"]]
 
 
+def _reconstruct(
+    spark: SparkSession, paths: dict[int, str], version: int, known: dict | None = None
+) -> dict:
+    """Version ``version``'s manifest as a full listing — ``version``,
+    ``ts``, ``op``, ``files`` and ``schema`` — whether its file holds a
+    full listing or a delta: the one place a manifest chain is read
+    (:func:`record_version` writes it). A delta's files are its ``prev``
+    version's, less ``remove``, plus ``add``; its schema is its own when
+    it carries one, else ``prev``'s. ``paths`` maps each version on disk
+    to its file; ``known``, a version already reconstructed (a forward
+    replay passes the previous one), ends a chain early. Raises
+    SnapshotUnavailable when a chain reaches a version with no file."""
+    deltas = []
+    v = version
+    while known is None or v != known["version"]:
+        if v not in paths:
+            raise SnapshotUnavailable(
+                f"snapshot v{version}: manifest v{v} of its chain is gone"
+            )
+        d = _read_json(spark, paths[v])
+        if "prev" not in d:
+            known = d
+            break
+        deltas.append(d)
+        v = d["prev"]
+    if not deltas:
+        return known
+    files = {f["name"]: f["size"] for f in known["files"]}
+    schema = known.get("schema")
+    for d in reversed(deltas):
+        for name in d["remove"]:
+            files.pop(name, None)
+        for f in d["add"]:
+            files[f["name"]] = f["size"]
+        schema = d.get("schema", schema)
+    top = deltas[0]
+    return {
+        "version": top["version"], "ts": top["ts"], "op": top["op"],
+        "files": [{"name": k, "size": files[k]} for k in sorted(files)],
+        "schema": schema,
+    }
+
+
 def _manifest(
     spark: SparkSession, table: str, version: int, loc: str | None = None
 ) -> dict:
+    """Snapshot ``version`` of ``table`` as a full listing
+    (:func:`_reconstruct`). A chain that :func:`expire` shortened
+    meanwhile is listed and read once more."""
     root = versions_root(spark, table, loc)
     if root is None:
         raise InvalidArgument(f"table {table} has no resolvable location")
-    ms = dict(_manifest_paths(spark, root))
-    if version not in ms:
+    paths = dict(_manifest_paths(spark, root))
+    if version not in paths:
         raise NotFound(f"no snapshot v{version} for {table}")
-    return _read_json(spark, ms[version])
+    try:
+        return _reconstruct(spark, paths, version)
+    except (SnapshotUnavailable, FileNotFoundError):
+        return _reconstruct(spark, dict(_manifest_paths(spark, root)), version)
 
 
 def resolve_files(
@@ -760,9 +952,9 @@ def rollback(spark: SparkSession, table: str, version: int) -> int:
     try:
         dml._stage_frame(old, staging, part_cols)
         with dml.table_write_lock(spark, table, loc=loc):
-            dml.publish(spark, table, staging, None, loc)
-            v = record_version(
-                spark, table, f"rollback_to_v{version}", loc, schema
+            v = dml.publish(
+                spark, table, staging, None, loc,
+                op=f"rollback_to_v{version}", schema=schema,
             )
     finally:
         dml._rm_path(spark, staging)
@@ -778,30 +970,35 @@ def expire(
     """Drop manifests beyond the newest ``keep_last`` (and older than
     ``min_age_s``), then delete retained files no remaining manifest
     references — the DuckLake/Delta retention sweep. Live table files
-    are never touched."""
+    are never touched. A kept delta manifest whose chain runs through a
+    dropped version is first rewritten as the full listing it stands
+    for, so every kept version still reads."""
     root = versions_root(spark, table)
     stats = {"table": table, "manifests_removed": 0, "files_removed": 0,
              "bytes_reclaimed": 0}
     if root is None:
         return stats
-    ms = _manifest_paths(spark, root)
-    if not ms:
+    paths = dict(_manifest_paths(spark, root))
+    if not paths:
         return stats
     cutoff_ts = time.time() - min_age_s
-    keep = {n for n, _ in ms[-max(keep_last, 1):]}
+    newest_kept = set(sorted(paths)[-max(keep_last, 1):])
+    kept: dict[int, dict] = {}
+    m = None
+    for n in sorted(paths):
+        m = _reconstruct(spark, paths, n, m)
+        if n in newest_kept or float(m["ts"]) > cutoff_ts:
+            kept[n] = m
+    for n, m in kept.items():  # ascending: a kept prev reads by then
+        prev = _read_json(spark, paths[n]).get("prev")
+        if prev is not None and prev not in kept:
+            _write_json_replace(spark, paths[n], m)
     jvm, fs, _ = _fs(spark, root)
-    remaining: list[dict] = []
-    for n, path in ms:
-        if n in keep:
-            remaining.append(_read_json(spark, path))
-            continue
-        m = _read_json(spark, path)
-        if float(m["ts"]) > cutoff_ts:
-            remaining.append(m)
-            continue
-        fs.delete(jvm.org.apache.hadoop.fs.Path(path), False)
-        stats["manifests_removed"] += 1
-    referenced = {f["name"] for m in remaining for f in m["files"]}
+    for n, path in paths.items():
+        if n not in kept:
+            fs.delete(jvm.org.apache.hadoop.fs.Path(path), False)
+            stats["manifests_removed"] += 1
+    referenced = {f["name"] for m in kept.values() for f in m["files"]}
     rdir = _retained_dir(root)
     _, fs2, rpath = _fs(spark, rdir)
     if fs2.exists(rpath):

@@ -13,7 +13,6 @@ from __future__ import annotations
 
 import os
 import re
-import shutil
 import tempfile
 import threading
 import uuid
@@ -25,7 +24,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from swanlake_spark import constraints, filestats
+from swanlake_spark import constraints, filestats, versions
 from swanlake_spark.errors import InvalidArgument
 from swanlake_spark.operators import dml, point
 from swanlake_spark.operators.ingest import insert_arrow
@@ -287,7 +286,8 @@ def test_point_rewrite_splits_a_large_file(spark):
 
     assert dml.update_table(spark, name, {"s": "'u'"}, "k = 5") == 1
     ranges = sorted(
-        (f.ranges["k"], f.name) for f in filestats.live_files(loc)
+        (f.ranges["k"], f.name)
+        for f in filestats.snapshot_files(versions.newest(spark, name, loc))
         if f.name != "part-00001.parquet"
     )
     assert len(ranges) == min(-(-tbl.nbytes // dml._POINT_FILE_BYTES), dml._POINT_SPLIT)
@@ -447,30 +447,6 @@ def test_unpruned_rewrite_resolves_qualified_columns(spark):
     assert dml.update_table(spark, table, {"g": "9"}, f"{table}.s = 'a'") == 1
     assert dml.delete_from(spark, table, f"{table}.s = 'b'") == 1
     assert _rows(spark, table) == [(1, 9, "a", 0.5)]
-
-
-def test_footer_memo_sees_a_same_size_rewrite(tmp_path):
-    """A file replaced in place under the same name and size (as an
-    outside writer may do) is read again: the memo key holds the mtime."""
-    path = tmp_path / "part-0.parquet"
-    pq.write_table(pa.table({"k": pa.array([1, 2], pa.int64())}), path)
-    assert [f.ranges["k"] for f in filestats.live_files(str(tmp_path))] == [(1, 2)]
-    size, mtime = path.stat().st_size, path.stat().st_mtime_ns
-    pq.write_table(pa.table({"k": pa.array([7, 8], pa.int64())}), path)
-    assert path.stat().st_size == size
-    os.utime(path, ns=(mtime + 10**9, mtime + 10**9))  # past a coarse clock tick
-    assert [f.ranges["k"] for f in filestats.live_files(str(tmp_path))] == [(7, 8)]
-
-
-def test_footer_memo_forgets_a_dropped_directory(tmp_path):
-    loc = tmp_path / "t"
-    loc.mkdir()
-    pq.write_table(pa.table({"k": [1]}), loc / "part-0.parquet")
-    assert len(filestats.live_files(str(loc))) == 1
-    assert str(loc) in filestats._MEMO
-    shutil.rmtree(loc)
-    assert filestats.live_files(str(loc)) is None
-    assert str(loc) not in filestats._MEMO
 
 
 def _jobs(spark, fn) -> int:

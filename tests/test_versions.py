@@ -293,10 +293,7 @@ class TestAtomicPublish:
             eng.execute("INSERT INTO pub_e VALUES (1, 'a'), (2, 'b')")
             eng.execute("UPDATE pub_e SET v = 'X' WHERE id = 1")
             v = versions.current_version(spark, "pub_e")
-            root = versions.versions_root(spark, "pub_e")
-            manifest = versions._read_json(
-                spark, f"{versions._manifest_dir(root)}/v{v:08d}.json"
-            )
+            manifest = versions._manifest(spark, "pub_e", v)
             walked = versions._list_data_files(spark, loc)
             assert sorted(
                 (f["name"], f["size"]) for f in manifest["files"]
@@ -457,3 +454,31 @@ class TestTableChanges:
         assert self._changes(spark, "vt", v1, v2) == [
             (7, "x", "delete")
         ] * 3
+
+
+def test_quoted_table_name_gets_a_manifest(engine):
+    """A quoted, database-qualified table name (``quoted_identifiers.test``)
+    is captured whole by the statement-head patterns: its writes record
+    manifests, and its DROP removes its snapshot history."""
+    import os
+    import uuid
+
+    spark = engine.spark
+    db = f"qn_{uuid.uuid4().hex[:8]}"
+    loc = tempfile.mkdtemp(prefix="swl_qn_")
+    name = f"{db}.`CamelCase`"
+    engine.execute(f"CREATE DATABASE {db}")
+    engine.execute(
+        f"CREATE TABLE {name} (`First Column` INT, value INT) USING parquet LOCATION '{loc}'"
+    )
+    engine.execute(f"INSERT INTO {name} (`First Column`, value) VALUES (1, 2)")
+    root = versions.versions_root(spark, name, loc)
+    assert versions.current_version(spark, name) == 2
+    assert [f for f, _ in versions._list_data_files(spark, loc)] == [
+        f["name"] for f in versions._manifest(spark, name, 2)["files"]
+    ]
+    got = engine.query(f"SELECT value FROM {name} WHERE `First Column` = 1").to_arrow()
+    assert got.column("value").to_pylist() == [2]
+    engine.execute(f"DROP TABLE {name}")
+    engine.execute(f"DROP DATABASE {db}")
+    assert os.path.isdir(loc) and not os.path.exists(root)

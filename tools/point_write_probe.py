@@ -33,9 +33,12 @@ times ``--reps`` calls each of
   ``ycsb_mix`` load batch.
 
 For each it prints the median and quartiles of milliseconds per call, the
-Spark jobs per call (counted with a job group and the status tracker) and
-the Py4J round trips to the JVM per call (``testing.py4j_calls``). The
-first call of each kind is a warm-up and is not counted.
+Spark jobs per call (counted with a job group and the status tracker),
+the Py4J round trips to the JVM per call (``testing.py4j_calls``), the
+listings of the table directory and of its manifest directory per call
+(``os.scandir`` and ``os.listdir`` calls on either), and the manifest
+bytes each call wrote. The first call of each kind is a warm-up and is
+not counted.
 """
 
 from __future__ import annotations
@@ -48,6 +51,8 @@ import sys
 import tempfile
 import time
 import uuid
+from contextlib import contextmanager
+from unittest import mock
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -60,6 +65,31 @@ SCAN_KEYS = 40
 
 def _value(rng: random.Random) -> str:
     return "".join(rng.choices("abcdefghijklmnopqrstuvwxyz", k=_FIELD_LEN))
+
+
+@contextmanager
+def _listings(*dirs: str):
+    """Count the ``os.scandir`` and ``os.listdir`` calls on ``dirs``:
+    yields a one-item list whose item is the count."""
+    wanted = {os.path.realpath(d) for d in dirs}
+    count = [0]
+
+    def counted(fn):
+        def wrapper(path=".", *args, **kwargs):
+            if isinstance(path, str) and os.path.realpath(path) in wanted:
+                count[0] += 1
+            return fn(path, *args, **kwargs)
+
+        return wrapper
+
+    with mock.patch.object(os, "scandir", counted(os.scandir)), mock.patch.object(
+        os, "listdir", counted(os.listdir)
+    ):
+        yield count
+
+
+def _dir_sizes(d: str) -> dict[str, int]:
+    return {e.name: e.stat().st_size for e in os.scandir(d)}
 
 
 def main() -> None:
@@ -110,6 +140,7 @@ def main() -> None:
         pq.write_table(pa.table(data), f"{loc}/part-{i:05d}.parquet")
     spark.catalog.refreshTable(table)
     versions.record_version(spark, table, "load")
+    mdir = versions.versions_root(spark, table, loc).replace("file:", "") + "/manifests"
 
     live = list(range(args.rows))
     rng.shuffle(live)
@@ -187,24 +218,31 @@ def main() -> None:
         if prep:
             prep()
         fn()  # warm-up
-        ms, jobs, calls = [], [], []
+        ms, jobs, calls, lists, written = [], [], [], [], []
         for _ in range(args.reps):
             if prep:
                 prep()
             group = f"pwp_{uuid.uuid4().hex}"
             sc.setJobGroup(group, name)
-            with py4j_calls(spark) as n:
+            before = _dir_sizes(mdir)
+            with _listings(loc, mdir) as listed, py4j_calls(spark) as n:
                 t0 = time.perf_counter()
                 fn()
                 ms.append((time.perf_counter() - t0) * 1000)
             sc.setLocalProperty("spark.jobGroup.id", None)
             jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
             calls.append(n[0])
+            lists.append(listed[0])
+            written.append(sum(
+                size for f, size in _dir_sizes(mdir).items() if f not in before
+            ))
         q1, med, q3 = statistics.quantiles(ms, n=4)
         print(
             f"{name:12s} ms/call median {med:7.1f} (quartiles {q1:.1f}-{q3:.1f})"
             f"  spark jobs/call {statistics.mean(jobs):.2f}"
             f"  py4j calls/call {statistics.mean(calls):.1f}"
+            f"  listings/call {statistics.mean(lists):.1f}"
+            f"  manifest bytes/call {statistics.mean(written):.0f}"
         )
     eng.stop()
 
