@@ -17,7 +17,7 @@ Every caller takes the files from the table's newest manifest
 (``versions.newest``), without a directory listing: point reads
 (``operators/point.py``), and writers, which hold the table write lock,
 under which that manifest names exactly the table's files
-(``versions.held``) — point UPDATE/DELETE (``dml._pruned_cow``) and the
+(``versions.held``) — UPDATE/DELETE (``dml._cow``) and the
 primary-key probe of an append (``constraints.bounded_existing_probe``).
 Any case the statistics cannot vouch for answers ``None`` and the
 caller takes its unpruned path: no manifest, a non-local location, a

@@ -33,11 +33,11 @@ files. The sidecar is one tiny JSON — never a data copy.
 from __future__ import annotations
 
 import json
+import math
 import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-from swanlake_spark.config import PARQUET_CODEC
 from swanlake_spark.errors import InvalidArgument, NotFound
 
 
@@ -590,19 +590,19 @@ def _publish_state(
     state: DataFrame | None,
     base_version: int,
     sweep: bool = True,
-    driver_ok: bool = False,
+    in_bytes: float = math.inf,
     loc: str | None = None,
 ) -> None:
     """Write the avg merge state keyed by the base version it reflects
     and (unless deferred — incremental refresh sweeps only after every
     plan reading the OLD state has executed) sweep older state dirs
-    (tiny, view-sized parquet). ``driver_ok`` routes the write through
-    the single-Arrow-collect fast path when the caller has bounded the
-    size."""
+    (tiny, view-sized parquet). ``in_bytes``, the size of the files the
+    state is computed from when the caller measured it, lets the write
+    take the single-Arrow-collect fast path (:func:`_driver_parquet_write`)."""
     if state is None:
         return
     path = _state_path(spark, name, base_version, loc)
-    if not (driver_ok and _driver_parquet_write(spark, path, state)):
+    if not _driver_parquet_write(path, state, in_bytes):
         state.write.mode("overwrite").parquet(path)
     if sweep:
         _sweep_state(spark, name, base_version, loc)
@@ -626,57 +626,23 @@ def _total_bytes(spark: SparkSession, paths: list[str]) -> int:
     return total
 
 
-def _collect_arrow(df):
-    """One-Arrow-collect of a SMALL DataFrame, or None when a type
-    outside the proven Spark→Arrow→parquet round-trip set makes the
-    driver-side path ineligible (callers fall back to the distributed
-    write). Callers bound the size BEFORE calling."""
-    from swanlake_spark.operators.dml import _ARROW_SAFE_TYPES
-
-    if any(
-        not _ARROW_SAFE_TYPES.match(f.dataType.simpleString())
-        for f in df.schema.fields
-    ):
-        return None
-    try:
-        return df.toArrow()
-    except Exception:
-        import logging
-
-        logging.getLogger(__name__).warning(
-            "driver-side collect fell back to the distributed path",
-            exc_info=True,
-        )
-        return None
-
-
-def _write_arrow_dir(spark: SparkSession, path: str, tbl) -> bool:
+def _write_arrow_dir(path: str, tbl) -> bool:
     """Write an Arrow table as one parquet file under a FRESH ``path``
-    dir — no output committer, no task scheduling (the same driver-side
-    fast path point DML uses, ``dml._driver_rewrite``). Local-scheme
-    only (pyarrow writes OS paths)."""
+    dir (``dml._write_staged_arrow``) — no output committer, no task
+    scheduling, the driver-side write of point DML (``dml._cow``).
+    Local-scheme only (pyarrow writes OS paths)."""
     import os
     import shutil
-    import uuid as _uuid
 
-    base = path
-    if base.startswith("file:"):
-        base = base[len("file:"):]
-        while base.startswith("//"):
-            base = base[1:]
-    elif "://" in base:
+    from swanlake_spark.operators import dml
+
+    base = dml._local_os_path(path)
+    if base is None:
         return False
     try:
-        import pyarrow.parquet as pq
-
         if os.path.isdir(base):
             shutil.rmtree(base)
-        os.makedirs(base, exist_ok=True)
-        pq.write_table(
-            tbl,
-            f"{base}/part-00000-{_uuid.uuid4().hex}-c000.{PARQUET_CODEC}.parquet",
-            compression=PARQUET_CODEC,
-        )
+        dml._write_staged_arrow(base, tbl)
         return True
     except Exception:
         import logging
@@ -688,10 +654,14 @@ def _write_arrow_dir(spark: SparkSession, path: str, tbl) -> bool:
         return False
 
 
-def _driver_parquet_write(spark: SparkSession, path: str, df) -> bool:
-    """Collect + write in one step (see the two halves above)."""
-    tbl = _collect_arrow(df)
-    return tbl is not None and _write_arrow_dir(spark, path, tbl)
+def _driver_parquet_write(path: str, df, in_bytes: float) -> bool:
+    """``df`` collected through point DML's guard (``dml._driver_rows``,
+    given the ``in_bytes`` it is computed from) and written under
+    ``path`` (:func:`_write_arrow_dir`); False when either refuses."""
+    from swanlake_spark.operators import dml
+
+    tbl = dml._driver_rows(df, in_bytes, path)
+    return tbl is not None and _write_arrow_dir(path, tbl)
 
 
 def _sweep_state(
@@ -1275,11 +1245,10 @@ def refresh_incremental(spark: SparkSession, name: str) -> int:
                         in_paths.update(
                             _snap_paths(j, "old" if j < i else "new")
                         )
-        small = _total_bytes(
-            spark, sorted(in_paths)
-        ) <= dml._DRIVER_REWRITE_MAX_BYTES
+        in_bytes = _total_bytes(spark, sorted(in_paths))
     except Exception:
-        small = False
+        in_bytes = math.inf
+    small = in_bytes <= dml._DRIVER_REWRITE_MAX_BYTES
 
     view_fields = o.schema.fields
     view_types = {f.name: f.dataType for f in view_fields}
@@ -1427,30 +1396,26 @@ def refresh_incremental(spark: SparkSession, name: str) -> int:
         published = False
         maintain_state = state_mode != "none"
         part_cols = dml._table_meta(spark, name)[1]
-        if small and not part_cols:
-            # ONE Arrow collect serves both publishes: the combined
-            # projection carries the view columns AND the state
-            # components, the driver slices it into the two parquet
-            # writes — the merge plan executes once, not twice
+        # ONE Arrow collect serves both publishes: the combined
+        # projection carries the view columns AND the state components,
+        # the driver slices it into the two parquet writes — the merge
+        # plan executes once, not twice
+        tbl = dml._driver_rows(combined, in_bytes, view_loc, part_cols)
+        if tbl is not None:
             staging = dml.staging_dir(spark, name, loc=view_loc)
-            tbl = _collect_arrow(combined)
-            if tbl is not None:
-                if maintain_state:
-                    state_published = _write_arrow_dir(
-                        spark,
-                        _state_path(spark, name, key_new, view_loc),
-                        tbl.select(state_names),
+            if maintain_state:
+                state_published = _write_arrow_dir(
+                    _state_path(spark, name, key_new, view_loc),
+                    tbl.select(state_names),
+                )
+            if not maintain_state or state_published:
+                published = _write_arrow_dir(staging, tbl.select(view_order))
+                if published:
+                    dml.publish(
+                        spark, name, staging, None, view_loc,
+                        op="matview_refresh_incremental",
                     )
-                if not maintain_state or state_published:
-                    published = _write_arrow_dir(
-                        spark, staging, tbl.select(view_order)
-                    )
-                    if published:
-                        dml.publish(
-                            spark, name, staging, None, view_loc,
-                            op="matview_refresh_incremental",
-                        )
-                        dml._rm_path(spark, staging)
+                    dml._rm_path(spark, staging)
         if maintain_state and not state_published:
             _publish_state(
                 spark,
@@ -1458,7 +1423,7 @@ def refresh_incremental(spark: SparkSession, name: str) -> int:
                 combined.select(*state_names),
                 key_new,
                 sweep=False,
-                driver_ok=small,
+                in_bytes=in_bytes,
                 loc=view_loc,
             )
         if not published:
@@ -1565,52 +1530,40 @@ def refresh(
         # separate count() job and the distributed staging write.
         loc, part_cols = dml._table_meta(spark, name)[:2]
         try:
-            small = _total_bytes(
-                spark, list(spark.table(name).inputFiles())
-            ) <= dml._DRIVER_REWRITE_MAX_BYTES and not part_cols
+            in_bytes = _total_bytes(spark, list(spark.table(name).inputFiles()))
         except Exception:
-            small = False
+            in_bytes = math.inf
         n = None
         with dml.table_write_lock(spark, name, loc=loc):
             published = False
             state_published = False
-            if small:
-                # ONE collect serves the view AND (when avg state is
-                # maintained) the state write: the base scan inside
-                # the collect still runs distributed, only the rollup
-                # result lands on the driver
-                src_df = combined if (stamp and combined is not None) else new_df
-                tbl = _collect_arrow(src_df)
-                if tbl is not None:
-                    view_order = [
-                        f.name for f in spark.table(name).schema.fields
+            # ONE collect serves the view AND (when avg state is
+            # maintained) the state write: the base scan inside the
+            # collect still runs distributed, only the rollup result
+            # lands on the driver
+            src_df = combined if (stamp and combined is not None) else new_df
+            tbl = dml._driver_rows(src_df, in_bytes, loc, part_cols)
+            if tbl is not None:
+                view_order = [f.name for f in spark.table(name).schema.fields]
+                if stamp and combined is not None:
+                    state_names = [
+                        c for c in src_df.columns if c.startswith("__swl_")
                     ]
-                    if stamp and combined is not None:
-                        state_names = [
-                            c for c in src_df.columns
-                            if c.startswith("__swl_")
-                        ]
-                        bare_groups = [
-                            g.split(".")[-1]
-                            for g in parse_incremental(q)["groups"]
-                        ]
-                        state_published = _write_arrow_dir(
-                            spark,
-                            _state_path(
-                                spark, name, _stamp_state_key(stamp)
-                            ),
-                            tbl.select(bare_groups + state_names),
-                        )
-                    staging = dml.staging_dir(spark, name)
-                    if _write_arrow_dir(
-                        spark, staging, tbl.select(view_order)
-                    ):
-                        n = tbl.num_rows
-                        dml.publish(
-                            spark, name, staging, None, loc, op="matview_refresh"
-                        )
-                        dml._rm_path(spark, staging)
-                        published = True
+                    bare_groups = [
+                        g.split(".")[-1] for g in parse_incremental(q)["groups"]
+                    ]
+                    state_published = _write_arrow_dir(
+                        _state_path(spark, name, _stamp_state_key(stamp)),
+                        tbl.select(bare_groups + state_names),
+                    )
+                staging = dml.staging_dir(spark, name)
+                if _write_arrow_dir(staging, tbl.select(view_order)):
+                    n = tbl.num_rows
+                    dml.publish(
+                        spark, name, staging, None, loc, op="matview_refresh"
+                    )
+                    dml._rm_path(spark, staging)
+                    published = True
             if not published:
                 n = new_df.count()
                 dml.StagingPin(
@@ -1619,7 +1572,7 @@ def refresh(
             if stamp and not state_published:
                 _publish_state(
                     spark, name, state, _stamp_state_key(stamp),
-                    driver_ok=small,
+                    in_bytes=in_bytes,
                 )
             elif stamp and state_published:
                 _sweep_state(spark, name, _stamp_state_key(stamp))
@@ -1643,16 +1596,12 @@ def refresh(
     n = new_df.count()
     loc, part_cols, schema = dml._table_meta(spark, name)
     with dml.table_write_lock(spark, name, loc=loc):
+        # no file matched: nothing to replace, the region is new rows
         files, matched = dml._matched_files(spark, name, where, loc=loc)
         if matched:
-            region = (
-                spark.table(name) if files is None
-                else dml._read_table_files(spark, files, schema, loc)
-            )
+            region = dml._read_table_files(spark, files, schema, loc)
             keep = region.filter(~F.coalesce(F.expr(where), F.lit(False)))
             new_df = keep.unionByName(new_df)
-        else:
-            files = []  # nothing to replace: the region is new rows
         dml.StagingPin(
             spark, name, loc, part_cols, op="matview_refresh_partial", schema=schema
         ).publish(new_df, files)

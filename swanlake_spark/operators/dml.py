@@ -25,6 +25,7 @@ from __future__ import annotations
 import functools
 import itertools
 import json
+import math
 import os
 import re
 import shutil
@@ -45,6 +46,7 @@ from swanlake_spark.errors import InvalidArgument
 from swanlake_spark.operators import point
 from swanlake_spark.operators.point import _SRC
 from swanlake_spark.plans.parser import (
+    TABLE_NAME,
     _IDENT,
     _keyword_at_depth0,
     _mask_literals,
@@ -53,10 +55,9 @@ from swanlake_spark.plans.parser import (
 )
 from swanlake_spark.plans.quoting import quote_identifier
 
-_TABLE_RE = rf"{_IDENT}(?:\.{_IDENT}){{0,2}}"
-_UPDATE_HEAD = re.compile(rf"^\s*UPDATE\s+(?P<table>{_TABLE_RE})", re.IGNORECASE)
+_UPDATE_HEAD = re.compile(rf"^\s*UPDATE\s+(?P<table>{TABLE_NAME})", re.IGNORECASE)
 _DELETE_HEAD = re.compile(
-    rf"^\s*DELETE\s+FROM\s+(?P<table>{_TABLE_RE})", re.IGNORECASE
+    rf"^\s*DELETE\s+FROM\s+(?P<table>{TABLE_NAME})", re.IGNORECASE
 )
 
 
@@ -969,40 +970,58 @@ def sweep_stale_locks(staging_dir: str, throttle_s: float | None = None) -> int:
     return removed
 
 
-# -- file-granular copy-on-write ---------------------------------------------
+# -- copy-on-write UPDATE / DELETE ---------------------------------------------
+#
+# A subquery-free UPDATE or DELETE rewrites only the data files holding a
+# matched row, the DuckLake commit unit, in three steps (:func:`_cow`):
+#
+# 1. candidate files: when a depth-0 term of the predicate bounds an
+#    integral column and the newest manifest's Parquet footers vouch for
+#    its files, the files whose key range can hold a match
+#    (filestats.py); otherwise the files that hold a match, from one
+#    probe job (:func:`_matched_files`);
+# 2. tagged rows: every candidate row, with its source file (``_SRC``)
+#    and whether it matched before the SET (``_HIT``), computed by
+#    pyarrow on the driver when it computes exactly what Spark would
+#    (:func:`_arrow_point_rows`), by Spark otherwise, which also runs an
+#    UPDATE's CHECK/FK gate;
+# 3. one tail: the rows come to the driver as Arrow (pyarrow's, or one
+#    guarded Spark collect, :func:`_driver_rows`) and the driver writes
+#    the files that held a hit; else Spark writes them
+#    (:func:`_stage_frame`). Either way :func:`publish` swaps them in.
+#
+# The predicate recognizer and the Arrow reader are operators/point.py's,
+# shared with point reads.
 
-# Driver-side cap on the matched-file list; a predicate touching more
-# files than this falls back to the full-table rewrite (at that point
-# the rewrite is most of the table anyway).
-_FILE_COW_MAX_FILES = 10_000
+# the match flag the tagged rows carry beside point._SRC (the source file)
+_HIT = "_swl_hit"
 
 
 def _matched_files(
-    spark: SparkSession, table: str, where: str, loc=_UNRESOLVED
-) -> tuple[list[str] | None, int]:
-    """``(files, affected)``: the data files containing at least one row
-    matching ``where`` — the DuckLake/Iceberg copy-on-write granularity
-    — and the matching row count, from ONE scan (a
-    groupBy(input_file_name) count; per-file partial counts combine
-    map-side). ``files`` is None when the file-granular path doesn't
-    apply: unresolvable location, a single file (file rewrite == table
-    rewrite), every file matched, or more matches than the driver-side
-    cap — ``affected`` is still valid in every case."""
-    df = spark.table(table)
-    matched = df.filter(F.expr(where).eqNullSafe(F.lit(True)))
-    rows = matched.groupBy(F.input_file_name().alias("f")).count().collect()
-    affected = sum(r["count"] for r in rows)
-    file_list = [r["f"] for r in rows]
-    if affected == 0 or _loc_or_resolve(spark, table, loc) is None:
-        return None, affected
-    try:
-        total = len(df.inputFiles())
-    except Exception:
-        return None, affected
-    files = file_list
-    if total <= 1 or len(files) > _FILE_COW_MAX_FILES or len(files) >= total:
-        return None, affected
-    return files, affected
+    spark: SparkSession,
+    table: str,
+    where: str,
+    loc=_UNRESOLVED,
+    files: list[str] | None = None,
+    schema: T.StructType | None = None,
+) -> tuple[list[str], int]:
+    """``(files, affected)``: the data files holding at least one row
+    matching ``where`` (as ``input_file_name()`` renders them) and the
+    number of such rows, from one probe over the table's files, or over
+    ``files`` read with the table ``schema``: the matching rows grouped
+    by source file and counted (per-file partial counts combine
+    map-side; only matching rows reach the aggregation)."""
+    if files is None:
+        df = spark.table(table)
+    else:
+        df = _read_table_files(
+            spark, files, schema, _loc_or_resolve(spark, table, loc)
+        ).alias(table.split(".")[-1].strip('`"'))
+    rows = (
+        df.filter(F.expr(where).eqNullSafe(F.lit(True)))
+        .groupBy(F.input_file_name()).count().collect()
+    )
+    return [r[0] for r in rows], sum(r[1] for r in rows)
 
 
 def _local_os_path(loc: str) -> str | None:
@@ -1018,19 +1037,19 @@ def _local_os_path(loc: str) -> str | None:
     return None
 
 
-# Point-statement driver-rewrite bound: when the matched files total at
-# most this many bytes, the rewritten contents are collected as ONE
-# Arrow batch and written by the driver — no output-committer dance, no
-# task scheduling (~3× faster staged write). 128 MB ≈ one
-# compaction-target file, so at 100 TB a point UPDATE still qualifies;
-# anything larger runs the distributed write.
+# Driver-collect bound: when the candidate files total at most this many
+# bytes, the rewritten contents are collected as ONE Arrow batch and
+# written by the driver — no output-committer dance, no task scheduling
+# (~3× faster staged write). 128 MB ≈ one compaction-target file, so at
+# 100 TB a point UPDATE still qualifies; anything larger runs the
+# distributed write.
 _DRIVER_REWRITE_MAX_BYTES = 128 << 20
 
 # Output-side cap: the input bound above can't see an EXPANDING rewrite
 # expression (SET text = repeat(text, 1000) on a 1 MB matched set is a
 # multi-GB Arrow collect). Rewrites whose analyzed plan contains a
 # length-increasing construct (below) pay one exact output-size
-# aggregation over the matched files before the driver collect; beyond
+# aggregation over the candidate files before the driver collect; beyond
 # this cap they take the distributed write instead.
 _DRIVER_REWRITE_MAX_OUTPUT_BYTES = 256 << 20
 _EXPANDING_EXPRS = re.compile(
@@ -1049,10 +1068,8 @@ _FIXED_WIDTHS = {
 def _output_size_ok(new_sub) -> bool:
     """Exact rewritten-output size check, run only when the rewrite
     plan contains a potentially length-increasing expression: one
-    aggregation job over the (bounded) matched files summing var-width
+    aggregation job over the (bounded) candidate files summing var-width
     byte lengths plus fixed widths."""
-    from pyspark.sql import functions as F
-
     aggs = [F.count(F.lit(1)).alias("_n")]
     fixed_per_row = 0
     for f in new_sub.schema.fields:
@@ -1080,16 +1097,6 @@ _ARROW_SAFE_TYPES = re.compile(
 )
 
 
-def _driver_collect_ok(new_sub, input_bytes: int) -> bool:
-    """Whether rewritten contents may come back as one Arrow table:
-    every type round-trips through Arrow and the input is within
-    ``_DRIVER_REWRITE_MAX_BYTES``."""
-    return input_bytes <= _DRIVER_REWRITE_MAX_BYTES and all(
-        _ARROW_SAFE_TYPES.match(f.dataType.simpleString())
-        for f in new_sub.schema.fields
-    )
-
-
 def _expands_past_cap(new_sub) -> bool:
     """True when the rewrite plan has a length-increasing expression and
     its exact output size (one aggregation job) exceeds
@@ -1099,6 +1106,42 @@ def _expands_past_cap(new_sub) -> bool:
     return bool(_EXPANDING_EXPRS.search(plan_text)) and not _output_size_ok(
         new_sub
     )
+
+
+def _driver_rows(df: DataFrame, input_bytes: float, loc: str | None, part_cols=()):
+    """``df`` collected to the driver as one Arrow table, to be written
+    by pyarrow into flat files at ``loc``; None when the guard refuses
+    or the collect fails, and Spark writes the rows instead. The guard:
+    ``loc`` is local and its table unpartitioned (``part_cols`` empty),
+    the input is at most ``_DRIVER_REWRITE_MAX_BYTES``, every column
+    type round-trips through Arrow (``_ARROW_SAFE_TYPES``), and no
+    length-increasing expression takes the output past its cap
+    (:func:`_expands_past_cap`, a job only when the plan has one)."""
+    if (
+        part_cols
+        or not loc
+        or _local_os_path(loc) is None
+        or input_bytes > _DRIVER_REWRITE_MAX_BYTES
+        or not all(
+            _ARROW_SAFE_TYPES.match(f.dataType.simpleString())
+            for f in df.schema.fields
+        )
+        or _expands_past_cap(df)
+    ):
+        return None
+    try:
+        return df.toArrow()
+    except Exception:
+        # the distributed write handles any surprise (and raises again
+        # if the statement itself is at fault), but a genuine failure
+        # here repeated per statement deserves a trace
+        import logging
+
+        logging.getLogger(__name__).warning(
+            "driver-side collect fell back to the distributed write",
+            exc_info=True,
+        )
+        return None
 
 
 def _write_staged_arrow(base: str, tbl, slices: int = 1) -> None:
@@ -1145,37 +1188,6 @@ def _dictionary_columns(tbl) -> list[str]:
     ]
 
 
-def _driver_rewrite(staged: str, new_sub, files, driver_ok: bool = True) -> bool:
-    """Stage the rewritten matched-file contents via a single Arrow
-    collect + driver-side parquet write. Returns False when ineligible
-    (non-local staging, matched set too large, exotic types, or
-    ``driver_ok`` False because the statement's output guard already
-    refused) — the caller falls back to the distributed write.
-    Local-scheme only: pyarrow writes OS paths, not HDFS/s3a."""
-    from urllib.parse import unquote
-
-    base = _local_os_path(staged)
-    if base is None or not driver_ok:
-        return False
-    try:
-        total = sum(os.path.getsize(_local_os_path(unquote(f))) for f in files)
-        if not _driver_collect_ok(new_sub, total) or _expands_past_cap(new_sub):
-            return False
-        _write_staged_arrow(base, new_sub.toArrow())
-        return True
-    except Exception:
-        # the distributed write handles any surprise, but don't swallow
-        # it silently — a genuine failure here (permissions, Arrow
-        # round-trip) repeated per-statement deserves a trace
-        import logging
-
-        logging.getLogger(__name__).warning(
-            "driver-side rewrite fell back to the distributed write",
-            exc_info=True,
-        )
-        return False
-
-
 def _read_table_files(
     spark: SparkSession, files: list[str], schema: T.StructType, loc: str
 ) -> DataFrame:
@@ -1194,55 +1206,18 @@ def _read_table_files(
     )
 
 
-def _file_granular_cow(
-    spark: SparkSession,
-    table: str,
-    transform,
-    files: list[str],
-    schema: T.StructType,
-    loc: str,
-    part_cols: list[str],
-    op: str,
-    driver_ok: bool = True,
-) -> None:
-    """Copy-on-write at FILE granularity (the reference's DuckLake model:
-    rewrite only the data files containing matched rows,
-    ``maintenance/README.md``'s compaction unit), for subquery-free
-    predicates; ``transform`` maps the matched files' DataFrame to its
-    rewritten contents, which :func:`publish` swaps in for ``files``.
-    On a partitioned table a row whose partition value the rewrite
-    changes lands in its new directory. At 100 TB this turns a point
-    UPDATE from a table rewrite into a one-file rewrite."""
-    # the alias resolves table-qualified columns (`WHERE t.k = 1`)
-    sub = _read_table_files(spark, files, schema, loc).alias(
-        table.split(".")[-1].strip('`"')
-    )
-    new_sub = transform(sub)
-    staged = staging_dir(spark, table, loc)
-    # the driver writes flat files only
-    if part_cols or not _driver_rewrite(staged, new_sub, files, driver_ok):
-        _stage_frame(new_sub, staged, part_cols)
-    # a failed publish keeps the staged data for recovery (see publish)
-    publish(spark, table, staged, files, loc, op=op, schema=schema)
-    _rm_path(spark, staged)
+def _bytes_of(files: list[str]) -> float:
+    """Total size of the data files ``files`` (``input_file_name()``
+    renderings); infinite when one is not on a local file system."""
+    from urllib.parse import unquote
+
+    paths = [_local_os_path(unquote(f)) for f in files]
+    return math.inf if None in paths else sum(map(os.path.getsize, paths))
 
 
-# -- footer-pruned point writes -----------------------------------------------
-#
-# A point UPDATE/DELETE whose WHERE bounds an integral column reads only
-# the files whose Parquet-footer range can hold a match (filestats.py),
-# and learns which of them matched from the same Arrow table that holds
-# their rewritten rows — no separate probe job over every file. pyarrow
-# builds that table on the driver when it can compute exactly what Spark
-# would; a Spark collect builds it otherwise. The predicate recognizer
-# and the Arrow reader are operators/point.py's, shared with point reads.
-
-# the match flag the pruned rewrite carries through its transform, beside
-# point._SRC (the source file)
-_HIT = "_swl_hit"
 # A copy-on-write publish retires every file it rewrites whole, and the
 # snapshot store keeps it, so a point write costs stored bytes in
-# proportion to the files it rewrites. The pruned rewrite's output is
+# proportion to the files it rewrites. A bounded statement's output is
 # split into key-sorted files of _POINT_FILE_BYTES Arrow bytes, but into
 # at most _POINT_SPLIT of them: each point write adds at most that many
 # files, and repeated writes near one key shrink its file geometrically
@@ -1313,14 +1288,14 @@ def _set_values(spark: SparkSession, schema, assignments, arrow_schema) -> dict:
 def _arrow_point_rows(
     spark: SparkSession, table: str, schema, bounds, assignments, hits
 ):
-    """The Arrow producer of :func:`_pruned_cow`: the candidate files'
-    rewritten rows, tagged with ``_SRC``/``_HIT`` like the Spark
-    producer's, computed with pyarrow on the driver. None when the
+    """The pyarrow producer of :func:`_cow`: the candidate files' rows
+    tagged with ``_SRC`` (the file's name) and ``_HIT`` like the Spark
+    producer's, the SET applied, computed on the driver. None when the
     statement is not one it computes exactly (see the README's "Point
     writes"): the Spark producer takes it then.
 
     Caller guarantees: every depth-0 term of the predicate is one of
-    ``bounds``."""
+    ``bounds``, and no CHECK or FOREIGN KEY involves ``table``."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -1355,123 +1330,118 @@ def _arrow_point_rows(
             i = tbl.schema.get_field_index(c)
             tbl = tbl.set_column(i, c, pc.if_else(mask, v, tbl[c]))
     tbl = tbl.append_column(_HIT, pc.cast(mask, pa.int32()))
-    if assignments is None:
-        tbl = tbl.filter(pc.invert(mask))
     return tbl if tbl.nbytes <= _DRIVER_REWRITE_MAX_OUTPUT_BYTES else None
 
 
-def _pruned_cow(
+def _cow(
     spark: SparkSession,
     table: str,
-    schema,
     where: str,
     assignments: dict[str, str] | None,
     loc,
-) -> tuple[int | None, bool]:
-    """Point UPDATE (``assignments``) or DELETE (``assignments`` None)
-    over only the files whose footer key ranges can hold a match.
-    Returns ``(affected, driver_ok)``; ``affected`` None sends the
-    statement to the unpruned path, and ``driver_ok`` False tells that
-    path not to try a driver-side collect (the output guard refused one
-    for this statement, or the collect failed).
-
-    Two producers build the candidate files' rewritten rows: pyarrow on
-    the driver when the predicate is exactly an AND of integer bounds
-    and every SET value a bound literal (:func:`_arrow_point_rows`), a
-    Spark collect otherwise. Both feed one tail: per-file counts,
-    staging (key-sorted files of at most ``_POINT_FILE_BYTES``),
-    :func:`publish`.
+    *,
+    part_cols: list[str],
+    schema: T.StructType,
+    checked=None,
+) -> int:
+    """Copy-on-write UPDATE (``assignments``) or DELETE (``assignments``
+    None) of the data files holding a row matching ``where``: candidate
+    files, tagged rows, one tail (see the comment above). Returns the
+    affected row count; ``checked`` is an UPDATE's CHECK/FK gate, run on
+    Spark-computed rows.
 
     Caller guarantees: table write lock held (so the newest manifest
-    names exactly the table's files), predicate subquery-free, no
-    CHECK/FK constraint registered. A partitioned table goes to the
-    unpruned path: ``filestats.snapshot_files`` declines files in
-    directories."""
+    names exactly the table's files), predicate and SET values
+    subquery-free, no SET of a key a child table references."""
+    from urllib.parse import quote
+
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
     from swanlake_spark import versions
 
     types = {f.name.lower(): f.dataType.simpleString() for f in schema.fields}
     bare = table.split(".")[-1].strip('`"')
     terms = [point._term_bound(t, bare, types) for t in point._conjuncts(where)]
     bounds = [b for b in terms if b]
-    files = None
-    if bounds:
+    stats = None
+    if bounds and loc is not None:
         try:
-            files = filestats.snapshot_files(versions.newest(spark, table, loc))
+            stats = filestats.snapshot_files(versions.newest(spark, table, loc))
         except FileNotFoundError:
-            files = None  # a file the manifest names is gone: Spark lists
-    if files is None:
-        return None, True
-    hits = filestats.candidates(files, bounds)
-    if len(hits) >= len(files):
-        return None, True
-    if not hits:
-        return 0, True
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    tbl = None
-    if all(terms):
-        tbl = _arrow_point_rows(spark, table, schema, bounds, assignments, hits)
-    if tbl is None:
-        sub = spark.read.schema(schema).parquet(*["file:" + f.path for f in hits])
-        tagged = sub.alias(bare).select(
+            pass  # a file the manifest names is gone: the probe finds them
+    # 1. candidate files; `affected` is known once a probe has run
+    if stats is not None:
+        stats = filestats.candidates(stats, bounds)
+        files, affected = ["file:" + quote(f.path) for f in stats], None
+    else:
+        files, affected = _matched_files(spark, table, where, loc)
+    if not files:
+        return 0
+    if loc is None:  # a temp view
+        raise InvalidArgument(f"{table} has no resolvable location to publish into")
+    # 2. tagged rows: Arrow, or a Spark DataFrame the guard may collect
+    rows = df = None
+    src = {}  # _SRC value -> the data file it names, where the two differ
+    if stats is not None and all(terms) and _unconstrained(table):
+        rows = _arrow_point_rows(spark, table, schema, bounds, assignments, stats)
+        src = {f.name: p for f, p in zip(stats, files)}  # pyarrow tags names
+    if rows is None:
+        # read under the table's name, so `t.col` in the statement resolves
+        df = _read_table_files(spark, files, schema, loc).alias(bare).select(
             "*",
-            F.col("_metadata.file_name").alias(_SRC),
+            F.input_file_name().alias(_SRC),
             F.expr(where).eqNullSafe(F.lit(True)).cast("int").alias(_HIT),
         )
-        if assignments is None:
-            new_sub = apply_delete(tagged, where, alias=table)
-        else:
-            new_sub = apply_update(tagged, assignments, where, alias=table)
-        out = new_sub.drop(_SRC, _HIT)
-        if not _driver_collect_ok(out, sum(f.size for f in hits)):
-            return None, True
-        if _expands_past_cap(out):
-            return None, False
-        try:
-            tbl = new_sub.toArrow()
-        except Exception:
-            # as in _driver_rewrite: the unpruned path's distributed
-            # write handles any surprise (and raises again if the
-            # statement itself is at fault)
-            import logging
-
-            logging.getLogger(__name__).warning(
-                "pruned point write fell back to the unpruned path",
-                exc_info=True,
-            )
-            return None, False
-    per_file = tbl.group_by(_SRC).aggregate([(_SRC, "count"), (_HIT, "sum")])
-    counts = dict(zip(
-        per_file[_SRC].to_pylist(),
-        zip(per_file[f"{_SRC}_count"].to_pylist(), per_file[f"{_HIT}_sum"].to_pylist()),
-    ))
-    # matches per file: the rows a DELETE dropped plus the rows an
-    # UPDATE flagged (an UPDATE drops none; a DELETE keeps no match)
-    matched, affected = [], 0
-    for f in hits:
-        n_out, flagged = counts.get(f.name, (0, 0))
-        if f.rows - n_out + flagged:
-            matched.append(f)
-            affected += f.rows - n_out + flagged
-    if not matched:
-        return 0, True
-    keep = pa.array([f.name for f in matched])
-    out = tbl.filter(pc.is_in(tbl[_SRC], value_set=keep)).drop_columns([_SRC, _HIT])
-    slices = min(-(-out.nbytes // _POINT_FILE_BYTES), _POINT_SPLIT)
-    if slices > 1:
-        # key-sorted, so each new file holds one key range its footer
-        # names, and the next point statement on a key opens one of them
-        key = bounds[0][0].lower()
-        out = out.sort_by(next(n for n in out.column_names if n.lower() == key))
+        if assignments is not None:
+            df = checked(apply_update(df, assignments, where, alias=table))
+        size = sum(f.size for f in stats) if stats is not None else _bytes_of(files)
+        rows = _driver_rows(df, size, loc, part_cols)
+    # 3. the tail
     staged = staging_dir(spark, table, loc)
-    _write_staged_arrow(_local_os_path(staged), out, max(1, slices))
+    if rows is not None:
+        per_file = rows.group_by(_SRC).aggregate([(_HIT, "sum")])
+        counts = [
+            (s, n) for s, n in zip(
+                per_file[_SRC].to_pylist(), per_file[f"{_HIT}_sum"].to_pylist()
+            ) if n
+        ]
+        if not counts:
+            return 0
+        affected = sum(n for _, n in counts)
+        replaced = [src.get(s, s) for s, _ in counts]
+        keep = pc.is_in(rows[_SRC], value_set=pa.array([s for s, _ in counts]))
+        if assignments is None:
+            keep = pc.and_(keep, pc.equal(rows[_HIT], 0))
+        out = rows.filter(keep).drop_columns([_SRC, _HIT])
+        slices = 1
+        if bounds:
+            slices = max(1, min(-(-out.nbytes // _POINT_FILE_BYTES), _POINT_SPLIT))
+        if slices > 1:
+            # key-sorted, so each new file holds one key range its footer
+            # names, and the next point statement on a key opens one of them
+            key = bounds[0][0].lower()
+            out = out.sort_by(next(n for n in out.column_names if n.lower() == key))
+        _write_staged_arrow(_local_os_path(staged), out, slices)
+    else:
+        replaced = files
+        if affected is None:  # footer candidates: probe them
+            replaced, affected = _matched_files(
+                spark, table, where, loc, files=files, schema=schema
+            )
+            if not replaced:
+                return 0
+            df = df.filter(F.col(_SRC).isin(replaced))
+        if assignments is None:
+            df = df.filter(F.col(_HIT) == 0)
+        _stage_frame(df.drop(_SRC, _HIT), staged, part_cols)
+    # a failed publish keeps the staged data for recovery (see publish)
     publish(
-        spark, table, staged, ["file:" + f.path for f in matched], loc,
+        spark, table, staged, replaced, loc,
         op="delete" if assignments is None else "update", schema=schema,
     )
     _rm_path(spark, staged)
-    return affected, True
+    return affected
 
 
 def _as_view(df: DataFrame) -> tuple:
@@ -1604,7 +1574,7 @@ def apply_delete(
 # -- MERGE INTO ---------------------------------------------------------------
 
 _MERGE_HEAD = re.compile(
-    rf"^\s*MERGE\s+INTO\s+(?P<table>{_TABLE_RE})"
+    rf"^\s*MERGE\s+INTO\s+(?P<table>{TABLE_NAME})"
     rf"(?:\s+(?:AS\s+)?(?P<alias>{_IDENT}))?\s+",
     re.IGNORECASE,
 )
@@ -2036,8 +2006,8 @@ def merge_table(
     and a source row anti-joined against the matched-file subset is
     unmatched iff it is unmatched against the whole target. Inserts
     land in the swapped-in files (in their own partition directories on
-    a partitioned table). Targets whose match set spans every file (the
-    bulk-upsert shape) fall back to the full rewrite."""
+    a partitioned table). Every matched file is replaced; when that is
+    every file, the publish is a full rewrite."""
     loc, part_cols, schema = _table_meta(spark, table)
     with table_write_lock(spark, table, loc=loc):
         return _merge_table_locked(
@@ -2111,19 +2081,12 @@ def _merge_matched_files(
 ) -> list[str] | None:
     """Data files containing target rows matched by the MERGE ON
     condition (one semi-join probe), or None when the file-granular
-    path doesn't apply — same eligibility rules as
-    :func:`_matched_files`. An insert-only merge (no matched rows)
-    also returns None: there is nothing to rewrite file-by-file, and
-    the probe result would swap in the inserts while deleting nothing,
-    which the full path handles as a plain append-shaped rewrite."""
+    path doesn't apply: an unresolvable location, or an insert-only
+    merge (no matched rows) — there is nothing to rewrite file by file,
+    and the probe result would swap in the inserts while deleting
+    nothing, which the full path handles as a plain append-shaped
+    rewrite."""
     if _loc_or_resolve(spark, table, loc) is None:
-        return None
-    tdf = spark.table(table)
-    try:
-        total = len(tdf.inputFiles())
-    except Exception:
-        return None
-    if total <= 1:
         return None
     ta = (t_alias or table.split(".")[-1]).strip('`"')
     token = uuid.uuid4().hex[:8]
@@ -2132,30 +2095,27 @@ def _merge_matched_files(
         source_df, sa = _parse_merge_source(spark, source_text)
     except Exception:
         return None
-    tdf.withColumn("_swl_file", F.input_file_name()).createOrReplaceTempView(
-        tview
-    )
+    spark.table(table).withColumn(
+        "_swl_file", F.input_file_name()
+    ).createOrReplaceTempView(tview)
     source_df.createOrReplaceTempView(sview)
     try:
         qta = quote_identifier(ta)
         rows = spark.sql(
             f"SELECT DISTINCT {qta}.`_swl_file` AS f "
             f"FROM {tview} AS {qta} LEFT SEMI JOIN {sview} AS "
-            f"{quote_identifier(sa)} "
-            f"ON {cond} LIMIT {_FILE_COW_MAX_FILES + 1}"
+            f"{quote_identifier(sa)} ON {cond}"
         ).collect()
     finally:
         spark.catalog.dropTempView(tview)
         spark.catalog.dropTempView(sview)
-    files = [r.f for r in rows]
-    if not files or len(files) > _FILE_COW_MAX_FILES or len(files) >= total:
-        return None
-    return files
+    return [r.f for r in rows] or None
 
 
 def _unconstrained(table: str) -> bool:
-    """No CHECK or FOREIGN KEY constraint involves ``table``: the pruned
-    point-write path evaluates none of them."""
+    """No CHECK or FOREIGN KEY constraint involves ``table``: the
+    pyarrow producer (:func:`_arrow_point_rows`) evaluates none of
+    them."""
     from swanlake_spark import constraints
 
     return not (
@@ -2221,7 +2181,7 @@ def _update_table_locked(
 
     # Parent-side FK guard for key rewrites (DuckDB re-checks children
     # when a referenced key changes): when the UPDATE touches a column
-    # some child references, the file-granular shortcut is disabled so
+    # some child references, the statement skips :func:`_cow` so
     # new_df is the FULL new table, and the children are re-validated
     # against the complete new key set before publish.
     _fk_touched = [
@@ -2229,45 +2189,22 @@ def _update_table_locked(
         for child, ccols, pcols in _constraints.referencing_children(table)
         if set(pcols) & set(assignments)
     ]
-    file_cow_ok = (
+    if (
         where
         and not _fk_touched
         and not where_has_subquery(where)
         and not any(where_has_subquery(v) for v in assignments.values())
-    )
-    if file_cow_ok:
-        affected, driver_ok = None, True
-        if _unconstrained(table):
-            affected, driver_ok = _pruned_cow(
-                spark, table, schema, where, assignments, loc
-            )
-        if affected is not None:
-            return affected
-        files, affected = _matched_files(spark, table, where, loc=loc)
-        if affected == 0:
-            return 0
-        if files is not None:
-            _file_granular_cow(
-                spark,
-                table,
-                lambda sub: _checked(
-                    apply_update(sub, assignments, where, alias=table)
-                ),
-                files,
-                schema,
-                loc,
-                part_cols,
-                "update",
-                driver_ok=driver_ok,
-            )
-            return affected
-    else:
-        affected = (
-            _count_matching(spark, table, where) if where
-            else spark.table(table).count()
+    ):
+        return _cow(
+            spark, table, where, assignments, loc, part_cols=part_cols,
+            schema=schema, checked=_checked,
         )
-        if affected == 0:
-            return 0
+    affected = (
+        _count_matching(spark, table, where) if where
+        else spark.table(table).count()
+    )
+    if affected == 0:
+        return 0
     stage = StagingPin(
         spark, table, loc=loc, part_cols=part_cols, op="update", schema=schema
     )
@@ -2329,33 +2266,12 @@ def _delete_from_locked(
             stage.publish(df.limit(0), None)
         return affected
     if not where_has_subquery(where):
-        affected, driver_ok = None, True
-        if _unconstrained(table):
-            affected, driver_ok = _pruned_cow(
-                spark, table, schema, where, None, loc
-            )
-        if affected is not None:
-            return affected
-        files, affected = _matched_files(spark, table, where, loc=loc)
-        if affected == 0:
-            return 0
-        if files is not None:
-            _file_granular_cow(
-                spark,
-                table,
-                lambda sub: apply_delete(sub, where, alias=table),
-                files,
-                schema,
-                loc,
-                part_cols,
-                "delete",
-                driver_ok=driver_ok,
-            )
-            return affected
-    else:
-        affected = _count_matching(spark, table, where)
-        if affected == 0:
-            return 0
+        return _cow(
+            spark, table, where, None, loc, part_cols=part_cols, schema=schema
+        )
+    affected = _count_matching(spark, table, where)
+    if affected == 0:
+        return 0
     try:
         new_df = apply_delete(spark.table(table), where, alias=table, pin=stage)
     except BaseException:

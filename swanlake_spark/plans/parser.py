@@ -145,11 +145,6 @@ def classify(sql: str) -> ParsedStatement:
 
 
 _IDENT = r'(?:[A-Za-z_][A-Za-z0-9_]*|"(?:[^"]|"")+"|`(?:[^`]|``)+`)'
-_INSERT_RE = re.compile(
-    rf"^\s*INSERT\s+INTO\s+(?P<table>{_IDENT}(?:\.{_IDENT}){{0,2}})"
-    rf"\s*(?:\((?P<cols>[^)]*)\))?\s*(?P<rest>VALUES|SELECT|WITH|TABLE)?",
-    re.IGNORECASE | re.DOTALL,
-)
 
 
 @dataclass
@@ -173,9 +168,15 @@ def _unquote(ident: str) -> str:
 
 # a table name as a statement writes it: one to three dot-separated
 # parts, each a plain word or a quoted identifier, which may hold spaces
-# and dots (the engine's statement-head patterns share it)
+# and dots (every statement-head pattern shares it: the engine's, sync's,
+# UPDATE/DELETE/MERGE's and INSERT's)
 _TABLE_PART = r'(?:\w+|"(?:[^"]|"")+"|`(?:[^`]|``)+`)'
 TABLE_NAME = rf"{_TABLE_PART}(?:\.{_TABLE_PART}){{0,2}}"
+_INSERT_RE = re.compile(
+    rf"^\s*INSERT\s+INTO\s+(?P<table>{TABLE_NAME})"
+    rf"\s*(?:\((?P<cols>[^)]*)\))?\s*(?P<rest>VALUES|SELECT|WITH|TABLE)?",
+    re.IGNORECASE | re.DOTALL,
+)
 
 
 def table_parts(text: str) -> list[str]:

@@ -130,26 +130,32 @@ _SETS = [
 def test_pruned_dml_matches_unpruned(spark, files, no_stats, template, sets, data):
     """UPDATE (``sets``) or DELETE (``sets`` None) through the pruned
     path with each of its producers — pyarrow where it applies, Spark
-    forced by patching the Arrow producer away — and, on an identical
-    copy, through the unpruned path (the predicate recognizer forced to
-    find nothing): the same affected count (or the same failure), the
-    same final rows, the same retired files."""
+    forced by patching the Arrow producer away — and, on identical
+    copies, through the unpruned path (the predicate recognizer forced
+    to find nothing) and through the distributed tail (the driver-collect
+    bound set to 0, so Spark writes the rewritten files): the same
+    affected count (or the same failure), the same final rows, the same
+    retired files."""
     keys = sorted({r[0] for rows in files for r in rows if r[0] is not None})
     bound = st.integers(-24, 24)
     if keys:  # mostly constants that hit a stored key
         bound = st.one_of(st.sampled_from(keys), bound)
     a, b = sorted((data.draw(bound), data.draw(bound)))
     results = []
-    for route in ("arrow", "spark", "unpruned"):
+    for route in ("arrow", "spark", "unpruned", "distributed"):
         table, loc = _table_from_files(spark, files, no_stats)
         where = template.format(a=a, b=b, t=table)
         before = _data_files(loc)
-        with mock.patch.object(
-            point, "_term_bound", lambda *a: None
-        ) if route == "unpruned" else mock.patch.object(
-            dml, "_arrow_point_rows",
-            dml._arrow_point_rows if route == "arrow" else lambda *a: None,
-        ):
+        if route == "unpruned":
+            patched = mock.patch.object(point, "_term_bound", lambda *a: None)
+        elif route == "distributed":
+            patched = mock.patch.object(dml, "_DRIVER_REWRITE_MAX_BYTES", 0)
+        else:
+            patched = mock.patch.object(
+                dml, "_arrow_point_rows",
+                dml._arrow_point_rows if route == "arrow" else lambda *a: None,
+            )
+        with patched:
             try:
                 if sets is None:
                     affected = dml.delete_from(spark, table, where)
@@ -160,6 +166,7 @@ def test_pruned_dml_matches_unpruned(spark, files, no_stats, template, sets, dat
         results.append((affected, _rows(spark, table), before - _data_files(loc)))
         spark.sql(f"DROP TABLE {table}")
     assert results[0] == results[1] == results[2]
+    assert results[3] == results[0]
 
 
 # (WHERE template, the columns it bounds): the recognized grammar
@@ -405,8 +412,8 @@ class TestPrunedPrimaryKey:
 
 
 def test_failed_collect_takes_unpruned_path(spark, monkeypatch):
-    """A pruned rewrite whose Arrow collect fails hands the statement to
-    the unpruned path, which writes without a driver collect."""
+    """A rewrite whose Arrow collect fails is written by Spark instead
+    (the distributed tail), without a second driver collect."""
     t = _mktable(
         spark,
         "k INT, v STRING",
@@ -467,7 +474,10 @@ def test_point_writes_run_one_job(spark):
     their files on the driver), and a fresh-key PK check runs none. A
     point UPDATE with a term the bounds do not cover, or one that sets
     the primary key, takes the Spark producer: one job, the rewrite's
-    collect."""
+    collect. An UPDATE whose predicate bounds no integral column finds
+    its files with the probe (a groupBy: under adaptive execution its
+    map stage and its result are two jobs) before the collect. A
+    bounded point UPDATE of a one-file table is pyarrow's too: no job."""
     t = _mktable(
         spark,
         "k INT PRIMARY KEY, v STRING",
@@ -498,6 +508,88 @@ def test_point_writes_run_one_job(spark):
     assert spark.sql(f"SELECT v FROM {t} WHERE k = 122").collect()[0].v == "w"
     assert spark.sql(f"SELECT v FROM {t} WHERE k = 5000").collect()[0].v == "x"
     assert _count(spark, t) == 800
+    # no integral bound: the probe finds the one file holding k = 140
+    assert _jobs(
+        spark, lambda: dml.update_table(spark, t, {"v": "'p'"}, "k + 0 = 140")
+    ) == 3
+    assert spark.sql(f"SELECT v FROM {t} WHERE k = 140").collect()[0].v == "p"
+    one, _ = _table_from_files(spark, [[(1, 0, "a", 0.5), (2, 0, "b", 0.5)]], -1)
+    assert _jobs(spark, lambda: dml.update_table(spark, one, {"s": "'u'"}, "k = 1")) == 0
+    assert _rows(spark, one) == [(1, 0, "u", 0.5), (2, 0, "b", 0.5)]
+
+
+def _table_files(loc: str) -> set[str]:
+    """The data files under ``loc``, partition directories included,
+    as paths relative to it."""
+    out = set()
+    for d, dirs, names in os.walk(loc):
+        dirs[:] = [n for n in dirs if not n.startswith(("_", "."))]
+        out |= {
+            os.path.relpath(os.path.join(d, n), loc)
+            for n in names if not n.startswith(("_", "."))
+        }
+    return out
+
+
+@pytest.mark.parametrize("stmt", ["update", "delete"])
+@pytest.mark.parametrize("tail", ["collect", "distributed"])
+@pytest.mark.parametrize("shape", ["partitioned", "checked"])
+def test_cow_retires_only_matched_files(spark, monkeypatch, shape, tail, stmt):
+    """A partitioned table (its candidates come from the probe, and
+    Spark writes its files) and a CHECK-constrained one (its candidates
+    come from the footers, its rows from Spark), with the rows collected
+    to the driver or written by Spark (the collect bound set to 0): a
+    point UPDATE or DELETE retires exactly the files holding a match. An
+    UPDATE that breaks the CHECK raises and publishes nothing."""
+    from swanlake_spark.engine import Engine
+
+    name = f"pwc_{uuid.uuid4().hex[:8]}"
+    loc = tempfile.mkdtemp(prefix="swl_pw_")
+    decl = "k INT, g INT, p INT" + (", CHECK (g >= 0)" if shape == "checked" else "")
+    parts = "PARTITIONED BY (p) " if shape == "partitioned" else ""
+    Engine(spark=spark).execute(
+        f"CREATE TABLE {name} ({decl}) USING parquet {parts}LOCATION '{loc}'"
+    )
+    for i in range(4):
+        insert_arrow(spark, name, pa.table({
+            "k": pa.array([3 * i, 3 * i + 1, 3 * i + 2], pa.int32()),
+            "g": pa.array([0, 0, 0], pa.int32()),
+            "p": pa.array([i % 2] * 3, pa.int32()),
+        }))
+    if tail == "distributed":
+        monkeypatch.setattr(dml, "_DRIVER_REWRITE_MAX_BYTES", 0)
+    spark_writes = []
+    stage_frame = dml._stage_frame
+    monkeypatch.setattr(
+        dml, "_stage_frame", lambda *a: spark_writes.append(1) or stage_frame(*a)
+    )
+    before = _table_files(loc)
+    holding = {
+        f for f in before
+        if {4, 7} & set(pq.read_table(f"{loc}/{f}", columns=["k"])["k"].to_pylist())
+    }
+    assert 0 < len(holding) < len(before)
+    want = {(k, 0, k // 3 % 2) for k in range(12)}
+    if stmt == "update":
+        assert dml.update_table(spark, name, {"g": "g + 1"}, "k IN (4, 7)") == 2
+        want = {(k, int(k in (4, 7)), p) for k, _, p in want}
+    else:
+        assert dml.delete_from(spark, name, "k IN (4, 7)") == 2
+        want = {r for r in want if r[0] not in (4, 7)}
+    assert before - _table_files(loc) == holding
+    assert len(spark_writes) == int(tail == "distributed" or shape == "partitioned")
+    got = spark.table(name).select("k", "g", "p").collect()
+    assert sorted(tuple(r) for r in got) == sorted(want)
+    if shape == "checked":
+        before = _table_files(loc)
+        version = versions.newest(spark, name, dml._table_meta(spark, name)[0]).version
+        with pytest.raises(InvalidArgument, match="CHECK"):
+            dml.update_table(spark, name, {"g": "-1"}, "k = 5")
+        assert _table_files(loc) == before
+        assert versions.newest(spark, name, dml._table_meta(spark, name)[0]).version == version
+        got = spark.table(name).select("k", "g", "p").collect()
+        assert sorted(tuple(r) for r in got) == sorted(want)
+    spark.sql(f"DROP TABLE {name}")
 
 
 @pytest.mark.parametrize("route", ["appender", "sql"])

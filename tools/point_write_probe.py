@@ -18,6 +18,9 @@ times ``--reps`` calls each of
   which pyarrow rewrites on the driver,
 - the same UPDATE with an extra term the footer bounds do not cover
   (``AND field0 <> ''``), which takes the Spark producer,
+- the same UPDATE with a predicate that bounds no integral column
+  (``WHERE ycsb_key + 0 = …``): a probe job finds the file holding the
+  key, then the Spark producer rewrites it,
 - a ``count(*)`` that Spark runs in a second client session, each after
   an untimed point UPDATE in the first: the second session re-installs
   the table from its newest manifest before it plans (``sync.py``),
@@ -164,10 +167,10 @@ def main() -> None:
         keys = eng.query(scan_keys, args=[lo, lo + SCAN_KEYS]).to_arrow().column(0)
         assert 0 < len(keys) <= SCAN_KEYS and keys.to_pylist() == sorted(keys.to_pylist())
 
-    def update(extra: str = "") -> None:
+    def update(where: str = "ycsb_key = {}") -> None:
         sets = ", ".join(f"{f} = '{_value(rng)}'" for f in _FIELDS)
         key = live[rng.randrange(len(live))]
-        sql = f"UPDATE {table} SET {sets} WHERE ycsb_key = {key}{extra}"
+        sql = f"UPDATE {table} SET {sets} WHERE {where.format(key)}"
         assert eng.execute_update(sql) == 1
 
     reader = eng.sessions.get_or_create("point-write-probe-reader")
@@ -206,7 +209,8 @@ def main() -> None:
         ("read", read, None),
         ("scan", scan, None),
         ("update", update, None),
-        ("update-spark", lambda: update(" AND field0 <> ''"), None),
+        ("update-spark", lambda: update("ycsb_key = {} AND field0 <> ''"), None),
+        ("update-probe", lambda: update("ycsb_key + 0 = {}"), None),
         ("spark-read", spark_read, update),
         ("delete", delete, None),
         ("append", append, None),
