@@ -88,9 +88,6 @@ class EngineConfig:
     session_idle_timeout_s: float = 3600.0
     session_janitor_interval_s: float = 300.0
 
-    # Maintenance (reference: DuckLake CHECKPOINT default 24h,
-    # maintenance/mod.rs:24).
-    compaction_interval_s: float = 24 * 3600.0
     compaction_target_file_bytes: int = 128 * 1024 * 1024
 
     # Spark tuning. shuffle_partitions sizes the reduce side of wide ops;

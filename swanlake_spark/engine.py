@@ -28,7 +28,8 @@ from swanlake_spark import constraints, sync
 from swanlake_spark.config import EngineConfig
 from swanlake_spark.errors import EngineError, InvalidArgument
 from swanlake_spark.metrics import Metrics, jvm_counters
-from swanlake_spark.operators.dml import forget_meta
+from swanlake_spark.operators.dml import _table_meta, forget_meta
+from swanlake_spark.operators.ingest import align_to_schema, append
 from swanlake_spark.plans import (
     ParsedStatement,
     classify,
@@ -1276,8 +1277,6 @@ class Engine:
                     constraints.drop_fks(m.group(1))
                     # resolve the location while the table exists: its
                     # snapshot history goes after the DROP (versions.forget)
-                    from swanlake_spark.operators.dml import _table_meta
-
                     try:
                         dropped_loc = _table_meta(self.spark, _table_ref(m.group(1)))[0]
                     except Exception:
@@ -1290,7 +1289,7 @@ class Engine:
                 # lock every COW publish takes; the constraint check
                 # runs under it, so two sessions cannot both pass it
                 # with the same new key.
-                from swanlake_spark.operators.dml import _table_meta, table_write_lock
+                from swanlake_spark.operators.dml import table_write_lock
 
                 try:
                     loc = _table_meta(self.spark, insert_target)[0]
@@ -1397,7 +1396,6 @@ class Engine:
                     as_pos = i
                     break
         from swanlake_spark import versions
-        from swanlake_spark.operators.dml import _table_meta
 
         try:
             old_loc = _table_meta(self.spark, table)[0]
@@ -1750,39 +1748,22 @@ class Engine:
             from swanlake_spark.sources import object_store
 
             src = object_store.read_parquet(self.spark, path)
-            return self._copy_append(table, src, positional_names=None)
-        reader = self.spark.read.format(fmt)
-        if fmt == "csv":
-            reader = reader.option("header", str(header).lower()).option(
-                "inferSchema", "true"
-            )
-            if delim:
-                reader = reader.option("sep", delim)
-        src = reader.load(path)
+        else:
+            reader = self.spark.read.format(fmt)
+            if fmt == "csv":
+                reader = reader.option("header", str(header).lower()).option(
+                    "inferSchema", "true"
+                )
+                if delim:
+                    reader = reader.option("sep", delim)
+            src = reader.load(path)
+        meta = _table_meta(self.spark, table)
         # headerless CSV arrives as _c0.._cN → positional mapping
         positional = fmt == "csv" and not header
-        schema = self.spark.table(table).schema
-        return self._copy_append(
-            table,
-            src,
-            [f.name for f in schema.fields] if positional else None,
-        )
-
-    def _copy_append(self, table, src, positional_names) -> int:
-        """COPY FROM tail shared by the filesystem and object-store
-        paths: align to the table schema, enforce constraints, append
-        under the write lock, record the snapshot."""
-        from swanlake_spark.operators.ingest import align_to_schema
-
-        schema = self.spark.table(table).schema
-        aligned = align_to_schema(src, schema, positional_names)
+        names = [f.name for f in meta[2].fields] if positional else None
+        aligned = align_to_schema(src, meta[2], names)
         n = aligned.count()
-        from swanlake_spark.operators.dml import table_write_lock
-
-        with table_write_lock(self.spark, table):
-            constraints.check_insert_batch(self.spark, table, aligned)
-            aligned.write.insertInto(table)
-            self._record_table_version(table, "copy")
+        append(self.spark, table, meta, aligned, "copy")
         return n
 
     _ATTACH_RE = re.compile(
@@ -1815,7 +1796,6 @@ class Engine:
         manifest, so a write without one would not be seen. A name that
         does not resolve to a table records nothing."""
         from swanlake_spark import versions
-        from swanlake_spark.operators.dml import _table_meta
 
         try:
             loc, _, schema = _table_meta(self.spark, table)

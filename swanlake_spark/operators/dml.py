@@ -424,8 +424,8 @@ def publish(
     """Swap the files staged under ``staged_dir`` into ``table`` in place
     of the ``replaced`` data files (None: every live file), and record
     the result as the table's version ``op`` (returned). Every table
-    rewrite publishes through here, under the caller's
-    :func:`table_write_lock`:
+    rewrite and every append (``ingest.append``) publishes through here,
+    under the caller's :func:`table_write_lock`:
 
     1. take the table's live files from its newest manifest, which
        under the lock names exactly them (``versions.held``);
@@ -551,13 +551,15 @@ def _dir_spec(d: str) -> str:
     return _partition_spec(cols, key)
 
 
-def _stage_frame(df: DataFrame, path: str, part_cols: list[str]) -> T.StructType:
+def _stage_frame(df: DataFrame, path: str, part_cols: list[str], schema) -> T.StructType:
     """Write ``df`` as parquet under ``path`` in its table's file
     layout, ready for :func:`publish`: flat files for an unpartitioned
     table; for a partitioned one, the partition columns last (the
     ``saveAsTable`` column order) and one ``k=v`` directory level per
-    partition column, in the table's order (``partitionBy``). Returns
+    partition column, in the table's order (``partitionBy``), once
+    :func:`_char_varchar_checked` against the table's ``schema``. Returns
     the schema the staged files read back with."""
+    df = _char_varchar_checked(df, schema)
     if part_cols:
         by_lower = {f.name.lower(): f.name for f in df.schema.fields}
         parts = [by_lower[c.lower()] for c in part_cols]
@@ -567,6 +569,27 @@ def _stage_frame(df: DataFrame, path: str, part_cols: list[str]) -> T.StructType
     else:
         df.write.parquet(path, mode="overwrite")
     return df.schema
+
+
+def _char_varchar_checked(df: DataFrame, schema: T.StructType | None) -> DataFrame:
+    """``df`` with the check Spark's ``insertInto`` gives the table's
+    top-level CHAR(n) and VARCHAR(n) columns (``schema``'s, None: none):
+    a value past n characters loses trailing spaces down to n, else
+    raises EXCEED_LIMIT_LENGTH; a CHAR(n) value is then padded to n."""
+    # Spark's catalog keeps the declared type in the field's metadata
+    declared = {
+        f.name.lower(): f.metadata.get("__CHAR_VARCHAR_TYPE_STRING", "") for f in schema or ()
+    }
+    checked = {}
+    for name in df.columns:
+        m = re.fullmatch(r"(char|varchar)\((\d+)\)", declared.get(name.lower(), ""))
+        if m:
+            c, n = F.col(quote_identifier(name)), int(m.group(2))
+            error = f"[EXCEED_LIMIT_LENGTH] Exceeds char/varchar type length limitation: {n}."
+            c = F.when(c.isNull() | (F.char_length(F.rtrim(c)) <= n), F.substring(c, 1, n))
+            c = c.otherwise(F.raise_error(F.lit(error)))
+            checked[name] = F.rpad(c, n, " ") if m.group(1) == "char" else c
+    return df.withColumns(checked) if checked else df
 
 
 class StagingPin:
@@ -605,7 +628,7 @@ class StagingPin:
         write that fails leaves nothing behind."""
         path = staging_dir(self.spark, self.table, self.loc)
         try:
-            self._schema = _stage_frame(df, path, self.part_cols)
+            self._schema = _stage_frame(df, path, self.part_cols, self.schema)
         except BaseException:
             _rm_path(self.spark, path)
             raise
@@ -1108,7 +1131,9 @@ def _expands_past_cap(new_sub) -> bool:
     )
 
 
-def _driver_rows(df: DataFrame, input_bytes: float, loc: str | None, part_cols=()):
+def _driver_rows(
+    df: DataFrame, input_bytes: float, loc: str | None, part_cols=(), schema=None
+):
     """``df`` collected to the driver as one Arrow table, to be written
     by pyarrow into flat files at ``loc``; None when the guard refuses
     or the collect fails, and Spark writes the rows instead. The guard:
@@ -1116,7 +1141,9 @@ def _driver_rows(df: DataFrame, input_bytes: float, loc: str | None, part_cols=(
     the input is at most ``_DRIVER_REWRITE_MAX_BYTES``, every column
     type round-trips through Arrow (``_ARROW_SAFE_TYPES``), and no
     length-increasing expression takes the output past its cap
-    (:func:`_expands_past_cap`, a job only when the plan has one)."""
+    (:func:`_expands_past_cap`, a job only when the plan has one). The
+    collected rows pass :func:`_char_varchar_checked` against the
+    table's ``schema``, after the guard: its CHAR(n) padding is bounded."""
     if (
         part_cols
         or not loc
@@ -1130,7 +1157,7 @@ def _driver_rows(df: DataFrame, input_bytes: float, loc: str | None, part_cols=(
     ):
         return None
     try:
-        return df.toArrow()
+        return _char_varchar_checked(df, schema).toArrow()
     except Exception:
         # the distributed write handles any surprise (and raises again
         # if the statement itself is at fault), but a genuine failure
@@ -1396,7 +1423,7 @@ def _cow(
         if assignments is not None:
             df = checked(apply_update(df, assignments, where, alias=table))
         size = sum(f.size for f in stats) if stats is not None else _bytes_of(files)
-        rows = _driver_rows(df, size, loc, part_cols)
+        rows = _driver_rows(df, size, loc, part_cols, schema)
     # 3. the tail
     staged = staging_dir(spark, table, loc)
     if rows is not None:
@@ -1434,7 +1461,7 @@ def _cow(
             df = df.filter(F.col(_SRC).isin(replaced))
         if assignments is None:
             df = df.filter(F.col(_HIT) == 0)
-        _stage_frame(df.drop(_SRC, _HIT), staged, part_cols)
+        _stage_frame(df.drop(_SRC, _HIT), staged, part_cols, schema)
     # a failed publish keeps the staged data for recovery (see publish)
     publish(
         spark, table, staged, replaced, loc,

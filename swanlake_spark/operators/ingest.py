@@ -14,14 +14,15 @@ NULL-fill missing, ignore extras):
   with a plain integral, boolean, float, double, string, binary or date
   type, and each batch column casts within its type family (integer to
   integer without overflow, string to string). The batch aligns in
-  Arrow, the primary-key check reads pyarrow statistics and the live
-  files' footer key ranges, and the driver writes the files — one per
-  even slice, as many as Spark's write makes — into staging and
-  ``dml.publish``es them under the table write lock. No Spark job runs
-  unless the check needs one;
+  Arrow and the primary-key check reads pyarrow statistics and the live
+  files' footer key ranges: no Spark job runs unless the check needs one;
 - **Spark** for every other batch: ``spark.createDataFrame`` (Arrow-
-  native in Spark 4) → :func:`align_to_schema` → ``df.write.insertInto``
-  under the same lock, so Spark's own cast and type errors stay.
+  native in Spark 4) → :func:`align_to_schema`, so Spark's own cast and
+  type errors stay.
+
+Every append (``COPY … FROM`` and the streaming sinks too) ends in
+:func:`append`: staged outside the table write lock, checked and
+published under it.
 """
 
 from __future__ import annotations
@@ -33,7 +34,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from swanlake_spark import constraints
 from swanlake_spark.errors import InvalidArgument
+from swanlake_spark.operators import dml
 
 
 def source_columns(
@@ -230,58 +233,59 @@ def insert_arrow(
     row count (the reference returns the same from
     ``insert_with_appender``). ``meta`` is the table's
     ``dml._table_meta`` when the caller already looked it up."""
-    from swanlake_spark import constraints, versions
-    from swanlake_spark.operators import dml
-
     if isinstance(batches, pa.RecordBatch):
         tbl = pa.Table.from_batches([batches])
     elif isinstance(batches, list):
         tbl = pa.Table.from_batches(batches)
     else:
         tbl = batches
-    loc, part_cols, target = meta or dml._table_meta(spark, table)
+    loc, part_cols, target = meta = meta or dml._table_meta(spark, table)
     tbl = normalize_arrow_for_spark(tbl, target)
-    sources = source_columns(tbl.column_names, target, insert_columns)
-    aligned = None
+    rows = None
     if tbl.num_rows and not part_cols and loc and dml._local_os_path(loc):
-        aligned = _driver_aligned(tbl, target, sources)
-
-    def spark_rows() -> DataFrame:
-        return align_to_schema(spark.createDataFrame(tbl), target, insert_columns)
-
-    if aligned is None:
-        rows = spark_rows()
-        by_target = pa.table(
-            {name: tbl.column(src) for name, src in sources.items() if src is not None}
-        )
-    # Serialized per table (engine INSERT takes the same lock): two
-    # concurrent append jobs on one path share the committer's
-    # _temporary dir, and manifests must be ordered. The constraint
-    # check runs under the lock too, so a concurrent append of the same
-    # key cannot pass it before this one lands.
-    with dml.table_write_lock(spark, table, loc=loc):
-        # PK enforcement applies on every write path in the reference
-        # (DuckDB enforces the constraint under the appender too,
-        # error_status.test:6-13).
-        if aligned is None:
-            constraints.check_insert_batch(
-                spark, table, rows, arrow=by_target, loc=loc, schema=target
-            )
-            rows.write.insertInto(table)
-            versions.record_version(spark, table, "append", loc, target)
-        else:
-            constraints.check_insert_batch(
-                spark, table, spark_rows, arrow=aligned, loc=loc, schema=target
-            )
-            staged = dml.staging_dir(spark, table, loc)
-            slices = min(_parallelism(spark), aligned.num_rows)
-            dml._write_staged_arrow(dml._local_os_path(staged), aligned, slices)
-            dml.publish(
-                spark, table, staged, [], loc,
-                op="append", schema=target,
-            )
-            dml._rm_path(spark, staged)
+        sources = source_columns(tbl.column_names, target, insert_columns)
+        rows = _driver_aligned(tbl, target, sources)
+    if rows is None:
+        rows = align_to_schema(spark.createDataFrame(tbl), target, insert_columns)
+    append(spark, table, meta, rows, "append")
     return tbl.num_rows
+
+
+def append(
+    spark: SparkSession, table: str, meta: tuple, rows: pa.Table | DataFrame, op: str
+) -> None:
+    """The one tail of every append. ``rows``, aligned to ``table``
+    (``meta`` is its ``dml._table_meta``) as an Arrow table
+    (:func:`_driver_aligned`) or a DataFrame (:func:`align_to_schema`),
+    are staged as new files outside the table write lock: pyarrow writes
+    even slices, as many files as Spark's write makes; Spark writes the
+    table's layout (``dml._stage_frame``). Then one lock hold checks them
+    against the live files (``constraints.check_insert_batch``, so a
+    concurrent append of the same key cannot pass before this one lands)
+    and publishes them as version ``op`` (``dml.publish``). The staging
+    dir goes afterwards, unless the publish failed (see ``dml.publish``)."""
+    loc, part_cols, target = meta
+    staged = dml.staging_dir(spark, table, loc)
+    arrow = rows if isinstance(rows, pa.Table) else None
+    # the check builds a DataFrame of Arrow rows only if it needs one
+    new_rows = rows if arrow is None else (lambda: spark.createDataFrame(rows))
+    publishing = False
+    try:
+        if arrow is None:
+            dml._stage_frame(rows, staged, part_cols, target)
+        else:
+            slices = min(_parallelism(spark), rows.num_rows)
+            dml._write_staged_arrow(dml._local_os_path(staged), rows, slices)
+        with dml.table_write_lock(spark, table, loc=loc):
+            constraints.check_insert_batch(
+                spark, table, new_rows, arrow=arrow, loc=loc, schema=target
+            )
+            publishing = True
+            dml.publish(spark, table, staged, [], loc, op=op, schema=target)
+            publishing = False
+    finally:
+        if not publishing:
+            dml._rm_path(spark, staged)
 
 
 # per SparkContext: its default parallelism

@@ -122,7 +122,7 @@ def _rewrite_schema(spark: SparkSession, table: str, build, op: str) -> None:
         )
     staging = dml.staging_dir(spark, table, loc)
     with dml.table_write_lock(spark, table, loc=loc):
-        schema = dml._stage_frame(build(spark.table(table)), staging, part_cols)
+        schema = dml._stage_frame(build(spark.table(table)), staging, part_cols, None)
         dml.publish(spark, table, staging, None, loc, op=op, schema=schema)
         dml._rm_path(spark, staging)
         data = T.StructType([f for f in schema.fields if f.name not in part_cols])

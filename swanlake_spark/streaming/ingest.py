@@ -245,33 +245,31 @@ def _duration_ms(text: str) -> int:
     return qty * m[unit]
 
 
+def append_batch(batch_df: DataFrame, table: str, batch_id: int) -> None:
+    """Append one micro-batch to ``table`` like any other append
+    (``ingest.append``: a batch its constraints refuse fails)."""
+    from swanlake_spark.operators.dml import _table_meta
+    from swanlake_spark.operators.ingest import align_to_schema, append
+
+    spark = batch_df.sparkSession
+    meta = _table_meta(spark, table)
+    rows = align_to_schema(batch_df, meta[2])
+    append(spark, table, meta, rows, f"stream_batch_{batch_id}")
+
+
 def streaming_append_to_table(
     events: DataFrame,
     table: str,
     checkpoint_dir: str,
     trigger_available_now: bool = True,
 ):
-    """Sink a stream into a warehouse table via foreachBatch + the batch
-    alignment operator — the streaming appender. Exactly-once per
+    """Sink a stream into a warehouse table via foreachBatch
+    (:func:`append_batch`) — the streaming appender. Exactly-once per
     micro-batch via the checkpoint; append = new immutable parquet
     part-files (compaction handles the small files, maintenance.py)."""
-    from swanlake_spark.operators.ingest import align_to_schema
-
-    def sink(batch_df: DataFrame, batch_id: int) -> None:
-        from swanlake_spark import versions
-        from swanlake_spark.operators.dml import table_write_lock
-
-        spark = batch_df.sparkSession
-        aligned = align_to_schema(batch_df, spark.table(table).schema)
-        # under the lock like every writer: a publish meanwhile would
-        # record the table's files without this batch's
-        with table_write_lock(spark, table):
-            aligned.write.insertInto(table)
-            versions.record_version(spark, table, f"stream_batch_{batch_id}")
-
-    writer = events.writeStream.foreachBatch(sink).option(
-        "checkpointLocation", checkpoint_dir
-    )
+    writer = events.writeStream.foreachBatch(
+        lambda batch_df, batch_id: append_batch(batch_df, table, batch_id)
+    ).option("checkpointLocation", checkpoint_dir)
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()

@@ -18,9 +18,10 @@ not batches:
   against an unchanged base is a no-op (empty set-diff). The view
   therefore converges to the base under any crash/replay interleaving
   of the REFRESH side.
-- The APPEND side carries the same at-least-once caveat as the plain
-  streaming appender (``streaming_append_to_table``): a crash between
-  ``insertInto`` and the checkpoint commit replays the batch's rows.
+- The APPEND side is the plain streaming appender's
+  (``streaming_append_to_table``), with its at-least-once caveat: a
+  crash between the publish and the checkpoint commit replays the
+  batch's rows.
   Exactly-once ingest needs an idempotent upstream key + dedup, which
   is orthogonal to view maintenance.
 
@@ -47,21 +48,13 @@ def maintain_matview_stream(
     micro-batch by micro-batch. Returns the StreamingQuery."""
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        from swanlake_spark import matview, versions
-        from swanlake_spark.operators.ingest import align_to_schema
+        from swanlake_spark import matview
+        from swanlake_spark.streaming.ingest import append_batch
 
-        from swanlake_spark.operators.dml import table_write_lock
-
-        aligned = align_to_schema(batch_df, spark.table(base_table).schema)
-        with table_write_lock(spark, base_table):
-            aligned.write.insertInto(base_table)
-            versions.record_version(
-                spark, base_table, f"stream_batch_{batch_id}"
-            )
+        append_batch(batch_df, base_table, batch_id)
         # empty batches publish no files; the set-diff is empty and the
         # fold returns 0 — cheap, so no need to special-case them
-        matview.refresh_incremental(spark, view)
+        matview.refresh_incremental(batch_df.sparkSession, view)
 
     writer = rows.writeStream.foreachBatch(sink).option(
         "checkpointLocation", checkpoint_dir

@@ -487,8 +487,8 @@ def record_version(
     it the table's newest in memory (:func:`newest`). ``files`` is the
     new live set (table-relative name, size) when the caller knows it
     (``dml.publish`` does); otherwise the table directory is listed
-    once, as after a Spark write. Callers that already looked the table
-    up pass its location and schema.
+    once, as after a write Spark planned (SQL ``INSERT``, CTAS). Callers
+    that already looked the table up pass its location and schema.
 
     The manifest is a **delta** against the newest one in memory — the
     files it added and removed, and the schema only when it changed —
@@ -950,7 +950,7 @@ def rollback(spark: SparkSession, table: str, version: int) -> int:
     old = old.select(*[f.name for f in schema.fields])
     staging = dml.staging_dir(spark, table, loc)
     try:
-        dml._stage_frame(old, staging, part_cols)
+        dml._stage_frame(old, staging, part_cols, schema)
         with dml.table_write_lock(spark, table, loc=loc):
             v = dml.publish(
                 spark, table, staging, None, loc,

@@ -259,23 +259,28 @@ def _data_files(loc: str) -> set[str]:
 
 
 class TestDriverAppender:
-    """The driver-side appender writes the files Spark's insertInto
-    would (the same count and row split) without a Spark job, keeps the
+    """The driver-side appender writes the files Spark's write would
+    (the same count and row split) without a Spark job, keeps the
     primary-key checks, and leaves every batch it does not compute
-    exactly to insertInto."""
+    exactly to Spark."""
 
     @staticmethod
     def _insert_into_calls(monkeypatch) -> list[str]:
-        from pyspark.sql import DataFrameWriter
+        """The tables of the appends whose files Spark stages: the
+        append tail's DataFrame rows (an Arrow table is pyarrow's)."""
+        from pyspark.sql import DataFrame
+
+        from swanlake_spark.operators import ingest
 
         calls: list[str] = []
-        orig = DataFrameWriter.insertInto
+        orig = ingest.append
 
-        def recording(self, table, *args, **kwargs):
-            calls.append(table)
-            return orig(self, table, *args, **kwargs)
+        def recording(spark, table, meta, rows, op):
+            if isinstance(rows, DataFrame):
+                calls.append(table)
+            return orig(spark, table, meta, rows, op)
 
-        monkeypatch.setattr(DataFrameWriter, "insertInto", recording)
+        monkeypatch.setattr(ingest, "append", recording)
         return calls
 
     @pytest.mark.parametrize("n", [1, 3, 2_000, 25_000])
@@ -351,7 +356,7 @@ class TestDriverAppender:
     def test_not_null_field_takes_spark(self):
         """Spark's Parquet catalog records every column as nullable, so
         no DDL reaches this case: a NOT NULL field, should a schema
-        carry one, leaves the batch to insertInto."""
+        carry one, leaves the batch to Spark."""
         from pyspark.sql import types as T
 
         from swanlake_spark.operators.ingest import _driver_aligned, source_columns
@@ -361,3 +366,53 @@ class TestDriverAppender:
             target = T.StructType([T.StructField("id", T.IntegerType(), nullable)])
             sources = source_columns(batch.column_names, target)
             assert (_driver_aligned(batch, target, sources) is not None) is nullable
+
+
+def _outcome(write, read):
+    """The stored value ``write()`` leaves (``read()``), or the error
+    class it raised."""
+    try:
+        write()
+    except Exception as e:  # noqa: BLE001 — the outcome under test
+        return "EXCEED_LIMIT_LENGTH" if "EXCEED_LIMIT_LENGTH" in str(e) else repr(e)
+    return read()
+
+
+@pytest.mark.parametrize("route", ["append", "update", "merge"])
+@pytest.mark.parametrize("col_type", ["VARCHAR(5)", "CHAR(3)"])
+def test_char_varchar_check_matches_insert_into(engine, spark, route, col_type):
+    """A Spark-staged write of a CHAR(n) or VARCHAR(n) column accepts,
+    trims trailing spaces from, pads or refuses each value as Spark's
+    ``insertInto`` does: the append tail (``insert_arrow``), a point
+    UPDATE and a MERGE alike."""
+    from pyspark.sql import DataFrameWriter
+
+    values = ["ab", "abcde", "abcde   ", "abcdef", None]
+    want, got = [], []
+    for value in values:
+        t = _mktable(engine, f"id INT, v {col_type}")
+        rows = spark.createDataFrame([(1, value)], "id INT, v STRING")
+        want.append(_outcome(
+            lambda: DataFrameWriter.insertInto(rows.write, t),
+            lambda: spark.table(t).collect()[0].v,
+        ))
+        t = _mktable(engine, f"id INT, v {col_type}")
+        lit = "NULL" if value is None else f"'{value}'"
+        if route == "append":
+            write = lambda: insert_arrow(spark, t, pa.table({"id": [1], "v": [value]}))  # noqa: E731
+        else:
+            insert_arrow(spark, t, pa.table({"id": [1], "v": ["a"]}))
+            write = {
+                "update": lambda: engine.execute(f"UPDATE {t} SET v = {lit} WHERE id = 1"),
+                "merge": lambda: engine.execute(
+                    f"MERGE INTO {t} USING (SELECT 1 AS id, {lit} AS v) s "
+                    f"ON {t}.id = s.id WHEN MATCHED THEN UPDATE SET v = s.v"
+                ),
+            }[route]
+        got.append(_outcome(write, lambda: spark.table(t).collect()[0].v))
+    assert got == want
+    pad = col_type == "CHAR(3)"
+    assert want == (
+        ["ab ", *["EXCEED_LIMIT_LENGTH"] * 3, None] if pad
+        else ["ab", "abcde", "abcde", "EXCEED_LIMIT_LENGTH", None]
+    )

@@ -254,3 +254,54 @@ def test_memo_follows_use(engine):
         engine.execute(f"DROP TABLE {name}")
         engine.execute(f"DROP TABLE {db}.{name}")
         engine.execute(f"DROP DATABASE {db}")
+
+
+@pytest.mark.parametrize("route", ["driver", "spark", "copy", "stream"])
+def test_append_lists_nothing(engine, tmp_path, route):
+    """Every append route stages its files, then publishes them with
+    the new live set, so none lists the table directory: the
+    driver-side and the Spark producer of ``insert_arrow``, ``COPY …
+    FROM`` and the streaming sink."""
+    from swanlake_spark.operators.ingest import insert_arrow
+    from swanlake_spark.streaming import (
+        stream_events_from_directory,
+        streaming_append_to_table,
+    )
+
+    spark = engine.spark
+    name = f"pc_{uuid.uuid4().hex[:8]}"
+    loc = tempfile.mkdtemp(prefix="swl_pc_")
+    # a TIMESTAMP column: Spark stages the batch
+    ts = "" if route == "driver" else ", ts TIMESTAMP"
+    engine.execute(
+        f"CREATE TABLE {name} (event_id BIGINT, user_id BIGINT, event_type STRING{ts}) "
+        f"USING parquet LOCATION '{loc}'"
+    )
+    rows = pa.table({
+        "event_id": pa.array([1, 2], pa.int64()),
+        "user_id": pa.array([7, 8], pa.int64()),
+        "event_type": ["click", "view"],
+    })
+    src = tmp_path / "src"
+    src.mkdir()
+    if route == "copy":
+        import pyarrow.parquet as pq
+
+        pq.write_table(rows, src / "rows.parquet")
+    elif route == "stream":
+        (src / "rows.json").write_text(
+            '{"event_id": 1, "ts": "2025-01-01T00:00:00.000Z", "user_id": 7}\n'
+            '{"event_id": 2, "ts": "2025-01-01T00:00:01.000Z", "user_id": 8}\n'
+        )
+    append = {
+        "driver": lambda: insert_arrow(spark, name, rows),
+        "spark": lambda: insert_arrow(spark, name, rows),
+        "copy": lambda: engine.execute_update(f"COPY {name} FROM '{src}/rows.parquet'"),
+        "stream": lambda: streaming_append_to_table(
+            stream_events_from_directory(spark, str(src)), name, str(tmp_path / "ckpt")
+        ).awaitTermination(120),
+    }[route]
+    with _listings(loc) as listed:
+        append()
+    assert listed[0] == 0
+    assert engine.query(f"SELECT count(*) AS n FROM {name}").collect()[0].n == 2

@@ -431,3 +431,49 @@ class TestPartitionedPublish:
         appender.join(timeout=120)
         assert stats["compacted"]
         assert sorted(r.id for r in spark.table(t).collect()) == [0, 1, 2, 3, 4, 5, 99]
+
+    def test_append_holds_the_lock_only_to_publish(self, engine, db, monkeypatch):
+        """While an append's Spark staging write is paused, a point
+        UPDATE on the same table goes through."""
+        spark = engine.spark
+        t = f"{db}.t"
+        _create(engine, t, partitioned=True)
+        staging, release = threading.Event(), threading.Event()
+        stage = dml._stage_frame
+
+        def blocked(*args, **kwargs):
+            if threading.current_thread().name == "appender":
+                staging.set()
+                release.wait(timeout=60)
+            return stage(*args, **kwargs)
+
+        monkeypatch.setattr(dml, "_stage_frame", blocked)
+        appender = threading.Thread(
+            name="appender",
+            target=insert_arrow,
+            args=(spark, t, pa.table({
+                "id": pa.array([99], pa.int64()), "v": ["new"],
+                "p": pa.array([0], pa.int32()),
+            })),
+        )
+        appender.start()
+        updated = []
+        try:
+            assert staging.wait(timeout=60)
+            updater = threading.Thread(
+                target=lambda: updated.append(
+                    engine.execute_update(f"UPDATE {t} SET v = 'hit' WHERE id = 3")
+                ),
+            )
+            updater.start()
+            updater.join(timeout=30)
+            done = not updater.is_alive()
+        finally:
+            release.set()
+            appender.join(timeout=120)
+        assert done, "the UPDATE waited for the append's staging write"
+        assert updated == [1]
+        assert sorted((r.id, r.v) for r in spark.table(t).collect()) == [
+            (0, "seed"), (1, "seed"), (2, "seed"), (3, "hit"), (4, "seed"),
+            (5, "seed"), (99, "new"),
+        ]

@@ -107,6 +107,25 @@ def test_stream_append_to_table(spark, engine, event_dir):
     assert engine.query(f"SELECT count(*) AS c FROM {name}").collect()[0].c == 101
 
 
+
+def test_stream_append_enforces_primary_key(spark, engine, event_dir):
+    """A micro-batch is checked like every other append: the fixture's
+    duplicate event fails it on an ``event_id`` PRIMARY KEY table, and
+    nothing is published."""
+    from pyspark.errors import StreamingQueryException
+
+    name = f"ev_{uuid.uuid4().hex[:8]}"
+    engine.execute(
+        f"CREATE TABLE {name} (event_id BIGINT PRIMARY KEY, ts TIMESTAMP, "
+        f"user_id BIGINT, event_type STRING, value DOUBLE, props STRING) "
+        f"USING parquet LOCATION '{tempfile.mkdtemp(prefix='swl_test_')}'"
+    )
+    events = stream_events_from_directory(spark, event_dir)
+    q = streaming_append_to_table(events, name, tempfile.mkdtemp(prefix="swl_ckpt_"))
+    with pytest.raises(StreamingQueryException, match="PRIMARY KEY"):
+        q.awaitTermination(120)
+    assert engine.query(f"SELECT count(*) AS c FROM {name}").collect()[0].c == 0
+
 def _write_events(d, fname, ids):
     rows = []
     for i in ids:
@@ -925,7 +944,7 @@ class TestStreamingMatview:
         base, view = self._setup(spark, engine, "heal")
         try:
             # wave 1 appends WITHOUT view maintenance (simulates a crash
-            # after insertInto, before refresh)
+            # after the append, before refresh)
             events = stream_events_from_directory(
                 spark, event_dir, max_files_per_trigger=1
             )

@@ -33,15 +33,19 @@ times ``--reps`` calls each of
   publishes them under the table write lock), each after
   ``APPENDS_PER_CHECKPOINT`` untimed one-row appends,
 - a ``BULK_ROWS``-row append of fresh keys, the size of one perfbench
-  ``ycsb_mix`` load batch.
+  ``ycsb_mix`` load batch,
+- a ``SPARK_ROWS``-row ``insert_arrow`` into a second, events-shaped
+  table (perfbench ``ingest_dashboard``'s ``events``, in a database of
+  its own): its TIMESTAMP column takes the append's Spark producer.
 
 For each it prints the median and quartiles of milliseconds per call, the
 Spark jobs per call (counted with a job group and the status tracker),
 the Py4J round trips to the JVM per call (``testing.py4j_calls``), the
-listings of the table directory and of its manifest directory per call
-(``os.scandir`` and ``os.listdir`` calls on either), and the manifest
-bytes each call wrote. The first call of each kind is a warm-up and is
-not counted.
+listings of either table's directory and manifest directory per call
+(``os.scandir`` and ``os.listdir`` calls on them), the manifest bytes
+each call wrote, and the milliseconds per call spent holding a table
+write lock (``dml.table_write_lock``). The first call of each kind is a
+warm-up and is not counted.
 """
 
 from __future__ import annotations
@@ -63,6 +67,7 @@ _FIELDS = [f"field{i}" for i in range(10)]
 _FIELD_LEN = 100
 APPENDS_PER_CHECKPOINT = 8
 BULK_ROWS = 25_000
+SPARK_ROWS = 2_000
 SCAN_KEYS = 40
 
 
@@ -92,7 +97,33 @@ def _listings(*dirs: str):
 
 
 def _dir_sizes(d: str) -> dict[str, int]:
-    return {e.name: e.stat().st_size for e in os.scandir(d)}
+    return {e.path: e.stat().st_size for e in os.scandir(d)}
+
+
+def _lock_hold_timer() -> list[float]:
+    """Point every loaded ``swanlake_spark`` module's
+    ``table_write_lock`` at a wrapper that adds the seconds each hold
+    lasts to the one-item list it returns."""
+    from swanlake_spark.operators import dml
+
+    held = [0.0]
+    lock = dml.table_write_lock
+
+    @contextmanager
+    def timed(*args, **kwargs):
+        with lock(*args, **kwargs):
+            t0 = time.perf_counter()
+            try:
+                yield
+            finally:
+                held[0] += time.perf_counter() - t0
+
+    for mod in list(sys.modules.values()):
+        if getattr(mod, "__name__", "").startswith("swanlake_spark") and (
+            getattr(mod, "table_write_lock", None) is lock
+        ):
+            mod.table_write_lock = timed
+    return held
 
 
 def main() -> None:
@@ -144,6 +175,16 @@ def main() -> None:
     spark.catalog.refreshTable(table)
     versions.record_version(spark, table, "load")
     mdir = versions.versions_root(spark, table, loc).replace("file:", "") + "/manifests"
+    # in a database of its own, so CHECKPOINT (of the current one) leaves it be
+    events = f"pwp_{uuid.uuid4().hex[:8]}.events"
+    eng.execute(f"CREATE DATABASE {events.split('.')[0]}")
+    ev_loc = tempfile.mkdtemp(prefix="swl_pwp_")
+    eng.execute(
+        f"CREATE TABLE {events} (event_id BIGINT, ts TIMESTAMP, user_id BIGINT, "
+        f"event_type STRING, value DOUBLE, props STRING) USING parquet LOCATION '{ev_loc}'"
+    )
+    ev_mdir = versions.versions_root(spark, events, ev_loc).replace("file:", "") + "/manifests"
+    held = _lock_hold_timer()
 
     live = list(range(args.rows))
     rng.shuffle(live)
@@ -197,6 +238,21 @@ def main() -> None:
         live.extend(keys)
         next_key += BULK_ROWS
 
+    next_event = 0
+
+    def spark_append() -> None:
+        nonlocal next_event
+        ids = list(range(next_event, next_event + SPARK_ROWS))
+        insert_arrow(spark, events, pa.table({
+            "event_id": pa.array(ids, pa.int64()),
+            "ts": pa.array([i * 10_000 for i in ids], pa.timestamp("us")),
+            "user_id": pa.array([i % 5000 for i in ids], pa.int64()),
+            "event_type": [("click", "view", "purchase")[i % 3] for i in ids],
+            "value": [i % 100_000 / 100 for i in ids],
+            "props": [f'{{"src":"app","n":{i % 97}}}' for i in ids],
+        }))
+        next_event += SPARK_ROWS
+
     def appends() -> None:
         for _ in range(APPENDS_PER_CHECKPOINT):
             append()
@@ -214,6 +270,7 @@ def main() -> None:
         ("spark-read", spark_read, update),
         ("delete", delete, None),
         ("append", append, None),
+        ("append-spark", spark_append, None),
         ("checkpoint", checkpoint, appends),
         # last: the rows it adds would grow the table CHECKPOINT rewrites
         ("append-25k", bulk_append, None),
@@ -222,23 +279,26 @@ def main() -> None:
         if prep:
             prep()
         fn()  # warm-up
-        ms, jobs, calls, lists, written = [], [], [], [], []
+        ms, jobs, calls, lists, written, locked = [], [], [], [], [], []
         for _ in range(args.reps):
             if prep:
                 prep()
             group = f"pwp_{uuid.uuid4().hex}"
             sc.setJobGroup(group, name)
-            before = _dir_sizes(mdir)
-            with _listings(loc, mdir) as listed, py4j_calls(spark) as n:
+            before = _dir_sizes(mdir) | _dir_sizes(ev_mdir)
+            held[0] = 0.0
+            with _listings(loc, mdir, ev_loc, ev_mdir) as listed, py4j_calls(spark) as n:
                 t0 = time.perf_counter()
                 fn()
                 ms.append((time.perf_counter() - t0) * 1000)
+            locked.append(held[0] * 1000)
             sc.setLocalProperty("spark.jobGroup.id", None)
             jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
             calls.append(n[0])
             lists.append(listed[0])
             written.append(sum(
-                size for f, size in _dir_sizes(mdir).items() if f not in before
+                size for f, size in (_dir_sizes(mdir) | _dir_sizes(ev_mdir)).items()
+                if f not in before
             ))
         q1, med, q3 = statistics.quantiles(ms, n=4)
         print(
@@ -247,6 +307,7 @@ def main() -> None:
             f"  py4j calls/call {statistics.mean(calls):.1f}"
             f"  listings/call {statistics.mean(lists):.1f}"
             f"  manifest bytes/call {statistics.mean(written):.0f}"
+            f"  lock ms/call {statistics.median(locked):.1f}"
         )
     eng.stop()
 
